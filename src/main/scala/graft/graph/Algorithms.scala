@@ -15,23 +15,12 @@ import graft.{Checkpoints, Tables}
   * the shape that scales on a real cluster (frontier keyed by node,
   * shuffle partitioning reused across iterations, AQE free to
   * broadcast a shrinking frontier). Loop conditions only ever read
-  * driver-side scalars (`count`), never row data; lineage is cut per
-  * iteration via [[Checkpoints.cut]] (reliable `checkpoint` when
-  * `spark.graft.checkpoint.dir` is set, `localCheckpoint` locally) so
-  * plans stay flat at high iteration counts.
+  * driver-side scalars (`count`), never row data. Each loop is one
+  * [[Superstep]] call: the kernel cuts every round's state, releases
+  * what the round supersedes, counts rounds and stops; the code here
+  * is only each algorithm's step and change signal.
   */
 object Algorithms {
-
-  /** Cap on how many cut branches a union-view accumulator (the SCC
-    * backward-BFS mark, Borůvka's forest) may hold before it is
-    * re-cut into one frame. The views exist so a loop does not
-    * re-checkpoint its whole accumulated set every round; unbounded,
-    * the logical plan grows linearly in round count and an anti-join
-    * against the view re-scans every branch — O(depth²) on
-    * 10⁴-hop-class graphs at 100 TB depth (ADVICE/VERDICT r14). At
-    * width 32 the re-cut amortizes to one extra materialization per
-    * 32 rounds while plan size stays O(1). */
-  private[graft] val UnionViewMaxWidth = 32
 
   /** Materialize the (tiny) edge list once per algorithm run so the
     * lineitem-scale derivation isn't re-executed every iteration. */
@@ -45,31 +34,23 @@ object Algorithms {
   def khop(edges: DataFrame, root: Long = 0L, k: Int = 3): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var visited = Seq((root, 0L)).toDF("node", "hop").pipe(Checkpoints.cut)
-    var frontier = visited
-    var hop = 0L
-    var n = 1L // one driver-side scalar per iteration, no extra isEmpty action
-    while (hop < k && n > 0) {
-      hop += 1
-      val prevFrontier = frontier
-      frontier = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"))
-        .distinct()
-        .join(visited.select(col("node").as("v")), col("node") === col("v"), "left_anti")
-        .withColumn("hop", lit(hop))
-        .pipe(Checkpoints.cut)
-      n = frontier.count()
-      if (n > 0) {
-        val prevVisited = visited
-        visited = visited.union(frontier).pipe(Checkpoints.cut)
-        Checkpoints.release(prevVisited)
-      }
-      // iteration 1 aliases frontier to visited — never free a live result
-      if (!(prevFrontier eq visited)) Checkpoints.release(prevFrontier)
-    }
-    if (!(frontier eq visited)) Checkpoints.release(frontier)
-    visited.orderBy("node")
+    bfs(edges, Seq(root).toDF("node"), "hop", k).orderBy("node")
   }
+
+  /** Breadth-first levels from `seed` (node) as (node, `level`), the
+    * seed at level 0, at most `maxHops` hops out. Frontier keyed by
+    * node; each node enters the frontier once, so its level is its
+    * minimum hop distance. */
+  private def bfs(edges: DataFrame, seed: DataFrame, level: String,
+      maxHops: Int): DataFrame =
+    Superstep.semiNaive(seed.select(col("node"), lit(0L).as(level)), maxHops) {
+      (frontier, visited, hop) =>
+        frontier.join(edges, frontier("node") === edges("src"))
+          .select(col("dst").as("node"))
+          .distinct()
+          .join(visited.select(col("node").as("v")), col("node") === col("v"), "left_anti")
+          .withColumn(level, lit(hop.toLong))
+    }(_.union(_))
 
   def q11Khop(spark: SparkSession, dir: String): DataFrame = {
     val e = checkpointedEdges(Tables(spark, dir))
@@ -91,27 +72,9 @@ object Algorithms {
   def dependencyChains(edges: DataFrame, root: Long, k: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // every depth's frontier feeds the lazy union, so frontiers are
-    // only releasable once the union itself is checkpointed
-    val spent = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var frontier = Seq((root, Seq(root))).toDF("leaf", "path")
-      .pipe(Checkpoints.cut)
-    spent += frontier
-    var acc: DataFrame = null
-    for (depth <- 1 to k) {
-      frontier = frontier
-        .join(edges, col("leaf") === col("src"))
-        .filter(!array_contains(col("path"), col("dst")))
-        .select(col("dst").as("leaf"),
-          concat(col("path"), array(col("dst"))).as("path"))
-        .pipe(Checkpoints.cut)
-      spent += frontier
-      val out = frontier.select(col("path"), lit(depth.toLong).as("depth"))
-      acc = if (acc == null) out else acc.union(out)
+    guardedPaths(edges, Seq((root, Seq(root))).toDF("leaf", "path"), k) {
+      (frontier, depth) => frontier.select(col("path"), lit(depth.toLong).as("depth"))
     }
-    val paths = Checkpoints.cut(acc)
-    Checkpoints.release(spent.toSeq: _*)
-    paths
       .select(
         expr("array_join(transform(path, x -> cast(x as string)), '->')")
           .as("path_str"),
@@ -124,6 +87,26 @@ object Algorithms {
     val out = dependencyChains(e, 0L, 4) // eager: ends on a cut union
     Checkpoints.release(e)
     out
+  }
+
+  /** Bounded cycle-guarded path enumeration (q19, q59): `seed` rows
+    * carry a `leaf`, its `path`, and any key columns that ride along;
+    * each of `k` rounds extends every path by one out-edge of its leaf
+    * that is not already on the path. Returns the cut union of
+    * `emit(frontier, depth)` over depths 1..k. */
+  private def guardedPaths(edges: DataFrame, seed: DataFrame, k: Int)(
+      emit: (DataFrame, Int) => DataFrame): DataFrame = {
+    val carry = seed.columns.filterNot(Set("leaf", "path")).map(col)
+    val step = edges.select(col("src").as("m"), col("dst").as("d"))
+    Superstep.loop(k)(r => ((r.cut(seed), Superstep.UnionView.empty), Superstep.Unmeasured)) {
+      case ((frontier, acc), r) =>
+        val next = r.cut(frontier
+          .join(step, col("leaf") === col("m"))
+          .filter(!array_contains(col("path"), col("d")))
+          .select(carry :+ col("d").as("leaf") :+
+            concat(col("path"), array(col("d"))).as("path"): _*))
+        ((next, acc.add(emit(next, r.n), r)), Superstep.Unmeasured)
+    }(s => Checkpoints.cut(s._2.view)).out
   }
 
   // ---------------------------------------------------------------- q66
@@ -146,34 +129,6 @@ object Algorithms {
   }
 
   // ---------------------------------------------------------------- q50
-  /** Single-source BFS distances as (node, dist), seed included at
-    * dist 0. Frontier keyed by node; superseded checkpoints released
-    * each round. */
-  private def bfsDist(edges: DataFrame, seed: DataFrame): DataFrame = {
-    var visited = seed.select(col("node"), lit(0L).as("dist")).pipe(Checkpoints.cut)
-    var frontier = visited
-    var d = 0L
-    var n = frontier.count()
-    while (n > 0) {
-      d += 1
-      val prevFrontier = frontier
-      frontier = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select(col("node").as("v")), col("node") === col("v"), "left_anti")
-        .withColumn("dist", lit(d))
-        .pipe(Checkpoints.cut)
-      n = frontier.count()
-      if (n > 0) {
-        val prevVisited = visited
-        visited = visited.union(frontier).pipe(Checkpoints.cut)
-        Checkpoints.release(prevVisited)
-      }
-      if (!(prevFrontier eq visited)) Checkpoints.release(prevFrontier)
-    }
-    if (!(frontier eq visited)) Checkpoints.release(frontier)
-    visited
-  }
-
   /** All shortest paths between two endpoints — the reference's
     * `allShortestPaths((a)-[:DEPENDS_ON*]->(b)) RETURN paths`
     * (documentation/queries.md:76-79), endpoints = node 0 and its
@@ -189,13 +144,13 @@ object Algorithms {
   def q50AllShortestPaths(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = checkpointedEdges(Tables(spark, dir))
-    val da = bfsDist(e, Seq(0L).toDF("node"))
+    val da = bfs(e, Seq(0L).toDF("node"), "dist", Int.MaxValue)
     val tgt = da.filter(col("node") =!= 0L)
       .orderBy(col("dist").desc, col("node").desc).limit(1)
       .select(col("node"), col("dist").as("plen"))
       .pipe(Checkpoints.cut)
     val rev = e.select(col("dst").as("src"), col("src").as("dst"))
-    val db = bfsDist(rev, tgt.select("node"))
+    val db = bfs(rev, tgt.select("node"), "dist", Int.MaxValue)
     val dag = e
       .join(da.select(col("node").as("src"), col("dist").as("ha")), "src")
       .join(db.select(col("node").as("dst"), col("dist").as("hb")), "dst")
@@ -206,19 +161,17 @@ object Algorithms {
     Checkpoints.release(da, db, e)
     // walk the DAG: all maximal walks from the root end at the target
     // at depth L simultaneously (da/db pin every step's distance)
-    var frontier = Seq((0L, Seq(0L))).toDF("leaf", "path").pipe(Checkpoints.cut)
-    var n = 1L
-    while (n > 0) {
-      val next = frontier.join(dag, col("leaf") === col("src"))
+    val walks = Superstep.loop(Int.MaxValue) { r =>
+      (r.cut(Seq((0L, Seq(0L))).toDF("leaf", "path")), Superstep.Unmeasured)
+    } { (frontier, r) =>
+      val next = r.cut(frontier.join(dag, col("leaf") === col("src"))
         .select(col("dst").as("leaf"),
-          concat(col("path"), array(col("dst"))).as("path"))
-        .pipe(Checkpoints.cut)
-      n = next.count()
-      if (n > 0) { Checkpoints.release(frontier); frontier = next }
-      else Checkpoints.release(next)
-    }
+          concat(col("path"), array(col("dst"))).as("path")))
+      val n = next.count()
+      (if (n > 0) next else frontier, n)
+    }(identity).out
     Checkpoints.release(dag)
-    val out = frontier
+    val out = walks
       .join(tgt.select(col("node").as("leaf")), Seq("leaf"), "left_semi")
       .select(
         expr("array_join(transform(path, x -> cast(x as string)), '->')")
@@ -241,31 +194,15 @@ object Algorithms {
     * hop, so only (first, leaf) pairs leave the loop. */
   def q59SubdepPathCounts(spark: SparkSession, dir: String): DataFrame = {
     val e = checkpointedEdges(Tables(spark, dir))
-    val spent = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var frontier = e.filter(col("src") === 0L)
+    val seed = e.filter(col("src") === 0L)
       .select(col("dst").as("first"), col("dst").as("leaf"),
         array(lit(0L), col("dst")).as("path"))
-      .pipe(Checkpoints.cut)
-    spent += frontier
-    var acc: DataFrame = null
-    for (_ <- 1 to 4) {
-      frontier = frontier
-        .join(e.select(col("src").as("m"), col("dst").as("d")),
-          col("leaf") === col("m"))
-        .filter(!array_contains(col("path"), col("d")))
-        .select(col("first"), col("d").as("leaf"),
-          concat(col("path"), array(col("d"))).as("path"))
-        .pipe(Checkpoints.cut)
-      spent += frontier
-      val out = frontier.select("first", "leaf")
-      acc = if (acc == null) out else acc.union(out)
-    }
-    val pairs = Checkpoints.cut(acc)
+    val pairs = guardedPaths(e, seed, 4)((frontier, _) => frontier.select("first", "leaf"))
     // materialize the first-hop list before releasing e — the final
     // join reads it lazily, and a released localCheckpoint is gone
     val firsts = Checkpoints.cut(
       e.filter(col("src") === 0L).select(col("dst").as("first")).distinct())
-    Checkpoints.release(spent.toSeq :+ e: _*)
+    Checkpoints.release(e)
     val counts = pairs.groupBy("first")
       .agg(count(lit(1)).as("n_paths"), countDistinct(col("leaf")).as("n_distinct"))
     firsts
@@ -343,31 +280,22 @@ object Algorithms {
   /** Directed transitive closure as (src, dst) reachable pairs —
     * semi-naive evaluation: only the frontier (newly discovered
     * pairs) joins the edge list each round. */
-  def transitiveClosure(edges: DataFrame): DataFrame = {
-    var closure = edges.select("src", "dst").distinct().pipe(Checkpoints.cut)
-    var frontier = closure
-    var n = frontier.count()
-    while (n > 0) {
-      val prevFrontier = frontier
-      frontier = frontier.join(
-          edges.select(col("src").as("m"), col("dst").as("d")),
-          frontier("dst") === col("m"))
-        .select(frontier("src"), col("d").as("dst"))
-        .distinct()
-        .join(closure.select(col("src").as("s2"), col("dst").as("d2")),
-          col("src") === col("s2") && col("dst") === col("d2"), "left_anti")
-        .pipe(Checkpoints.cut)
-      n = frontier.count()
-      if (n > 0) {
-        val prevClosure = closure
-        closure = closure.union(frontier).pipe(Checkpoints.cut)
-        Checkpoints.release(prevClosure)
-      }
-      if (!(prevFrontier eq closure)) Checkpoints.release(prevFrontier)
-    }
-    if (!(frontier eq closure)) Checkpoints.release(frontier)
-    closure
-  }
+  def transitiveClosure(edges: DataFrame): DataFrame =
+    Superstep.semiNaive(edges.select("src", "dst").distinct(), Int.MaxValue) {
+      (frontier, closure, _) => newPairs(edges, frontier, closure)
+    }(_.union(_))
+
+  /** One semi-naive closure step: (src, dst) pairs one edge past the
+    * frontier that `visited` does not hold yet. */
+  private def newPairs(edges: DataFrame, frontier: DataFrame,
+      visited: DataFrame): DataFrame =
+    frontier.join(
+        edges.select(col("src").as("m"), col("dst").as("d")),
+        frontier("dst") === col("m"))
+      .select(frontier("src"), col("d").as("dst"))
+      .distinct()
+      .join(visited.select(col("src").as("s2"), col("dst").as("d2")),
+        col("src") === col("s2") && col("dst") === col("d2"), "left_anti")
 
   /** Reachable-set size per node (all nation nodes, zero included). */
   def q12TransitiveClosure(spark: SparkSession, dir: String): DataFrame = {
@@ -394,32 +322,10 @@ object Algorithms {
       case Some(s) => edges.join(s.select(col("node").as("src")), Seq("src"), "left_semi")
       case None => edges
     }
-    var visited = seed.withColumn("hops", lit(1L)).pipe(Checkpoints.cut)
-    var frontier = visited
-    var hop = 1L
-    var n = frontier.count()
-    while (n > 0) {
-      hop += 1
-      val prevFrontier = frontier
-      frontier = frontier.join(
-          edges.select(col("src").as("m"), col("dst").as("d")),
-          frontier("dst") === col("m"))
-        .select(frontier("src"), col("d").as("dst"))
-        .distinct()
-        .join(visited.select(col("src").as("s2"), col("dst").as("d2")),
-          col("src") === col("s2") && col("dst") === col("d2"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .pipe(Checkpoints.cut)
-      n = frontier.count()
-      if (n > 0) {
-        val prevVisited = visited
-        visited = visited.union(frontier).pipe(Checkpoints.cut)
-        Checkpoints.release(prevVisited)
-      }
-      if (!(prevFrontier eq visited)) Checkpoints.release(prevFrontier)
-    }
-    if (!(frontier eq visited)) Checkpoints.release(frontier)
-    visited.orderBy("src", "dst")
+    Superstep.semiNaive(seed.withColumn("hops", lit(1L)), Int.MaxValue) {
+      (frontier, visited, round) =>
+        newPairs(edges, frontier, visited).withColumn("hops", lit(round + 1L))
+    }(_.union(_)).orderBy("src", "dst")
   }
 
   /** q13: BFS from a BOUNDED source set (node ≡ 0 mod 5 — a fixed,
@@ -452,38 +358,25 @@ object Algorithms {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src"), col("dst"), col("cnt").cast("long").as("w"))
-    var dist = Seq((root, 0L)).toDF("node", "cost").pipe(Checkpoints.cut)
-    var frontier = dist
-    var n = 1L
-    while (n > 0) {
-      val relaxed = frontier
-        .join(e, frontier("node") === e("src"))
-        .groupBy(col("dst").as("cand"))
-        .agg(min(col("cost") + col("w")).as("nc"))
-      val prevDist = dist
-      val prevFrontier = frontier
-      // improvements only: new node, or strictly cheaper cost
-      frontier = relaxed
-        .join(dist.select(col("node"), col("cost").as("oc")),
-          col("cand") === col("node"), "left")
-        .filter(col("oc").isNull || col("nc") < col("oc"))
-        .select(col("cand").as("node"), col("nc").as("cost"))
-        .pipe(Checkpoints.cut)
-      n = frontier.count()
-      if (n > 0) {
-        dist = dist
-          .join(frontier.select(col("node").as("fn"), col("cost").as("fc")),
-            col("node") === col("fn"), "full")
-          .select(coalesce(col("node"), col("fn")).as("node"),
-            least(coalesce(col("cost"), col("fc")),
-              coalesce(col("fc"), col("cost"))).as("cost"))
-          .pipe(Checkpoints.cut)
-        Checkpoints.release(prevDist)
-      }
-      if (!(prevFrontier eq dist)) Checkpoints.release(prevFrontier)
+    Superstep.semiNaive(Seq((root, 0L)).toDF("node", "cost"), Int.MaxValue) {
+      (frontier, dist, _) =>
+        frontier
+          .join(e, frontier("node") === e("src"))
+          .groupBy(col("dst").as("cand"))
+          .agg(min(col("cost") + col("w")).as("nc"))
+          // improvements only: new node, or strictly cheaper cost
+          .join(dist.select(col("node"), col("cost").as("oc")),
+            col("cand") === col("node"), "left")
+          .filter(col("oc").isNull || col("nc") < col("oc"))
+          .select(col("cand").as("node"), col("nc").as("cost"))
+    } { (dist, frontier) =>
+      dist
+        .join(frontier.select(col("node").as("fn"), col("cost").as("fc")),
+          col("node") === col("fn"), "full")
+        .select(coalesce(col("node"), col("fn")).as("node"),
+          least(coalesce(col("cost"), col("fc")),
+            coalesce(col("fc"), col("cost"))).as("cost"))
     }
-    if (!(frontier eq dist)) Checkpoints.release(frontier)
-    dist
   }
 
   def q67WeightedShortestPaths(spark: SparkSession, dir: String): DataFrame = {
@@ -496,61 +389,63 @@ object Algorithms {
 
   // ---------------------------------------------------------------- q14
   /** PageRank, GraphX semantics (r₀=1; r ← 0.15 + 0.85·Σ_in r/outdeg),
-    * fixed 5 iterations, output rounded to 6dp. Join-agg per
-    * iteration; ranks localCheckpoint'ed so the plan depth stays
-    * constant. */
-  def pagerank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val outdeg = edges.groupBy(col("src").as("od_node"))
-      .agg(count(lit(1)).as("od")).pipe(Checkpoints.cut)
-    var ranks = nodes.select(col("node"), lit(1.0).as("r")).pipe(Checkpoints.cut)
-    for (_ <- 1 to iters) {
-      val prev = ranks
-      ranks = prStep(nodes, edges, outdeg, prev)
-      Checkpoints.release(prev)
-    }
-    Checkpoints.release(outdeg)
-    ranks
+    * fixed 5 iterations, output rounded to 6dp. One join-agg
+    * superstep per iteration ([[damped]]). */
+  def pagerank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    uniform(nodes, edges, lit(1.0), lit(0.15), iters)(Superstep.budgetOnly).out
+
+  /** The damped rank loop every PageRank variant shares: `r0` seeds
+    * the ranks, and each superstep is r ← reset + 0.85·Σ_in share over
+    * the in-edges, where `share` spreads a source's rank over its
+    * out-mass `od` (`outMass` aggregated per source — the out-degree,
+    * or the out-weight for weighted PageRank). `reset` is the
+    * per-node teleport mass — a constant 0.15 for global PageRank,
+    * source-indicator·0.15 for the personalized variant (it may
+    * reference the grouping key `node`). `edges` carries exactly the
+    * columns `share` reads besides (src, dst). */
+  private[graph] def damped(nodes: DataFrame, edges: DataFrame,
+      outMass: Column, share: Column, r0: Column, reset: Column,
+      iters: Int)(changes: (DataFrame, DataFrame) => Long): Superstep.Run[DataFrame] = {
+    val out = edges.groupBy(col("src").as("od_node"))
+      .agg(outMass.as("od")).pipe(Checkpoints.cut)
+    val run = Superstep.iterate(nodes.select(col("node"), r0.as("r")), iters) {
+      (ranks, _) =>
+        nodes.select(col("node"))
+          .join(edges, col("dst") === col("node"), "left")
+          .join(ranks.select(col("node").as("rn"), col("r")), col("rn") === col("src"), "left")
+          .join(out, col("od_node") === col("src"), "left")
+          .groupBy(col("node"))
+          .agg((reset + lit(0.85) * coalesce(sum(share), lit(0.0))).as("r"))
+    }(changes)
+    Checkpoints.release(out)
+    run
   }
 
-  /** One damped rank update (the loop body of [[pagerank]]),
-    * checkpointed. `reset` is the per-node teleport mass — a constant
-    * 0.15 for global PageRank, source-indicator·0.15 for the
-    * personalized variant (it may reference the grouping key
-    * `node`). */
-  private def prStep(nodes: DataFrame, edges: DataFrame,
-      outdeg: DataFrame, ranks: DataFrame,
-      reset: Column = lit(0.15)): DataFrame =
-    nodes.select(col("node"))
-      .join(edges.select(col("src"), col("dst")), col("dst") === col("node"), "left")
-      .join(ranks.select(col("node").as("rn"), col("r")), col("rn") === col("src"), "left")
-      .join(outdeg, col("od_node") === col("src"), "left")
-      .groupBy(col("node"))
-      .agg((reset + lit(0.85) * coalesce(sum(col("r") / col("od")), lit(0.0))).as("r"))
-      .pipe(Checkpoints.cut)
+  /** [[damped]] with rank split uniformly over out-edges. */
+  private def uniform(nodes: DataFrame, edges: DataFrame, r0: Column,
+      reset: Column, iters: Int)(
+      changes: (DataFrame, DataFrame) => Long): Superstep.Run[DataFrame] =
+    damped(nodes, edges.select(col("src"), col("dst")), count(lit(1)),
+      col("r") / col("od"), r0, reset, iters)(changes)
+
+  /** Total L1 rank movement Σ|r_t − r_{t−1}| between two rounds. */
+  private def movement(prev: DataFrame, next: DataFrame): Double =
+    next
+      .join(prev.select(col("node").as("pn"), col("r").as("pr")),
+        col("node") === col("pn"))
+      .agg(sum(abs(col("r") - col("pr")))).first().getDouble(0)
 
   /** Personalized PageRank: teleport mass flows only to the source
     * set, so rank measures proximity-weighted reachability FROM the
     * sources — the recommendation/expansion primitive (Neo4j GDS
-    * exposes it beside global PageRank). Same join-agg body and
-    * checkpoint discipline as [[pagerank]]; only the reset column
-    * differs, and a node unreachable from every source holds rank
-    * exactly 0 at every iteration (spec-asserted). */
+    * exposes it beside global PageRank). Same superstep as
+    * [[pagerank]]; only the seed and reset columns differ, and a node
+    * unreachable from every source holds rank exactly 0 at every
+    * iteration (spec-asserted). */
   def personalizedPagerank(nodes: DataFrame, edges: DataFrame,
-      isSource: Column, iters: Int): DataFrame = {
-    val outdeg = edges.groupBy(col("src").as("od_node"))
-      .agg(count(lit(1)).as("od")).pipe(Checkpoints.cut)
-    var ranks = nodes
-      .select(col("node"), when(isSource, lit(1.0)).otherwise(lit(0.0)).as("r"))
-      .pipe(Checkpoints.cut)
-    val reset = when(isSource, lit(0.15)).otherwise(lit(0.0))
-    for (_ <- 1 to iters) {
-      val prev = ranks
-      ranks = prStep(nodes, edges, outdeg, prev, reset)
-      Checkpoints.release(prev)
-    }
-    Checkpoints.release(outdeg)
-    ranks
-  }
+      isSource: Column, iters: Int): DataFrame =
+    uniform(nodes, edges, when(isSource, lit(1.0)).otherwise(lit(0.0)),
+      when(isSource, lit(0.15)).otherwise(lit(0.0)), iters)(Superstep.budgetOnly).out
 
   /** q109: PPR from the q13 source convention (node ≡ 0 mod 5),
     * 5 iterations, 6dp. */
@@ -570,51 +465,35 @@ object Algorithms {
     * (documentation/queries.md:180-182): stop as soon as the total L1
     * rank movement Σ|r_t − r_{t−1}| drops to `tol`, so well-mixed
     * graphs pay only the iterations they need. Returns (ranks,
-    * iterations run, final movement). Movement contracts by ~the
+    * iterations run, final movement); raises when `maxIters` runs out
+    * with the movement still above `tol`. Movement contracts by ~the
     * damping factor per iteration (spec-asserted on the co-purchase
     * graph), so iterations ≈ log(tol)/log(0.85) — convergence is
     * geometric, never budget-starved. Costs one extra join-agg scalar
     * action per iteration vs [[pagerank]]. */
   def pagerankConverged(nodes: DataFrame, edges: DataFrame, tol: Double,
       maxIters: Int = 100): (DataFrame, Int, Double) = {
-    val outdeg = edges.groupBy(col("src").as("od_node"))
-      .agg(count(lit(1)).as("od")).pipe(Checkpoints.cut)
-    var ranks = nodes.select(col("node"), lit(1.0).as("r")).pipe(Checkpoints.cut)
-    var t = 0
     var delta = Double.MaxValue
-    while (t < maxIters && delta > tol) {
-      t += 1
-      val prev = ranks
-      ranks = prStep(nodes, edges, outdeg, prev)
-      delta = ranks
-        .join(prev.select(col("node").as("pn"), col("r").as("pr")),
-          col("node") === col("pn"))
-        .agg(sum(abs(col("r") - col("pr")))).first().getDouble(0)
-      Checkpoints.release(prev)
+    val run = uniform(nodes, edges, lit(1.0), lit(0.15), maxIters) { (prev, next) =>
+      delta = movement(prev, next)
+      if (delta > tol) 1L else 0L
     }
-    Checkpoints.release(outdeg)
-    (ranks, t, delta)
+    if (!run.converged)
+      throw new IllegalStateException(s"pagerankConverged: not converged after " +
+        s"${run.rounds} iterations — L1 movement $delta is still above tol $tol")
+    (run.out, run.rounds, delta)
   }
 
   /** [[pagerank]] instrumented with the per-iteration L1 movement —
     * convergence evidence for the spec. */
   private[graft] def pagerankWithDeltas(nodes: DataFrame, edges: DataFrame,
       iters: Int): (DataFrame, List[Double]) = {
-    val outdeg = edges.groupBy(col("src").as("od_node"))
-      .agg(count(lit(1)).as("od")).pipe(Checkpoints.cut)
-    var ranks = nodes.select(col("node"), lit(1.0).as("r")).pipe(Checkpoints.cut)
     val deltas = scala.collection.mutable.ListBuffer.empty[Double]
-    for (_ <- 1 to iters) {
-      val prev = ranks
-      ranks = prStep(nodes, edges, outdeg, prev)
-      deltas += ranks
-        .join(prev.select(col("node").as("pn"), col("r").as("pr")),
-          col("node") === col("pn"))
-        .agg(sum(abs(col("r") - col("pr")))).first().getDouble(0)
-      Checkpoints.release(prev)
+    val run = uniform(nodes, edges, lit(1.0), lit(0.15), iters) { (prev, next) =>
+      deltas += movement(prev, next)
+      Superstep.Unmeasured
     }
-    Checkpoints.release(outdeg)
-    (ranks, deltas.toList)
+    (run.out, deltas.toList)
   }
 
   def q14Pagerank(spark: SparkSession, dir: String): DataFrame = {
@@ -629,50 +508,50 @@ object Algorithms {
     * propagation to fixpoint (≤ diameter iterations; the deterministic
     * oracle-able community detector — GraphX LabelPropagation is the
     * nondeterministic scale alternative, see GraphxBridge). */
-  def connectedComponents(nodes: DataFrame, undirected: DataFrame): DataFrame = {
-    // r14 optimization (guide §2.4): one propagation round is a single
-    // equi-join + one partial agg — the neighbor contributions UNIONED
-    // with a self branch read from the previous round's CACHED comp
-    // frame (so every node appears and carries its own label; no extra
-    // materialized self-loop relation), min over both. The self branch
-    // also carries the OLD label, so the convergence count is a filter
-    // over the round's checkpointed output — per round 1 join + 1 agg
-    // + 1 cached count, down from 2 joins + agg + a third join for the
-    // change count. Labels identical (min propagation is
-    // deterministic; the self branch contributes exactly
-    // `least(own, …)`). Precondition: edge endpoints ⊆ `nodes` —
-    // ENFORCED loudly below (r15, ADVICE r14): a foreign dst has no
-    // self row, so its pc aggregates to null; silently it would
-    // surface as an extra output row that is never counted as
-    // changed, so the guard raises instead.
-    var compCut = nodes.select(col("node"), col("node").as("component"))
-      .withColumn("pc", col("component"))
-      .pipe(Checkpoints.cut)
-    var changed = 1L
-    while (changed > 0) {
-      val contrib = undirected.select(col("src"), col("dst"))
-        .join(compCut.select(col("node").as("src"), col("component")),
+  def connectedComponents(nodes: DataFrame, undirected: DataFrame): DataFrame =
+    minLabels(nodes, undirected, Int.MaxValue, "connectedComponents")
+      .out.select("node", "component")
+
+  /** Min-label propagation over the directed (src, dst) `edges`: every
+    * node starts labeled with its own id and each round takes the min
+    * of its label and its in-neighbors' labels, for at most
+    * `maxRounds` rounds or to fixpoint. Returns the cut (node,
+    * component, pc) frame of the last round, `pc` the label before it.
+    *
+    * One round is a single equi-join + one partial agg: the neighbor
+    * contributions UNIONED with a self branch read from the previous
+    * round's CACHED frame (so every node appears and carries its own
+    * label; no extra materialized self-loop relation), min over both.
+    * The self branch also carries the OLD label, so the change count
+    * is a filter over the round's checkpointed output — per round
+    * 1 join + 1 agg + 1 cached count. Precondition: edge endpoints ⊆
+    * `nodes` — ENFORCED loudly: a foreign dst has no self row, so its
+    * pc aggregates to null; silently it would surface as an extra
+    * output row that is never counted as changed, so the guard raises
+    * instead, naming `who`. Shared by [[connectedComponents]],
+    * [[sccLabels]]' forward coloring and [[StarContraction.ccAuto]]'s
+    * probe. */
+  private[graph] def minLabels(nodes: DataFrame, edges: DataFrame,
+      maxRounds: Int, who: String): Superstep.Run[DataFrame] =
+    Superstep.iterate(nodes.select(col("node"), col("node").as("component"))
+        .withColumn("pc", col("component")), maxRounds) { (comp, _) =>
+      val contrib = edges.select(col("src"), col("dst"))
+        .join(comp.select(col("node").as("src"), col("component")),
           Seq("src"))
         .select(col("dst").as("node"), col("component"),
           lit(null).cast("long").as("own"))
-      val self = compCut.select(col("node"), col("component"),
+      val self = comp.select(col("node"), col("component"),
         col("component").as("own"))
-      val next = contrib.unionByName(self)
+      contrib.unionByName(self)
         .groupBy("node")
         .agg(min(col("component")).as("component"),
           min(col("own")).as("pc"))
         .select(col("node"), col("component"),
           when(col("pc").isNotNull, col("pc")).otherwise(raise_error(
-            format_string("connectedComponents: edge endpoint %d is " +
+            format_string(s"$who: edge endpoint %d is " +
               "not in `nodes` — callers must pass every endpoint",
               col("node")))).as("pc"))
-        .pipe(Checkpoints.cut)
-      changed = next.filter(col("component") =!= col("pc")).count()
-      Checkpoints.release(compCut)
-      compCut = next
-    }
-    compCut.select("node", "component")
-  }
+    }((_, next) => next.filter(col("component") =!= col("pc")).count())
 
   def q15ConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
@@ -704,111 +583,56 @@ object Algorithms {
     * a handful; for adversarial chains GraphxBridge.scc is the
     * pointer-jumping alternative (agreement spec in
     * GraphxBridgeSpec). */
-  def sccLabels(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    var remaining = nodes.select("node").pipe(Checkpoints.cut)
-    var live = edges.select("src", "dst").distinct()
-      .filter(col("src") =!= col("dst")).pipe(Checkpoints.cut)
-    var done: DataFrame = null
-    var nLeft = remaining.count()
-    while (nLeft > 0) {
-      // 1. forward min-color fixpoint — the r14 propagation shape
-      // (see connectedComponents): one join + one agg per round, the
-      // predecessor contributions unioned with a self branch read
-      // from the previous round's CACHED color frame (every node
-      // appears and carries its own color, which also rides as the
-      // OLD color so the change count is a filter over the round's
-      // checkpointed output).
-      var colorCut = remaining.select(col("node"), col("node").as("color"))
-        .withColumn("pc", col("color"))
-        .pipe(Checkpoints.cut)
-      def color = colorCut.select("node", "color")
-      var changed = 1L
-      while (changed > 0) {
-        val contrib = live
-          .join(colorCut.select(col("node").as("src"), col("color")),
-            Seq("src"))
-          .select(col("dst").as("node"), col("color"),
-            lit(null).cast("long").as("own"))
-        val self = colorCut.select(col("node"), col("color"),
-          col("color").as("own"))
-        val next = contrib.unionByName(self)
-          .groupBy("node")
-          .agg(min(col("color")).as("color"), min(col("own")).as("pc"))
-          .pipe(Checkpoints.cut)
-        changed = next.filter(col("color") =!= col("pc")).count()
-        Checkpoints.release(colorCut)
-        colorCut = next
-      }
+  def sccLabels(nodes: DataFrame, edges: DataFrame): DataFrame =
+    Superstep.loop(Int.MaxValue) { r =>
+      val remaining = r.cut(nodes.select("node"))
+      val live = r.cut(edges.select("src", "dst").distinct()
+        .filter(col("src") =!= col("dst")))
+      ((remaining, live, null: DataFrame), Superstep.Unmeasured)
+    } { case ((remaining, live, done), r) =>
+      // 1. forward min-color fixpoint (the connectedComponents round
+      // over directed edges)
+      val color = minLabels(remaining, live, Int.MaxValue, "sccLabels")
+        .out.select(col("node"), col("component").as("color"))
       // 2. backward BFS from roots, restricted to each root's class
-      val classEdges = live
+      val classEdges = r.cut(live
         .join(color.select(col("node").as("src"), col("color").as("cs")),
           Seq("src"))
         .join(color.select(col("node").as("dst"), col("color").as("cd")),
           Seq("dst"))
         .filter(col("cs") === col("cd"))
-        .select("src", "dst").pipe(Checkpoints.cut)
-      // mark = union of the cut frontiers (r14, guide §2.4): every
-      // frontier is already checkpointed, so the accumulated mark is
-      // a cheap union VIEW over cached frames — no per-hop re-cut of
-      // the whole marked set. The view's WIDTH is capped at
-      // [[UnionViewMaxWidth]] branches (r15, VERDICT/ADVICE r14): on
-      // a high-diameter class the anti-join would otherwise re-scan
-      // d cached frontiers at hop d (O(depth²) scan work) and the
-      // per-hop plan would grow linearly — past the cap the
-      // accumulated mark is re-cut into ONE frame, keeping per-hop
-      // plan size and scan fan-in O(1) at any depth.
-      val root = color.filter(col("node") === col("color")).select("node")
-        .pipe(Checkpoints.cut)
-      val frontiers = scala.collection.mutable.ArrayBuffer(root)
-      var frontier = root
-      def mark = frontiers.reduce(_.union(_))
-      var n = frontier.count()
-      while (n > 0) {
-        frontier = classEdges
-          .join(frontier.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src").as("node")).distinct()
-          .join(mark, Seq("node"), "left_anti")
-          .pipe(Checkpoints.cut)
-        n = frontier.count()
-        if (n > 0) {
-          frontiers += frontier
-          if (frontiers.length >= UnionViewMaxWidth) {
-            val merged = Checkpoints.cut(mark)
-            frontiers.foreach(Checkpoints.release(_))
-            frontiers.clear()
-            frontiers += merged
-            frontier = merged // next hop expands from the merged set:
-            // a superset of the last frontier — every extra expansion
-            // lands in mark already and drops in the anti-join, so
-            // the BFS stays exact (and the cap fires rarely enough
-            // that the re-expansion cost is noise)
-          }
-        } else Checkpoints.release(frontier)
-      }
+        .select("src", "dst"))
+      val mark = backwardMark(classEdges,
+        color.filter(col("node") === col("color")).select("node"))
       // 3. emit the root SCCs, shrink the live subgraph
-      val emitted = mark.join(color, Seq("node"))
-        .select(col("node"), col("color").as("scc")).pipe(Checkpoints.cut)
-      if (done == null) done = emitted
-      else {
-        val prevDone = done
-        done = done.union(emitted).pipe(Checkpoints.cut)
-        Checkpoints.release(prevDone, emitted)
-      }
-      val prevRemaining = remaining
-      remaining = remaining.join(mark, Seq("node"), "left_anti")
-        .pipe(Checkpoints.cut)
-      val prevLive = live
-      live = live
+      val emitted = r.cut(mark.join(color, Seq("node"))
+        .select(col("node"), col("color").as("scc")))
+      val nextDone = if (done == null) emitted else r.cut(done.union(emitted))
+      val nextRemaining = r.cut(remaining.join(mark, Seq("node"), "left_anti"))
+      val nextLive = r.cut(live
         .join(mark.select(col("node").as("src")), Seq("src"), "left_anti")
         .join(mark.select(col("node").as("dst")), Seq("dst"), "left_anti")
-        .select("src", "dst").pipe(Checkpoints.cut)
-      Checkpoints.release(prevRemaining, prevLive, classEdges, colorCut)
-      frontiers.foreach(Checkpoints.release(_))
-      nLeft = remaining.count()
-    }
-    Checkpoints.release(remaining, live)
-    done
-  }
+        .select("src", "dst"))
+      ((nextRemaining, nextLive, nextDone), nextRemaining.count())
+    }(_._3).out
+
+  /** Nodes that reach `roots` backward over `classEdges`, roots
+    * included. The mark accumulates as a [[Superstep.UnionView]] over
+    * the cut frontiers — no per-hop re-cut of the whole marked set,
+    * while the view's width cap keeps per-hop plan size and the
+    * anti-join's scan fan-in O(1) on a high-diameter class. */
+  private def backwardMark(classEdges: DataFrame, roots: DataFrame): DataFrame =
+    Superstep.loop(Int.MaxValue) { r =>
+      val root = r.cut(roots)
+      ((root, Superstep.UnionView(Vector(root))), Superstep.Unmeasured)
+    } { case ((frontier, mark), r) =>
+      val next = r.cut(classEdges
+        .join(frontier.select(col("node").as("dst")), Seq("dst"), "left_semi")
+        .select(col("src").as("node")).distinct()
+        .join(mark.view, Seq("node"), "left_anti"))
+      val n = next.count()
+      if (n > 0) ((next, mark.add(next, r)), n) else ((frontier, mark), 0L)
+    }(_._2.view).out
 
   /** The closure-based formulation scc(v) = min{u : v→*u and u→*v} —
     * materializes the O(V²) reachability pair set, so it is only the
@@ -870,31 +694,28 @@ object Algorithms {
     * max(pred)+1 to fixpoint — rounds = DAG depth, state O(comps),
     * the q16 loop discipline. All integer — engine-exact. */
   def sccCondensation(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val lab = sccLabels(nodes, edges).pipe(Checkpoints.cut)
+    val lab = sccLabels(nodes, edges).pipe(Checkpoints.cutOnce)
     val ce = edges.select("src", "dst").distinct()
       .join(lab.select(col("node").as("src"), col("scc").as("cs")), Seq("src"))
       .join(lab.select(col("node").as("dst"), col("scc").as("cd")), Seq("dst"))
       .filter(col("cs") =!= col("cd"))
       .select(col("cs").as("src"), col("cd").as("dst")).distinct()
       .pipe(Checkpoints.cut)
-    var lvl = lab.select(col("scc")).distinct()
-      .withColumn("l", lit(0L)).pipe(Checkpoints.cut)
-    var changed = 1L
-    while (changed > 0) {
-      val relax = ce
-        .join(lvl.select(col("scc").as("src"), col("l")), Seq("src"))
-        .groupBy(col("dst").as("rs")).agg(max(col("l") + 1).as("nl"))
-      val next = lvl.join(relax, col("scc") === col("rs"), "left")
-        .select(col("scc"),
-          greatest(col("l"), coalesce(col("nl"), col("l"))).as("l"))
-        .pipe(Checkpoints.cut)
-      changed = next
-        .join(lvl.select(col("scc").as("ps"), col("l").as("pl")),
+    val lvl = Superstep.iterate(
+        lab.select(col("scc")).distinct().withColumn("l", lit(0L)), Int.MaxValue) {
+      (lvl, _) =>
+        val relax = ce
+          .join(lvl.select(col("scc").as("src"), col("l")), Seq("src"))
+          .groupBy(col("dst").as("rs")).agg(max(col("l") + 1).as("nl"))
+        lvl.join(relax, col("scc") === col("rs"), "left")
+          .select(col("scc"),
+            greatest(col("l"), coalesce(col("nl"), col("l"))).as("l"))
+    } { (prev, next) =>
+      next
+        .join(prev.select(col("scc").as("ps"), col("l").as("pl")),
           next("scc") === col("ps"))
         .filter(col("l") =!= col("pl")).count()
-      Checkpoints.release(lvl)
-      lvl = next
-    }
+    }.out
     val sizes = lab.groupBy("scc").agg(count(lit(1)).as("n_members"))
     val out = lvl.join(sizes, Seq("scc"))
       .select(col("scc"), col("l").as("level"), col("n_members"))
@@ -1006,21 +827,14 @@ object Algorithms {
       val mx = raw.agg(max(col("raw")).as("mx"))
       raw.crossJoin(broadcast(mx))
         .select(col("node"), (col("raw") / col("mx")).as(out))
-        .pipe(Checkpoints.cut)
     }
-    var hub = nodes.select(col("node"), lit(1.0).as("hub"))
-      .pipe(Checkpoints.cut)
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      val prevAuth = auth
-      auth = half(hub, "hub", "auth", "src", "dst")
-      if (prevAuth != null) Checkpoints.release(prevAuth)
-      val prevHub = hub
-      hub = half(auth, "auth", "hub", "dst", "src")
-      Checkpoints.release(prevHub)
-    }
-    val outDf = auth.join(hub, Seq("node"))
-    outDf
+    Superstep.loop(iters) { r =>
+      ((r.cut(nodes.select(col("node"), lit(1.0).as("hub"))), null: DataFrame),
+        Superstep.Unmeasured)
+    } { case ((hub, _), r) =>
+      val auth = r.cut(half(hub, "hub", "auth", "src", "dst"))
+      ((r.cut(half(auth, "auth", "hub", "dst", "src")), auth), Superstep.Unmeasured)
+    } { case (hub, auth) => auth.join(hub, Seq("node")) }.out
   }
 
   val HitsIters = 4
@@ -1138,37 +952,28 @@ object Algorithms {
     * count — O(log V) rounds, every step keyed, nothing quadratic.
     *
     * OWNERSHIP: the returned forest is a union VIEW over ≤
-    * [[UnionViewMaxWidth]] per-round checkpointed selections —
+    * [[Superstep.UnionViewMaxWidth]] per-round checkpointed selections —
     * Checkpoints.release() on the returned frame is a no-op; a
     * long-lived session frees the backing blocks via
     * Checkpoints.releaseAll (the suite's per-query hygiene), or by
     * cutting the result itself and releasing that. */
   def boruvkaMst(und: DataFrame): DataFrame = {
     val e = und.select(col("a"), col("b"), col("w"))
-    var comp = e.select(explode(array(col("a"), col("b"))).as("node"))
-      .distinct()
-      .select(col("node"), col("node").as("c"))
-      .pipe(Checkpoints.cut)
-    var mst = e.limit(0).pipe(Checkpoints.cut)
-    // the forest view's cut branches (released + re-merged past
-    // [[UnionViewMaxWidth]] so plan width stays O(1) per round;
-    // O(log V) rounds means the cap only fires on astronomically
-    // deep inputs — it is the same depth guard as the SCC mark's)
-    val selParts = scala.collection.mutable.ArrayBuffer(mst)
-    var more = true
-    while (more) {
-      val labeled = e
+    Superstep.loop(Int.MaxValue) { r =>
+      val comp = r.cut(e.select(explode(array(col("a"), col("b"))).as("node"))
+        .distinct()
+        .select(col("node"), col("node").as("c")))
+      ((comp, Superstep.UnionView.empty), Superstep.Unmeasured)
+    } { case ((comp, forest), r) =>
+      val labeled = r.cut(e
         .join(comp.select(col("node").as("na"), col("c").as("ca")),
           col("na") === col("a"))
         .join(comp.select(col("node").as("nb"), col("c").as("cb")),
           col("nb") === col("b"))
         .filter(col("ca") =!= col("cb"))
-        .select(col("a"), col("b"), col("w"), col("ca"), col("cb"))
-        .pipe(Checkpoints.cut)
-      if (labeled.isEmpty) {
-        Checkpoints.release(labeled)
-        more = false
-      } else {
+        .select(col("a"), col("b"), col("w"), col("ca"), col("cb")))
+      if (labeled.isEmpty) ((comp, forest), 0L)
+      else {
         val sides = labeled
           .select(col("ca").as("comp"), col("a"), col("b"), col("w"))
           .union(labeled
@@ -1176,22 +981,10 @@ object Algorithms {
         // per-component lightest edge as one partial agg (r14, guide
         // §2.4): min(struct(w, a, b)) is the row_number()-over-
         // (w ASC, a ASC, b ASC) winner without the window sort
-        val sel = sides.groupBy("comp")
+        val sel = r.cut(sides.groupBy("comp")
           .agg(min(struct(col("w"), col("a"), col("b"))).as("m"))
           .select(col("m.a").as("a"), col("m.b").as("b"),
-            col("m.w").as("w")).distinct()
-          .pipe(Checkpoints.cut)
-        // the forest accumulates as a union VIEW over the cut per-round
-        // selections — no re-checkpoint of the whole forest per round
-        mst = mst.unionByName(sel)
-        selParts += sel
-        if (selParts.length >= UnionViewMaxWidth) {
-          val merged = Checkpoints.cut(mst)
-          selParts.foreach(Checkpoints.release(_))
-          selParts.clear()
-          selParts += merged
-          mst = merged
-        }
+            col("m.w").as("w")).distinct())
         val selComp = sel
           .join(labeled.select(col("a"), col("b"), col("ca"), col("cb"))
             .dropDuplicates("a", "b"), Seq("a", "b"))
@@ -1200,17 +993,12 @@ object Algorithms {
         val cnodes = comp.select(col("c").as("node")).distinct()
         val relabel = connectedComponents(cnodes, sym)
           .select(col("node").as("oldc"), col("component"))
-        val pc = comp
-        comp = pc.join(relabel, col("oldc") === col("c"))
-          .select(col("node"), col("component").as("c"))
-          .pipe(Checkpoints.cut)
-        // sel stays checkpointed: the returned forest is a union view
-        // over the per-round selections (caller/releaseAll frees them)
-        Checkpoints.release(pc, labeled)
+        val next = r.cut(comp.join(relabel, col("oldc") === col("c"))
+          .select(col("node"), col("component").as("c")))
+        ((next, forest.add(sel, r)), Superstep.Unmeasured)
       }
-    }
-    Checkpoints.release(comp)
-    mst.orderBy("w", "a", "b")
+    } { case (_, forest) => if (forest.isEmpty) e.limit(0) else forest.view }
+      .out.orderBy("w", "a", "b")
   }
 
   def q118Mst(spark: SparkSession, dir: String): DataFrame = {

@@ -19,10 +19,9 @@ import graft.{Checkpoints, Tables}
   * the exact query here is the oracle-able entry, the sketch is the
   * scale deployment (agreement spec in HyperBallSpec).
   *
-  * Weighted PageRank reuses [[Algorithms.pagerank]]'s join-agg
-  * iteration with rank mass split by edge weight (lineitem counts)
-  * instead of uniformly — same shuffle shape, same checkpoint
-  * lifecycle, oracle unrolled the same way.
+  * Weighted PageRank runs [[Algorithms.pagerank]]'s damped superstep
+  * with rank mass split by edge weight (lineitem counts) instead of
+  * uniformly — same shuffle shape, oracle unrolled the same way.
   */
 object Centrality {
 
@@ -55,28 +54,12 @@ object Centrality {
   // ---------------------------------------------------------------- q72
   /** Weighted PageRank (GraphX semantics, rank mass ∝ edge weight):
     * r ← 0.15 + 0.85 · Σ_in r(src)·w/outw(src), fixed iterations,
-    * 6dp. The per-iteration body is the [[Algorithms.pagerank]] plan
-    * with the outdegree replaced by the out-weight sum. */
-  def weightedPagerank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val outw = edges.groupBy(col("src").as("ow_node"))
-      .agg(sum(col("cnt")).as("ow")).pipe(Checkpoints.cut)
-    var ranks = nodes.select(col("node"), lit(1.0).as("r")).pipe(Checkpoints.cut)
-    for (_ <- 1 to iters) {
-      val prev = ranks
-      ranks = nodes.select(col("node"))
-        .join(edges.select(col("src"), col("dst"), col("cnt")),
-          col("dst") === col("node"), "left")
-        .join(prev.select(col("node").as("rn"), col("r")), col("rn") === col("src"), "left")
-        .join(outw, col("ow_node") === col("src"), "left")
-        .groupBy(col("node"))
-        .agg((lit(0.15) + lit(0.85) *
-          coalesce(sum(col("r") * col("cnt") / col("ow")), lit(0.0))).as("r"))
-        .pipe(Checkpoints.cut)
-      Checkpoints.release(prev)
-    }
-    Checkpoints.release(outw)
-    ranks
-  }
+    * 6dp. The [[Algorithms.damped]] superstep with the outdegree
+    * replaced by the out-weight sum. */
+  def weightedPagerank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    Algorithms.damped(nodes, edges.select(col("src"), col("dst"), col("cnt")),
+      sum(col("cnt")), col("r") * col("cnt") / col("od"), lit(1.0), lit(0.15),
+      iters)(Superstep.budgetOnly).out
 
   val WprIters = 5
 
@@ -120,31 +103,16 @@ object Centrality {
       .distinct().pipe(Checkpoints.cut)
     val srcs = sources.getOrElse(nodes).select(col("node").as("s"))
     // forward: (s, v, d, sigma)
-    var visited = srcs
-      .select(col("s"), col("s").as("v"), lit(0L).as("d"), lit(1L).as("sigma"))
-      .pipe(Checkpoints.cut)
-    var frontier = visited
-    var depth = 0L
-    var n = frontier.count()
-    while (n > 0) {
-      depth += 1
-      val prevFrontier = frontier
-      frontier = frontier.join(e, frontier("v") === e("src"))
+    val visited = Superstep.semiNaive(srcs
+        .select(col("s"), col("s").as("v"), lit(0L).as("d"), lit(1L).as("sigma")),
+        Int.MaxValue) { (frontier, visited, depth) =>
+      frontier.join(e, frontier("v") === e("src"))
         .groupBy(frontier("s"), e("dst"))
         .agg(sum(col("sigma")).as("sigma"))
-        .select(col("s"), col("dst").as("v"), lit(depth).as("d"), col("sigma"))
+        .select(col("s"), col("dst").as("v"), lit(depth.toLong).as("d"), col("sigma"))
         .join(visited.select(col("s").as("s2"), col("v").as("v2")),
           col("s") === col("s2") && col("v") === col("v2"), "left_anti")
-        .pipe(Checkpoints.cut)
-      n = frontier.count()
-      if (n > 0) {
-        val prevVisited = visited
-        visited = visited.union(frontier).pipe(Checkpoints.cut)
-        Checkpoints.release(prevVisited)
-      }
-      if (!(prevFrontier eq visited)) Checkpoints.release(prevFrontier)
-    }
-    if (!(frontier eq visited)) Checkpoints.release(frontier)
+    }(_.union(_))
     // shortest-path DAG: (s, u at d, w at d+1, sigu, sigw)
     val dag = visited.as("a").join(e, col("a.v") === e("src"))
       .join(visited.as("b"),
@@ -154,28 +122,25 @@ object Centrality {
         col("a.d").as("du"), col("a.sigma").as("sigu"), col("b.sigma").as("sigw"))
       .pipe(Checkpoints.cut)
     val maxd = visited.agg(max(col("d"))).first().getLong(0)
-    // backward: δ per (s, v), deepest level first
-    var deltaAll = visited.filter(col("d") === maxd)
-      .select(col("s"), col("v"), lit(0.0).as("delta"))
-      .pipe(Checkpoints.cut)
-    var dep = maxd - 1
-    while (dep >= 0) {
-      val contrib = dag.filter(col("du") === dep)
-        .join(deltaAll.select(col("s").as("ds"), col("v").as("dw"), col("delta")),
-          col("s") === col("ds") && col("w") === col("dw"))
-        .groupBy(col("s"), col("u"))
-        .agg(sum(col("sigu").cast("double") / col("sigw")
-          * (lit(1.0) + col("delta"))).as("nd"))
-      val level = visited.filter(col("d") === dep)
-        .select(col("s"), col("v"))
-        .join(contrib.select(col("s").as("cs"), col("u"), col("nd")),
-          col("s") === col("cs") && col("v") === col("u"), "left")
-        .select(col("s"), col("v"), coalesce(col("nd"), lit(0.0)).as("delta"))
-      val prevDelta = deltaAll
-      deltaAll = deltaAll.union(level).pipe(Checkpoints.cut)
-      Checkpoints.release(prevDelta)
-      dep -= 1
-    }
+    // backward: δ per (s, v), deepest level first — round i settles
+    // depth maxd − i
+    val deltaAll = Superstep.iterate(visited.filter(col("d") === maxd)
+        .select(col("s"), col("v"), lit(0.0).as("delta")), maxd.toInt) {
+      (deltaAll, round) =>
+        val dep = maxd - round
+        val contrib = dag.filter(col("du") === dep)
+          .join(deltaAll.select(col("s").as("ds"), col("v").as("dw"), col("delta")),
+            col("s") === col("ds") && col("w") === col("dw"))
+          .groupBy(col("s"), col("u"))
+          .agg(sum(col("sigu").cast("double") / col("sigw")
+            * (lit(1.0) + col("delta"))).as("nd"))
+        val level = visited.filter(col("d") === dep)
+          .select(col("s"), col("v"))
+          .join(contrib.select(col("s").as("cs"), col("u"), col("nd")),
+            col("s") === col("cs") && col("v") === col("u"), "left")
+          .select(col("s"), col("v"), coalesce(col("nd"), lit(0.0)).as("delta"))
+        deltaAll.union(level)
+    }(Superstep.budgetOnly).out
     val bc = deltaAll.filter(col("v") =!= col("s"))
       .groupBy(col("v").as("node"))
       .agg(sum(col("delta")).as("b"))

@@ -48,20 +48,12 @@ object Cores {
     * rounds bounded by |removals|. Returns every node with its core
     * membership and its degree INSIDE the core (0 outside). */
   def kcore(nodes: DataFrame, undirected: DataFrame, k: Int): DataFrame = {
-    var live = nodes.select("node").pipe(Checkpoints.cut)
-    var nLive = live.count()
-    var removed = 1L
-    while (removed > 0 && nLive > 0) {
-      val deg = undirected
+    val live = peel(nodes.select("node")) { live =>
+      undirected
         .join(live.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("dg"))
-      val prevLive = live
-      live = deg.filter(col("dg") >= k).select("node").pipe(Checkpoints.cut)
-      val n = live.count()
-      removed = nLive - n
-      nLive = n
-      Checkpoints.release(prevLive)
+        .filter(col("dg") >= k).select("node")
     }
     val coreDeg = undirected
       .join(live.select(col("node").as("src")), Seq("src"), "left_semi")
@@ -76,6 +68,25 @@ object Cores {
       .orderBy("node")
     // live stays referenced by this lazy plan; Verify/Bench clear
     // blocks per query
+  }
+
+  /** Iterative peel to fixpoint (k-core, k-truss): each round keeps
+    * the survivors `keep(live)` of the live set; stops once a round
+    * removes nothing or nothing is left. Returns the final cut live
+    * set. */
+  private def peel(seed: DataFrame)(keep: DataFrame => DataFrame): DataFrame = {
+    var nLive = 0L
+    Superstep.loop(Int.MaxValue) { r =>
+      val live = r.cut(seed)
+      nLive = live.count()
+      (live, nLive)
+    } { (live, r) =>
+      val next = r.cut(keep(live))
+      val n = next.count()
+      val removed = nLive - n
+      nLive = n
+      (next, if (n == 0) 0L else removed)
+    }(identity).out
   }
 
   val CoreK = 2
@@ -98,25 +109,20 @@ object Cores {
     * |labels per node| ≤ degree). */
   def labelPropagation(nodes: DataFrame, undirected: DataFrame,
       iters: Int): DataFrame = {
-    var lab = nodes.select(col("node"), col("node").as("label"))
-      .pipe(Checkpoints.cut)
     val w = Window.partitionBy("node")
       .orderBy(col("c").desc, col("label").asc)
-    for (_ <- 1 to iters) {
-      val counts = undirected
-        .join(lab.select(col("node").as("src"), col("label")), Seq("src"))
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val pick = counts.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("node").as("pn"), col("label").as("pl"))
-      val prev = lab
-      lab = prev.join(pick, col("node") === col("pn"), "left")
-        .select(col("node"), coalesce(col("pl"), col("label")).as("label"))
-        .pipe(Checkpoints.cut)
-      Checkpoints.release(prev)
-    }
-    lab
+    Superstep.iterate(nodes.select(col("node"), col("node").as("label")), iters) {
+      (lab, _) =>
+        val counts = undirected
+          .join(lab.select(col("node").as("src"), col("label")), Seq("src"))
+          .groupBy(col("dst").as("node"), col("label"))
+          .agg(count(lit(1)).as("c"))
+        val pick = counts.withColumn("rk", row_number().over(w))
+          .filter(col("rk") === 1)
+          .select(col("node").as("pn"), col("label").as("pl"))
+        lab.join(pick, col("node") === col("pn"), "left")
+          .select(col("node"), coalesce(col("pl"), col("label")).as("label"))
+    }(Superstep.budgetOnly).out
   }
 
   val LpaIters = 4
@@ -191,11 +197,9 @@ object Cores {
       .withColumn("rk", row_number().over(w).cast("long"))
       .withColumn("d", count(lit(1)).over(Window.partitionBy("src")).cast("long"))
       .pipe(Checkpoints.cut)
-    var cur = nodes.select(col("node").as("start"), col("node").as("leaf"),
-      array(col("node")).as("path")).pipe(Checkpoints.cut)
-    for (t <- 1 to len) {
-      val prev = cur
-      cur = prev.join(nb,
+    val walks = Superstep.iterate(nodes.select(col("node").as("start"),
+        col("node").as("leaf"), array(col("node")).as("path")), len) { (cur, t) =>
+      cur.join(nb,
           col("leaf") === nb("src") &&
             nb("rk") === pmod(stepHash(col("leaf"), t), nb("d")) + 1,
           "left")
@@ -203,11 +207,9 @@ object Cores {
           coalesce(nb("dst"), col("leaf")).as("leaf"),
           when(nb("dst").isNull, col("path"))
             .otherwise(concat(col("path"), array(nb("dst")))).as("path"))
-        .pipe(Checkpoints.cut)
-      Checkpoints.release(prev)
-    }
+    }(Superstep.budgetOnly).out
     Checkpoints.release(nb)
-    cur
+    walks
   }
 
   def randomWalks(nodes: DataFrame, edges: DataFrame, len: Int): DataFrame =
@@ -242,9 +244,6 @@ object Cores {
   val TrussK = 4
 
   def ktruss(canonical: DataFrame, k: Int): DataFrame = {
-    var live = canonical.select("a", "b").pipe(Checkpoints.cut)
-    var nLive = live.count()
-    var removed = 1L
     def support(e: DataFrame): DataFrame = {
       val nb = e.select(col("a").as("x"), col("b").as("y"))
         .union(e.select(col("b").as("x"), col("a").as("y")))
@@ -255,14 +254,8 @@ object Cores {
         .groupBy(col("e.a").as("a"), col("e.b").as("b"))
         .agg(count(lit(1)).as("supp"))
     }
-    while (removed > 0 && nLive > 0) {
-      val prevLive = live
-      live = support(live).filter(col("supp") >= k - 2)
-        .select("a", "b").pipe(Checkpoints.cut)
-      val n = live.count()
-      removed = nLive - n
-      nLive = n
-      Checkpoints.release(prevLive)
+    val live = peel(canonical.select("a", "b")) {
+      support(_).filter(col("supp") >= k - 2).select("a", "b")
     }
     canonical
       .join(live.withColumn("in_truss", lit(true)), Seq("a", "b"), "left")
@@ -304,12 +297,10 @@ object Cores {
     val und = undirected.filter(col("src") =!= col("dst"))
     val pri = nodes.select(col("node"),
       md5(col("node").cast("string")).as("p")).pipe(Checkpoints.cut)
-    var live = pri.select("node").pipe(Checkpoints.cut)
-    var settled: DataFrame = null
-    var round = 0L
-    var nLive = live.count()
-    while (nLive > 0) {
-      round += 1
+    val settled = Superstep.loop(Int.MaxValue) { r =>
+      ((r.cut(pri.select("node")), Superstep.UnionView.empty), Superstep.Unmeasured)
+    } { case ((live, settled), r) =>
+      val round = r.n.toLong
       val le = und
         .join(live.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi")
@@ -324,20 +315,14 @@ object Cores {
       val killed = le
         .join(mis.select(col("node").as("src")), Seq("src"), "left_semi")
         .select(col("dst").as("node")).distinct()
-      val newSettled = mis
+      val newSettled = r.cut(mis
         .select(col("node"), lit(true).as("in_mis"),
           lit(round).as("settled_round"))
-        .union(killed.select(col("node"), lit(false), lit(round)))
-        .pipe(Checkpoints.cut)
-      settled = if (settled == null) newSettled
-        else settled.union(newSettled)
-      val prevLive = live
-      live = live.join(newSettled.select("node"), Seq("node"), "left_anti")
-        .pipe(Checkpoints.cut)
-      Checkpoints.release(prevLive)
-      nLive = live.count()
-    }
-    Checkpoints.release(pri, live)
+        .union(killed.select(col("node"), lit(false), lit(round))))
+      val nextLive = r.cut(live.join(newSettled.select("node"), Seq("node"), "left_anti"))
+      ((nextLive, settled.add(newSettled, r)), nextLive.count())
+    }(_._2.view).out
+    Checkpoints.release(pri)
     settled.orderBy("node")
   }
 
@@ -373,42 +358,45 @@ object Cores {
       .filter(col("pd") < col("ps"))
       .select("src", "dst")
       .pipe(Checkpoints.cut)
-    var live = pri.select("node").pipe(Checkpoints.cut)
-    var settled: DataFrame = null
-    var wave = 0L
-    var nLive = live.count()
-    while (nLive > 0) {
-      wave += 1
+    val settled = colorWaves(pri.select("node")) { (live, _) =>
       val blocked = hp
         .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src").as("node")).distinct()
-      val ready = live.join(blocked, Seq("node"), "left_anti")
-      val used =
-        if (settled == null) null
-        else hp.join(ready.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(settled.select(col("node").as("dst"), col("color")), Seq("dst"))
-          .groupBy(col("src").as("node"))
-          .agg(collect_set(col("color")).as("cs"))
-      val colored = (if (used == null) ready.withColumn("cs",
-          array().cast("array<long>"))
-        else ready.join(used, Seq("node"), "left")
-          .withColumn("cs", coalesce(col("cs"), array().cast("array<long>"))))
-        .select(col("node"),
-          array_min(array_except(
-            sequence(lit(0L), size(col("cs")).cast("long")), col("cs")))
-            .as("color"),
-          lit(wave).as("wave"))
-        .pipe(Checkpoints.cut)
-      settled = if (settled == null) colored else settled.union(colored)
-      val prevLive = live
-      live = live.join(colored.select("node"), Seq("node"), "left_anti")
-        .pipe(Checkpoints.cut)
-      Checkpoints.release(prevLive)
-      nLive = live.count()
+      (live.join(blocked, Seq("node"), "left_anti"), hp)
     }
-    Checkpoints.release(pri, hp, live)
-    settled.orderBy("node")
+    Checkpoints.release(pri, hp)
+    settled
   }
+
+  /** The wave loop both colorings share: each wave `pick(live, round)`
+    * chooses the nodes to color next plus the (src, dst) relation whose
+    * dst side holds each picked src's already-colored neighbors; every
+    * picked node takes the mex of those neighbors' colors and leaves
+    * the live set. Runs until nothing is live; returns (node, color,
+    * wave) sorted by node. */
+  private def colorWaves(seed: DataFrame)(
+      pick: (DataFrame, Superstep.Round) => (DataFrame, DataFrame)): DataFrame =
+    Superstep.loop(Int.MaxValue) { r =>
+      ((r.cut(seed), Superstep.UnionView.empty), Superstep.Unmeasured)
+    } { case ((live, settled), r) =>
+      val (ready, nbrs) = pick(live, r)
+      val noColors = array().cast("array<long>")
+      val withUsed =
+        if (settled.isEmpty) ready.withColumn("cs", noColors)
+        else ready.join(nbrs
+            .join(ready.select(col("node").as("src")), Seq("src"), "left_semi")
+            .join(settled.view.select(col("node").as("dst"), col("color")), Seq("dst"))
+            .groupBy(col("src").as("node"))
+            .agg(collect_set(col("color")).as("cs")), Seq("node"), "left")
+          .withColumn("cs", coalesce(col("cs"), noColors))
+      val colored = r.cut(withUsed.select(col("node"),
+        array_min(array_except(
+          sequence(lit(0L), size(col("cs")).cast("long")), col("cs")))
+          .as("color"),
+        lit(r.n.toLong).as("wave")))
+      val nextLive = r.cut(live.join(colored.select("node"), Seq("node"), "left_anti"))
+      ((nextLive, settled.add(colored, r)), nextLive.count())
+    }(_._2.view).out.orderBy("node")
 
   /** Dense-graph coloring fallback — one q131 MIS per color sweep
     * (the trade documented on [[greedyColoring]]: JP's wave depth is
@@ -428,43 +416,14 @@ object Cores {
       nodes: DataFrame, undirected: DataFrame): DataFrame = {
     val und = undirected.filter(col("src") =!= col("dst"))
       .pipe(Checkpoints.cut)
-    var live = nodes.select("node").pipe(Checkpoints.cut)
-    var settled: DataFrame = null
-    var sweep = 0L
-    var nLive = live.count()
-    while (nLive > 0) {
-      sweep += 1
-      val liveEdges = und
+    val settled = colorWaves(nodes.select("node")) { (live, r) =>
+      val liveEdges = r.cut(und
         .join(live.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .pipe(Checkpoints.cut)
-      val mis = maximalIndependentSet(live, liveEdges)
-        .filter(col("in_mis")).select("node")
-      val used =
-        if (settled == null) null
-        else und.join(mis.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(settled.select(col("node").as("dst"), col("color")), Seq("dst"))
-          .groupBy(col("src").as("node"))
-          .agg(collect_set(col("color")).as("cs"))
-      val colored = (if (used == null) mis.withColumn("cs",
-          array().cast("array<long>"))
-        else mis.join(used, Seq("node"), "left")
-          .withColumn("cs", coalesce(col("cs"), array().cast("array<long>"))))
-        .select(col("node"),
-          array_min(array_except(
-            sequence(lit(0L), size(col("cs")).cast("long")), col("cs")))
-            .as("color"),
-          lit(sweep).as("wave"))
-        .pipe(Checkpoints.cut)
-      settled = if (settled == null) colored else settled.union(colored)
-      val prevLive = live
-      live = live.join(colored.select("node"), Seq("node"), "left_anti")
-        .pipe(Checkpoints.cut)
-      Checkpoints.release(prevLive, liveEdges)
-      nLive = live.count()
+        .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+      (maximalIndependentSet(live, liveEdges).filter(col("in_mis")).select("node"), und)
     }
-    Checkpoints.release(und, live)
-    settled.orderBy("node")
+    Checkpoints.release(und)
+    settled
   }
 
   /** Density-routed coloring: average directed degree ≤
@@ -560,8 +519,7 @@ object Cores {
       .pipe(Checkpoints.cut)
     val diag = nodes.select(col("node").as("a"), col("node").as("b"),
       lit(SimRankUnit).as("s"))
-    var s = diag.pipe(Checkpoints.cut)
-    for (_ <- 1 to iters) {
+    val sims = Superstep.iterate(diag, iters) { (s, _) =>
       val contrib = s
         .join(e.select(col("src").as("a"), col("dst").as("na")), Seq("a"))
         .join(e.select(col("src").as("b"), col("dst").as("nb")), Seq("b"))
@@ -573,11 +531,9 @@ object Cores {
         .join(indeg.select(col("node").as("b"), col("ind").as("db")), Seq("b"))
         .selectExpr("a", "b", "(8 * ssum) div (10 * da * db) AS s")
         .filter(col("s") > 0)
-      val prev = s
-      s = diag.unionByName(upd).pipe(Checkpoints.cut)
-      Checkpoints.release(prev)
-    }
-    val out = s.filter(col("a") < col("b"))
+      diag.unionByName(upd)
+    }(Superstep.budgetOnly).out
+    val out = sims.filter(col("a") < col("b"))
       .select(col("a"), col("b"),
         round(col("s").cast("double") / SimRankUnit, 6).as("sim"))
       .orderBy(col("sim").desc, col("a").asc, col("b").asc)

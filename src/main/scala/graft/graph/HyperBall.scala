@@ -1,9 +1,7 @@
 package graft.graph
 
-import scala.util.chaining._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.Checkpoints
 
 /** HyperBall — approximate reachable-set sizes for EVERY node at
   * once, the 100 TB companion to the exact transitive closure
@@ -57,33 +55,33 @@ object HyperBall {
 
   /** (node, regs) → (node, regs) after max-merging successors'
     * sketches to a fixpoint. `edges` is (src, dst) directed. */
-  def propagate(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    var sketches = nodes.select(col("node"), initRegs(col("node")).as("regs"))
-      .pipe(Checkpoints.cut)
-    var changed = 1L
-    while (changed > 0) {
-      // successor sketches flow BACKWARD along v→u (v's ball absorbs
-      // u's); exploded to (node, i, r) so the max is a plain hash agg
-      val fromSucc = edges
-        .join(sketches.select(col("node").as("dst"), col("regs")), Seq("dst"))
-        .select(col("src").as("node"), posexplode(col("regs")).as(Seq("i", "r")))
-      val own = sketches
-        .select(col("node"), posexplode(col("regs")).as(Seq("i", "r")))
-      val next = own.unionByName(fromSucc)
-        .groupBy("node", "i").agg(max(col("r")).as("r"))
-        .groupBy("node")
-        .agg(array_sort(collect_list(struct(col("i"), col("r")))).as("p"))
-        .select(col("node"), expr("transform(p, q -> q.r)").as("regs"))
-        .pipe(Checkpoints.cut)
-      changed = next
-        .join(sketches.select(col("node").as("pn"), col("regs").as("pr")),
-          col("node") === col("pn"))
-        .filter(col("regs") =!= col("pr")).count()
-      Checkpoints.release(sketches)
-      sketches = next
-    }
-    sketches
+  def propagate(nodes: DataFrame, edges: DataFrame): DataFrame =
+    Superstep.iterate(nodes.select(col("node"), initRegs(col("node")).as("regs")),
+      Int.MaxValue)((sketches, _) => merged(edges, sketches))(regsChanged).out
+
+  /** One HyperBall round: every node's registers max-merged with its
+    * successors' — successor sketches flow BACKWARD along v→u (v's
+    * ball absorbs u's), exploded to (node, i, r) so the max is a plain
+    * hash agg. */
+  private def merged(edges: DataFrame, sketches: DataFrame): DataFrame = {
+    val fromSucc = edges
+      .join(sketches.select(col("node").as("dst"), col("regs")), Seq("dst"))
+      .select(col("src").as("node"), posexplode(col("regs")).as(Seq("i", "r")))
+    val own = sketches
+      .select(col("node"), posexplode(col("regs")).as(Seq("i", "r")))
+    own.unionByName(fromSucc)
+      .groupBy("node", "i").agg(max(col("r")).as("r"))
+      .groupBy("node")
+      .agg(array_sort(collect_list(struct(col("i"), col("r")))).as("p"))
+      .select(col("node"), expr("transform(p, q -> q.r)").as("regs"))
   }
+
+  /** Change signal of a sketch round: nodes whose registers moved. */
+  private def regsChanged(prev: DataFrame, next: DataFrame): Long =
+    next
+      .join(prev.select(col("node").as("pn"), col("regs").as("pr")),
+        col("node") === col("pn"))
+      .filter(col("regs") =!= col("pr")).count()
 
   /** HLL estimate from a register array, with the standard
     * small-range linear-counting correction — the codegen'd
@@ -124,39 +122,17 @@ object HyperBall {
     * projection per radius; the accumulator rides in the same frame
     * as the sketch so each radius is one checkpointed pass. */
   def harmonicEstimates(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    var state = nodes
-      .select(col("node"), initRegs(col("node")).as("regs"))
-      .withColumn("est", estimate(col("regs")))
-      .withColumn("harm", lit(0.0))
-      .pipe(Checkpoints.cut)
-    var changed = 1L
-    var t = 0L
-    while (changed > 0) {
-      t += 1
-      val fromSucc = edges
-        .join(state.select(col("node").as("dst"), col("regs")), Seq("dst"))
-        .select(col("src").as("node"), posexplode(col("regs")).as(Seq("i", "r")))
-      val own = state
-        .select(col("node"), posexplode(col("regs")).as(Seq("i", "r")))
-      val merged = own.unionByName(fromSucc)
-        .groupBy("node", "i").agg(max(col("r")).as("r"))
-        .groupBy("node")
-        .agg(array_sort(collect_list(struct(col("i"), col("r")))).as("p"))
-        .select(col("node"), expr("transform(p, q -> q.r)").as("regs"))
-      val next = state.select(col("node"), col("est"), col("harm"))
-        .join(merged, Seq("node"))
+    val state = Superstep.iterate(nodes
+        .select(col("node"), initRegs(col("node")).as("regs"))
+        .withColumn("est", estimate(col("regs")))
+        .withColumn("harm", lit(0.0)), Int.MaxValue) { (state, t) =>
+      state.select(col("node"), col("est"), col("harm"))
+        .join(merged(edges, state), Seq("node"))
         .withColumn("nest", estimate(col("regs")))
         .select(col("node"), col("regs"), col("nest").as("est"),
-          (col("harm") + greatest(col("nest") - col("est"), lit(0.0)) / t)
+          (col("harm") + greatest(col("nest") - col("est"), lit(0.0)) / t.toLong)
             .as("harm"))
-        .pipe(Checkpoints.cut)
-      changed = next
-        .join(state.select(col("node").as("pn"), col("regs").as("pr")),
-          col("node") === col("pn"))
-        .filter(col("regs") =!= col("pr")).count()
-      Checkpoints.release(state)
-      state = next
-    }
+    }(regsChanged).out
     state.select(col("node"), round(col("harm"), 3).as("est_harmonic"))
       .orderBy("node")
   }

@@ -130,13 +130,17 @@ object Louvain {
     // integer-valued doubles (unit edges and their contractions), so
     // every sum over them is order-exact and the carried column can
     // not perturb Q.
-    var assign = nodes.select(col("node"), col("node").as("community"))
-      .join(deg, Seq("node"), "left").na.fill(0.0, Seq("deg"))
-      .pipe(Checkpoints.cut)
-    val assigns = scala.collection.mutable.ArrayBuffer(assign)
-    var sweep = 0
-    while (sweep < iters) {
-      sweep += 1
+    //
+    // Every sweep's assignment stays live (the state is the whole
+    // sequence) until the post-loop Q job picks one; the kernel then
+    // frees the rest.
+    val best = Superstep.loop(iters) { r =>
+      (Vector(r.cut(nodes.select(col("node"), col("node").as("community"))
+        .join(deg, Seq("node"), "left").na.fill(0.0, Seq("deg")))),
+        Superstep.Unmeasured)
+    } { (assigns, r) =>
+      val sweep = r.n
+      val assign = assigns.last
       val tot = assign
         .groupBy("community").agg(sum(col("deg")).as("dtot"))
       // candidate communities per node: every neighbor community plus
@@ -164,17 +168,23 @@ object Louvain {
       // total order and ties fall through to the smaller c — without
       // the per-sweep window sort. deg is constant per node, so
       // carrying it through the struct keeps it deterministic.
-      assign = scored
+      (assigns :+ r.cut(scored
         .groupBy("node")
         .agg(min(struct((-col("score")).as("ns"), col("c"),
           col("community"), col("deg"))).as("w0"))
         .select(col("node"),
           when(pmod(col("node"), lit(2)) === lit(sweep % 2), col("w0.c"))
             .otherwise(col("w0.community")).as("community"),
-          col("w0.deg").as("deg"))
-        .pipe(Checkpoints.cut)
-      assigns += assign
-    }
+          col("w0.deg").as("deg"))), Superstep.Unmeasured)
+    } { assigns => bestSweep(e, m, assigns) }.out
+    Checkpoints.release(adj, deg)
+    best
+  }
+
+  /** The assignment of highest modularity among every sweep's, the
+    * earliest on ties — one job for all of them. */
+  private def bestSweep(e: DataFrame, m: Double,
+      assigns: Vector[DataFrame]): DataFrame = {
     // one job: Q of every sweep's assignment at once. The argmax-Q
     // selection absorbs semi-synchronous limit cycles and replaces a
     // convergence test (which a cycle would never satisfy).
@@ -213,17 +223,13 @@ object Louvain {
         .cast("decimal(38,18)")).as("q"))
       .collect()
       .map(r => r.getInt(0) -> r.getDecimal(1)).toMap
-    var bestS = 0
-    var bestQ = qBySweep(0)
-    for (s <- 1 to iters)
-      if (qBySweep(s).compareTo(bestQ) > 0) { bestQ = qBySweep(s); bestS = s }
-    // returned WITH the carried deg column (still the cut frame, so
+    // first index of the maximum: the earliest sweep wins ties.
+    // Returned WITH the carried deg column (still the cut frame, so
     // louvainTwoLevel can release it); louvain() projects for callers
-    val best = assigns(bestS)
-    Checkpoints.release(adj, deg)
-    assigns.zipWithIndex
-      .foreach { case (a, s) => if (s != bestS) Checkpoints.release(a) }
-    best
+    val bestS = assigns.indices.reduce { (b, s) =>
+      if (qBySweep(s).compareTo(qBySweep(b)) > 0) s else b
+    }
+    assigns(bestS)
   }
 
   /** Phase-2 contraction: communities become super-nodes; intra-

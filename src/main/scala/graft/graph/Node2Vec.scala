@@ -1,6 +1,5 @@
 package graft.graph
 
-import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -115,9 +114,8 @@ object Node2Vec {
 
   /** Walk rows (walk_id, step, node) for step 0..len: step 1 by the
     * first-order pick, steps ≥ 2 by the (prev, cur) interval pick.
-    * Sinks terminate (inner-join drop — q222's semantics). The
-    * frontier is cut every step (the pagerank/walkRows discipline —
-    * without it the union replays O(len²) joins). */
+    * Sinks terminate (inner-join drop — q222's semantics). Each step
+    * is one [[Superstep]] round, as in [[RandomWalks.walkRows]]. */
   private[graft] def walkRows(seeds: DataFrame, adj: DataFrame,
       adj2: DataFrame, len: Int): DataFrame = {
     def pick(s: Int) = expr(
@@ -135,23 +133,23 @@ object Node2Vec {
       .repartition(col("p2"), col("c2"))
       .sortWithinPartitions("p2", "c2")
       .persist()
-    val acc = ArrayBuffer(
-      seeds.select(col("walk_id"), lit(0L).as("step"), col("node")))
-    var cur = graft.Checkpoints.cut(
-      seeds.join(a, col("node") === col("src"))
+    // round 0 takes the first-order step 1; round r the second-order
+    // step r + 1
+    val walks = Superstep.loop(len - 1) { r =>
+      val cur = r.cut(seeds.join(a, col("node") === col("src"))
         .filter(col("rk") === pick(0) % col("od") + 1)
         .select(col("walk_id"), col("node").as("prev"),
           col("dst").as("node")))
-    acc += cur.select(col("walk_id"), lit(1L).as("step"), col("node"))
-    for (s <- 2 to len) {
-      cur = graft.Checkpoints.cut(stepJoin(cur, a2, s - 1))
-      acc += cur.select(col("walk_id"), lit(s.toLong).as("step"),
-        col("node"))
-    }
+      ((cur, Superstep.UnionView(Vector(RandomWalks.stepRows(seeds, 0),
+        RandomWalks.stepRows(cur, 1)))), Superstep.Unmeasured)
+    } { case ((cur, acc), r) =>
+      val next = r.cut(stepJoin(cur, a2, r.n))
+      ((next, acc.add(RandomWalks.stepRows(next, r.n + 1), r)), Superstep.Unmeasured)
+    }(_._2.view).out
     // every step is materialized by its cut; the caches can go
     a.unpersist(blocking = false)
     a2.unpersist(blocking = false)
-    acc.reduce(_.unionByName(_))
+    walks
   }
 
   /** Edge-support bound for the adj2 quadratic: keep only edges with

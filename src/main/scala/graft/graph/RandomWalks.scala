@@ -1,6 +1,5 @@
 package graft.graph
 
-import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -83,11 +82,10 @@ object RandomWalks {
     * (walk_id, node); `adj` carries (src, dst, rk, od). Output:
     * (walk_id, step, node) for step 0..len.
     *
-    * The frontier is CUT after every step (the pagerank iteration
-    * discipline): without it, step s's plan replays joins 1..s and
-    * the union replays O(len²) joins total (BENCH_SCALING.md
-    * Part 11). The cut frontiers stay referenced by the output
-    * union, so none is released here; the caller frees them via
+    * Each step is one [[Superstep]] round (uncut, step s's plan would
+    * replay joins 1..s and the union O(len²) joins — BENCH_SCALING.md
+    * Part 11). The output union view reads every step's frontier, so
+    * they outlive the loop; the caller frees them via
     * [[graft.Checkpoints.releaseAll]].
     *
     * The adjacency is CACHED pre-partitioned on src and sorted within
@@ -107,16 +105,20 @@ object RandomWalks {
       len: Int): DataFrame = {
     val a = adj.repartition(col("src")).sortWithinPartitions("src")
       .persist()
-    var cur = seeds.select(col("walk_id"), col("node"))
-    val acc = ArrayBuffer(
-      cur.select(col("walk_id"), lit(0L).as("step"), col("node")))
-    for (s <- 1 to len) {
-      cur = graft.Checkpoints.cut(stepJoin(cur, a, s))
-      acc += cur.select(col("walk_id"), lit(s.toLong).as("step"), col("node"))
-    }
+    val walks = Superstep.loop(len) { _ =>
+      val cur = seeds.select(col("walk_id"), col("node"))
+      ((cur, Superstep.UnionView(Vector(stepRows(cur, 0)))), Superstep.Unmeasured)
+    } { case ((cur, acc), r) =>
+      val next = r.cut(stepJoin(cur, a, r.n))
+      ((next, acc.add(stepRows(next, r.n), r)), Superstep.Unmeasured)
+    }(_._2.view).out
     a.unpersist(blocking = false)
-    acc.reduce(_.unionByName(_))
+    walks
   }
+
+  /** A walk frontier as (walk_id, step, node) output rows. */
+  private[graph] def stepRows(cur: DataFrame, step: Int): DataFrame =
+    cur.select(col("walk_id"), lit(step.toLong).as("step"), col("node"))
 
   /** The walk table over any seed/adjacency pair (spec entry point):
     * [[walkRows]] in presentation order. */

@@ -32,10 +32,8 @@ import graft.{Checkpoints, Tables}
   *
   * Convergence detection is an exact set comparison (carried counts
   * plus one distinct-union probe) — no checksum shortcut that could
-  * mask a non-converged edge set. Each round's edge set is
-  * lineage-cut via [[Checkpoints.cut]] and the superseded round's
-  * blocks are released, same discipline as the other iterative
-  * algorithms.
+  * mask a non-converged edge set. Each round is one [[Superstep]]
+  * round, like every other iterative algorithm here.
   */
 object StarContraction {
 
@@ -89,29 +87,27 @@ object StarContraction {
     * `edges` is undirected input as (u, v) in either orientation. */
   def componentsWithRounds(nodes: DataFrame,
       edges: DataFrame): (DataFrame, Int) = {
-    var e = edges.select(col("u"), col("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .pipe(Checkpoints.cut)
-    var rounds = 0
-    var ne = e.count()
-    var done = ne == 0
-    while (!done) {
-      val next = smallStar(largeStar(e)).pipe(Checkpoints.cut)
-      rounds += 1
+    var ne = 0L
+    val stars = Superstep.loop(Int.MaxValue) { r =>
+      val e = r.cut(edges.select(col("u"), col("v"))
+        .filter(col("u") =!= col("v")).distinct())
+      ne = e.count()
+      (e, ne)
+    } { (e, r) =>
+      val next = r.cut(smallStar(largeStar(e)))
       val nn = next.count()
-      done = sameEdgeSet(next, nn, e, ne)
-      Checkpoints.release(e)
-      e = next
+      val same = sameEdgeSet(next, nn, e, ne)
       ne = nn
-    }
+      (next, if (same) 0L else 1L)
+    }(identity)
     // Fixpoint edges form stars (child -> component-min root); roots
     // and isolated nodes label themselves.
-    val roots = e.select(col("u").as("child"), col("v").as("root"))
+    val roots = stars.out.select(col("u").as("child"), col("v").as("root"))
     val comp = nodes.select(col("node"))
       .join(roots, col("node") === col("child"), "left")
       .select(col("node"),
         coalesce(col("root"), col("node")).as("component"))
-    (comp, rounds)
+    (comp, stars.rounds)
   }
 
   def components(nodes: DataFrame, edges: DataFrame): DataFrame =
@@ -147,22 +143,12 @@ object StarContraction {
     *
     * `probeRounds = 0` skips the probe: pure star contraction.
     *
-    * Probe-round shape (r14 optimization, guide §2.4): one
-    * propagation round is a single equi-join + one partial agg — the
-    * neighbor contributions unioned with a self branch read from the
-    * previous round's CACHED comp frame (every node appears and
-    * carries its own label; nothing extra is materialized) — instead
-    * of the previous join + agg + second join (the left-join merge of
-    * old and new labels). The self branch also carries the OLD label,
-    * so the convergence count is a filter over the round's
-    * already-checkpointed output rather than a third join — per
-    * round: 1 join + 1 agg + 1 cached-scan count, down from 2 joins +
-    * 1 agg + 1 join + count. Labels are identical: min-label
-    * propagation is deterministic and the self branch contributes
-    * exactly the node's own label, the same `least(own, neighbor-min)`
-    * as before. Precondition (unchanged, now load-bearing for the
-    * domain too): edge endpoints ⊆ `nodes` — every caller derives
-    * `nodes` from the edge endpoints or filters both from one
+    * The probe round is [[Algorithms.connectedComponents]]' own
+    * min-label round ([[Algorithms.minLabels]]): one equi-join + one
+    * partial agg + one cached-scan change count per round.
+    * Precondition (load-bearing for the domain too, and enforced
+    * loudly by that round): edge endpoints ⊆ `nodes` — every caller
+    * derives `nodes` from the edge endpoints or filters both from one
     * keyspace. */
   def ccAuto(nodes: DataFrame, edges: DataFrame,
       probeRounds: Int = 8): DataFrame = {
@@ -174,44 +160,9 @@ object StarContraction {
         .filter(col("src") =!= col("dst")))
       .distinct()
       .pipe(Checkpoints.cut)
-    var compCut = nodes.select(col("node"), col("node").as("component"))
-      .withColumn("pc", col("component"))
-      .pipe(Checkpoints.cut)
-    def comp = compCut.select("node", "component")
-    var changed = if (probeRounds == 0) 1L else Long.MaxValue
-    var r = 0
-    while (changed > 0 && r < probeRounds) {
-      r += 1
-      // one join + one agg per round: neighbor contributions unioned
-      // with a self branch read from the previous round's CACHED comp
-      // frame (every node appears and carries its own label — and the
-      // old label rides as `own`, so the convergence count is a filter
-      // over this round's checkpointed output, not another join)
-      val contrib = und
-        .join(comp.select(col("node").as("src"), col("component")),
-          Seq("src"))
-        .select(col("dst").as("node"), col("component"),
-          lit(null).cast("long").as("own"))
-      val self = compCut.select(col("node"), col("component"),
-        col("component").as("own"))
-      val next = contrib.unionByName(self)
-        .groupBy("node")
-        .agg(min(col("component")).as("component"),
-          min(col("own")).as("pc"))
-        // a dst outside `nodes` has no self row ⇒ pc null: fail
-        // loudly instead of emitting a foreign node (ADVICE r14 —
-        // the precondition used to be enforced only by a comment)
-        .select(col("node"), col("component"),
-          when(col("pc").isNotNull, col("pc")).otherwise(raise_error(
-            format_string("ccAuto: edge endpoint %d is not in " +
-              "`nodes` — callers must pass every endpoint",
-              col("node")))).as("pc"))
-        .pipe(Checkpoints.cut)
-      changed = next.filter(col("component") =!= col("pc")).count()
-      Checkpoints.release(compCut)
-      compCut = next
-    }
-    if (changed == 0) { Checkpoints.release(und); return comp }
+    val probe = Algorithms.minLabels(nodes, und, probeRounds, "ccAuto")
+    val comp = probe.out.select("node", "component")
+    if (probe.converged) { Checkpoints.release(und); return comp }
     // diameter exceeds the probe: contract by probe labels, star the
     // quotient, compose. Quotient nodes = surviving labels.
     val lu = comp.select(col("node").as("src"), col("component").as("qu"))

@@ -411,7 +411,7 @@ class AlgorithmsSpec extends SparkSpec {
 
   test("scc mark-view re-cut: one deep cycle past the width cap stays exact") {
     // a single directed cycle of 48 nodes = one SCC whose backward
-    // BFS runs 48 hops — past Algorithms.UnionViewMaxWidth (32), so
+    // BFS runs 48 hops — past Superstep.UnionViewMaxWidth (32), so
     // the accumulated-mark union view is re-cut mid-walk at least
     // once; the labels must be unaffected (every node -> min id 0)
     val n = 48L
@@ -520,6 +520,13 @@ class AlgorithmsSpec extends SparkSpec {
     assert(iters > 5 && iters < 100,
       s"tolerance stop fired implausibly ($iters iters)")
     assert(ranks.count() == n)
+    // a budget too small to reach the tolerance fails loudly, naming
+    // the iteration count and the residual movement
+    val ex = intercept[IllegalStateException] {
+      Algorithms.pagerankConverged(tn, te, tol = 1e-4 * n, maxIters = 2)
+    }
+    assert(ex.getMessage.contains("after 2 iterations"), ex.getMessage)
+    assert(ex.getMessage.contains("L1 movement"), ex.getMessage)
   }
 
   test("trade graph: ≤3 out-edges per src, deterministic across runs") {

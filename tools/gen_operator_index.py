@@ -1,6 +1,9 @@
 #!/usr/bin/env python3
 """Generate OPERATORS.md — the operator index (query -> implementation
-file:line -> oracle presence) — from the source registrations.
+file -> oracle presence) — from the source registrations.
+
+Rows name the file only, never a line number, so an edit elsewhere in
+the file cannot leave the index stale.
 
 A query's implementation row is its registration in a `queries` map
 (`"qNN_name" -> (fn _)` style); oracle presence is a registration in
@@ -18,7 +21,7 @@ SRC = os.path.join(ROOT, "src/main/scala/graft")
 
 reg = re.compile(r'"(q\d+[a-z0-9_]*)"\s*->')
 
-impl = {}    # name -> (file, line)
+impl = {}    # name -> file
 oracle = set()
 
 for dirpath, _, files in os.walk(SRC):
@@ -32,7 +35,7 @@ for dirpath, _, files in os.walk(SRC):
         with open(path) as f:
             lines = f.readlines()
         in_oracle = False
-        for i, line in enumerate(lines, 1):
+        for line in lines:
             # block tracking: oracleSql maps hold SQL strings; queries
             # maps hold function refs. Switch on the val declarations.
             if re.search(r"val\s+oracleSql", line):
@@ -46,7 +49,7 @@ for dirpath, _, files in os.walk(SRC):
             if in_oracle:
                 oracle.add(name)
             elif name not in impl:
-                impl[name] = (rel, i)
+                impl[name] = rel
 
 def key(name):
     m = re.match(r"q(\d+)", name)
@@ -60,7 +63,7 @@ out = [
     "# Operator index",
     "",
     "One row per registered query: the operator's `SparkEntry.queries`",
-    "name, the registration site (jump-off to the implementation in the",
+    "name, the file that registers it (the implementation is in the",
     "same file), and whether a DuckDB oracle mirror exists",
     "(`SparkEntry.oracleSql`). Generated by `tools/gen_operator_index.py`;",
     "`OperatorIndexSpec` pins it against the live registry.",
@@ -71,8 +74,7 @@ out = [
     "|---|---|---|",
 ]
 for name in sorted(impl, key=key):
-    rel, line = impl[name]
-    out.append(f"| {name} | `{rel}:{line}` | {'yes' if name in oracle else '—'} |")
+    out.append(f"| {name} | `{impl[name]}` | {'yes' if name in oracle else '—'} |")
 
 with open(os.path.join(ROOT, "OPERATORS.md"), "w") as f:
     f.write("\n".join(out) + "\n")
