@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge, StatsBridge}
+import org.apache.spark.sql.types._
 
 /** Lineage cutting for iterative plans and reused intermediates.
   *
@@ -10,6 +17,17 @@ import org.apache.spark.sql.DataFrame
   * reliable path (HDFS/S3) switches every cut to a reliable
   * `checkpoint`; unset (the local default) it stays the cheap
   * `localCheckpoint`.
+  *
+  * Cuts carry measured statistics. The cut's own job observes the row
+  * count (and the bytes of every string/binary column), and the cut
+  * frame reports them to the planner instead of the estimate of the
+  * plan it came from — an estimate that compounds through every join
+  * and aggregate of a loop, up to 10⁴¹ B for a 25-row PageRank state.
+  * So `spark.sql.autoBroadcastJoinThreshold` broadcasts small loop
+  * state when the plan is made, and big state keeps its shuffle join.
+  * A loop whose change signal counts a cut's rows, or its rows
+  * matching a predicate, reads it from the same observation
+  * (`rowCount`, `cut(df, where)`), not from a second action.
   */
 object Checkpoints {
 
@@ -17,11 +35,71 @@ object Checkpoints {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** Observation names must be unique within a plan. */
+  private val cutIds = new AtomicLong
+
   /** Materialize `df` and cut its lineage, honoring [[ConfKey]]. If
     * the context already has a different checkpoint dir, the
     * configured one wins (with a warning) — never silently write
     * checkpoints somewhere other than where [[ConfKey]] says. */
-  def cut(df: DataFrame): DataFrame = {
+  def cut(df: DataFrame): DataFrame = observedCut(df, None)._1
+
+  /** [[cut]] that also counts, in the same job, the rows of `df` that
+    * match `where` (null counts as no match, as in `filter`). */
+  def cut(df: DataFrame, where: Column): (DataFrame, Long) =
+    observedCut(df, Some(where))
+
+  /** The row count of a cut frame, as its own job measured it. */
+  def rowCount(cut: DataFrame): Long = cut.queryExecution.analyzed match {
+    case lr: LogicalRDD if lr.stats.rowCount.isDefined => lr.stats.rowCount.get.toLong
+    case other => throw new IllegalArgumentException(
+      s"rowCount needs a frame returned by Checkpoints.cut, got a ${other.nodeName} root")
+  }
+
+  /** Materialize `df` with one observation on it — rows, rows matching
+    * `where`, and the bytes of each string/binary column — and re-root
+    * the cut on those statistics. Fixed-width columns count at their
+    * width; a frame with a nested column keeps the planner's size
+    * estimate but still reports its measured row count. */
+  private def observedCut(df: DataFrame, where: Option[Column]): (DataFrame, Long) = {
+    val (varWidth, rest) = df.queryExecution.analyzed.output.partition(a =>
+      a.dataType match {
+        case _: StringType | _: CharType | _: VarcharType | BinaryType => true
+        case _ => false
+      })
+    val (fixed, nested) = rest.partition(a => a.dataType match {
+      case _: NumericType | BooleanType | DateType | TimestampType | TimestampNTZType |
+          _: DayTimeIntervalType | _: YearMonthIntervalType | NullType |
+          CalendarIntervalType => true
+      case _ => false
+    })
+    val name = s"graft_cut_${cutIds.incrementAndGet()}"
+    val metrics = count(lit(1)).as("rows") +:
+      (where.map(w => count(when(w, lit(1))).as("matched")).toSeq ++
+        varWidth.zipWithIndex.map { case (a, i) =>
+          sum(octet_length(ColumnBridge.column(a))).as(s"bytes$i")
+        })
+    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val c = materialize(observed)
+    // read from the plan that just ran: the checkpoint action executes
+    // `observed`'s own QueryExecution, so its metric collectors are
+    // filled when the action returns
+    val m = observed.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(s"cut observation $name did not report"))
+    def metric(field: String): Long = {
+      val i = m.fieldIndex(field)
+      if (m.isNullAt(i)) 0L else m.getLong(i)
+    }
+    val rows = metric("rows")
+    val matched = if (where.isDefined) metric("matched") else rows
+    val size =
+      if (nested.nonEmpty) c.queryExecution.analyzed.stats.sizeInBytes
+      else BigInt(rows) * (8 + fixed.map(_.dataType.defaultSize).sum + 12 * varWidth.size) +
+        varWidth.indices.map(i => BigInt(metric(s"bytes$i"))).sum
+    (StatsBridge.withStats(c, Statistics(size.max(1), rowCount = Some(BigInt(rows)))), matched)
+  }
+
+  private def materialize(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(ConfKey) match {
       case Some(dir) if dir.nonEmpty =>
@@ -60,7 +138,7 @@ object Checkpoints {
     * lineage would otherwise re-execute per action. */
   def cutOnce(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD
+      case lr: LogicalRDD
           if lr.rdd.isCheckpointed => df
       case _ => cut(df)
     }
@@ -82,7 +160,7 @@ object Checkpoints {
   def release(dfs: DataFrame*): Unit =
     dfs.filter(_ != null).foreach { df =>
       df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        case lr: LogicalRDD =>
           lr.rdd.unpersist(blocking = false)
         case other => log.warn(
           s"release() called on a non-checkpoint plan root " +

@@ -1,7 +1,10 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -11,8 +14,7 @@ import org.apache.spark.sql.functions._
   * scan via Catalyst pushdown (verified in specs via explain).
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Tables.parquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -58,6 +60,33 @@ object Tables {
     * TIMESTAMP(NANOS): map it to BIGINT nanos instead of failing the
     * µs conversion. Harmless when the data is already µs. */
   val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TrieMap[(String, Long, String), StructType]]())
+
+  /** The parquet table at `path`, read with its [[parquetSchema]], so
+    * no schema-inference job runs per read. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The schema Spark infers for the parquet table at `path`, inferred
+    * once per session. The memo is keyed on the qualified path, its
+    * modification time (for a directory, the latest over it and its
+    * files) and [[NanosConf]], so a table rewritten in place, or read
+    * under the other nanos mapping, is inferred again. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    def infer = spark.read.parquet(path).schema
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) infer // raises Spark's own missing-path error
+    else {
+      val st = fs.getFileStatus(p)
+      val mtime = (if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st))
+        .map(_.getModificationTime).max
+      val key = (fs.makeQualified(p).toString, mtime, spark.conf.get(NanosConf, ""))
+      schemas.computeIfAbsent(spark, _ => TrieMap.empty).getOrElseUpdate(key, infer)
+    }
+  }
 
   /** Apply session-level settings every entry point (Verify, Bench,
     * test sessions) must set before reading the event table. UTC

@@ -167,7 +167,7 @@ object Algorithms {
       val next = r.cut(frontier.join(dag, col("leaf") === col("src"))
         .select(col("dst").as("leaf"),
           concat(col("path"), array(col("dst"))).as("path")))
-      val n = next.count()
+      val n = Checkpoints.rowCount(next)
       (if (n > 0) next else frontier, n)
     }(identity).out
     Checkpoints.release(dag)
@@ -402,24 +402,37 @@ object Algorithms {
     * per-node teleport mass — a constant 0.15 for global PageRank,
     * source-indicator·0.15 for the personalized variant (it may
     * reference the grouping key `node`). `edges` carries exactly the
-    * columns `share` reads besides (src, dst). */
+    * columns `share` reads besides (src, dst). The nodes ⟕ in-edges ⟕
+    * out-mass join does not change between rounds, so it is cut once
+    * before the loop ([[inEdges]]) and each round is one join with the
+    * ranks plus one group-by ([[dampedRound]]). */
   private[graph] def damped(nodes: DataFrame, edges: DataFrame,
       outMass: Column, share: Column, r0: Column, reset: Column,
       iters: Int)(changes: (DataFrame, DataFrame) => Long): Superstep.Run[DataFrame] = {
-    val out = edges.groupBy(col("src").as("od_node"))
-      .agg(outMass.as("od")).pipe(Checkpoints.cut)
+    val in = inEdges(nodes, edges, outMass).pipe(Checkpoints.cut)
     val run = Superstep.iterate(nodes.select(col("node"), r0.as("r")), iters) {
-      (ranks, _) =>
-        nodes.select(col("node"))
-          .join(edges, col("dst") === col("node"), "left")
-          .join(ranks.select(col("node").as("rn"), col("r")), col("rn") === col("src"), "left")
-          .join(out, col("od_node") === col("src"), "left")
-          .groupBy(col("node"))
-          .agg((reset + lit(0.85) * coalesce(sum(share), lit(0.0))).as("r"))
+      (ranks, _) => dampedRound(in, ranks, share, reset)
     }(changes)
-    Checkpoints.release(out)
+    Checkpoints.release(in)
     run
   }
+
+  /** The loop invariant of [[damped]]: every node with its in-edges
+    * (none: one null row) and each edge's source out-mass `od`. */
+  private[graft] def inEdges(nodes: DataFrame, edges: DataFrame,
+      outMass: Column): DataFrame =
+    nodes.select(col("node"))
+      .join(edges, col("dst") === col("node"), "left")
+      .join(edges.groupBy(col("src").as("od_node")).agg(outMass.as("od")),
+        col("od_node") === col("src"), "left")
+
+  /** One [[damped]] superstep over the cut [[inEdges]]: one join with
+    * the ranks, one group-by. */
+  private[graft] def dampedRound(in: DataFrame, ranks: DataFrame,
+      share: Column, reset: Column): DataFrame =
+    in.join(ranks.select(col("node").as("rn"), col("r")), col("rn") === col("src"), "left")
+      .groupBy(col("node"))
+      .agg((reset + lit(0.85) * coalesce(sum(share), lit(0.0))).as("r"))
 
   /** [[damped]] with rank split uniformly over out-edges. */
   private def uniform(nodes: DataFrame, edges: DataFrame, r0: Column,
@@ -518,23 +531,35 @@ object Algorithms {
     * `maxRounds` rounds or to fixpoint. Returns the cut (node,
     * component, pc) frame of the last round, `pc` the label before it.
     *
+    * Labels settle within |V| − 1 rounds (no shortest path is longer),
+    * so a round |V| that still changes a label means bad input: it
+    * raises, naming `who` and the round count. |V| is the seed cut's
+    * measured row count. A caller's own smaller `maxRounds` (the
+    * `ccAuto` probe) ends the run with `converged = false` instead.
+    *
     * One round is a single equi-join + one partial agg: the neighbor
     * contributions UNIONED with a self branch read from the previous
     * round's CACHED frame (so every node appears and carries its own
     * label; no extra materialized self-loop relation), min over both.
     * The self branch also carries the OLD label, so the change count
-    * is a filter over the round's checkpointed output — per round
-    * 1 join + 1 agg + 1 cached count. Precondition: edge endpoints ⊆
-    * `nodes` — ENFORCED loudly: a foreign dst has no self row, so its
+    * is a predicate on the round's own output, counted by its cut's
+    * job — per round 1 join + 1 agg and no count of its own.
+    * Precondition: edge endpoints ⊆ `nodes` — ENFORCED loudly: a
+    * foreign dst has no self row, so its
     * pc aggregates to null; silently it would surface as an extra
     * output row that is never counted as changed, so the guard raises
     * instead, naming `who`. Shared by [[connectedComponents]],
     * [[sccLabels]]' forward coloring and [[StarContraction.ccAuto]]'s
     * probe. */
   private[graph] def minLabels(nodes: DataFrame, edges: DataFrame,
-      maxRounds: Int, who: String): Superstep.Run[DataFrame] =
-    Superstep.iterate(nodes.select(col("node"), col("node").as("component"))
-        .withColumn("pc", col("component")), maxRounds) { (comp, _) =>
+      maxRounds: Int, who: String): Superstep.Run[DataFrame] = {
+    var nV = 0L
+    Superstep.loop(maxRounds) { r =>
+      val seed = r.cut(nodes.select(col("node"), col("node").as("component"))
+        .withColumn("pc", col("component")))
+      nV = Checkpoints.rowCount(seed)
+      (seed, Superstep.Unmeasured)
+    } { (comp, r) =>
       val contrib = edges.select(col("src"), col("dst"))
         .join(comp.select(col("node").as("src"), col("component")),
           Seq("src"))
@@ -542,7 +567,7 @@ object Algorithms {
           lit(null).cast("long").as("own"))
       val self = comp.select(col("node"), col("component"),
         col("component").as("own"))
-      contrib.unionByName(self)
+      val (next, changed) = r.cut(contrib.unionByName(self)
         .groupBy("node")
         .agg(min(col("component")).as("component"),
           min(col("own")).as("pc"))
@@ -550,8 +575,14 @@ object Algorithms {
           when(col("pc").isNotNull, col("pc")).otherwise(raise_error(
             format_string(s"$who: edge endpoint %d is " +
               "not in `nodes` — callers must pass every endpoint",
-              col("node")))).as("pc"))
-    }((_, next) => next.filter(col("component") =!= col("pc")).count())
+              col("node")))).as("pc")),
+        col("component") =!= col("pc"))
+      if (changed > 0 && r.n >= nV)
+        throw new IllegalStateException(s"$who: min-label propagation still " +
+          s"changed $changed labels in round ${r.n}, past the |V| = $nV bound")
+      (next, changed)
+    }(identity)
+  }
 
   def q15ConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
@@ -613,7 +644,7 @@ object Algorithms {
         .join(mark.select(col("node").as("src")), Seq("src"), "left_anti")
         .join(mark.select(col("node").as("dst")), Seq("dst"), "left_anti")
         .select("src", "dst"))
-      ((nextRemaining, nextLive, nextDone), nextRemaining.count())
+      ((nextRemaining, nextLive, nextDone), Checkpoints.rowCount(nextRemaining))
     }(_._3).out
 
   /** Nodes that reach `roots` backward over `classEdges`, roots
@@ -630,7 +661,7 @@ object Algorithms {
         .join(frontier.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src").as("node")).distinct()
         .join(mark.view, Seq("node"), "left_anti"))
-      val n = next.count()
+      val n = Checkpoints.rowCount(next)
       if (n > 0) ((next, mark.add(next, r)), n) else ((frontier, mark), 0L)
     }(_._2.view).out
 
@@ -701,21 +732,19 @@ object Algorithms {
       .filter(col("cs") =!= col("cd"))
       .select(col("cs").as("src"), col("cd").as("dst")).distinct()
       .pipe(Checkpoints.cut)
-    val lvl = Superstep.iterate(
-        lab.select(col("scc")).distinct().withColumn("l", lit(0L)), Int.MaxValue) {
-      (lvl, _) =>
-        val relax = ce
-          .join(lvl.select(col("scc").as("src"), col("l")), Seq("src"))
-          .groupBy(col("dst").as("rs")).agg(max(col("l") + 1).as("nl"))
-        lvl.join(relax, col("scc") === col("rs"), "left")
-          .select(col("scc"),
-            greatest(col("l"), coalesce(col("nl"), col("l"))).as("l"))
-    } { (prev, next) =>
-      next
-        .join(prev.select(col("scc").as("ps"), col("l").as("pl")),
-          next("scc") === col("ps"))
-        .filter(col("l") =!= col("pl")).count()
-    }.out
+    val lvl = Superstep.loop(Int.MaxValue) { r =>
+      (r.cut(lab.select(col("scc")).distinct().withColumn("l", lit(0L))),
+        Superstep.Unmeasured)
+    } { (lvl, r) =>
+      val relax = ce
+        .join(lvl.select(col("scc").as("src"), col("l")), Seq("src"))
+        .groupBy(col("dst").as("rs")).agg(max(col("l") + 1).as("nl"))
+      r.cut(lvl.join(relax, col("scc") === col("rs"), "left")
+        .select(col("scc"),
+          greatest(col("l"), coalesce(col("nl"), col("l"))).as("l"),
+          col("l").as("pl")),
+        col("l") =!= col("pl"))
+    }(identity).out
     val sizes = lab.groupBy("scc").agg(count(lit(1)).as("n_members"))
     val out = lvl.join(sizes, Seq("scc"))
       .select(col("scc"), col("l").as("level"), col("n_members"))

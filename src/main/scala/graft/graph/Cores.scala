@@ -78,11 +78,11 @@ object Cores {
     var nLive = 0L
     Superstep.loop(Int.MaxValue) { r =>
       val live = r.cut(seed)
-      nLive = live.count()
+      nLive = Checkpoints.rowCount(live)
       (live, nLive)
     } { (live, r) =>
       val next = r.cut(keep(live))
-      val n = next.count()
+      val n = Checkpoints.rowCount(next)
       val removed = nLive - n
       nLive = n
       (next, if (n == 0) 0L else removed)
@@ -320,7 +320,7 @@ object Cores {
           lit(round).as("settled_round"))
         .union(killed.select(col("node"), lit(false), lit(round))))
       val nextLive = r.cut(live.join(newSettled.select("node"), Seq("node"), "left_anti"))
-      ((nextLive, settled.add(newSettled, r)), nextLive.count())
+      ((nextLive, settled.add(newSettled, r)), Checkpoints.rowCount(nextLive))
     }(_._2.view).out
     Checkpoints.release(pri)
     settled.orderBy("node")
@@ -395,7 +395,7 @@ object Cores {
           .as("color"),
         lit(r.n.toLong).as("wave")))
       val nextLive = r.cut(live.join(colored.select("node"), Seq("node"), "left_anti"))
-      ((nextLive, settled.add(colored, r)), nextLive.count())
+      ((nextLive, settled.add(colored, r)), Checkpoints.rowCount(nextLive))
     }(_._2.view).out.orderBy("node")
 
   /** Dense-graph coloring fallback — one q131 MIS per color sweep

@@ -91,11 +91,11 @@ object StarContraction {
     val stars = Superstep.loop(Int.MaxValue) { r =>
       val e = r.cut(edges.select(col("u"), col("v"))
         .filter(col("u") =!= col("v")).distinct())
-      ne = e.count()
+      ne = Checkpoints.rowCount(e)
       (e, ne)
     } { (e, r) =>
       val next = r.cut(smallStar(largeStar(e)))
-      val nn = next.count()
+      val nn = Checkpoints.rowCount(next)
       val same = sameEdgeSet(next, nn, e, ne)
       ne = nn
       (next, if (same) 0L else 1L)
@@ -145,7 +145,8 @@ object StarContraction {
     *
     * The probe round is [[Algorithms.connectedComponents]]' own
     * min-label round ([[Algorithms.minLabels]]): one equi-join + one
-    * partial agg + one cached-scan change count per round.
+    * partial agg per round, its change count observed by the round's
+    * cut.
     * Precondition (load-bearing for the domain too, and enforced
     * loudly by that round): edge endpoints ⊆ `nodes` — every caller
     * derives `nodes` from the edge endpoints or filters both from one

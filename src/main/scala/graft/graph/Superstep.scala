@@ -2,7 +2,7 @@ package graft.graph
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import graft.Checkpoints
 
@@ -24,7 +24,11 @@ import graft.Checkpoints
   *
   * An algorithm supplies only its step (the joins and aggregations of
   * one round) and its change signal. The kernel issues no Spark action
-  * of its own: cuts are the caller's cuts, counts the caller's counts.
+  * of its own: cuts are the caller's cuts. A change signal that counts
+  * the rows of a cut, or the rows of a cut matching a predicate on its
+  * own columns, reads the count the cut's job observed
+  * ([[Checkpoints.rowCount]], [[Round.cut]] with a `where`) instead of
+  * running a `count()`.
   *
   * Loops nest: when a loop runs inside another loop's round (SCC's
   * color fixpoint inside its peel round, Borůvka's relabel CC), the
@@ -58,6 +62,14 @@ private[graft] object Superstep {
       val c = Checkpoints.cut(df)
       cuts += c
       c
+    }
+
+    /** [[cut]] that also returns how many of the cut rows match
+      * `where`, counted by the cut's own job. */
+    def cut(df: DataFrame, where: Column): (DataFrame, Long) = {
+      val (c, n) = Checkpoints.cut(df, where)
+      cuts += c
+      (c, n)
     }
   }
 
@@ -158,7 +170,7 @@ private[graft] object Superstep {
       ((s, s), Unmeasured)
     } { case ((frontier, visited), r) =>
       val next = r.cut(expand(frontier, visited, r.n))
-      val n = next.count()
+      val n = Checkpoints.rowCount(next)
       if (n > 0) ((next, r.cut(merge(visited, next))), n)
       else ((visited, visited), 0L)
     }(_._2).out

@@ -157,7 +157,7 @@ object StreamOps {
       spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "streaming event queries cast NTZ ts to timestamp: requires " +
         "spark.sql.session.timeZone=UTC (call Tables.configure on the builder)")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     // the load path must be a GLOB: for a plain single-file path
     // FileStreamSource force-sets basePath to the file itself, which
     // partition discovery rejects ("basePath must be a directory")

@@ -30,6 +30,31 @@ class PlanAuditSpec extends SparkSpec {
       s"predicates not pushed: $pf")
   }
 
+  test("a PageRank round over cut frames is planned as a broadcast join from the start") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val t = Tables(spark, sfDir())
+    val nodes = graft.graph.TradeGraph.nodes(t).select("node")
+    val edges = graft.graph.TradeGraph.edges(t).select("src", "dst")
+    val in = Checkpoints.cut(graft.graph.Algorithms.inEdges(nodes, edges, count(lit(1))))
+    def round(ranks: DataFrame) =
+      graft.graph.Algorithms.dampedRound(in, ranks, col("r") / col("od"), lit(0.15))
+    // the state after one round: estimated from the plan it came from,
+    // its size would compound the edge cut's lineitem-scale estimate
+    // through every join, far above any broadcast threshold
+    val seed = Checkpoints.cut(nodes.select(col("node"), lit(1.0).as("r")))
+    val ranks = Checkpoints.cut(round(seed))
+    // the plan before any stage runs: no AQE re-plan has happened yet,
+    // so a broadcast here comes from the cuts' measured statistics
+    val initial = round(ranks).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan.toString
+      case p => p.toString
+    }
+    assert(initial.contains("BroadcastHashJoin"), s"no broadcast in the initial plan:\n$initial")
+    assert(!initial.contains("SortMergeJoin"), initial)
+    Checkpoints.release(in, seed, ranks)
+  }
+
   test("q03: part dimension join is a broadcast hash join") {
     val p = plan(Relational.q03TopIndegree(spark, sfDir()))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")

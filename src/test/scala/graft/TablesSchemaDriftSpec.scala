@@ -45,6 +45,21 @@ class TablesSchemaDriftSpec extends SparkSpec {
     assert(b == a)
   }
 
+  test("a table rewritten in place with a new schema is read with the new schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-tables-rewrite").toString
+    val path = s"$dir/region.parquet"
+    Seq((1L, "a")).toDF("r_regionkey", "r_name").write.parquet(path)
+    assert(Tables(spark, dir).region.columns.toSeq == Seq("r_regionkey", "r_name"))
+    // inferred once: the second read answers from the session's memo
+    assert(Tables.parquetSchema(spark, path) eq Tables.parquetSchema(spark, path))
+    Seq((2L, "b", "c")).toDF("r_regionkey", "r_name", "r_comment")
+      .write.mode("overwrite").parquet(path)
+    val region = Tables(spark, dir).region
+    assert(region.columns.toSeq == Seq("r_regionkey", "r_name", "r_comment"))
+    assert(region.as[(Long, String, String)].collect().toSeq == Seq((2L, "b", "c")))
+  }
+
   test("testdata schema contract: every column the operators consume exists") {
     // the columns the query surface reads, per table — if a driver
     // regeneration renames/drops one, THIS test names the break
