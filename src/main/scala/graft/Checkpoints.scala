@@ -131,9 +131,11 @@ object Checkpoints {
     * LogicalRDD of a checkpointed RDD) — the idempotent form for call
     * chains where both a composer and its component defensively cut
     * the same relation: q244/winnowingDedupAuto cut the corpus and
-    * then call fingerprintPairs, which cuts its input again — a
-    * redundant second materialization + storage of an identical
-    * relation per query (ADVICE r12). A NON-checkpoint LogicalRDD
+    * then call fingerprintPairs, which cuts its input again, and q229
+    * cuts its pair relation and then hands it to
+    * `NodeEmbeddings.ppmiRows` — each a redundant second
+    * materialization + storage of an identical relation per query
+    * (ADVICE r12). A NON-checkpoint LogicalRDD
     * (e.g. a createDataFrame/zipWithIndex result) still cuts: its RDD
     * lineage would otherwise re-execute per action. */
   def cutOnce(df: DataFrame): DataFrame =

@@ -11,63 +11,42 @@ import graft.Tables
   * trade graph), so the iterative algorithms have a real-sized input
   * (spec-exercised: CC + PageRank run on it unchanged).
   *
-  * Scale shape of the builder: the pair join is keyed by order and
-  * order sizes are bounded (≤7 lineitems in TPC-H-shaped data), so
-  * pair generation is per-order local — linear in orders with a small
+  * Scale shape of the builder: baskets are keyed by order and order
+  * sizes are bounded (≤7 lineitems in TPC-H-shaped data), so pair
+  * generation is per-order local — linear in orders with a small
   * constant, never corpus-quadratic; one distinct dedups pairs across
-  * orders. At 100 TB this is the classic market-basket edge derivation
-  * (same shape as a shuffle-keyed self-join on basket id). */
+  * orders. At 100 TB this is the classic market-basket edge
+  * derivation. */
 object CoPurchase {
 
-  /** Per-order distinct part baskets — ONE order-keyed exchange with
-    * in-agg dedup (collect_set), replacing the old distinct (o, p)
-    * shuffle + order-keyed self-join re-shuffle; each basket's
-    * src < dst pairs expand in a single JVM loop
-    * ([[graft.functions.OrderedPairs]]) — r15, guide §2.4. */
-  private def basketsOf(op: DataFrame): DataFrame =
-    op.groupBy("o").agg(collect_set(col("p")).as("ps"))
-
-  private def baskets(t: Tables): DataFrame =
-    basketsOf(t.lineitem
-      .select(col("l_orderkey").as("o"), col("l_partkey").cast("long").as("p")))
-
   /** One row per (order-local) co-purchased pair, src < dst —
-    * multiplicity = number of orders containing both parts. */
-  private def basketPairs(t: Tables): DataFrame =
-    baskets(t)
+    * multiplicity = number of orders containing both parts — over
+    * parts with id < `partCap` when a cap is given. The cap filters
+    * the lineitem select BEFORE the basket aggregation, so it reaches
+    * the scan as a pushed filter (a filter on the pair relation cannot
+    * cross the aggregation — the q233 lesson); a pair survives iff
+    * both endpoints are under the cap, as a post-filter would keep.
+    * Per-order distinct baskets take ONE order-keyed exchange with
+    * in-agg dedup (collect_set); each basket's src < dst pairs expand
+    * in a single JVM loop ([[graft.functions.OrderedPairs]]). */
+  private def basketPairs(t: Tables, partCap: Option[Long]): DataFrame = {
+    val op = t.lineitem
+      .select(col("l_orderkey").as("o"), col("l_partkey").cast("long").as("p"))
+    partCap.fold(op)(cap => op.filter(col("p") < cap))
+      .groupBy("o").agg(collect_set(col("p")).as("ps"))
       .select(explode(graft.functions.OrderedPairs(col("ps"), ltOnly = true))
         .as("pr"))
       .select(col("pr.u").as("src"), col("pr.v").as("dst"))
-
-  /** Distinct undirected co-purchase edges (src < dst). */
-  def edges(t: Tables): DataFrame =
-    basketPairs(t).distinct()
-
-  /** [[edges]] restricted to parts with id < `partCap`, applied
-    * BEFORE pair formation so the bound reaches the lineitem scan as
-    * a pushed filter — a post-hoc filter on the pair relation cannot
-    * cross the basket aggregation (the q233 lesson). Identical
-    * output: a pair survives the post-filter iff BOTH endpoints are
-    * under the cap iff both parts survive the pre-filter. On the
-    * capped (small) slice the distinct + self-join shape measures
-    * CHEAPER than the basket agg (tiny relation, no per-order set
-    * allocation), so this keeps the original join form; [[edges]]'s
-    * full-scan consumers keep the one-exchange basket form. */
-  def edgesCapped(t: Tables, partCap: Long): DataFrame = {
-    val li = t.lineitem
-      .select(col("l_orderkey").as("o"),
-        col("l_partkey").cast("long").as("p"))
-      .filter(col("p") < partCap)
-      .distinct()
-    li.as("a").join(li.as("b"),
-        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("src"), col("b.p").as("dst"))
-      .distinct()
   }
+
+  /** Distinct undirected co-purchase edges (src < dst), restricted to
+    * parts with id < `partCap` when a cap is given. */
+  def edges(t: Tables, partCap: Option[Long]): DataFrame =
+    basketPairs(t, partCap).distinct()
 
   /** (nodes, edges) view for the iterative algorithms. */
   def graph(t: Tables): (DataFrame, DataFrame) =
-    (t.part.select(col("p_partkey").cast("long").as("node")), edges(t))
+    (t.part.select(col("p_partkey").cast("long").as("node")), edges(t, None))
 
   // ---------------------------------------------------------------- q61
   /** Top-20 parts by co-purchase degree (distinct partners) — the
@@ -76,7 +55,7 @@ object CoPurchase {
     * distinct-partner count; the part dimension broadcasts. */
   def q61CopurchaseDegree(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = edges(t)
+    val e = edges(t, None)
     val deg = e.select(col("src").as("p"))
       .union(e.select(col("dst").as("p")))
       .groupBy("p").agg(count(lit(1)).as("partners"))
@@ -96,7 +75,7 @@ object CoPurchase {
     * |distinct degrees| at any scale. */
   def q94DegreeDistribution(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = edges(t)
+    val e = edges(t, None)
     val deg = e.select(col("src").as("p"))
       .union(e.select(col("dst").as("p")))
       .groupBy("p").agg(count(lit(1)).as("degree"))
@@ -117,7 +96,7 @@ object CoPurchase {
     * repeat graph tracks true association (≈3.5k edges at every SF
     * here). One partial-agg count per pair, then the filter. */
   def repeatEdges(t: Tables, minSupport: Long): DataFrame =
-    basketPairs(t)
+    basketPairs(t, None)
       .groupBy("src", "dst")
       .agg(count(lit(1)).as("m"))
       .filter(col("m") >= minSupport)

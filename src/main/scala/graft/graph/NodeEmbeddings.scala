@@ -90,23 +90,12 @@ object NodeEmbeddings {
 
   /** Positive rows of the PPMI matrix over the pair counts:
     * max(0, ln(#(u,v)·D / (#u·#v))), 6dp, DECIMAL. The marginal #u
-    * is the row sum (symmetric corpus ⇒ also the context marginal). */
-  private[graft] def ppmiRows(pairs: DataFrame): DataFrame =
-    ppmiRows(pairs, cutInput = true)
-
-  /** [[ppmiRows]] with the input lineage cut optional: the cut exists
-    * because `pairs` feeds three consumers (marginals, total, the
-    * join spine) and a live plan would re-execute the pair build per
-    * consumer. Pass `cutInput = false` when `pairs` IS already a
-    * materialized scan (a parquet/bucketed table): re-reading a scan
-    * is cheap, and the cut would not only waste a materialization
-    * but ERASE the scan's bucketing (localCheckpoint under AQE
-    * reports UnknownPartitioning — the round-9 walkRows lesson), so
-    * a u-bucketed pair table (E8's sink) keeps its
-    * exchange-free marginal join only on the uncut path. */
-  private[graft] def ppmiRows(pairs: DataFrame,
-      cutInput: Boolean): DataFrame = {
-    val p = if (cutInput) graft.Checkpoints.cut(pairs) else pairs
+    * is the row sum (symmetric corpus ⇒ also the context marginal).
+    * `pairs` feeds three consumers (marginals, total, the join spine),
+    * so it is cut unless it already is a cut (q229 hands in its
+    * shared pair cut). */
+  private[graft] def ppmiRows(pairs: DataFrame): DataFrame = {
+    val p = graft.Checkpoints.cutOnce(pairs)
     val marg = p.groupBy("u").agg(sum("n_uv").as("n_u"))
     val tot = p.agg(sum("n_uv").as("d_tot"))
     p.join(marg, "u")
@@ -121,30 +110,6 @@ object NodeEmbeddings {
       .select("u", "v", "ppmi")
   }
 
-  /** The ADOPTED 100 TB trainer layout as ONE library entry
-    * (BENCH_NOTES_r10.md §3; VERDICT r10 asked for the recipe to stop
-    * being a hand-composition of E8's sink + the uncut ppmiRows
-    * path). Write half: persist a (u, v, n_uv) pair relation
-    * u-bucketed + sorted via [[graft.sources.ParquetSink
-    * .writeBucketed]]. */
-  def writeBucketedPairs(pairs: DataFrame, table: String,
-      nBuckets: Int = 32): Unit =
-    graft.sources.ParquetSink.writeBucketed(
-      pairs.select("u", "v", "n_uv"), table, "u", nBuckets)
-
-  /** Train half of the adopted layout: train from the u-bucketed pair
-    * table UNCUT, so the PPMI stage's marginal groupBy(u) and u-keyed
-    * join reuse the scan's bucketing instead of exchanging the
-    * corpus-sized pair relation (PPMI-stage exchanges 2 → 0; −11%
-    * whole-trainer at 30× — tools/PpmiBucketAB). The default
-    * live-plan path ([[ppmiRows]](pairs) → [[project]]) stays correct
-    * at any scale; this is the layout a pipeline that PERSISTS its
-    * pair corpus should train through. Bit-equal to the default path
-    * by spec (NodeEmbeddingsSpec). */
-  def trainFromBucketedPairs(spark: SparkSession, table: String,
-      dims: Int = Dims): DataFrame =
-    project(ppmiRows(spark.table(table), cutInput = false), dims)
-
   /** ±1 from the md5 parity of (v ':' dim) — the projection matrix as
     * a hash, never materialized. */
   private def signCol: Column = {
@@ -158,27 +123,20 @@ object NodeEmbeddings {
   /** (node, dim, emb): signed-hash projection of each PPMI row to
     * `dims` dimensions, L2-normalized (unordered). Nodes whose every
     * PMI is ≤ 0 have no positive row and are absent (no
-    * co-occurrence signal). */
+    * co-occurrence signal). The norm is one exact DECIMAL sum of
+    * squares per u, cast to double once; e arrives partitioned by u
+    * (it ends in a u-keyed agg), so the norm agg and the join reuse
+    * that clustering. */
   private[graft] def project(ppmi: DataFrame, dims: Int): DataFrame = {
     val spark = ppmi.sparkSession
     val dimRel = spark.range(0, dims.toLong).select(col("id").as("dim"))
     // cut: e feeds BOTH the norm agg and the final join — without it
     // the whole PPMI subtree (pair join + marginals) is recomputed
     // once per consumer
-    normalize(graft.Checkpoints.cut(ppmi.crossJoin(broadcast(dimRel))
+    val e = graft.Checkpoints.cut(ppmi.crossJoin(broadcast(dimRel))
       .withColumn("sgn", signCol)
       .groupBy("u", "dim")
-      .agg(sum(col("ppmi") * col("sgn")).cast("decimal(18,6)").as("e"))))
-  }
-
-  /** L2-normalize a pre-cut (u, dim, e DECIMAL(18,6)) relation — the
-    * shared tail of [[project]] and [[projectWide]], so both forms
-    * run the IDENTICAL norm arithmetic (one exact DECIMAL sum of
-    * squares per u, one cast to double) and bit-equality between
-    * them is by construction of the tail. The e relation arrives
-    * partitioned by u (both builders end in a u-keyed agg), so the
-    * norm agg and the join reuse that clustering. */
-  private def normalize(e: DataFrame): DataFrame = {
+      .agg(sum(col("ppmi") * col("sgn")).cast("decimal(18,6)").as("e")))
     val nr = e.groupBy("u")
       .agg(sqrt(sum(col("e") * col("e")).cast("double")).as("nrm"))
     e.join(nr, "u")
@@ -186,38 +144,6 @@ object NodeEmbeddings {
         when(col("nrm") === 0, lit(0d))
           .otherwise(round6(col("e").cast("double") / col("nrm"))))
       .select(col("u").as("node"), col("dim"), col("emb"))
-  }
-
-  /** [[project]] with the e relation built as a WIDE aggregate: one
-    * groupBy(u) with `dims` DECIMAL sums (sgn inlined per dimension),
-    * then a posexplode unpivot into the same (u, dim, e) shape and
-    * the SHARED [[normalize]] tail. Bit-equal output (the per-cell
-    * sums are the same order-free DECIMAL additions over the same
-    * terms; the tail is literally shared — an in-row chained-add
-    * norm was tried first and REJECTED: 16 chained decimal adds hit
-    * the precision-38 cap and lose a scale digit, measured as 2
-    * flipped 6dp cells at 1×). The win is the heavy pass: the pair
-    * relation is aggregated WITHOUT the ×dims row explode — the
-    * shuffle carries nnz rows of `dims` accumulators instead of
-    * nnz·dims exploded rows (the 30× projection wall in
-    * BENCH_SCALING Part 11 is that explode's spill); the unpivot
-    * explodes only the |V|-sized result. */
-  private[graft] def projectWide(ppmi: DataFrame, dims: Int): DataFrame = {
-    def sgn(d: Int): Column = {
-      val bit = expr(
-        s"""cast(conv(substring(md5(concat(cast(v as string), ':',
-           |  '$d')), 1, 15), 16, 10) as bigint) % 2""".stripMargin)
-      (lit(1) - lit(2) * bit).cast("int")
-    }
-    val sums = (0 until dims).map(d =>
-      sum(col("ppmi") * sgn(d)).cast("decimal(18,6)").as(s"e$d"))
-    val wide = ppmi.groupBy("u").agg(sums.head, sums.tail: _*)
-    normalize(graft.Checkpoints.cut(wide
-      .select(col("u"),
-        posexplode(array((0 until dims).map(d => col(s"e$d")): _*))
-          .as(Seq("dim", "e")))
-      .select(col("u"), col("dim").cast("long").as("dim"),
-        col("e").cast("decimal(18,6)").as("e"))))
   }
 
   /** The trained table over the trade graph (unordered — q223 adds

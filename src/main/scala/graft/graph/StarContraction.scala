@@ -193,7 +193,7 @@ object StarContraction {
     * orders of magnitude larger than q15's 25-node trade graph. */
   def q233CcStarContraction(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = CoPurchase.edgesCapped(t, CcCap)
+    val e = CoPurchase.edges(t, Some(CcCap.toLong))
       .select(col("src").as("u"), col("dst").as("v"))
     val n = t.part.filter(col("p_partkey") < CcCap)
       .select(col("p_partkey").cast("long").as("node"))

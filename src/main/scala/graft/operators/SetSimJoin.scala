@@ -27,14 +27,12 @@ import graft.{Checkpoints, Tables}
   * what keeps candidate volume sane on small hot vocabularies; the
   * verify join ships only candidate pairs' tokens (bounded per item).
   *
-  * Candidate keys are HASHED by default (the q164/L48 medicine,
-  * `duplicateSpansHashed`): the exploding (key, bi, bj) relation —
+  * Candidate keys are HASHED by default: the exploding (key, bi, bj) relation —
   * the one stage whose row count is candidates-scale — carries
   * xxhash64(w1, w2) (resp. xxhash64(w)) instead of the token
   * strings, one fixed 8-byte column in place of two variable-width
   * ones through the pcf join, both explicit repartitions, and the
-  * self-join. Unlike q164's hashed grams this loses NOTHING even
-  * under collision: hashing is a function of the key, so equal keys
+  * self-join. This loses NOTHING even under collision: hashing is a function of the key, so equal keys
   * always still meet (no candidate is ever lost), and a 64-bit
   * collision merely MERGES two key groups — extra candidate pairs
   * that the exact in-row jaccard verification rejects. Output is

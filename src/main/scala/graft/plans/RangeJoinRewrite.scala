@@ -29,8 +29,7 @@ import org.apache.spark.sql.types.LongType
   *
   * A point's single bucket meets every interval overlapping that
   * bucket exactly once, so the rewrite needs no post-join dedup.
-  * Bucket width W comes from [[BucketConf]] (µs; default 1 h) — set
-  * it near the median interval length.
+  * Bucket width W is [[DefaultBucketUs]] (µs; 1 h).
   *
   * Registered by [[graft.GraftExtensions]] via
   * `injectOptimizerRule`, or per-session through
@@ -38,11 +37,7 @@ import org.apache.spark.sql.types.LongType
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] {
 
-  val BucketConf = "spark.graft.rangejoin.bucket"
   val DefaultBucketUs: Long = 3600L * 1000000
-
-  private def width: Long =
-    conf.getConfString(BucketConf, DefaultBucketUs.toString).toLong
 
   /** cond == (t >= s AND t < e) in either conjunct order. */
   private def bounds(cond: Expression): Option[(Expression, Expression, Expression)] =
@@ -64,7 +59,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
               t.references.subsetOf(left.outputSet) &&
               s.references.subsetOf(right.outputSet) &&
               e.references.subsetOf(right.outputSet) =>
-          val w = Literal(width, LongType)
+          val w = Literal(DefaultBucketUs, LongType)
           val pointBucket = Alias(IntegralDivide(t, w), "__graft_b")()
           val keyedPoints = Project(left.output :+ pointBucket, left)
           // Sequence is TimeZoneAwareExpression: the analyzer's

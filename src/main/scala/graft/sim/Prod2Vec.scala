@@ -89,24 +89,7 @@ object Prod2Vec {
     * or write it), then hand the SAME relation to
     * [[NodeEmbeddings.linkAucSampled]] and any other consumer —
     * both functions take the trained table as a DataFrame argument,
-    * never a path, so reuse is the default outside the suite.
-    *
-    * MEASURED-AND-REJECTED for the suite entries (r13, VERDICT r12
-    * #4): wiring the r10-adopted bucketed-pair layout
-    * ([[NodeEmbeddings.writeBucketedPairs]] scratch table +
-    * [[NodeEmbeddings.trainFromBucketedPairs]]) into these entries
-    * was hypothesized to shrink the bandwidth footprint behind three
-    * rounds of driver-box wall spikes. The alternating-arm A/B
-    * (tools/P2vPathAB, sf0.1, one JVM, 3 rounds + warmups) read the
-    * OPPOSITE: live-plan 8.5 / 8.6 / 16.4 s and never spiking;
-    * bucketed 243 / 66 / 9.2 s (repartitioned write) and 10.5 / 22 /
-    * 23 s (scattered write) — the parquet commit protocol (per-file
-    * create + rename + fsync) is MORE weather-sensitive than the
-    * in-memory checkpoint it replaces, not less. The live plan stays
-    * the suite path; the bucketed layout remains the documented
-    * opt-in for pipelines that PERSIST their pair corpus anyway
-    * (where the write is the product, not overhead — BENCH_NOTES_r10
-    * §3's 2→0 PPMI exchanges still hold there). */
+    * never a path, so reuse is the default outside the suite. */
   private[graft] def embeddings(spark: SparkSession,
       dir: String): DataFrame =
     NodeEmbeddings.project(
@@ -128,14 +111,13 @@ object Prod2Vec {
     * sharing ≥ 2 distinct orders"), so the lineitem self-join that
     * used to run twice (trainer input + repeatEdges) runs once,
     * is cut, and feeds both the PPMI chain and the positives
-    * (VERDICT r13 #1's stage-collapse lever). The pre-cut pairs
-    * relation takes the `cutInput = false` ppmiRows path — re-reading
-    * a materialized checkpoint is cheap; a second cut would only
-    * waste a materialization. */
+    * (VERDICT r13 #1's stage-collapse lever). ppmiRows takes its
+    * input through `Checkpoints.cutOnce`, so the pre-cut pairs
+    * relation is re-read, not materialized a second time. */
   def q229Prod2vecLinkAuc(spark: SparkSession, dir: String): DataFrame = {
     val pairs = graft.Checkpoints.cut(basketPairs(Tables(spark, dir)))
     val emb = NodeEmbeddings.project(
-      NodeEmbeddings.ppmiRows(pairs, cutInput = false), NodeEmbeddings.Dims)
+      NodeEmbeddings.ppmiRows(pairs), NodeEmbeddings.Dims)
     val sym = pairs.select(col("u").as("src"), col("v").as("dst"))
     NodeEmbeddings.linkAucSampled(emb, sym, NegK)
   }

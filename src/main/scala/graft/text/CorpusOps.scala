@@ -242,25 +242,15 @@ object CorpusOps {
     * single linear window pass. All outputs are integers —
     * engine-exact.
     *
-    * The shard count is the scale knob: [[packSequences]] defaults it
-    * from [[PackShardsConf]] (falling back to the session's shuffle
-    * partitions), so packing parallelism — and the per-task sort —
-    * scales with the cluster instead of a hard constant. The
-    * oracle-checked q55 entry pins [[OraclePackShards]] explicitly,
-    * because the DuckDB mirror is a static transcript and the shard
-    * assignment changes the layout. */
-  val PackShardsConf = "spark.graft.pack.shards"
+    * The shard count is the scale knob of [[packSequences]]: packing
+    * parallelism — and the per-task sort — grows with it. The
+    * oracle-checked q55 entry pins [[OraclePackShards]], because the
+    * DuckDB mirror is a static transcript and the shard assignment
+    * changes the layout. */
   val OraclePackShards = 16
   val PackSeqLen = 512L
 
-  /** Effective shard count: [[PackShardsConf]] if set, else the
-    * session's shuffle partitions. */
-  def packShards(spark: SparkSession): Int =
-    spark.conf.getOption(PackShardsConf).map(_.trim.toInt)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-
-  /** Pack `docs` (doc_id, s) into `shards` independent token streams;
-    * `shards` defaults from the session conf via [[packShards]]. */
+  /** Pack `docs` (doc_id, s) into `shards` independent token streams. */
   def packSequences(docs: DataFrame, shards: Int,
       seqLen: Long = PackSeqLen): DataFrame = {
     require(shards >= 1, "packing needs at least one shard")

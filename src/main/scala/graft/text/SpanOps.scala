@@ -45,19 +45,13 @@ object SpanOps {
     * join-back, so the position join touches only the duplicated
     * minority (~5 % of distinct grams here). The islands merge is a
     * per-doc window — work bounded by document length. No stage holds
-    * more than a partition of grams; nothing is collected. At 100 TB
-    * the gram SHUFFLE is the cost driver; [[duplicateSpansHashed]]
-    * swaps the 40-byte gram for xxhash64(gram) as the aggregation AND
-    * join-back key, cutting shuffle bytes ~5× (a 64-bit collision
-    * then marks a non-duplicated position at p ≈ n²/2⁶⁴ — the
-    * standard trade). The oracled row stays exact so DuckDB shares
-    * the key; the hashed form is the opt-in 100 TB entry point, with
-    * suite-scale agreement spec-pinned (the auto-blocker convention).
+    * more than a partition of grams; nothing is collected. The gram
+    * key is the exact string, so a duplicated position is never a
+    * hash collision and DuckDB shares the key.
     */
   val SpanGram = 40
 
-  private[graft] def duplicateSpans(d: DataFrame, k: Int,
-      hashGramKey: Boolean = false): DataFrame = {
+  private[graft] def duplicateSpans(d: DataFrame, k: Int): DataFrame = {
     // single-loop gram expression (emits only the grams, not the doc
     // string per position) + a lineage cut so the corpus-scale gram
     // relation is computed ONCE for the dup agg and the join-back
@@ -69,8 +63,7 @@ object SpanOps {
         .select(col("doc_id"),
           explode(graft.functions.PositionedGrams(col("s"), k)).as("pg"))
         .select(col("doc_id"), col("pg.pos").as("pos"),
-          (if (hashGramKey) xxhash64(col("pg.gram"))
-           else col("pg.gram")).as("gram")))
+          col("pg.gram").as("gram")))
     val dup = pos.groupBy("gram").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2)
       .select("gram")
@@ -106,16 +99,6 @@ object SpanOps {
   def q164SubstringDedup(spark: SparkSession, dir: String): DataFrame =
     duplicateSpans(TextOps.docs(spark, dir), SpanGram)
 
-  /** [[duplicateSpans]] with the gram key REPLACED by xxhash64(gram)
-    * before the cut: the corpus-scale shuffle ships 8-byte keys
-    * instead of k-byte strings (the documented ~5× cut at k = 40).
-    * Identical output unless two distinct grams collide in 64 bits
-    * (p ≈ n²/2⁶⁴; a collision can only ADD a spurious duplicated
-    * position). Spec-pinned bit-equal to the exact form at suite
-    * scale. */
-  def duplicateSpansHashed(d: DataFrame, k: Int): DataFrame =
-    duplicateSpans(d, k, hashGramKey = true)
-
   // ---------------------------------------------------------------- q170
   /** Span SCRUB — the deliverable Lee et al. 2022 actually ship: the
     * corpus with every duplicated span (q164's relation) cut out of
@@ -124,7 +107,7 @@ object SpanOps {
     * keep-one-copy is a policy layer on top, selecting a
     * representative doc per gram the way q43 picks dedup survivors).
     *
-    * Scale shape: q164's span relation (linear, see L48) plus ONE
+    * Scale shape: q164's span relation (linear, see [[duplicateSpans]]) plus ONE
     * per-doc window (lag over a doc's own spans → inter-span
     * segments), a doc-keyed join to slice the segments, and an
     * ordered per-doc reassembly (array_sort over the doc's few

@@ -71,13 +71,13 @@ object SuffixArray {
     * column — constant width per row, never a suffix string. */
   val BaseH = 8
 
-  /** A built suffix-array index: the array itself, the doubling-round
-    * count, (when retained) the per-round rank tables (horizon h →
+  /** A built suffix-array index: the array itself, (when retained)
+    * the per-round rank tables (horizon h →
     * (doc_id, pos, rank): equal rank ⟺ the two suffixes'
     * first-h-char truncations are identical strings), and the round-0
     * bounded prefix relation (doc_id, pos, pref: the suffix's first
     * [[BaseH]] chars) that resolves sub-[[BaseH]] LCP residuals. */
-  private[graft] case class SaIndex(sa: DataFrame, rounds: Int,
+  private[graft] case class SaIndex(sa: DataFrame,
       rankTables: Seq[(Long, DataFrame)], prefs: DataFrame)
 
   /** Suffix array of every suffix of `docs` (columns: doc_id LONG,
@@ -87,13 +87,6 @@ object SuffixArray {
     * (doc_id, pos) breaking ties between byte-identical suffixes. */
   def suffixArray(docs: DataFrame): DataFrame =
     buildIndex(docs, retainTables = false).sa
-
-  /** [[suffixArray]] plus the doubling-round count, for specs and the
-    * part-16 scale curve. */
-  private[graft] def suffixArrayWithRounds(docs: DataFrame): (DataFrame, Int) = {
-    val idx = buildIndex(docs, retainTables = false)
-    (idx.sa, idx.rounds)
-  }
 
   /** Core prefix-doubling build. With `retainTables` the per-round
     * rank relations stay checkpointed for [[adjacentLcps]] (caller
@@ -134,9 +127,7 @@ object SuffixArray {
     // count) — the composite-round guard below
     var rankBound = nPref
     var h = BaseH.toLong
-    var rounds = 0
     while (h < maxLen && distinctRanks < total) {
-      rounds += 1
       val right = ranks.select(col("doc_id").as("d2"),
         (col("pos") - h).as("p2"), col("rank").as("rank2"))
       val paired = ranks.join(right,
@@ -186,7 +177,7 @@ object SuffixArray {
       .select("sa_rank", "doc_id", "pos")
       .sort("sa_rank")
     if (!retainTables) Checkpoints.release(prefs)
-    SaIndex(sa, rounds, if (retainTables) tables.reverse else Nil,
+    SaIndex(sa, if (retainTables) tables.reverse else Nil,
       if (retainTables) prefs else null)
   }
 

@@ -123,7 +123,7 @@ object ScalingSweep {
     }
     report("q21_pairs_auto", autoBandPairs(3, 25))
     report("q22_pairs_auto", autoBandPairs(2, 100))
-    report("copurchase_edges", graft.graph.CoPurchase.edges(t).count())
+    report("copurchase_edges", graft.graph.CoPurchase.edges(t, None).count())
 
     report("q218_pairs", {
       val pre = graft.Checkpoints.cut(graft.text.EditOps.prefixes(

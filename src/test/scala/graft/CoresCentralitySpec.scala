@@ -336,7 +336,7 @@ class CoresCentralitySpec extends SparkSpec {
     val nParts = t.part.count()
     assert(dist.map(_._2).sum == nParts, "every part appears exactly once")
     val edgeEnds = dist.map { case (d, n) => d * n }.sum
-    val nEdges = graft.graph.CoPurchase.edges(t).count()
+    val nEdges = graft.graph.CoPurchase.edges(t, None).count()
     assert(edgeEnds == 2 * nEdges, "sum of degrees must be twice the edge count")
   }
 

@@ -121,12 +121,7 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
-  test("pack shard count scales from conf, default = shuffle partitions") {
-    assert(CorpusOps.packShards(spark) ==
-      spark.sessionState.conf.numShufflePartitions)
-    spark.conf.set(CorpusOps.PackShardsConf, "7")
-    try assert(CorpusOps.packShards(spark) == 7)
-    finally spark.conf.unset(CorpusOps.PackShardsConf)
+  test("a different pack shard count re-keys the layout, packs the same stream") {
     // a different shard count re-keys the layout but packs the same
     // stream: per-shard tiling still gapless, same per-doc token counts
     val docs = TextOps.docs(spark, sfDir())

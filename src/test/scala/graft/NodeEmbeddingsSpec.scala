@@ -150,50 +150,6 @@ class NodeEmbeddingsSpec extends SparkSpec {
     }
   }
 
-  test("wide-aggregate projection equals the exploded form bit-for-bit") {
-    // projectWide aggregates nnz rows of 16 accumulators instead of
-    // exploding nnz×16 rows — same DECIMAL terms per cell, shared
-    // normalize tail, so equality is exact (the in-row chained-add
-    // norm variant that LOST a decimal digit to the precision-38 cap
-    // was rejected — see the scaladoc)
-    val pairs = graft.sim.Prod2Vec.basketPairs(Tables(spark, sfDir()))
-    val ppmi = NodeEmbeddings.ppmiRows(pairs)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSeq.sorted
-    val exploded = rows(NodeEmbeddings.project(ppmi, NodeEmbeddings.Dims))
-    val wide = rows(NodeEmbeddings.projectWide(ppmi, NodeEmbeddings.Dims))
-    assert(wide == exploded)
-    assert(exploded.nonEmpty)
-  }
-
-  test("bucketed uncut trainer path equals the default path bit-for-bit") {
-    // the adopted 100 TB layout (BENCH_NOTES_r10.md §3), now ONE
-    // library entry each way (VERDICT r10 #5): writeBucketedPairs →
-    // trainFromBucketedPairs. Same rows as the live-plan default —
-    // the layout changes the plan (PPMI-stage exchanges 2→0), never
-    // the result.
-    val pairs = graft.sim.Prod2Vec.basketPairs(Tables(spark, sfDir()))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSeq.sorted
-    val dflt = rows(NodeEmbeddings.project(
-      NodeEmbeddings.ppmiRows(pairs), NodeEmbeddings.Dims))
-    // per-run table name, dropped after (the q156 scratch-table
-    // discipline — reruns must not hit stale locations; the shared
-    // spec session's warehouse is already a per-JVM temp dir)
-    val run = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tbl = s"ne_spec_pairs_bkt_$run"
-    try {
-      NodeEmbeddings.writeBucketedPairs(pairs, tbl, nBuckets = 4)
-      val bucketed = rows(NodeEmbeddings.trainFromBucketedPairs(spark, tbl))
-      assert(bucketed == dflt)
-      assert(dflt.nonEmpty)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    }
-  }
-
   test("output is invariant to the input partitioning (DECIMAL sums)") {
     val t = Tables(spark, sfDir())
     val seeds = t.nation

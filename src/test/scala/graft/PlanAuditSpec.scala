@@ -744,11 +744,12 @@ class PlanAuditSpec extends SparkSpec {
     // pushdowns on the lineitem scans, or the unbounded corpus is
     // read just to be thrown away. The audit reads the edge relation
     // q233 actually builds and the loop MATERIALIZES (its lineage cut
-    // hides the scan from the final plan): the capped builder, since
-    // the uncapped `edges` is a basket aggregation no filter crosses.
+    // hides the scan from the final plan): `edges` with the cap, which
+    // filters the lineitem select before the basket aggregation that
+    // no later filter crosses.
     val t = Tables(spark, sfDir())
-    val p = plan(graft.graph.CoPurchase.edgesCapped(t,
-      graft.graph.StarContraction.CcCap))
+    val p = plan(graft.graph.CoPurchase.edges(t,
+      Some(graft.graph.StarContraction.CcCap.toLong)))
     val pfs = "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(p)
       .map(_.group(1)).toSeq
     assert(pfs.exists(f => f.contains("LessThan(l_partkey")),

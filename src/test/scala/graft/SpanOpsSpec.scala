@@ -48,16 +48,6 @@ class SpanOpsSpec extends SparkSpec {
     assert(got.nonEmpty) // fixture actually exercises the operator
   }
 
-  test("q164 hashed gram key == exact form (fixture + suite corpus)") {
-    val d = corpus.toDF("doc_id", "s")
-    assert(SpanOps.duplicateSpansHashed(d, 12).collect().toSeq ==
-      SpanOps.duplicateSpans(d, 12).collect().toSeq)
-    val docs = graft.text.TextOps.docs(spark, sfDir())
-    assert(SpanOps.duplicateSpansHashed(docs, SpanOps.SpanGram)
-      .collect().toSeq ==
-      SpanOps.duplicateSpans(docs, SpanOps.SpanGram).collect().toSeq)
-  }
-
   test("q164 spans never overlap and respect the min length") {
     val k = 12
     val d = corpus.toDF("doc_id", "s")
