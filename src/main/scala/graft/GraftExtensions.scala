@@ -10,9 +10,9 @@ import graft.functions.GraftFunctions
   * `spark.sql.extensions=graft.GraftExtensions` on the cluster so SQL
   * users get `graft_dot`, `graft_minhash_signature`, `graft_simhash`,
   * `graft_grams`, `graft_word_shingles`, `graft_repetition_stats`,
-  * `graft_int8_quant_stats`, `graft_hll_estimate`,
-  * `graft_phrase_hits`, `graft_phrase_redact` and the `graft_topk`
-  * aggregates without touching the Column API — plus
+  * `graft_int8_quant_stats`, `graft_phrase_hits`,
+  * `graft_phrase_redact` and the `graft_topk` aggregates without
+  * touching the Column API — plus
   * the [[graft.plans.RangeJoinRewrite]] optimizer rule, which turns
   * naive interval theta joins into bucketized equi-joins. (On an
   * already-built session use `GraftFunctions.register` and

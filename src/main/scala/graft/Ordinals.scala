@@ -100,21 +100,15 @@ object Ordinals {
     * unpartitioned Window (whose sort runs in ONE task): rank via
     * [[denseBy]], then Spark's own ntile arithmetic — the first
     * N mod n buckets take ⌈N/n⌉ rows, the rest ⌊N/n⌋ — as a
-    * projection over the rank and the row-count scalar. Bit-identical
+    * projection over the rank and the exact row count
+    * [[denseByWithMeta]] already holds (no count job). Bit-identical
     * to `ntile(n).over(Window.orderBy(sortCols))` (spec-pinned), one
-    * parallel range-sort instead of a single-task window sort.
-    *
-    * `knownTotal`: pass the (already-known) row count to skip the
-    * internal count job — chained calls over the same relation (q106's
-    * three quintiles) would otherwise replay the input lineage once
-    * per count. */
+    * parallel range-sort instead of a single-task window sort. */
   def ntileBy(df: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      n: Int, bucketCol: String, knownTotal: Long = -1L): DataFrame = {
+      n: Int, bucketCol: String): DataFrame = {
     require(n >= 1, s"ntile needs n >= 1, got $n")
     val rk = "__graft_ntile_rank"
-    val ranked = denseBy(df, sortCols, rk)
-    val total = // scalar: the bucket-size base
-      if (knownTotal >= 0) knownTotal else ranked.count()
+    val (ranked, _, total) = denseByWithMeta(df, sortCols, rk)
     ranked.withColumn(bucketCol, ntileOfRank(rk, total, n)).drop(rk)
   }
 

@@ -1,13 +1,12 @@
-package graft.graph
+package graft
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
-import graft.Checkpoints
 
 /** The one superstep kernel behind every iterative DataFrame loop in
-  * `graft.graph` — the Pregelix shape (one join plus one group-by per
+  * graft — the Pregelix shape (one join plus one group-by per
   * round) with the loop discipline written once:
   *
   *  - every frame a round materializes goes through [[Round.cut]]

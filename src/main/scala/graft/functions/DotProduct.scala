@@ -86,11 +86,6 @@ object GraftFunctions {
     e.eval().asInstanceOf[Number].intValue
   }
 
-  private def foldDouble(e: Expression): Double = {
-    require(e.foldable, "double argument must be a literal")
-    e.eval().asInstanceOf[Number].doubleValue
-  }
-
   private def foldStringSeq(e: Expression): Seq[String] = {
     require(e.foldable, "string-array argument must be a literal")
     e.eval().asInstanceOf[ArrayData]
@@ -118,8 +113,6 @@ object GraftFunctions {
       e => RepetitionStats(e(0))),
     ("graft_int8_quant_stats", classOf[Int8QuantStats],
       e => Int8QuantStats(e(0))),
-    ("graft_hll_estimate", classOf[HllEstimate],
-      e => HllEstimate(e(0), foldDouble(e(1)))),
     ("graft_phrase_hits", classOf[PhraseHits],
       e => PhraseHits(e(0), foldStringSeq(e(1)))),
     ("graft_phrase_redact", classOf[PhraseRedact],

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types._
   * register, the rank of the remaining 54 bits' first set bit is
   * max'd in), partial aggregation merges registers ELEMENTWISE-MAX
   * (lossless — a merged sketch is bit-identical to the sketch of the
-  * union), and the read-out composes with [[HllEstimate]].
+  * union), and the read-out is a projection over the register array
+  * (the streaming q193 form reads it out in exact integer arithmetic).
   *
   * Why this exists next to the SQL-mirrorable register relation
   * (q187's (group, bucket) max-agg): that relation is TWO grouped

@@ -4,7 +4,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Checkpoints, Tables}
+import graft.{Checkpoints, Superstep, Tables}
 
 /** Iterative graph algorithms over the trade graph — the Spark-first
   * re-expression of the reference's Cypher analytics surface

@@ -3,7 +3,7 @@ package graft.graph
 import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Checkpoints, Tables}
+import graft.{Checkpoints, Superstep, Tables}
 
 /** Distance- and weight-based centrality — the "node rank /
   * centrality" family of the reference's analytics surface
@@ -13,11 +13,7 @@ import graft.{Checkpoints, Tables}
   *
   * Harmonic centrality needs the full distance distribution, which is
   * all-pairs BFS — O(V²) pairs, intrinsic to the definition, sane
-  * only on small graphs. The 100 TB path is
-  * [[HyperBall.harmonicEstimates]]: per-node HLL ball sizes at every
-  * radius, harmonic ≈ Σ_t (|B(v,t)|−|B(v,t−1)|)/t with O(V·m) state —
-  * the exact query here is the oracle-able entry, the sketch is the
-  * scale deployment (agreement spec in HyperBallSpec).
+  * only on small graphs.
   *
   * Weighted PageRank runs [[Algorithms.pagerank]]'s damped superstep
   * with rank mass split by edge weight (lineitem counts) instead of
@@ -163,8 +159,7 @@ object Centrality {
     * when nothing is reachable), plus the reachable count — the
     * per-node form whose max is the graph's diameter and whose min
     * (over reaching nodes) is its radius. Same all-pairs BFS input as
-    * [[harmonic]] ([[HyperBall]] per-radius sketches estimate it at
-    * 100 TB: ecc ≈ the radius where |B(v,t)| stops growing). */
+    * [[harmonic]]. */
   def eccentricity(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val e = edges.select("src", "dst").filter(col("src") =!= col("dst"))
       .pipe(Checkpoints.cut)

@@ -4,7 +4,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Checkpoints, Tables}
+import graft.{Checkpoints, Superstep, Tables}
 
 /** Structural graph operators from the Neo4j graph-algorithms library
   * surface the reference leans on for its analytics (reference:

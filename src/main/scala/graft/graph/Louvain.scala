@@ -3,7 +3,7 @@ package graft.graph
 import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Checkpoints, Tables}
+import graft.{Checkpoints, Superstep, Tables}
 
 /** Modularity-based community detection — the reference's Louvain
   * surface (documentation/queries.md:82-98) as a deterministic

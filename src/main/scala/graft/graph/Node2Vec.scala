@@ -4,7 +4,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** node2vec SECOND-ORDER biased walks (Grover & Leskovec 2016, KDD
   * §3.2) — the sampling strategy DeepWalk's uniform walk (q222)

@@ -4,7 +4,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** MULTI-walk corpus generation over the trade graph — DeepWalk's
   * γ-walks-per-node sampling (Perozzi et al. 2014, KDD §4.1), the

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
-import graft.{Checkpoints, Tables}
+import graft.{Checkpoints, Superstep, Tables}
 
 /** Connected components by alternating large-star / small-star
   * contraction (Kiveris et al., "Connected Components in MapReduce

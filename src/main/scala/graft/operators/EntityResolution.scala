@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Superstep, Tables}
 
 /** Entity resolution / record linkage over the part catalog — the
   * dedup family's STRUCTURED-record member (Fellegi & Sunter 1969;
@@ -232,9 +232,7 @@ object EntityResolution {
     conv(substring(md5(n.cast("string")), 1, 15), 16, 10).cast("long")
 
   private[graft] def refineByCenter(pairs: DataFrame,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None,
-      hashPriority: Boolean = false)
-      : DataFrame = {
+      hashPriority: Boolean = false): Superstep.Run[DataFrame] = {
     // Default priority = node id (the q231 min-id semantics).
     // hashPriority = true randomizes the peeling order
     // deterministically (md5): with min-id priority an ADVERSARIAL
@@ -256,7 +254,7 @@ object EntityResolution {
     // where the relabeling costs one rank over MATCHED nodes only —
     // the set the guard loops over anyway, never the corpus — and
     // keeps the hot loop on longs.
-    if (!hashPriority) return refineCore(pairs, roundsOut)
+    if (!hashPriority) return refineCore(pairs)
     val matched = pairs.select(col("a").as("node"))
       .union(pairs.select(col("b").as("node"))).distinct()
     // rank via distributed sort + zipWithIndex, NOT a row_number()
@@ -276,22 +274,23 @@ object EntityResolution {
       .join(rank.select(col("node").as("a"), col("h").as("ha")), Seq("a"))
       .join(rank.select(col("node").as("b"), col("h").as("hb")), Seq("b"))
       .select(col("ha").as("a"), col("hb").as("b"))
-    val core = refineCore(hp, roundsOut)
-    val out = graft.Checkpoints.cut(core
+    val core = refineCore(hp)
+    val out = graft.Checkpoints.cut(core.out
       .join(rank.select(col("h").as("node"), col("node").as("orig")),
         Seq("node"))
       .join(rank.select(col("h").as("component"), col("node").as("origC")),
         Seq("component"))
       .select(col("orig").as("node"), col("origC").as("component")))
-    graft.Checkpoints.release(rank, core)
-    out
+    graft.Checkpoints.release(rank, core.out)
+    core.copy(out = out)
   }
 
   /** The plain-long local-minima loop behind [[refineByCenter]]:
-    * node ids ARE the priorities (relabel to change the order). */
-  private def refineCore(pairs: DataFrame,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger])
-      : DataFrame = {
+    * node ids ARE the priorities (relabel to change the order). State:
+    * the active nodes and the union view of every round's centers;
+    * the change signal is the active count. Every round retires at
+    * least the smallest active node, so |seed| rounds bound the loop. */
+  private def refineCore(pairs: DataFrame): Superstep.Run[DataFrame] = {
     // drop reflexive rows defensively: a (a, a) self-match would make
     // its node never a strict local minimum and never retired — an
     // infinite driver loop. verifiedPairs can't produce one (its
@@ -301,11 +300,12 @@ object EntityResolution {
     val und = graft.Checkpoints.cut(
       p.select(col("a").as("src"), col("b").as("dst"))
         .union(p.select(col("b").as("src"), col("a").as("dst"))))
-    var active = graft.Checkpoints.cut(
-      und.select(col("src").as("node")).distinct())
-    val roundCenters = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var remaining = active.count()
-    while (remaining > 0) {
+    var nSeed = 0L
+    val run = Superstep.loop(Int.MaxValue) { r =>
+      val active = r.cut(und.select(col("src").as("node")).distinct())
+      nSeed = graft.Checkpoints.rowCount(active)
+      ((active, Superstep.UnionView.empty), nSeed)
+    } { case ((active, roundCenters), r) =>
       // neighbors restricted to the still-active subgraph
       val actSrc = und.join(active.select(col("node").as("src")), Seq("src"))
         .join(active.select(col("node").as("dst")), Seq("dst"))
@@ -314,7 +314,7 @@ object EntityResolution {
       // minimum and becomes its own center
       val minNbr = actSrc.groupBy(col("src").as("node"))
         .agg(min(col("dst")).as("mn"))
-      val centers = graft.Checkpoints.cut(
+      val centers = r.cut(
         active.join(minNbr, Seq("node"), "left")
           .filter(col("mn").isNull || col("node") < col("mn"))
           .select(col("node")))
@@ -323,37 +323,35 @@ object EntityResolution {
         .join(centers.select(col("node").as("dst")), Seq("dst"))
         .select(col("src").as("node"))
         .union(centers.select(col("node")))
-      val next = graft.Checkpoints.cut(
+      val next = r.cut(
         active.join(retired.select(col("node").as("rn")),
           active("node") === col("rn"), "left_anti"))
-      remaining = next.count()
-      graft.Checkpoints.release(active)
-      active = next
-      roundCenters += centers
-      roundsOut.foreach(_.incrementAndGet())
+      val remaining = graft.Checkpoints.rowCount(next)
+      if (remaining > 0 && r.n >= nSeed)
+        throw new IllegalStateException(s"refineCore: $remaining nodes still " +
+          s"active after round ${r.n}, past the |seed| = $nSeed bound")
+      ((next, roundCenters.add(centers, r)), remaining)
+    } { case (_, roundCenters) =>
+      if (roundCenters.isEmpty)
+        pairs.select(col("a").as("node"), col("b").as("component")).limit(0)
+      else {
+        val leaders = roundCenters.view
+        // final assignment: every matched non-center joins its MINIMUM
+        // verified center (guaranteed to exist — it was retired as some
+        // center's neighbor); centers label themselves
+        val memberOf = und
+          .join(leaders.select(col("node").as("dst")), Seq("dst"))
+          .groupBy(col("src").as("node")).agg(min(col("dst")).as("component"))
+        graft.Checkpoints.cut(
+          leaders.select(col("node"), col("node").as("component"))
+            .union(memberOf
+              .join(leaders.select(col("node").as("ln")),
+                memberOf("node") === col("ln"), "left_anti")
+              .select(col("node"), col("component"))))
+      }
     }
-    graft.Checkpoints.release(active)
-    if (roundCenters.isEmpty) {
-      graft.Checkpoints.release(und)
-      return pairs.select(col("a").as("node"), col("b").as("component"))
-        .limit(0)
-    }
-    val leaders = roundCenters.reduce(_ union _)
-    // final assignment: every matched non-center joins its MINIMUM
-    // verified center (guaranteed to exist — it was retired as some
-    // center's neighbor); centers label themselves
-    val memberOf = und
-      .join(leaders.select(col("node").as("dst")), Seq("dst"))
-      .groupBy(col("src").as("node")).agg(min(col("dst")).as("component"))
-    val out = graft.Checkpoints.cut(
-      leaders.select(col("node"), col("node").as("component"))
-        .union(memberOf
-          .join(leaders.select(col("node").as("ln")),
-            memberOf("node") === col("ln"), "left_anti")
-          .select(col("node"), col("component"))))
     graft.Checkpoints.release(und)
-    roundCenters.foreach(r => graft.Checkpoints.release(r))
-    out
+    run
   }
 
   /** [[resolveEntities]] with the [[refineByCenter]] guard between
@@ -361,15 +359,12 @@ object EntityResolution {
     * runs on a dirty corpus, where silent single-link collapse is
     * worse than splitting an under-verified chain. */
   private[graft] def resolveEntitiesGuarded(parts: DataFrame,
-      tau: Double,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None,
-      hashPriority: Boolean = false)
-      : DataFrame = {
+      tau: Double, hashPriority: Boolean = false): DataFrame = {
     val sigs = sigRelation(parts)
     val cand = candidates(blockingKeys(sigs), None)
     // cut: the match relation feeds every refinement round
     val pairs = graft.Checkpoints.cut(verifiedPairs(sigs, cand, tau))
-    val refined = refineByCenter(pairs, roundsOut, hashPriority)
+    val refined = refineByCenter(pairs, hashPriority).out
     graft.Checkpoints.release(pairs) // refined is materialized (cut)
     survive(parts, refined, None)
   }
@@ -494,7 +489,7 @@ object EntityResolution {
       dir: String): DataFrame =
     resolveEntitiesGuarded(
       Tables(spark, dir).part.filter(col("p_partkey") < ErBatch), ErTau,
-      None, hashPriority = true)
+      hashPriority = true)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q178_entity_resolution" -> (q178EntityResolution _),

@@ -150,7 +150,7 @@ object Olap {
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("freq"),
         sum(col("o_totalprice").cast("decimal(18,2)")).as("spend")))
-    val nCust = per.count() // all three quintiles share one count
+    val nCust = graft.Checkpoints.rowCount(per) // all three quintiles share one count
     val melted = per.select(col("cust"), col("spend"),
         explode(array(
           struct(lit(0L).as("metric"),

@@ -4,7 +4,7 @@ import scala.util.chaining._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Checkpoints, Tables}
+import graft.{Checkpoints, Superstep, Tables}
 import graft.functions.GraftFunctions.dot
 
 /** Distributed Lloyd k-means over the embedding corpus — the centroid
@@ -21,8 +21,9 @@ import graft.functions.GraftFunctions.dot
   *    window argmin, all streaming over the corpus once;
   *  - the centroid update aggregates (cell, dim) partial sums — a
   *    shuffle of k·d·partitions rows, independent of corpus size.
-  * Superseded centroid/assignment checkpoints are released each
-  * iteration, so memory is O(corpus + k·d), not O(iters · corpus).
+  * The loop runs on [[graft.Superstep]], which releases superseded
+  * centroid/assignment cuts each round, so memory is O(corpus + k·d),
+  * not O(iters · corpus).
   *
   * Determinism: init = the first k vectors by vec_id; every join/agg
   * is keyed; the only float nondeterminism is partial-agg order in the
@@ -57,38 +58,33 @@ object KMeans {
       grp: Seq[String] = Nil): (DataFrame, DataFrame) = {
     require(iters >= 1, "kmeans needs at least one assignment pass")
     val g = grp.map(col)
-    var cent = v.filter(col("vec_id") < k)
-      .select(g :+ col("vec_id").cast("int").as("cell") :+ col("e").as("c"): _*)
-      .pipe(Checkpoints.cut)
-    var assign: DataFrame = null
-    for (t <- 1 to iters) {
-      val prevAssign = assign
-      // argmin as one partial agg (r14, guide §2.4): min(struct(dist,
-      // cell)) is exactly the row_number()-over-(dist ASC, cell ASC)
-      // winner (ties fall through to the smaller cell) without the
-      // per-iteration window sort; dist ≥ 0, no sign games needed.
-      assign = (if (grp.isEmpty) v.crossJoin(broadcast(cent))
-                else v.join(broadcast(cent), grp))
+    // argmin as one partial agg (r14, guide §2.4): min(struct(dist,
+    // cell)) is exactly the row_number()-over-(dist ASC, cell ASC)
+    // winner (ties fall through to the smaller cell) without the
+    // per-iteration window sort; dist ≥ 0, no sign games needed.
+    def assignTo(cent: DataFrame): DataFrame =
+      (if (grp.isEmpty) v.crossJoin(broadcast(cent)) else v.join(broadcast(cent), grp))
         .withColumn("dist", sqDist(col("e"), col("c")))
         .groupBy(g :+ col("vec_id"): _*)
         .agg(min(struct(col("dist"), col("cell"))).as("w0"))
         .select(g :+ col("vec_id") :+ col("w0.cell").as("cell"): _*)
-        .pipe(Checkpoints.cut)
-      if (prevAssign != null) Checkpoints.release(prevAssign)
-      if (t < iters) {
-        // per-dim means; rebuild the centroid array ordered by dim
-        val prevCent = cent
-        cent = assign.join(v, grp :+ "vec_id")
-          .select(g :+ col("cell") :+ posexplode(col("e")).as(Seq("i", "x")): _*)
-          .groupBy(g ++ Seq(col("cell"), col("i")): _*).agg(avg(col("x")).as("cx"))
-          .groupBy(g :+ col("cell"): _*)
-          .agg(array_sort(collect_list(struct(col("i"), col("cx")))).as("p"))
-          .select(g :+ col("cell") :+ expr("transform(p, q -> q.cx)").as("c"): _*)
-          .pipe(Checkpoints.cut)
-        Checkpoints.release(prevCent)
-      }
-    }
-    (assign, cent)
+    // per-dim means; rebuild the centroid array ordered by dim
+    def centroids(assign: DataFrame): DataFrame =
+      assign.join(v, grp :+ "vec_id")
+        .select(g :+ col("cell") :+ posexplode(col("e")).as(Seq("i", "x")): _*)
+        .groupBy(g ++ Seq(col("cell"), col("i")): _*).agg(avg(col("x")).as("cx"))
+        .groupBy(g :+ col("cell"): _*)
+        .agg(array_sort(collect_list(struct(col("i"), col("cx")))).as("p"))
+        .select(g :+ col("cell") :+ expr("transform(p, q -> q.cx)").as("c"): _*)
+    // round 0: c₀ and a₁; round t: cₜ and aₜ₊₁
+    Superstep.loop(iters - 1) { r =>
+      val cent = r.cut(v.filter(col("vec_id") < k)
+        .select(g :+ col("vec_id").cast("int").as("cell") :+ col("e").as("c"): _*))
+      ((r.cut(assignTo(cent)), cent), Superstep.Unmeasured)
+    } { case ((assign, _), r) =>
+      val cent = r.cut(centroids(assign))
+      ((r.cut(assignTo(cent)), cent), Superstep.Unmeasured)
+    }(identity).out
   }
 
   /** (final assignment, the centroids that produced it) — for the

@@ -172,9 +172,9 @@ object Streaming {
     * (registers, then the harmonic sum), which append-mode streaming
     * cannot express; [[graft.functions.HllRegistersAgg]] collapses
     * the sketch to a single `groupBy(window).agg` with a fixed
-    * 64-byte state per window, and [[graft.graph.HyperBall.estimate]]
-    * (the codegen'd HllEstimate read-out, same α) converts registers
-    * to the count estimate in the stateless projection after the agg.
+    * 64-byte state per window, and [[hllEstimateExact]] (q193's
+    * integer read-out) converts registers to the count estimate in the
+    * stateless projection after the agg.
     * The input hash is the same md5-derived 60-bit value as
     * q187/q193 — computed IN-ROW, so any engine that can md5 can
     * feed or merge these sketches; bit-equality of the streaming
@@ -194,9 +194,9 @@ object Streaming {
   /** q193's EXACT-integer readout over a register array: the harmonic
     * sum is a BIGINT Σ 2^(W+1−r) (registers span rho ≤ W+1 = 55, so
     * the 2^-r terms exceed a double's 53-bit mantissa span — a float
-    * accumulation like HllEstimate's can land one ulp off q193's
-    * integer form and flip a .00005 rounding boundary in the
-    * spec-pinned streaming-vs-batch bit-equality), followed by the
+    * accumulation can land one ulp off q193's integer form and flip
+    * a .00005 rounding boundary in the spec-pinned streaming-vs-batch
+    * bit-equality), followed by the
     * single HllNum / sumt division and the identical linear-counting
     * branch. Interpreted HOFs, but evaluated once per WINDOW row. */
   private def hllEstimateExact(regs: String): Column = {

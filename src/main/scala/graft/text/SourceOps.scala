@@ -608,9 +608,7 @@ object SourceOps {
     // source list: a data DIMENSION (20 at every SF), not corpus rows
     val sources = tok.select("source").distinct()
       .collect().map(_.getString(0)).sorted
-    val picks = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
-    var cum = 0L
-    if (sources.length <= CoverageMaskMaxSources) {
+    val picks = if (sources.length <= CoverageMaskMaxSources) {
       val srcRel = sources.zipWithIndex.toSeq.toDF("source", "si")
       // tok is distinct (source, w), so sum(bit) over a token's rows
       // IS the bitwise OR of its membership bits — exact
@@ -620,6 +618,8 @@ object SourceOps {
         .groupBy("w").agg(sum(col("bit")).as("mask"))
         .groupBy("mask").agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val picks = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
+      var cum = 0L
       val remaining = scala.collection.mutable.ArrayBuffer(
         sources.zipWithIndex: _*)
       var pickedMask = 0L
@@ -635,29 +635,26 @@ object SourceOps {
         remaining -= ((src, si))
         pickedMask |= 1L << si
       }
-    } else {
-      var covered = tok.select("w").limit(0).pipe(graft.Checkpoints.cut)
-      val remaining = scala.collection.mutable.ArrayBuffer(sources: _*)
-      for (step <- 1 to sources.length) {
-        val gains = tok
-          .join(covered.select(col("w").as("cw")), col("w") === col("cw"),
-            "left_anti")
-          .groupBy("source").agg(count(lit(1)).as("gain"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val (gain, src) = remaining
-          .map(s0 => (gains.getOrElse(s0, 0L), s0))
-          .minBy { case (g, s0) => (-g, s0) }
-        cum += gain
-        picks += ((step.toLong, src, gain, cum))
-        remaining -= src
-        val nextCovered = covered
-          .union(tok.filter(col("source") === src).select("w")).distinct()
-          .pipe(graft.Checkpoints.cut)
-        graft.Checkpoints.release(covered)
-        covered = nextCovered
-      }
-    }
-    picks.toSeq.toDF("step", "source", "new_tokens", "cum_tokens")
+      picks.toSeq
+    } else graft.Superstep.loop(sources.length) { r =>
+      ((r.cut(tok.select("w").limit(0)), Vector.empty[(Long, String, Long, Long)]),
+        graft.Superstep.Unmeasured)
+    } { case ((covered, picks), r) =>
+      val gains = tok
+        .join(covered.select(col("w").as("cw")), col("w") === col("cw"),
+          "left_anti")
+        .groupBy("source").agg(count(lit(1)).as("gain"))
+        .collect().map(row => row.getString(0) -> row.getLong(1)).toMap
+      val picked = picks.map(_._2).toSet
+      val (gain, src) = sources.filterNot(picked)
+        .map(s0 => (gains.getOrElse(s0, 0L), s0))
+        .minBy { case (g, s0) => (-g, s0) }
+      val cum = picks.lastOption.fold(0L)(_._4) + gain
+      val next = r.cut(covered
+        .union(tok.filter(col("source") === src).select("w")).distinct())
+      ((next, picks :+ ((r.n.toLong, src, gain, cum))), graft.Superstep.Unmeasured)
+    }(_._2).out
+    picks.toDF("step", "source", "new_tokens", "cum_tokens")
       .orderBy("step")
   }
 

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
-import graft.Checkpoints
+import graft.{Checkpoints, Superstep}
 
 /** Distributed suffix-array construction by prefix doubling
   * (Manber & Myers 1990; the MapReduce adaptation is folklore —
@@ -37,10 +37,10 @@ import graft.Checkpoints
   *    count per-partition sizes; indices follow the range-sorted
   *    partition order, so the result is the global sorted position —
   *    deterministic because the keyed rows are distinct).
-  *  - Each round's rank relation is lineage-cut ([[Checkpoints.cut]])
-  *    and the superseded round released, the iterative-algorithm
-  *    discipline shared with CC/Louvain/k-core. When the caller needs
-  *    LCPs, the per-round tables are RETAINED instead (log₂ maxlen
+  *  - The doubling rounds run on [[graft.Superstep]], the kernel
+  *    shared with CC/Louvain/k-core: each round's rank relation is
+  *    lineage-cut and the superseded round released. When the caller
+  *    needs LCPs, the per-round tables are RETAINED instead (log₂ maxlen
   *    relations of constant-width rows — the standard sparse-table
   *    space trade) and freed by Verify/Bench's end-of-query
   *    `releaseAll`.
@@ -107,27 +107,31 @@ object SuffixArray {
         explode(sequence(lit(1), length(col("s")))).as("posi"))
       .select(col("doc_id"), col("posi").cast("long").as("pos"),
         expr(s"substring(s, posi, $BaseH)").as("pref")))
-    // round 0: rank of the BaseH-char truncation (string sort order of
-    // the truncations == suffix order truncated at BaseH — shorter
-    // equal-prefix truncations sort first, exactly the suffix rule).
-    // All ordinal assignment is Ordinals.denseBy — Tungsten range-sort
-    // + broadcast offsets, no .rdd row-conversion seam (BENCH_SCALING
-    // Part 19), and the meta form's exact count makes the convergence
-    // scalar free.
-    val (r0, r0cut, nPref) = graft.Ordinals.denseByWithMeta(
-      prefs.select("pref").distinct(), Seq(col("pref")), "rank", 0L)
-    var ranks = prefs.join(r0, "pref")
-      .select(col("doc_id"), col("pos"), col("rank"))
-      .pipe(Checkpoints.cut)
-    Checkpoints.release(r0cut)
-    var tables = List((BaseH.toLong, ranks))
-    val total = prefs.count()
-    var distinctRanks = nPref
-    // exclusive upper bound on the current rank VALUES (not their
-    // count) — the composite-round guard below
-    var rankBound = nPref
-    var h = BaseH.toLong
-    while (h < maxLen && distinctRanks < total) {
+    val total = Checkpoints.rowCount(prefs)
+    def more(distinctRanks: Long, h: Long): Long =
+      if (h < maxLen && distinctRanks < total) 1L else 0L
+    def keep(h: Long, ranks: DataFrame): List[(Long, DataFrame)] =
+      if (retainTables) List((h, ranks)) else Nil
+    // state: (ranks, retained tables, distinct rank count, exclusive
+    // upper bound on the rank VALUES — the composite-round guard
+    // below, h); one round per doubling of h below maxLen
+    val doublings = Iterator.iterate(BaseH.toLong)(_ * 2).takeWhile(_ < maxLen).size
+    val (ranks, tables) = Superstep.loop(doublings) { r =>
+      // round 0: rank of the BaseH-char truncation (string sort order
+      // of the truncations == suffix order truncated at BaseH — shorter
+      // equal-prefix truncations sort first, exactly the suffix rule).
+      // All ordinal assignment is Ordinals.denseBy — Tungsten
+      // range-sort + broadcast offsets, no .rdd row-conversion seam
+      // (BENCH_SCALING Part 19), and the meta form's exact count makes
+      // the convergence scalar free.
+      val (r0, r0cut, nPref) = graft.Ordinals.denseByWithMeta(
+        prefs.select("pref").distinct(), Seq(col("pref")), "rank", 0L)
+      val ranks = r.cut(prefs.join(r0, "pref")
+        .select(col("doc_id"), col("pos"), col("rank")))
+      Checkpoints.release(r0cut)
+      val h = BaseH.toLong
+      ((ranks, keep(h, ranks), nPref, nPref, h), more(nPref, h))
+    } { case ((ranks, tables, distinctRanks, rankBound, h), r) =>
       val right = ranks.select(col("doc_id").as("d2"),
         (col("pos") - h).as("p2"), col("rank").as("rank2"))
       val paired = ranks.join(right,
@@ -143,42 +147,35 @@ object SuffixArray {
       // composite's range squares each round; once it would leave
       // 63 bits (B ≥ 2³¹), one dense re-rank renormalizes it to the
       // distinct-key count and the convergence scalar refreshes.
-      if (rankBound < (1L << 31)) {
-        val next = paired
-          .select(col("doc_id"), col("pos"),
-            (col("k1") * (rankBound + 1) + col("k2") + 1L).as("rank"))
-          .pipe(Checkpoints.cut)
+      val (next, nextDistinct, nextBound) = if (rankBound < (1L << 31)) {
         // values in [0, (B−1)(B+1)+B] ⊂ [0, (B+1)²) — still positive,
         // order- and equality-isomorphic to the (k1, k2) pairs.
         // distinctRanks is stale (a valid lower bound — refinement
         // only splits classes), so convergence is re-tested at the
         // next dense round; the h < maxLen bound caps the loop.
-        rankBound = (rankBound + 1) * (rankBound + 1)
-        if (!retainTables) Checkpoints.release(ranks)
-        ranks = next
+        (r.cut(paired.select(col("doc_id"), col("pos"),
+            (col("k1") * (rankBound + 1) + col("k2") + 1L).as("rank"))),
+          distinctRanks, (rankBound + 1) * (rankBound + 1))
       } else {
         val (rk, rkCut, nKeys) = graft.Ordinals.denseByWithMeta(
           paired.select("k1", "k2").distinct(),
           Seq(col("k1"), col("k2")), "nrank", 0L)
-        val next = paired.join(rk, Seq("k1", "k2"))
-          .select(col("doc_id"), col("pos"), col("nrank").as("rank"))
-          .pipe(Checkpoints.cut)
-        distinctRanks = nKeys // |distinct keys| IS next's distinct count
-        rankBound = nKeys
-        if (retainTables) Checkpoints.release(rkCut)
-        else Checkpoints.release(ranks, rkCut)
-        ranks = next
+        val next = r.cut(paired.join(rk, Seq("k1", "k2"))
+          .select(col("doc_id"), col("pos"), col("nrank").as("rank")))
+        Checkpoints.release(rkCut)
+        // |distinct keys| IS next's distinct count
+        (next, nKeys, nKeys)
       }
-      h *= 2
-      tables ::= (h, ranks)
-    }
+      val h2 = h * 2
+      ((next, keep(h2, next) ++ tables, nextDistinct, nextBound, h2),
+        more(nextDistinct, h2))
+    }(s => (s._1, s._2)).out
     val sa = graft.Ordinals.denseBy(ranks,
         Seq(col("rank"), col("doc_id"), col("pos")), "sa_rank", 1L)
       .select("sa_rank", "doc_id", "pos")
       .sort("sa_rank")
     if (!retainTables) Checkpoints.release(prefs)
-    SaIndex(sa, if (retainTables) tables.reverse else Nil,
-      if (retainTables) prefs else null)
+    SaIndex(sa, tables.reverse, if (retainTables) prefs else null)
   }
 
   /** LCP of every ADJACENT suffix-array pair, from the retained rank
@@ -206,20 +203,21 @@ object SuffixArray {
       col("doc_id").as("doc1"), col("pos").as("pos1"))
     val b = idx.sa.select((col("sa_rank") - 1).as("r2"),
       col("doc_id").as("doc2"), col("pos").as("pos2"))
-    var cur = a.join(b, col("sa_rank") === col("r2"))
+    val pairs = a.join(b, col("sa_rank") === col("r2"))
       .join(lens.select(col("doc_id").as("ld1"), col("len").as("len1")),
         col("doc1") === col("ld1"))
       .join(lens.select(col("doc_id").as("ld2"), col("len").as("len2")),
         col("doc2") === col("ld2"))
       .select(col("sa_rank"), col("doc1"), col("pos1"), col("len1"),
         col("doc2"), col("pos2"), col("len2"), lit(0L).as("lcp"))
-      .pipe(Checkpoints.cut)
-    for ((h, rt) <- idx.rankTables.sortBy(-_._1)) {
+    val ladder = idx.rankTables.sortBy(-_._1)
+    val cur = Superstep.iterate(pairs, ladder.length) { (cur, n) =>
+      val (h, rt) = ladder(n - 1)
       val ra = rt.select(col("doc_id").as("da"), col("pos").as("pa"),
         col("rank").as("rka"))
       val rb = rt.select(col("doc_id").as("db"), col("pos").as("pb"),
         col("rank").as("rkb"))
-      val next = cur
+      cur
         .join(ra, col("doc1") === col("da") &&
           (col("pos1") + col("lcp")) === col("pa"), "left")
         .join(rb, col("doc2") === col("db") &&
@@ -231,10 +229,7 @@ object SuffixArray {
               col("len2") - (col("pos2") + col("lcp")) + 1))
             .otherwise(col("lcp")))
         .drop("da", "pa", "rka", "db", "pb", "rkb")
-        .pipe(Checkpoints.cut)
-      Checkpoints.release(cur)
-      cur = next
-    }
+    }(Superstep.budgetOnly).out
     // residual < BaseH (the descending ladder decomposes any LCP as
     // Σ BaseH·2^k + r, r < BaseH): ONE bounded compare of the two
     // retained BaseH-char prefix windows at offset lcp — constant

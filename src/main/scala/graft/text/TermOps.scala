@@ -1,6 +1,5 @@
 package graft.text
 
-import scala.util.chaining._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -261,16 +260,13 @@ object TermOps {
 
   /** The learned merge rules for a (word, freq) type table:
     * (step, lhs, rhs, cnt). */
-  private[graft] def bpeMerges(wordFreq: DataFrame, k: Int): Seq[(Long, String, String, Long)] = {
-    val wf = wordFreq
-      .withColumn("sym", regexp_replace(col("word"), "(.)", "|$1|"))
-      .select("freq", "sym")
-      .pipe(graft.Checkpoints.cut)
-    var cur = wf
-    val rules = Seq.newBuilder[(Long, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= k && !exhausted) {
+  private[graft] def bpeMerges(wordFreq: DataFrame, k: Int): Seq[(Long, String, String, Long)] =
+    graft.Superstep.loop(k) { r =>
+      val wf = r.cut(wordFreq
+        .withColumn("sym", regexp_replace(col("word"), "(.)", "|$1|"))
+        .select("freq", "sym"))
+      ((wf, Vector.empty[(Long, String, String, Long)]), graft.Superstep.Unmeasured)
+    } { case ((cur, rules), r) =>
       val best = cur
         .withColumn("a", split(expr("trim(BOTH '|' FROM sym)"), "\\|\\|"))
         .filter(size(col("a")) >= 2)
@@ -282,19 +278,15 @@ object TermOps {
         .agg(sum("freq").as("cnt"))
         .orderBy(col("cnt").desc, col("lhs").asc, col("rhs").asc)
         .limit(1).collect()
-      if (best.isEmpty) exhausted = true // every word fully merged
-      else {
-        val (lhs, rhs) =
-          (best(0).getAs[String]("lhs"), best(0).getAs[String]("rhs"))
-        rules += ((step.toLong, lhs, rhs, best(0).getAs[Long]("cnt")))
-        cur = cur.withColumn("sym", replace(col("sym"),
-          lit(s"|$lhs||$rhs|"), lit(s"|$lhs$rhs|")))
-        step += 1
+      best.headOption match {
+        case None => ((cur, rules), 0L) // every word fully merged
+        case Some(b) =>
+          val (lhs, rhs) = (b.getAs[String]("lhs"), b.getAs[String]("rhs"))
+          ((cur.withColumn("sym", replace(col("sym"),
+              lit(s"|$lhs||$rhs|"), lit(s"|$lhs$rhs|"))),
+            rules :+ ((r.n.toLong, lhs, rhs, b.getAs[Long]("cnt")))), 1L)
       }
-    }
-    graft.Checkpoints.release(wf)
-    rules.result()
-  }
+    }(_._2).out
 
   def q129BpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.graph.{Algorithms, Centrality, Cores, HyperBall, TradeGraph}
+import graft.graph.{Algorithms, Centrality, Cores, TradeGraph}
 
 class CoresCentralitySpec extends SparkSpec {
   import spark.implicits._
@@ -145,26 +145,6 @@ class CoresCentralitySpec extends SparkSpec {
     val out = Centrality.eccentricity(nodes, e)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(out(1L) == ((2L, 2L)) && out(2L) == ((1L, 1L)) && out(3L) == ((0L, 0L)))
-  }
-
-  test("hyperball harmonic estimate tracks the exact values on the trade graph") {
-    val t = Tables(spark, sfDir())
-    val ns = TradeGraph.nodes(t).select("node")
-    val es = TradeGraph.edges(t).select("src", "dst")
-      .filter(col("src") =!= col("dst"))
-    val exact = Centrality.harmonic(ns, es)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val est = HyperBall.harmonicEstimates(ns, es)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val errs = exact.collect { case (n, x) if x > 0 =>
-      math.abs(est(n) - x) / x
-    }
-    val mean = errs.sum / errs.size
-    info(f"hyperball harmonic mean relative error (m=${HyperBall.M}): $mean%.3f")
-    assert(mean < 0.35, s"mean relative error $mean out of tolerance")
-    val est2 = HyperBall.harmonicEstimates(ns, es)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(est == est2, "sketches are deterministic")
   }
 
   // ------------------------------------------------ random walks

@@ -241,10 +241,8 @@ class EntityResolutionSpec extends SparkSpec {
     val pathPairs: DataFrame =
       (1L until n.toLong).map(i => (i, i + 1)).toDF("a", "b")
     def runRefine(hash: Boolean): (Map[Long, Long], Int) = {
-      val rounds = new java.util.concurrent.atomic.AtomicInteger(0)
-      val m = EntityResolution.refineByCenter(pathPairs, Some(rounds), hash)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (m, rounds.get())
+      val run = EntityResolution.refineByCenter(pathPairs, hash)
+      (run.out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, run.rounds)
     }
     val (minId, minIdRounds) = runRefine(hash = false)
     val (hashed, hashRounds) = runRefine(hash = true)

@@ -201,26 +201,6 @@ class ExpressionEquivalenceSpec extends SparkSpec {
     assert(sp.count() == graft.operators.Profile.SkewTopK)
   }
 
-  test("HllEstimate == HOF aggregate/filter formulation, bit-exact") {
-    val rnd = new scala.util.Random(23)
-    val rows = (0 until 200).map { i =>
-      (i.toLong, Seq.fill(graft.graph.HyperBall.M)(
-        if (rnd.nextBoolean()) 0 else rnd.nextInt(60) + 1))
-    }
-    val d = rows.toDF("id", "regs")
-    val custom = graft.graph.HyperBall.estimate(col("regs"))
-    val hof = graft.graph.HyperBall.estimateHof(col("regs"))
-    val diff = d.select(col("id"), custom.as("c"), hof.as("h"))
-      .filter(col("c") =!= col("h")).count()
-    assert(diff == 0, "codegen estimate must match the HOF reference bit-exactly")
-    // and it participates in whole-stage codegen (repartition defeats
-    // ConvertToLocalRelation, which would pre-evaluate a literal frame)
-    val df = d.repartition(2).select(custom.as("e"))
-    df.collect()
-    assert(df.queryExecution.executedPlan.toString.contains("*("),
-      "HllEstimate fell out of whole-stage codegen")
-  }
-
   test("every custom expression is callable from SQL after registration") {
     graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(

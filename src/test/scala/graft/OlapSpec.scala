@@ -83,13 +83,12 @@ class OlapSpec extends SparkSpec {
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("freq"),
         sum(col("o_totalprice").cast("decimal(18,2)")).as("spend"))
-    val nCust = per.count()
     val chained = Ordinals.ntileBy(
         Ordinals.ntileBy(
           Ordinals.ntileBy(per,
-            Seq(col("last_order").desc, col("cust").asc), 5, "r", nCust),
-          Seq(col("freq").desc, col("cust").asc), 5, "f", nCust),
-        Seq(col("spend").desc, col("cust").asc), 5, "m", nCust)
+            Seq(col("last_order").desc, col("cust").asc), 5, "r"),
+          Seq(col("freq").desc, col("cust").asc), 5, "f"),
+        Seq(col("spend").desc, col("cust").asc), 5, "m")
       .groupBy("r", "f", "m")
       .agg(count(lit(1)).as("n_customers"),
         sum(col("spend")).cast("double").as("revenue"))

@@ -446,4 +446,35 @@ class SourceSimAuditSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(got2.toSeq == Seq((1L, "A", 1L, 1L), (2L, "B", 0L, 1L)))
   }
+
+  test("greedy coverage past the bitmask bound: 22 sources == scalar greedy") {
+    // s00..s21: source i covers the window t(2i)..t(2i+3), so each
+    // source overlaps its neighbours in 2 tokens; s15 also covers six
+    // private tokens. Greedy: s15 first (gain 10), then every source
+    // of gain 4 in name order (s00, s02, …, s12, s17, s19, s21), then
+    // s13 (gain 2, t28 t29), then the rest at gain 0: cum 52 tokens.
+    val names = (0 until 22).map(i => f"s$i%02d")
+    val cover = names.zipWithIndex.map { case (s, i) =>
+      s -> ((2 * i until 2 * i + 4).map(n => s"t$n") ++
+        (if (i == 15) (0 until 6).map(n => s"x$n") else Nil)).toSet
+    }.toMap
+    assert(names.length > SourceOps.CoverageMaskMaxSources)
+    val tok = cover.toSeq.flatMap { case (s, ws) => ws.map(s -> _) }
+      .toDF("source", "w")
+    val got = SourceOps.greedyCoverage(tok).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+    // scalar greedy max-coverage: max gain, ties to the smaller name
+    val ref = Iterator.iterate((Set.empty[String], names.toSet, 0L,
+        Seq.empty[(Long, String, Long, Long)])) { case (covered, left, cum, out) =>
+      val (gain, src) = left.toSeq.map(s => ((cover(s) -- covered).size.toLong, s))
+        .minBy { case (g, s) => (-g, s) }
+      (covered ++ cover(src), left - src, cum + gain,
+        out :+ ((out.length + 1L, src, gain, cum + gain)))
+    }.drop(names.length).next()._4
+    assert(got == ref)
+    assert(got.take(2) == Seq((1L, "s15", 10L, 10L), (2L, "s00", 4L, 14L)))
+    assert(got.map(_._2).slice(1, 13) == Seq("s00", "s02", "s04", "s06", "s08",
+      "s10", "s12", "s17", "s19", "s21", "s13", "s01"))
+    assert(got.map(_._3).drop(11).forall(_ <= 2L) && got.last._4 == 52L)
+  }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.graph.Superstep
 
 /** The superstep kernel's own contract, on small in-memory graphs:
   * superseded rounds (and the aliased seed of a semi-naive loop) are

@@ -2,7 +2,9 @@
 # Full Verify + selfcheck at all three SFs -> $OUT_PREFIX_*
 # Layout-independent: repo root is derived from this script's path;
 # the Spark jars / testdata / output locations come from env vars
-# (defaults match the build image).
+# (defaults match the build image). SPARK_GRAFT_CPUS defaults to the
+# core count and VERIFY_MEM (the JVM heap) to half the machine's
+# memory, at least 2g, as the tier-1 test command sizes its driver.
 set -e
 REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 SPARK_JARS="${SPARK_JARS:-/opt/spark/jars}"
@@ -13,7 +15,8 @@ OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.la
 for sf in 0.001 0.01 0.1; do
   out=${OUT_PREFIX}_$sf
   rm -rf "$out"
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} java $OPENS -Xmx${VERIFY_MEM:-24g} \
+  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)} java $OPENS \
+    -Xmx${VERIFY_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' </proc/meminfo)} \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "$CP" graft.Verify "$TESTDATA/sf$sf" "$out" \
     > ${OUT_PREFIX}_verify_$sf.log 2>&1
