@@ -3,8 +3,12 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  PartitioningCollection, SinglePartition}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, StatsBridge}
 import org.apache.spark.sql.types._
@@ -28,6 +32,23 @@ import org.apache.spark.sql.types._
   * A loop whose change signal counts a cut's rows, or its rows
   * matching a predicate, reads it from the same observation
   * (`rowCount`, `cut(df, where)`), not from a second action.
+  *
+  * A cut that asks for a hash partitioning ([[Hashed]]: the loop state
+  * and loop-invariant relations of [[Superstep.loopOn]]) is placed that
+  * way — `repartition(n, key)`, or `coalesce(1)` for one partition —
+  * and reports the partitioning to the planner, so a group-by or union
+  * on the key reads the cut where it lies, with no Exchange. It reports
+  * it only when the final physical plan of its own job provably ends in
+  * it: a hash partitioning on the key into `n` (the repartition's own
+  * shuffle, or its input's partitioning where the planner dropped the
+  * repartition as redundant), or for `n` = 1 a single partition, which
+  * clusters every key. A shuffle read that AQE coalesced claims
+  * nothing. A plain cut whose rows lie in one partition can also be
+  * re-rooted to report a single partition after the fact
+  * ([[place]]), which runs no job: a loop-invariant relation is cut
+  * plain first, to measure the bytes its partition count comes from.
+  * Other cuts report what Spark's own checkpoint gives them: no
+  * partitioning, for a plan AQE ran.
   */
 object Checkpoints {
 
@@ -42,12 +63,49 @@ object Checkpoints {
     * the context already has a different checkpoint dir, the
     * configured one wins (with a warning) — never silently write
     * checkpoints somewhere other than where [[ConfKey]] says. */
-  def cut(df: DataFrame): DataFrame = observedCut(df, None)._1
+  def cut(df: DataFrame): DataFrame = observedCut(df, None, None)._1
 
   /** [[cut]] that also counts, in the same job, the rows of `df` that
     * match `where` (null counts as no match, as in `filter`). */
   def cut(df: DataFrame, where: Column): (DataFrame, Long) =
-    observedCut(df, Some(where))
+    observedCut(df, Some(where), None)
+
+  /** Hash partitioning on one column: `n` partitions by `key`, as
+    * `repartition(n, col(key))` places the rows. One partition is a
+    * single partition (`coalesce(1)`), which clusters every key. */
+  final case class Hashed(key: String, n: Int)
+
+  /** [[cut]] of `df` hash-partitioned as `by`. */
+  def cut(df: DataFrame, by: Hashed): DataFrame = observedCut(df, None, Some(by))._1
+
+  /** [[cut]] of `df` hash-partitioned as `by`, counting the rows that
+    * match `where` as `cut(df, where)` does. */
+  def cut(df: DataFrame, where: Column, by: Hashed): (DataFrame, Long) =
+    observedCut(df, Some(where), Some(by))
+
+  /** `cut`, a frame [[cut]] returned, placed as `by`: when `by` is one
+    * partition and the cut's rows already lie in one, the same cut
+    * re-rooted to report a single partition, which runs no job; else a
+    * new cut of it, hash-partitioned as `by`. The caller still owns
+    * `cut`. */
+  def place(cut: DataFrame, by: Hashed): DataFrame = cut.queryExecution.analyzed match {
+    case lr: LogicalRDD if by.n == 1 && lr.rdd.getNumPartitions == 1 =>
+      StatsBridge.reRoot(cut, lr.stats, Some(SinglePartition))
+    case _ => this.cut(cut, by)
+  }
+
+  /** How many partitions a cut frame reports its rows clustered into on
+    * its column `key`: `n` for a hash partitioning on `key` alone, 1 for
+    * a single partition. */
+  def partitionsOn(cut: DataFrame, key: String): Option[Int] =
+    cut.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.outputPartitioning match {
+        case SinglePartition => Some(1)
+        case HashPartitioning(Seq(a: Attribute), n) if a.name == key => Some(n)
+        case _ => None
+      }
+      case _ => None
+    }
 
   /** The row count of a cut frame, as its own job measured it. */
   def rowCount(cut: DataFrame): Long = cut.queryExecution.analyzed match {
@@ -56,12 +114,15 @@ object Checkpoints {
       s"rowCount needs a frame returned by Checkpoints.cut, got a ${other.nodeName} root")
   }
 
-  /** Materialize `df` with one observation on it — rows, rows matching
-    * `where`, and the bytes of each string/binary column — and re-root
-    * the cut on those statistics. Fixed-width columns count at their
-    * width; a frame with a nested column keeps the planner's size
-    * estimate but still reports its measured row count. */
-  private def observedCut(df: DataFrame, where: Option[Column]): (DataFrame, Long) = {
+  /** Materialize `df` (repartitioned as `by`, when given) with one
+    * observation on it — rows, rows matching `where`, and the bytes of
+    * each string/binary column — and re-root the cut on those
+    * statistics and on the partitioning its plan ended in. Fixed-width
+    * columns count at their width; a frame with a nested column keeps
+    * the planner's size estimate but still reports its measured row
+    * count. */
+  private def observedCut(df: DataFrame, where: Option[Column],
+      by: Option[Hashed]): (DataFrame, Long) = {
     val (varWidth, rest) = df.queryExecution.analyzed.output.partition(a =>
       a.dataType match {
         case _: StringType | _: CharType | _: VarcharType | BinaryType => true
@@ -79,7 +140,9 @@ object Checkpoints {
         varWidth.zipWithIndex.map { case (a, i) =>
           sum(octet_length(ColumnBridge.column(a))).as(s"bytes$i")
         })
-    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val placed = by.fold(df)(h =>
+      if (h.n == 1) df.coalesce(1) else df.repartition(h.n, col(h.key)))
+    val observed = placed.observe(name, metrics.head, metrics.tail: _*)
     val c = materialize(observed)
     // read from the plan that just ran: the checkpoint action executes
     // `observed`'s own QueryExecution, so its metric collectors are
@@ -96,7 +159,32 @@ object Checkpoints {
       if (nested.nonEmpty) c.queryExecution.analyzed.stats.sizeInBytes
       else BigInt(rows) * (8 + fixed.map(_.dataType.defaultSize).sum + 12 * varWidth.size) +
         varWidth.indices.map(i => BigInt(metric(s"bytes$i"))).sum
-    (StatsBridge.withStats(c, Statistics(size.max(1), rowCount = Some(BigInt(rows)))), matched)
+    (StatsBridge.reRoot(c, Statistics(size.max(1), rowCount = Some(BigInt(rows))),
+      by.flatMap(endsAs(observed, _))), matched)
+  }
+
+  /** The partitioning `by` asks for, over the output of `ran`, if the
+    * plan `ran` executed provably ends in it: a single partition when
+    * `by.n` is 1, else a hash partitioning on `by.key` into `by.n`. Read
+    * after the action, so an adaptive plan is in its final form, where a
+    * coalesced shuffle read reports a coalesced partitioning, not `by`. */
+  private def endsAs(ran: DataFrame, by: Hashed): Option[Partitioning] = {
+    def leaves(p: Partitioning): Seq[Partitioning] = p match {
+      case c: PartitioningCollection => c.partitionings.flatMap(leaves)
+      case other => Seq(other)
+    }
+    val qe = ran.queryExecution
+    val ended = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.outputPartitioning
+      case p => p.outputPartitioning
+    }
+    if (by.n == 1) Some(SinglePartition).filter(_ => ended.numPartitions == 1)
+    else qe.analyzed.output.find(_.name == by.key)
+      .map(a => HashPartitioning(Seq(a), by.n))
+      .filter(want => leaves(ended).exists {
+        case e: Expression => want.semanticEquals(e)
+        case _ => false
+      })
   }
 
   private def materialize(df: DataFrame): DataFrame = {

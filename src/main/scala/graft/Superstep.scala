@@ -4,6 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
+import graft.Checkpoints.Hashed
 
 /** The one superstep kernel behind every iterative DataFrame loop in
   * graft — the Pregelix shape (one join plus one group-by per
@@ -33,6 +35,22 @@ import org.apache.spark.sql.execution.LogicalRDD
   * color fixpoint inside its peel round, Borůvka's relabel CC), the
   * frames it hands back become the enclosing round's, freed once the
   * enclosing state stops reading them.
+  *
+  * A keyed loop ([[loopOn]]) declares its partition key, as Pregelix
+  * co-partitions vertex state with the edges by vertex id. Its
+  * loop-invariant relation is cut once, hash-partitioned on its own
+  * key column into `n` partitions ([[coPartition]]), and stays alive
+  * for the whole loop; every frame a round cuts is hash-partitioned on
+  * the state key into the same `n`. `n` is derived from the bytes the
+  * invariant relation's own cut measured, by AQE's coalescing target
+  * ([[partitions]]): 1 below 1 MB, then up to the default parallelism,
+  * at most `spark.sql.shuffle.partitions`. The cuts report their
+  * partitioning to the planner ([[Checkpoints]]), so a round that
+  * joins the invariant relation with the state ([[buildSide]]), groups
+  * on the key (and unions in the state itself) plans no Exchange: it
+  * is at most 2 jobs, the state's broadcast and a one-stage cut, and 1
+  * job when `n` is 1, where the state is hash-joined in place. State
+  * too big to broadcast is shuffle-joined, as in any other plan.
   */
 private[graft] object Superstep {
 
@@ -53,23 +71,31 @@ private[graft] object Superstep {
   val UnionViewMaxWidth = 32
 
   /** One round of a loop: its number (0 builds the seed state) and the
-    * cut every frame it materializes goes through. */
-  final class Round private[Superstep] (val n: Int) {
+    * cut every frame it materializes goes through — in a keyed loop
+    * ([[loopOn]]), hash-partitioned on the loop's key. */
+  final class Round private[Superstep] (val n: Int, keyed: Option[Hashed]) {
     private[Superstep] val cuts = ArrayBuffer.empty[DataFrame]
 
-    def cut(df: DataFrame): DataFrame = {
-      val c = Checkpoints.cut(df)
+    private def own(c: DataFrame): DataFrame = {
       cuts += c
       c
     }
 
+    def cut(df: DataFrame): DataFrame =
+      own(keyed.fold(Checkpoints.cut(df))(Checkpoints.cut(df, _)))
+
     /** [[cut]] that also returns how many of the cut rows match
       * `where`, counted by the cut's own job. */
     def cut(df: DataFrame, where: Column): (DataFrame, Long) = {
-      val (c, n) = Checkpoints.cut(df, where)
-      cuts += c
-      (c, n)
+      val (c, n) = keyed.fold(Checkpoints.cut(df, where))(Checkpoints.cut(df, where, _))
+      (own(c), n)
     }
+
+    /** `rel` cut as the loop-invariant relation of a keyed loop that
+      * runs inside this round, hash-partitioned on `by` as
+      * [[Superstep.coPartition]] partitions it. */
+    def coPartition(rel: DataFrame, by: String): DataFrame =
+      own(Superstep.coPartition(rel, by))
   }
 
   /** An accumulator kept as a union VIEW over its parts (cut frames or
@@ -110,13 +136,89 @@ private[graft] object Superstep {
     case _ => -1
   }
 
+  /** Partition count of a keyed loop over the cut `rel`: the count
+    * AQE's shuffle-partition coalescing targets for a shuffle of the
+    * bytes `rel`'s cut measured, so the loop runs no fewer tasks than an
+    * unpartitioned round's coalesced group-by over it would. The target
+    * partition size is AQE's: the advisory partition size, lowered to
+    * bytes / (`coalescePartitions.minPartitionNum`, else the default
+    * parallelism) when `coalescePartitions.parallelismFirst` is set
+    * (Spark's default), and at least `coalescePartitions.minPartitionSize`
+    * (1 MB by default). The count is at least 1 and at most
+    * `spark.sql.shuffle.partitions`. */
+  private def partitions(rel: DataFrame): Int = {
+    val conf = rel.sparkSession.sessionState.conf
+    val bytes = rel.queryExecution.analyzed.stats.sizeInBytes
+    val spread =
+      if (!conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) 1
+      else conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+        .getOrElse(rel.sparkSession.sparkContext.defaultParallelism)
+    val target = ((bytes + spread - 1) / spread)
+      .min(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      .max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+    ((bytes + target - 1) / target).max(1).min(conf.numShufflePartitions).toInt
+  }
+
+  /** `state`, a keyed loop's state cut, as the side a round joins to
+    * the loop-invariant relation. When the state is one partition, so
+    * is the relation ([[loopOn]] cuts both into the same count): a hash
+    * join built from the state where it lies needs no exchange, so the
+    * round runs as one job and one plan, with no broadcast job and no
+    * AQE re-plan after it. With more partitions the join key (an edge's
+    * source) is not the partition key, and the planner broadcasts small
+    * state as in any other plan: the round is 2 jobs. */
+  def buildSide(state: DataFrame, key: String): DataFrame =
+    if (Checkpoints.partitionsOn(state, key).contains(1)) state.hint("shuffle_hash")
+    else state
+
+  /** `rel` cut hash-partitioned on its column `by`, to be the
+    * loop-invariant relation of a [[loopOn]]. It is cut first as it
+    * is (a cut `rel` is used as is), which measures its bytes, and then
+    * placed ([[Checkpoints.place]]) into the partition count they give:
+    * at one partition that cut is re-rooted in place when its rows
+    * already lie in one, else it is cut again, partitioned, and the
+    * first cut released. A cut that already reports its rows clustered
+    * on `by` ([[Checkpoints.partitionsOn]]) is returned as is: a caller
+    * that reuses the relation after the loop cuts it once, partitioned,
+    * where it builds it. */
+  def coPartition(rel: DataFrame, by: String): DataFrame =
+    if (Checkpoints.partitionsOn(rel, by).isDefined) rel
+    else {
+      val c = Checkpoints.cutOnce(rel)
+      val placed = Checkpoints.place(c, Hashed(by, partitions(c)))
+      if (rddId(c) != rddId(rel) && rddId(placed) != rddId(c)) Checkpoints.release(c)
+      placed
+    }
+
   /** The loop. `init` builds the seed state in round 0 and reports its
     * change signal (0: nothing to do, no step runs); each step maps
     * the state to the next one plus the round's change count. Runs
     * until a change count of 0 or `maxRounds` steps, then releases
     * every frame the loop cut that `result` does not read. */
   def loop[S, R](maxRounds: Int)(init: Round => (S, Long))(
-      step: (S, Round) => (S, Long))(result: S => R): Run[R] = {
+      step: (S, Round) => (S, Long))(result: S => R): Run[R] =
+    run(maxRounds, None, None)(init)(step)(result)
+
+  /** A [[loop]] over state keyed by its column `key`, co-partitioned
+    * with the loop-invariant relation `inv` on its column `by`: `inv`
+    * is [[coPartition]]ed (a caller's co-partitioned cut is used as
+    * is, a cut made here is released with the loop), and every frame a
+    * round cuts is hash-partitioned on `key` into `inv`'s partition
+    * count. `step` reads the co-partitioned `inv` as its first
+    * argument. */
+  def loopOn[S, R](inv: DataFrame, by: String, key: String, maxRounds: Int)(
+      init: Round => (S, Long))(step: (DataFrame, S, Round) => (S, Long))(
+      result: S => R): Run[R] = {
+    val e = coPartition(inv, by)
+    val n = Checkpoints.partitionsOn(e, by).getOrElse(partitions(e))
+    run(maxRounds, Some(Hashed(key, n)), Some(e).filter(rddId(_) != rddId(inv)))(init)(
+      (s, r) => step(e, s, r))(result)
+  }
+
+  /** [[loop]], its rounds cutting as `keyed`; `pinned` is a frame the
+    * loop made before round 0 and releases only with the loop. */
+  private def run[S, R](maxRounds: Int, keyed: Option[Hashed], pinned: Option[DataFrame])(
+      init: Round => (S, Long))(step: (S, Round) => (S, Long))(result: S => R): Run[R] = {
     var owned = Vector.empty[DataFrame]
     def inRound[T](r: Round)(body: => T): T = {
       val out = enclosing.withValue(Some(r))(body)
@@ -129,18 +231,19 @@ private[graft] object Superstep {
       Checkpoints.release(dead: _*)
       owned = keep
     }
-    val r0 = new Round(0)
+    val r0 = new Round(0, keyed)
     var (state, changed) = inRound(r0)(init(r0))
     var rounds = 0
     while (changed != 0 && rounds < maxRounds) {
       rounds += 1
-      val r = new Round(rounds)
+      val r = new Round(rounds, keyed)
       val (next, c) = inRound(r)(step(state, r))
       retain(next)
       state = next
       changed = c
     }
     val out = result(state)
+    owned ++= pinned
     retain(out)
     enclosing.value.foreach(_.cuts ++= owned)
     Run(out, rounds, changed == 0)

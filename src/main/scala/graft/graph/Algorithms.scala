@@ -403,19 +403,20 @@ object Algorithms {
     * source-indicator·0.15 for the personalized variant (it may
     * reference the grouping key `node`). `edges` carries exactly the
     * columns `share` reads besides (src, dst). The nodes ⟕ in-edges ⟕
-    * out-mass join does not change between rounds, so it is cut once
-    * before the loop ([[inEdges]]) and each round is one join with the
-    * ranks plus one group-by ([[dampedRound]]). */
+    * out-mass join does not change between rounds, so it is the keyed
+    * loop's invariant relation ([[inEdges]]), cut once partitioned by
+    * `node` (each edge's dst), and the ranks are keyed by `node` too:
+    * each round is one join with the ranks plus one group-by that reads
+    * `in` where it lies ([[dampedRound]]). */
   private[graph] def damped(nodes: DataFrame, edges: DataFrame,
       outMass: Column, share: Column, r0: Column, reset: Column,
-      iters: Int)(changes: (DataFrame, DataFrame) => Long): Superstep.Run[DataFrame] = {
-    val in = inEdges(nodes, edges, outMass).pipe(Checkpoints.cut)
-    val run = Superstep.iterate(nodes.select(col("node"), r0.as("r")), iters) {
-      (ranks, _) => dampedRound(in, ranks, share, reset)
-    }(changes)
-    Checkpoints.release(in)
-    run
-  }
+      iters: Int)(changes: (DataFrame, DataFrame) => Long): Superstep.Run[DataFrame] =
+    Superstep.loopOn(inEdges(nodes, edges, outMass), "node", "node", iters) { r =>
+      (r.cut(nodes.select(col("node"), r0.as("r"))), Superstep.Unmeasured)
+    } { (in, ranks, r) =>
+      val next = r.cut(dampedRound(in, ranks, share, reset))
+      (next, changes(ranks, next))
+    }(identity)
 
   /** The loop invariant of [[damped]]: every node with its in-edges
     * (none: one null row) and each edge's source out-mass `od`. */
@@ -426,23 +427,26 @@ object Algorithms {
       .join(edges.groupBy(col("src").as("od_node")).agg(outMass.as("od")),
         col("od_node") === col("src"), "left")
 
-  /** One [[damped]] superstep over the cut [[inEdges]]: one join with
-    * the ranks, one group-by. */
+  /** One [[damped]] superstep over the cut [[inEdges]]: one left join
+    * with the ranks, one group-by. With `in` and the ranks partitioned
+    * on `node`, the join ([[Superstep.buildSide]]) keeps `in`'s
+    * partitioning and the group-by plans no Exchange. */
   private[graft] def dampedRound(in: DataFrame, ranks: DataFrame,
       share: Column, reset: Column): DataFrame =
-    in.join(ranks.select(col("node").as("rn"), col("r")), col("rn") === col("src"), "left")
+    in.join(Superstep.buildSide(ranks, "node").select(col("node").as("rn"), col("r")),
+        col("rn") === col("src"), "left")
       .groupBy(col("node"))
       .agg((reset + lit(0.85) * coalesce(sum(share), lit(0.0))).as("r"))
 
   /** [[damped]] with rank split uniformly over out-edges. */
-  private def uniform(nodes: DataFrame, edges: DataFrame, r0: Column,
+  private[graft] def uniform(nodes: DataFrame, edges: DataFrame, r0: Column,
       reset: Column, iters: Int)(
       changes: (DataFrame, DataFrame) => Long): Superstep.Run[DataFrame] =
     damped(nodes, edges.select(col("src"), col("dst")), count(lit(1)),
       col("r") / col("od"), r0, reset, iters)(changes)
 
   /** Total L1 rank movement Σ|r_t − r_{t−1}| between two rounds. */
-  private def movement(prev: DataFrame, next: DataFrame): Double =
+  private[graft] def movement(prev: DataFrame, next: DataFrame): Double =
     next
       .join(prev.select(col("node").as("pn"), col("r").as("pr")),
         col("node") === col("pn"))
@@ -497,18 +501,6 @@ object Algorithms {
     (run.out, run.rounds, delta)
   }
 
-  /** [[pagerank]] instrumented with the per-iteration L1 movement —
-    * convergence evidence for the spec. */
-  private[graft] def pagerankWithDeltas(nodes: DataFrame, edges: DataFrame,
-      iters: Int): (DataFrame, List[Double]) = {
-    val deltas = scala.collection.mutable.ListBuffer.empty[Double]
-    val run = uniform(nodes, edges, lit(1.0), lit(0.15), iters) { (prev, next) =>
-      deltas += movement(prev, next)
-      Superstep.Unmeasured
-    }
-    (run.out, deltas.toList)
-  }
-
   def q14Pagerank(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     pagerank(TradeGraph.nodes(t).select("node"), checkpointedEdges(t), 5)
@@ -544,6 +536,12 @@ object Algorithms {
     * The self branch also carries the OLD label, so the change count
     * is a predicate on the round's own output, counted by its cut's
     * job — per round 1 join + 1 agg and no count of its own.
+    * It is a keyed loop ([[Superstep.loopOn]]): `edges` is cut once
+    * partitioned by `dst` (a caller's `Superstep.coPartition(edges,
+    * "dst")` cut is used as is) and the labels are keyed by `node`. The
+    * contributions (edges ⋈ labels, [[Superstep.buildSide]], dst
+    * renamed to node) keep the edges' partitioning and the self branch
+    * has the same one, so the min-aggregate plans no Exchange.
     * Precondition: edge endpoints ⊆ `nodes` — ENFORCED loudly: a
     * foreign dst has no self row, so its
     * pc aggregates to null; silently it would surface as an extra
@@ -554,28 +552,13 @@ object Algorithms {
   private[graph] def minLabels(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int, who: String): Superstep.Run[DataFrame] = {
     var nV = 0L
-    Superstep.loop(maxRounds) { r =>
+    Superstep.loopOn(edges, "dst", "node", maxRounds) { r =>
       val seed = r.cut(nodes.select(col("node"), col("node").as("component"))
         .withColumn("pc", col("component")))
       nV = Checkpoints.rowCount(seed)
       (seed, Superstep.Unmeasured)
-    } { (comp, r) =>
-      val contrib = edges.select(col("src"), col("dst"))
-        .join(comp.select(col("node").as("src"), col("component")),
-          Seq("src"))
-        .select(col("dst").as("node"), col("component"),
-          lit(null).cast("long").as("own"))
-      val self = comp.select(col("node"), col("component"),
-        col("component").as("own"))
-      val (next, changed) = r.cut(contrib.unionByName(self)
-        .groupBy("node")
-        .agg(min(col("component")).as("component"),
-          min(col("own")).as("pc"))
-        .select(col("node"), col("component"),
-          when(col("pc").isNotNull, col("pc")).otherwise(raise_error(
-            format_string(s"$who: edge endpoint %d is " +
-              "not in `nodes` — callers must pass every endpoint",
-              col("node")))).as("pc")),
+    } { (e, comp, r) =>
+      val (next, changed) = r.cut(minLabelsRound(e, comp, who),
         col("component") =!= col("pc"))
       if (changed > 0 && r.n >= nV)
         throw new IllegalStateException(s"$who: min-label propagation still " +
@@ -584,12 +567,39 @@ object Algorithms {
     }(identity)
   }
 
+  /** One [[minLabels]] round over the (src, dst) `edges` and the
+    * (node, component, pc) labels: the next labels, `pc` carrying each
+    * node's label before the round. The contributions are a left join:
+    * an edge whose source has no label contributes a null, which `min`
+    * ignores, so the labels are an inner join's, and the join's output
+    * keeps the edges' partitioning however it is planned (an inner hash
+    * join reports both sides' partitionings, which the union with the
+    * self branch cannot match). */
+  private[graft] def minLabelsRound(edges: DataFrame, comp: DataFrame,
+      who: String): DataFrame = {
+    val contrib = edges.select(col("src"), col("dst"))
+      .join(Superstep.buildSide(comp, "node")
+          .select(col("node").as("src"), col("component")),
+        Seq("src"), "left")
+      .select(col("dst").as("node"), col("component"),
+        lit(null).cast("long").as("own"))
+    val self = comp.select(col("node"), col("component"),
+      col("component").as("own"))
+    contrib.unionByName(self)
+      .groupBy("node")
+      .agg(min(col("component")).as("component"),
+        min(col("own")).as("pc"))
+      .select(col("node"), col("component"),
+        when(col("pc").isNotNull, col("pc")).otherwise(raise_error(
+          format_string(s"$who: edge endpoint %d is " +
+            "not in `nodes` — callers must pass every endpoint",
+            col("node")))).as("pc"))
+  }
+
   def q15ConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val u = TradeGraph.undirectedEdges(t).pipe(Checkpoints.cut)
-    val comp = connectedComponents(TradeGraph.nodes(t).select("node"), u)
-    Checkpoints.release(u) // fixpoint reached; comp is checkpointed
-    comp.orderBy("node")
+    connectedComponents(TradeGraph.nodes(t).select("node"), TradeGraph.undirectedEdges(t))
+      .orderBy("node")
   }
 
   // ---------------------------------------------------------------- q16
@@ -617,8 +627,8 @@ object Algorithms {
   def sccLabels(nodes: DataFrame, edges: DataFrame): DataFrame =
     Superstep.loop(Int.MaxValue) { r =>
       val remaining = r.cut(nodes.select("node"))
-      val live = r.cut(edges.select("src", "dst").distinct()
-        .filter(col("src") =!= col("dst")))
+      val live = r.coPartition(edges.select("src", "dst").distinct()
+        .filter(col("src") =!= col("dst")), "dst")
       ((remaining, live, null: DataFrame), Superstep.Unmeasured)
     } { case ((remaining, live, done), r) =>
       // 1. forward min-color fixpoint (the connectedComponents round
@@ -640,10 +650,10 @@ object Algorithms {
         .select(col("node"), col("color").as("scc")))
       val nextDone = if (done == null) emitted else r.cut(done.union(emitted))
       val nextRemaining = r.cut(remaining.join(mark, Seq("node"), "left_anti"))
-      val nextLive = r.cut(live
+      val nextLive = r.coPartition(live
         .join(mark.select(col("node").as("src")), Seq("src"), "left_anti")
         .join(mark.select(col("node").as("dst")), Seq("dst"), "left_anti")
-        .select("src", "dst"))
+        .select("src", "dst"), "dst")
       ((nextRemaining, nextLive, nextDone), Checkpoints.rowCount(nextRemaining))
     }(_._3).out
 
@@ -820,10 +830,8 @@ object Algorithms {
     * corpus; the heavy work stays in the iterative CC. */
   def q37CommunityMembers(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val u = TradeGraph.undirectedEdges(t).pipe(Checkpoints.cut)
-    val comp = connectedComponents(TradeGraph.nodes(t).select("node"), u)
-    Checkpoints.release(u)
-    comp.join(TradeGraph.nodes(t), Seq("node"))
+    connectedComponents(TradeGraph.nodes(t).select("node"), TradeGraph.undirectedEdges(t))
+      .join(TradeGraph.nodes(t), Seq("node"))
       .groupBy("component")
       .agg(count(lit(1)).as("n_members"),
         array_join(array_sort(collect_list(col("n_name"))), ",").as("members"))

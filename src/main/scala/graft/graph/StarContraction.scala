@@ -145,8 +145,9 @@ object StarContraction {
     *
     * The probe round is [[Algorithms.connectedComponents]]' own
     * min-label round ([[Algorithms.minLabels]]): one equi-join + one
-    * partial agg per round, its change count observed by the round's
-    * cut.
+    * partial agg per round with no Exchange, its change count observed
+    * by the round's cut. The symmetric edge set is cut once, partitioned
+    * by `dst` as that round reads it.
     * Precondition (load-bearing for the domain too, and enforced
     * loudly by that round): edge endpoints ⊆ `nodes` — every caller
     * derives `nodes` from the edge endpoints or filters both from one
@@ -160,7 +161,7 @@ object StarContraction {
       .union(edges.select(col("v").as("src"), col("u").as("dst"))
         .filter(col("src") =!= col("dst")))
       .distinct()
-      .pipe(Checkpoints.cut)
+      .pipe(Superstep.coPartition(_, "dst"))
     val probe = Algorithms.minLabels(nodes, und, probeRounds, "ccAuto")
     val comp = probe.out.select("node", "component")
     if (probe.converged) { Checkpoints.release(und); return comp }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -125,6 +125,17 @@ object Olap {
       .orderBy(col("lvl"), col("o_orderstatus"), col("o_orderpriority"))
   }
 
+  /** Microseconds from 1970-01-01 00:00 to the timestamp `ts` as a
+    * wall-clock value (a date is its midnight), computed as an interval:
+    * strictly monotone in the full value. For TIMESTAMP_NTZ or DATE
+    * input no time zone enters. A TIMESTAMP (local time zone) input is
+    * first read as wall-clock time in the session time zone, which
+    * [[graft.Tables.configure]] sets to UTC; in a zone with daylight
+    * saving the repeated hour would break the monotonicity. */
+  private def epochMicros(ts: Column): Column =
+    ((ts.cast("timestamp_ntz") - lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)))
+      .cast("interval second").cast("decimal(24,6)") * 1000000).cast("long")
+
   // ---------------------------------------------------------------- q106
   /** RFM segmentation — recency / frequency / monetary quintiles per
     * customer, then the segment report (population + revenue per RFM
@@ -133,7 +144,7 @@ object Olap {
     * (VERDICT r13 #6 — the earlier form chained three independent
     * [[graft.Ordinals.ntileBy]] range-sorts of the same customer
     * relation): each metric melts to a common descending-sortable
-    * LONG key (recency = −days-since-epoch, frequency = −count,
+    * LONG key (recency = −[[epochMicros]], frequency = −count,
     * monetary = −cents; decimal(18,2)·100 ≤ 10¹⁸ < 2⁶³ by the TYPE
     * bound, so the cents cast can never overflow), the 3N-row melted
     * relation range-sorts ONCE on (metric, key, cust) — still the
@@ -153,9 +164,7 @@ object Olap {
     val nCust = graft.Checkpoints.rowCount(per) // all three quintiles share one count
     val melted = per.select(col("cust"), col("spend"),
         explode(array(
-          struct(lit(0L).as("metric"),
-            (-datediff(col("last_order"), lit("1970-01-01"))
-              .cast("long")).as("key")),
+          struct(lit(0L).as("metric"), (-epochMicros(col("last_order"))).as("key")),
           struct(lit(1L).as("metric"), (-col("freq")).as("key")),
           struct(lit(2L).as("metric"),
             (-(col("spend") * 100).cast("long")).as("key")))).as("mk"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.{Algorithms, CoPurchase, GraphxBridge, Louvain, TradeGraph}
 
@@ -13,6 +14,18 @@ class AlgorithmsSpec extends SparkSpec {
   private lazy val undirected = {
     val e = edges
     e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  /** [[Algorithms.pagerank]] instrumented with the per-iteration L1
+    * movement — convergence evidence. */
+  private def pagerankWithDeltas(nodes: DataFrame, edges: DataFrame,
+      iters: Int): (DataFrame, List[Double]) = {
+    val deltas = scala.collection.mutable.ListBuffer.empty[Double]
+    val run = Algorithms.uniform(nodes, edges, lit(1.0), lit(0.15), iters) { (prev, next) =>
+      deltas += Algorithms.movement(prev, next)
+      Superstep.Unmeasured
+    }
+    (run.out, deltas.toList)
   }
 
   test("transitive closure finds the cycle and the spur") {
@@ -473,7 +486,7 @@ class AlgorithmsSpec extends SparkSpec {
     // movement, at asymptotic rate ≈ the damping factor
     val t = Tables(spark, sfDir())
     val (nodes, e) = CoPurchase.graph(t)
-    val (_, deltas) = Algorithms.pagerankWithDeltas(nodes, e, 20)
+    val (_, deltas) = pagerankWithDeltas(nodes, e, 20)
     assert(deltas.length == 20)
     deltas.sliding(2).foreach { case List(a, b) =>
       assert(b <= a * 0.9 + 1e-12, s"movement rose: $a -> $b in $deltas")

@@ -101,6 +101,28 @@ class OlapSpec extends SparkSpec {
     assert(melted == chained, "melted one-pass RFM diverged")
   }
 
+  test("rfm: recency orders same-day last orders by their time of day") {
+    // customers 1 and 2 last ordered on the same day, 1 in the morning
+    // and 2 in the evening: 2 is the more recent and takes recency
+    // bucket 1, although the cust tie-break alone would pick 1
+    val dir = java.nio.file.Files.createTempDirectory("graft-rfm").toString
+    val day = java.time.LocalDateTime.of(2024, 1, 10, 0, 0)
+    Seq((1L, day.plusHours(9), 100.0),
+        (2L, day.plusHours(17), 200.0),
+        (3L, day.minusDays(1), 300.0),
+        (4L, day.minusDays(2), 400.0),
+        (5L, day.minusDays(3), 500.0))
+      .map { case (c, d, p) => (c, c, "O", p, d, "1-URGENT") }
+      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority")
+      .write.parquet(s"$dir/orders.parquet")
+    // one customer per (r, f, m) cell; its revenue names it
+    val recency = Olap.q106RfmSegments(spark, dir).collect()
+      .map(r => r.getDouble(4) -> r.getLong(0)).toMap
+    assert(recency == Map(200.0 -> 1L, 100.0 -> 2L, 300.0 -> 3L, 400.0 -> 4L,
+      500.0 -> 5L))
+  }
+
   test("cohort revenue: offset 0 everywhere, cumulative never decreases") {
     val rows = Olap.q107CohortRevenue(spark, sfDir()).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
