@@ -218,14 +218,13 @@ object Checkpoints {
   /** [[cut]] unless `df` is ALREADY a cut root (its plan root is the
     * LogicalRDD of a checkpointed RDD) — the idempotent form for call
     * chains where both a composer and its component defensively cut
-    * the same relation: q244/winnowingDedupAuto cut the corpus and
-    * then call fingerprintPairs, which cuts its input again, and q229
-    * cuts its pair relation and then hands it to
-    * `NodeEmbeddings.ppmiRows` — each a redundant second
-    * materialization + storage of an identical relation per query
-    * (ADVICE r12). A NON-checkpoint LogicalRDD
-    * (e.g. a createDataFrame/zipWithIndex result) still cuts: its RDD
-    * lineage would otherwise re-execute per action. */
+    * the same relation: q244 cuts the corpus and then calls
+    * fingerprintPairs, which cuts its input again, and q229 cuts its
+    * pair relation and then hands it to `NodeEmbeddings.ppmiRows` —
+    * each would otherwise be a redundant second materialization +
+    * storage of an identical relation per query. A NON-checkpoint
+    * LogicalRDD (e.g. a createDataFrame/zipWithIndex result) still
+    * cuts: its RDD lineage would otherwise re-execute per action. */
   def cutOnce(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
       case lr: LogicalRDD

@@ -9,16 +9,16 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** All ordered pairs (u, v), u ≠ v, of an `array<bigint>` — the
-  * basket-expansion step of the co-occurrence trainers, as ONE JVM
+/** All pairs (u, v), u < v, of an `array<bigint>` set — the
+  * basket-expansion step of the co-purchase pair relation, as ONE JVM
   * loop per row. The HOF spelling
-  * (`flatten(transform(ps, x -> transform(filter(ps, y -> y != x),
+  * (`flatten(transform(ps, x -> transform(filter(ps, y -> y > x),
   * ...)))`) evaluates O(|ps|²) interpreted lambda frames and
   * allocates an intermediate array per element — measured 5× the
   * whole query's previous CPU on the q228 basket relation. Output
   * order is row-local and deterministic (i-major, j-minor); every
-  * consumer aggregates, so order never matters. */
-case class OrderedPairs(child: Expression, ltOnly: Boolean = false)
+  * consumer aggregates or dedups, so order never matters. */
+case class OrderedPairs(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -37,27 +37,24 @@ case class OrderedPairs(child: Expression, ltOnly: Boolean = false)
     val xs = input.asInstanceOf[ArrayData]
     val n = xs.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val out = new Array[Any](if (ltOnly) n * (n - 1) / 2 else n * (n - 1))
+    val out = new Array[Any](n * (n - 1) / 2)
     var k = 0
     var i = 0
     while (i < n) {
       val u = xs.getLong(i)
       var j = 0
       while (j < n) {
-        if (j != i) {
-          val v = xs.getLong(j)
-          if (!ltOnly) { out(k) = InternalRow(u, v); k += 1 }
-          else if (u < v) { out(k) = InternalRow(u, v); k += 1 }
-        }
+        val v = xs.getLong(j)
+        if (u < v) { out(k) = InternalRow(u, v); k += 1 }
         j += 1
       }
       i += 1
     }
-    // ltOnly over a set fills exactly n(n-1)/2 slots; a duplicated
-    // value (caller passed a non-set) would leave a hole — surface
-    // it rather than emit nulls
+    // a set fills exactly n(n-1)/2 slots; a duplicated value (caller
+    // passed a non-set) would leave a hole — surface it rather than
+    // emit nulls
     if (k != out.length) throw new IllegalStateException(
-      s"$prettyName(ltOnly) expects distinct elements; " +
+      s"$prettyName expects distinct elements; " +
         s"got ${out.length - k} equal pairs")
     new GenericArrayData(out)
   }
@@ -69,6 +66,4 @@ case class OrderedPairs(child: Expression, ltOnly: Boolean = false)
 object OrderedPairs {
   def apply(c: Column): Column =
     ColumnBridge.column(OrderedPairs(ColumnBridge.expression(c)))
-  def apply(c: Column, ltOnly: Boolean): Column =
-    ColumnBridge.column(OrderedPairs(ColumnBridge.expression(c), ltOnly))
 }

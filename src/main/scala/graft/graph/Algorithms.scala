@@ -419,13 +419,15 @@ object Algorithms {
     }(identity)
 
   /** The loop invariant of [[damped]]: every node with its in-edges
-    * (none: one null row) and each edge's source out-mass `od`. */
+    * (none: one null row) and each edge's source out-mass `od`. The
+    * out-mass is a window over the edges' `src`, so `edges` is read
+    * once: an uncut edge derivation runs once in the invariant's cut,
+    * not once per join side. */
   private[graft] def inEdges(nodes: DataFrame, edges: DataFrame,
       outMass: Column): DataFrame =
     nodes.select(col("node"))
-      .join(edges, col("dst") === col("node"), "left")
-      .join(edges.groupBy(col("src").as("od_node")).agg(outMass.as("od")),
-        col("od_node") === col("src"), "left")
+      .join(edges.withColumn("od", outMass.over(Window.partitionBy("src"))),
+        col("dst") === col("node"), "left")
 
   /** One [[damped]] superstep over the cut [[inEdges]]: one left join
     * with the ranks, one group-by. With `in` and the ranks partitioned
@@ -468,13 +470,10 @@ object Algorithms {
     * 5 iterations, 6dp. */
   def q109PersonalizedPagerank(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val out = personalizedPagerank(TradeGraph.nodes(t).select("node"), e,
+    personalizedPagerank(TradeGraph.nodes(t).select("node"), TradeGraph.edges(t),
         pmod(col("node"), lit(5L)) === lit(0L), 5)
       .select(col("node"), round(col("r"), 6).as("ppr"))
       .orderBy("node")
-    Checkpoints.release(e)
-    out
   }
 
   /** PageRank to a TOLERANCE instead of a fixed budget — the scale
@@ -503,7 +502,7 @@ object Algorithms {
 
   def q14Pagerank(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    pagerank(TradeGraph.nodes(t).select("node"), checkpointedEdges(t), 5)
+    pagerank(TradeGraph.nodes(t).select("node"), TradeGraph.edges(t), 5)
       .select(col("node"), round(col("r"), 6).as("pagerank"))
       .orderBy("node")
   }
@@ -512,7 +511,7 @@ object Algorithms {
   /** Connected components on the undirected trade graph: min-id
     * propagation to fixpoint (≤ diameter iterations; the deterministic
     * oracle-able community detector — GraphX LabelPropagation is the
-    * nondeterministic scale alternative, see GraphxBridge). */
+    * nondeterministic RDD alternative). */
   def connectedComponents(nodes: DataFrame, undirected: DataFrame): DataFrame =
     minLabels(nodes, undirected, Int.MaxValue, "connectedComponents")
       .out.select("node", "component")
@@ -621,9 +620,9 @@ object Algorithms {
     * State per round is O(V) labels — the closure's O(V²) pair set
     * never exists. Rounds = root "generations": worst case a chain of
     * SCCs unlocked one per round (ascending-id path graph), typically
-    * a handful; for adversarial chains GraphxBridge.scc is the
-    * pointer-jumping alternative (agreement spec in
-    * GraphxBridgeSpec). */
+    * a handful; for adversarial chains GraphX's
+    * stronglyConnectedComponents is the RDD alternative (AlgorithmsSpec
+    * checks the two agree on the trade graph). */
   def sccLabels(nodes: DataFrame, edges: DataFrame): DataFrame =
     Superstep.loop(Int.MaxValue) { r =>
       val remaining = r.cut(nodes.select("node"))
@@ -674,23 +673,6 @@ object Algorithms {
       val n = Checkpoints.rowCount(next)
       if (n > 0) ((next, mark.add(next, r)), n) else ((frontier, mark), 0L)
     }(_._2.view).out
-
-  /** The closure-based formulation scc(v) = min{u : v→*u and u→*v} —
-    * materializes the O(V²) reachability pair set, so it is only the
-    * AGREEMENT REFERENCE for [[sccLabels]] in the spec, not a query
-    * path. */
-  private[graft] def sccViaClosure(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val e = edges.select("src", "dst").distinct().pipe(Checkpoints.cut)
-    val reach = transitiveClosure(e) // eager fixpoint
-    Checkpoints.release(e)
-    val mutual = reach.as("f")
-      .join(reach.as("b"),
-        col("f.src") === col("b.dst") && col("f.dst") === col("b.src"))
-      .select(col("f.src").as("node"), col("f.dst").as("peer"))
-    val withSelf = nodes.select(col("node"), col("node").as("peer"))
-      .union(mutual)
-    withSelf.groupBy("node").agg(min(col("peer")).as("scc"))
-  }
 
   def q16Scc(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
@@ -1015,8 +997,8 @@ object Algorithms {
           .select(col("ca").as("comp"), col("a"), col("b"), col("w"))
           .union(labeled
             .select(col("cb").as("comp"), col("a"), col("b"), col("w")))
-        // per-component lightest edge as one partial agg (r14, guide
-        // §2.4): min(struct(w, a, b)) is the row_number()-over-
+        // per-component lightest edge as one partial agg:
+        // min(struct(w, a, b)) is the row_number()-over-
         // (w ASC, a ASC, b ASC) winner without the window sort
         val sel = r.cut(sides.groupBy("comp")
           .agg(min(struct(col("w"), col("a"), col("b"))).as("m"))

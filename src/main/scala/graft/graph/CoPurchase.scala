@@ -34,8 +34,7 @@ object CoPurchase {
       .select(col("l_orderkey").as("o"), col("l_partkey").cast("long").as("p"))
     partCap.fold(op)(cap => op.filter(col("p") < cap))
       .groupBy("o").agg(collect_set(col("p")).as("ps"))
-      .select(explode(graft.functions.OrderedPairs(col("ps"), ltOnly = true))
-        .as("pr"))
+      .select(explode(graft.functions.OrderedPairs(col("ps"))).as("pr"))
       .select(col("pr.u").as("src"), col("pr.v").as("dst"))
   }
 
@@ -86,6 +85,16 @@ object CoPurchase {
       .orderBy("degree")
   }
 
+  /** (src, dst, m): the order-local pair support — one row per
+    * co-purchased pair src < dst, `m` = the number of DISTINCT orders
+    * containing both parts. One partial-agg count per pair. The ONE
+    * basket-pair relation: the repeat-co-purchase graph (q104) and
+    * the prod2vec trainer and audit (q228/q229) all read it. */
+  private[graft] def pairSupport(t: Tables): DataFrame =
+    basketPairs(t, None)
+      .groupBy("src", "dst")
+      .agg(count(lit(1)).as("m"))
+
   // ---------------------------------------------------------------- q104
   /** Repeat-co-purchase edges: pairs co-purchased in at least
     * `minSupport` DISTINCT orders. The support threshold is both the
@@ -94,11 +103,9 @@ object CoPurchase {
     * tractability knob for super-linear algorithms: the full pair
     * graph densifies with scale (1.2M edges at sf0.1) while the
     * repeat graph tracks true association (≈3.5k edges at every SF
-    * here). One partial-agg count per pair, then the filter. */
+    * here). */
   def repeatEdges(t: Tables, minSupport: Long): DataFrame =
-    basketPairs(t, None)
-      .groupBy("src", "dst")
-      .agg(count(lit(1)).as("m"))
+    pairSupport(t)
       .filter(col("m") >= minSupport)
       .select("src", "dst")
 

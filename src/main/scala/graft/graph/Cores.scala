@@ -20,7 +20,7 @@ import graft.{Checkpoints, Superstep, Tables}
   *    neighbor-label agg + one argmax per iteration) with a total
   *    (count desc, label asc) tie order, so the result is
   *    deterministic and oracle-able — unlike classic LPA's random
-  *    tie-breaking (GraphxBridge.labelPropagation remains the RDD
+  *    tie-breaking (GraphX's LabelPropagation remains the RDD
   *    alternative);
   *  - node similarity joins out-neighbor sets ON THE SHARED NEIGHBOR
   *    (never all pairs): cost is Σ_dst indeg(dst)², the standard
@@ -339,13 +339,12 @@ object Cores {
     * terminates in ≤ |V| waves. The wave count is the DEPTH of the
     * priority DAG — O(log n / log log n) expected on bounded-degree
     * graphs, but ~max-clique-deep on dense ones (the co-purchase
-    * graph's order-cliques measure 104 waves for 200 nodes,
-    * spec-pinned): a dense graph should run one q131 MIS per color
-    * class instead, trading waves for per-color sweeps.
+    * graph's order-cliques measure 104 waves for 200 nodes).
     *
     * Per wave: one anti-join (readiness), one neighbor-color agg, an
     * in-row mex (`array_except`/`array_min` over 0..|used|) — O(E)
-    * work, O(V) state, scalar loop condition. */
+    * work, O(V) state, scalar loop condition. Returns (node, color,
+    * wave) sorted by node. */
   private[graft] def greedyColoring(
       nodes: DataFrame, undirected: DataFrame): DataFrame = {
     val und = undirected.filter(col("src") =!= col("dst"))
@@ -358,32 +357,17 @@ object Cores {
       .filter(col("pd") < col("ps"))
       .select("src", "dst")
       .pipe(Checkpoints.cut)
-    val settled = colorWaves(pri.select("node")) { (live, _) =>
+    val out = Superstep.loop(Int.MaxValue) { r =>
+      ((r.cut(pri.select("node")), Superstep.UnionView.empty), Superstep.Unmeasured)
+    } { case ((live, settled), r) =>
       val blocked = hp
         .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select(col("src").as("node")).distinct()
-      (live.join(blocked, Seq("node"), "left_anti"), hp)
-    }
-    Checkpoints.release(pri, hp)
-    settled
-  }
-
-  /** The wave loop both colorings share: each wave `pick(live, round)`
-    * chooses the nodes to color next plus the (src, dst) relation whose
-    * dst side holds each picked src's already-colored neighbors; every
-    * picked node takes the mex of those neighbors' colors and leaves
-    * the live set. Runs until nothing is live; returns (node, color,
-    * wave) sorted by node. */
-  private def colorWaves(seed: DataFrame)(
-      pick: (DataFrame, Superstep.Round) => (DataFrame, DataFrame)): DataFrame =
-    Superstep.loop(Int.MaxValue) { r =>
-      ((r.cut(seed), Superstep.UnionView.empty), Superstep.Unmeasured)
-    } { case ((live, settled), r) =>
-      val (ready, nbrs) = pick(live, r)
+      val ready = live.join(blocked, Seq("node"), "left_anti")
       val noColors = array().cast("array<long>")
       val withUsed =
         if (settled.isEmpty) ready.withColumn("cs", noColors)
-        else ready.join(nbrs
+        else ready.join(hp
             .join(ready.select(col("node").as("src")), Seq("src"), "left_semi")
             .join(settled.view.select(col("node").as("dst"), col("color")), Seq("dst"))
             .groupBy(col("src").as("node"))
@@ -397,47 +381,8 @@ object Cores {
       val nextLive = r.cut(live.join(colored.select("node"), Seq("node"), "left_anti"))
       ((nextLive, settled.add(colored, r)), Checkpoints.rowCount(nextLive))
     }(_._2.view).out.orderBy("node")
-
-  /** Dense-graph coloring fallback — one q131 MIS per color sweep
-    * (the trade documented on [[greedyColoring]]: JP's wave depth is
-    * the priority-DAG depth, ~max-clique-deep on dense graphs, while
-    * MIS sweeps are bounded by the color count with O(log n) rounds
-    * each). Sweep t takes a maximal independent set S of the live
-    * induced subgraph and colors every v ∈ S with the mex of v's
-    * already-settled neighbors' colors — S is independent, so
-    * per-node mex never conflicts inside the sweep, and maximality
-    * guarantees every live node has a settled neighbor next sweep
-    * (progress). Deterministic: MIS uses the same fixed md5
-    * priorities as q131. Output schema matches [[greedyColoring]]
-    * ((node, color, wave)); the ASSIGNMENT may differ from sequential
-    * greedy — properness and determinism are the contract here, and
-    * the spec proves both plus the A/B sweep counts. */
-  private[graft] def misColoring(
-      nodes: DataFrame, undirected: DataFrame): DataFrame = {
-    val und = undirected.filter(col("src") =!= col("dst"))
-      .pipe(Checkpoints.cut)
-    val settled = colorWaves(nodes.select("node")) { (live, r) =>
-      val liveEdges = r.cut(und
-        .join(live.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(live.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-      (maximalIndependentSet(live, liveEdges).filter(col("in_mis")).select("node"), und)
-    }
-    Checkpoints.release(und)
-    settled
-  }
-
-  /** Density-routed coloring: average directed degree ≤
-    * `denseAvgDegree` → Jones–Plassmann waves (shallow on
-    * bounded-degree graphs, exact sequential-greedy agreement);
-    * above it → [[misColoring]] (wave count bounded by colors, not
-    * DAG depth). Two scalar counts decide — the measure-then-choose
-    * discipline (q102/E6's) applied to iteration depth. */
-  def coloringAuto(nodes: DataFrame, undirected: DataFrame,
-      denseAvgDegree: Double = 16.0): DataFrame = {
-    val v = nodes.count().max(1L)
-    val e = undirected.count()
-    if (e.toDouble / v > denseAvgDegree) misColoring(nodes, undirected)
-    else greedyColoring(nodes, undirected)
+    Checkpoints.release(pri, hp)
+    out
   }
 
   def q136Coloring(spark: SparkSession, dir: String): DataFrame = {

@@ -74,8 +74,8 @@ object StarContraction {
     * their (already-known) counts: equal counts plus |a ∪ b| == |a|
     * ⟺ equal sets. One distinct-union job over two cached
     * (checkpointed) inputs, replacing the previous two LIMIT-1
-    * anti-join probes (guide §2.4: every convergence probe here is a
-    * full driver round trip, and the iterative loops' job count — not
+    * anti-join probes (every convergence probe here is a full driver
+    * round trip, and the iterative loops' job count — not
     * their data — is the suite wall; still an EXACT set comparison,
     * no checksum shortcut that could mask a non-converged edge set). */
   private def sameEdgeSet(a: DataFrame, na: Long, b: DataFrame,
@@ -126,11 +126,11 @@ object StarContraction {
     * is exactly what a bounded probe measures.
     *
     * Routing: run min-label for up to `probeRounds` rounds (the
-    * bounded-round diameter sample — coloringAuto's measured-probe
-    * pattern). If it converges, the graph was shallow and the answer
-    * is already in hand: zero wasted work. If not, the diameter
-    * exceeds the probe; CONTRACT the graph by the probe labels (each
-    * label class is a verified connected set, so the quotient
+    * bounded-round diameter sample, measure then choose). If it
+    * converges, the graph was shallow and the answer is already in
+    * hand: zero wasted work. If not, the diameter exceeds the probe;
+    * CONTRACT the graph by the probe labels (each label class is a
+    * verified connected set, so the quotient
     * preserves components and is smaller by every ≤probeRounds-radius
     * neighborhood) and finish with star contraction on the quotient —
     * the probe work is banked, not thrown away. Labels compose as
@@ -217,13 +217,13 @@ object StarContraction {
   val oracleSql: Map[String, String] = Map(
     // MATERIALIZED: without the hint DuckDB may inline `und` (and its
     // whole pair-join ancestry) into every iteration of the recursion
-    // — the q231/q232 oracle pathology (ADVICE/VERDICT r12 trail).
+    // — the q231/q232 oracle pathology.
     //
     // The recursion is FIXED-ROUND MIN-LABEL PROPAGATION (full state
     // per round, aggregated in the recursive term), NOT a node×peer
     // transitive closure: reach pairs are quadratic in component size
-    // and cost 57.5 s of the 109 s sf0.01 oracle pass (VERDICT r13
-    // "What's wrong" #1 — the r11/r12 silent-empty failure class);
+    // and cost 57.5 s of the 109 s sf0.01 oracle pass (an oracle pass
+    // over its time budget yields no correctness result at all);
     // per-round state is V rows × [[CcOracleRounds]] rounds, measured
     // 67.9 s → 0.29 s at sf0.01 with identical output at all 3 SFs.
     "q233_cc_star_contraction" ->

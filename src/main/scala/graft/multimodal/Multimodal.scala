@@ -101,15 +101,6 @@ object Multimodal {
     }
   }
 
-  /** Attach the binary payload + metadata columns to a text corpus
-    * (documents stand in for raw media blobs in the test data). */
-  def attachBinary(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      col("text").cast("binary").as("data"),
-      col("source").as("format"),
-      octet_length(col("text")).cast("long").as("n_bytes"))
-
   /** Decode/resize/frame-sample through a partition-batched codec.
     * `sampleEvery` keeps every k-th frame (frame sampling);
     * `targetPixels` is the post-resize frame size; `mkCodec` is a

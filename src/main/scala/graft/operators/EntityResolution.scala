@@ -132,11 +132,11 @@ object EntityResolution {
 
   /** Survivorship over the full record set: singletons label
     * themselves; one max(struct) per entity — no window over the
-    * registry. `registryBound` (incremental form) adds the entity's
+    * registry. `batchBound` (incremental form) adds the entity's
     * fate: every member below the bound → `unchanged`, every member
     * at-or-above → `new`, mixed → `grew`. */
   private def survive(parts: DataFrame, comp: DataFrame,
-      registryBound: Option[Long]): DataFrame = {
+      batchBound: Option[Long]): DataFrame = {
     val labeled = parts.select(col("p_partkey").as("id"), col("p_name"),
         col("p_retailprice"))
       .join(comp.select(col("node").as("id"), col("component")),
@@ -151,7 +151,7 @@ object EntityResolution {
         max(struct(col("p_retailprice").as("v"), (-col("id")).as("ni"),
           col("p_name").as("nm"))).as("m"),
         min(col("id")).as("mn"), max(col("id")).as("mx"))
-    val out = registryBound match {
+    val out = batchBound match {
       case Some(rb) => base.select(col("entity"), col("n_records"),
         when(col("mx") < rb, "unchanged")
           .when(col("mn") >= rb, "new")
@@ -166,27 +166,17 @@ object EntityResolution {
   }
 
   /** The candidate stage over a blocking-key relation: all blocked
-    * (a < b) pairs, or — with `batchBound` — only pairs TOUCHING the
-    * batch (one side's id ≥ bound). ONE definition shared by both
-    * resolvers and the scale diagnostics (tools/ScalingSweep counts
-    * these — the SetSimJoin.candidatePairs convention). */
-  private[graft] def candidates(keys: DataFrame,
-      batchBound: Option[Long]): DataFrame = batchBound match {
-    case None =>
-      keys.as("x").join(keys.as("y"),
-          col("x.k") === col("y.k") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
-    case Some(rb) =>
-      keys.filter(col("id") >= rb).as("x")
-        .join(keys.as("y"),
-          col("x.k") === col("y.k") && col("x.id") =!= col("y.id"))
-        .select(least(col("x.id"), col("y.id")).as("a"),
-          greatest(col("x.id"), col("y.id")).as("b")).distinct()
-  }
+    * (a < b) pairs. ONE definition shared by every resolver and the
+    * scale diagnostics (tools/ScalingSweep counts these — the
+    * SetSimJoin.candidatePairs convention). */
+  private[graft] def candidates(keys: DataFrame): DataFrame =
+    keys.as("x").join(keys.as("y"),
+        col("x.k") === col("y.k") && col("x.id") < col("y.id"))
+      .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
 
   /** SURVIVORSHIP GUARD — within-component re-verification against
-    * cluster centers (VERDICT r10 #3: the production escape hatch for
-    * single-link transitive chaining, where A≈B, B≈C merges A with C
+    * cluster centers (the escape hatch for single-link transitive
+    * chaining, where A≈B, B≈C merges A with C
     * it never matched — measured here as one 19,248-record component
     * at 10×). Center/leader clustering with min-id priority (the
     * star-clustering refinement family): the fixpoint is the
@@ -361,7 +351,7 @@ object EntityResolution {
   private[graft] def resolveEntitiesGuarded(parts: DataFrame,
       tau: Double, hashPriority: Boolean = false): DataFrame = {
     val sigs = sigRelation(parts)
-    val cand = candidates(blockingKeys(sigs), None)
+    val cand = candidates(blockingKeys(sigs))
     // cut: the match relation feeds every refinement round
     val pairs = graft.Checkpoints.cut(verifiedPairs(sigs, cand, tau))
     val refined = refineByCenter(pairs, hashPriority).out
@@ -370,55 +360,32 @@ object EntityResolution {
   }
 
   /** Candidate pairs from raw records (diagnostics entry point). */
-  private[graft] def candidatePairs(parts: DataFrame,
-      batchBound: Option[Long] = None): DataFrame =
-    candidates(blockingKeys(sigRelation(parts)), batchBound)
+  private[graft] def candidatePairs(parts: DataFrame): DataFrame =
+    candidates(blockingKeys(sigRelation(parts)))
 
   /** Core over any (p_partkey, p_name, p_brand, p_type, p_size,
     * p_retailprice) relation. Output: one row per resolved entity. */
   private[graft] def resolveEntities(parts: DataFrame, tau: Double): DataFrame = {
     val sigs = sigRelation(parts)
-    val cand = candidates(blockingKeys(sigs), None)
+    val cand = candidates(blockingKeys(sigs))
     survive(parts, matchComponents(verifiedPairs(sigs, cand, tau)), None)
   }
 
-  /** INCREMENTAL entity resolution — the production daily shape
-    * (q87's batch-vs-corpus pattern for structured records): resolve
-    * a new BATCH (id ≥ registryBound) against the standing resolved
-    * REGISTRY (id < registryBound). Candidate generation is
-    * restricted to pairs TOUCHING the batch — the batch side's
-    * blocking keys join the full key relation, so the cost per
-    * increment is O(batch keys × blocked collisions), independent of
-    * registry-internal pair volume. The registry's own connectivity
-    * enters as its stored (record → entity) MEMBERSHIP edges — a
-    * connectivity-preserving contraction of the registry's match
-    * graph (each member is linked to its min-id label), which is what
-    * a production registry persists; registry×registry pairs are
-    * never regenerated. Survivorship merges batch records into
-    * existing entities (a batch record bridging two registry entities
-    * merges them, labeled by the global min member — the single-link
-    * transitive semantic). Equality with the GLOBAL resolution over
-    * registry ∪ batch is exact — global match pairs = registry pairs
-    * ∪ batch-touching pairs, and the contraction preserves components
-    * — which is why the q203 oracle can be the global recursive-CTE
-    * form (the spec also pins it against [[resolveEntities]]).
-    *
-    * THE SUITE ENTRY RUNS ONE CC (r15; VERDICT r14 #3): the harness
-    * has no persisted store, so the registry membership would have to
-    * be RECOMPUTED from the registry slice — a second candidate pass,
-    * a second verify pass and a second iterative CC loop whose only
-    * product is an input to the final CC, on a suite where the
-    * iterative loops' JOB COUNT (not their data) is the wall
-    * (121 stages at ~40 ms each, r14 telemetry). Global match pairs =
-    * registry pairs ∪ batch-touching pairs and the membership stars
-    * are a connectivity-preserving contraction, so CC once over the
-    * shared verified pair relation gives the identical output —
-    * including the status strata, which derive from each GLOBAL
-    * entity's member ids vs the bound, never from the membership
-    * table. The production daily shape — yesterday's PERSISTED
-    * membership + batch-touching candidates only, no registry
-    * recompute at all — is [[resolveIncrementalFromMembership]],
-    * spec-pinned equal to this global form.
+  /** INCREMENTAL entity resolution (q87's batch-vs-corpus pattern
+    * for structured records): resolve a new BATCH (id ≥
+    * batchBound) against the REGISTRY (id < batchBound). The
+    * harness has no persisted registry, so ONE CC runs over the
+    * verified pairs of registry ∪ batch — global match pairs =
+    * registry pairs ∪ batch-touching pairs, so this is the identical
+    * output to resolving against a stored (record → entity)
+    * membership, whose star edges are a connectivity-preserving
+    * contraction of the registry's match graph. Survivorship merges
+    * batch records into existing entities (a batch record bridging
+    * two registry entities merges them, labeled by the global min
+    * member — the single-link transitive semantic), and each entity's
+    * status derives from its member ids vs the bound. The q203 oracle
+    * is therefore the global recursive-CTE form (the spec also pins
+    * it against [[resolveEntities]]).
     *
     * Chaining note: the incremental form inherits single-link merge
     * semantics (a batch bridge merges standing entities). On a dirty
@@ -426,34 +393,11 @@ object EntityResolution {
     * the GUARDED global form ([[resolveEntitiesGuarded]], q231) over
     * registry ∪ batch instead — BENCH_SCALING Part 14 shows why. */
   private[graft] def resolveIncremental(parts: DataFrame,
-      registryBound: Long, tau: Double): DataFrame = {
+      batchBound: Long, tau: Double): DataFrame = {
     val sigs = sigRelation(parts)
-    val cand = candidates(blockingKeys(sigs), None)
+    val cand = candidates(blockingKeys(sigs))
     survive(parts, matchComponents(verifiedPairs(sigs, cand, tau)),
-      Some(registryBound))
-  }
-
-  /** The PRODUCTION incremental path: resolve a batch (id ≥
-    * `registryBound`) against a standing registry whose resolved
-    * (record → entity) `membership` table is fed in — candidate
-    * generation touches only batch-side blocking keys (cost per
-    * increment = O(batch keys × blocked collisions), independent of
-    * registry-internal pair volume), registry×registry pairs are
-    * never regenerated, and ONE CC runs over batch-touching verified
-    * pairs ∪ membership star edges (the contraction preserves
-    * components, so labels equal the global resolution's — the
-    * previous formulation ran a second CC just to rebuild the
-    * membership the store already holds). */
-  private[graft] def resolveIncrementalFromMembership(parts: DataFrame,
-      membership: DataFrame, registryBound: Long, tau: Double): DataFrame = {
-    val sigs = sigRelation(parts)
-    val cand = candidates(blockingKeys(sigs), Some(registryBound))
-    val newPairs = verifiedPairs(sigs, cand, tau)
-    val memEdges = membership
-      .select(col("node").as("a"), col("component").as("b"))
-      .filter(col("a") =!= col("b"))
-    survive(parts, matchComponents(newPairs.union(memEdges)),
-      Some(registryBound))
+      Some(batchBound))
   }
 
   def q178EntityResolution(spark: SparkSession, dir: String): DataFrame =
@@ -647,9 +591,8 @@ object EntityResolution {
     * the recursion, re-running the candidate join per step. Measured
     * 356 s → seconds at sf0.01 (q232's hash order was 773 s): these
     * two oracles alone were ~90% of the full 243-oracle DuckDB pass,
-    * the prime suspect for the driver's empty CORRECTNESS artifacts
-    * (both empty rounds are exactly the rounds these oracles
-    * shipped — VERDICT r12 "What's wrong" #1). */
+    * and an oracle pass over its time budget yields no correctness
+    * result at all. */
   private def guardedOracle(hashOrder: Boolean): String = {
     val mdPrio = graft.text.TextOps.hexToLongSql(
       "md5(CAST(n AS VARCHAR))", 1, 15)

@@ -27,7 +27,7 @@ import graft.{Checkpoints, Tables}
   * what keeps candidate volume sane on small hot vocabularies; the
   * verify join ships only candidate pairs' tokens (bounded per item).
   *
-  * Candidate keys are HASHED by default: the exploding (key, bi, bj) relation —
+  * Candidate keys are HASHED: the exploding (key, bi, bj) relation —
   * the one stage whose row count is candidates-scale — carries
   * xxhash64(w1, w2) (resp. xxhash64(w)) instead of the token
   * strings, one fixed 8-byte column in place of two variable-width
@@ -36,10 +36,8 @@ import graft.{Checkpoints, Tables}
   * always still meet (no candidate is ever lost), and a 64-bit
   * collision merely MERGES two key groups — extra candidate pairs
   * that the exact in-row jaccard verification rejects. Output is
-  * therefore unconditionally bit-equal to the string-key form
-  * (spec-pinned on real data), not equal-with-probability; the
-  * string form stays reachable via `setSimJoin(items, θ, hashKeys =
-  * false)` for the equality spec itself.
+  * therefore unconditionally bit-equal to a string-key form, not
+  * equal-with-probability.
   * The per-item token-array relation stays an UN-materialized
   * projection of the item scan so its statistics survive — see the
   * note in [[setSimJoin]] on why checkpointing it would force the
@@ -50,24 +48,24 @@ object SetSimJoin {
 
   private val B = 256 // block size: per-key work ≤ ~B² pairs
 
-  /** Skew-capped candidate enumeration: self-join `keyed` on
-    * `keyCols`, emitting normalized (a, b) pairs that survive the
+  /** Skew-capped candidate enumeration: self-join `keyed` on its
+    * hashed key `hk`, emitting normalized (a, b) pairs that survive the
     * PPJoin position filter.
     *
     * GENERATION would be skew-bound if a hot key formed one giant
     * group (pair enumeration is quadratic in group size and a plain
     * join processes a key in ONE task — driver-measured 267 s at
-    * sf0.1 in the single-token round-5 shape). Two-level BLOCK
+    * sf0.1 with unblocked single-token keys). Two-level BLOCK
     * DECOMPOSITION caps it: each key group is hash-split into
     * nbk = ⌈group/B⌉ blocks and the join key becomes
-    * (keyCols…, bi, bj) — one key PER BLOCK PAIR, so a group of g
+    * (hk, bi, bj) — one key PER BLOCK PAIR, so a group of g
     * rows spreads over ~(g/B)² independent keys and per-key work is
     * bounded by ~B² pairs regardless of skew. Each row replicates
     * nbk+1 times total — O(pairs/B), a vanishing fraction of the
     * pair stream. This is the 100 TB-safe shape.
     *
     * Pair coverage, exactly once per shared key: an unordered pair
-    * with blocks (p, q), p ≤ q, meets only at (key…, p, q) — from
+    * with blocks (p, q), p ≤ q, meets only at (hk, p, q) — from
     * the X side the lower-block row, from Y the upper-block row
     * (disjoint row sets when p < q; for p = q the x.id < y.id guard
     * keeps one of the two orderings).
@@ -91,27 +89,24 @@ object SetSimJoin {
     * Non-minimal duplicate generations may drop — pruning dup verify
     * work too. The filter is SYMMETRIC under (rx,na)↔(ry,nb), so it
     * is valid before the least/greatest id normalization. */
-  private def blockedCandidates(keyed: DataFrame, keyCols: Seq[String],
-      kTokens: Int, theta: Double): DataFrame = {
+  private def blockedCandidates(keyed: DataFrame, kTokens: Int,
+      theta: Double): DataFrame = {
     val nPart = keyed.sparkSession.sessionState.conf.numShufflePartitions
     val alpha = ceil(lit(theta / (1 + theta)) * (col("na") + col("nb")))
-    val ks = keyCols.map(col)
     val blocked = keyed
-      .join(keyed.groupBy(ks: _*).agg(count(lit(1)).as("pcf")), keyCols)
+      .join(keyed.groupBy("hk").agg(count(lit(1)).as("pcf")), Seq("hk"))
       .withColumn("nbk", ceil(col("pcf") / lit(B)).cast("int"))
       .withColumn("blk", pmod(xxhash64(col("id")), col("nbk")).cast("int"))
-    val base = Seq(col("id"), col("r"), col("nn")) ++ ks
-    val xs = blocked.select(base :+ col("blk").as("bi") :+
-        explode(sequence(col("blk"), col("nbk") - 1)).as("bj"): _*)
-      .repartition(nPart, ks :+ col("bi") :+ col("bj"): _*)
-    val ys = blocked.select(base :+
-        explode(sequence(lit(0), col("blk"))).as("bi") :+
-        col("blk").as("bj"): _*)
-      .repartition(nPart, ks :+ col("bi") :+ col("bj"): _*)
-    val keyEq = keyCols.map(k => col(s"x.$k") === col(s"y.$k"))
-      .reduce(_ && _)
+    val xs = blocked.select(col("id"), col("r"), col("nn"), col("hk"),
+        col("blk").as("bi"),
+        explode(sequence(col("blk"), col("nbk") - 1)).as("bj"))
+      .repartition(nPart, col("hk"), col("bi"), col("bj"))
+    val ys = blocked.select(col("id"), col("r"), col("nn"), col("hk"),
+        explode(sequence(lit(0), col("blk"))).as("bi"),
+        col("blk").as("bj"))
+      .repartition(nPart, col("hk"), col("bi"), col("bj"))
     xs.as("x").join(ys.as("y"),
-        keyEq && col("x.bi") === col("y.bi") &&
+        col("x.hk") === col("y.hk") && col("x.bi") === col("y.bi") &&
           col("x.bj") === col("y.bj") &&
           (col("x.bi") < col("x.bj") || col("x.id") < col("y.id")))
       .select(least(col("x.id"), col("y.id")).as("a"),
@@ -127,7 +122,7 @@ object SetSimJoin {
     * jaccard ≥ theta, exact, any theta in (0, 1].
     *
     * For theta > 0.5, CANDIDATE GENERATION joins on PAIRS of prefix
-    * tokens, not single tokens. Rationale (the round-6 lesson): on a
+    * tokens, not single tokens. Rationale: on a
     * small hot vocabulary (TPC-H part names: ~92 colors) the
     * single-token prefix key enumerates ~10⁷–10⁸ candidate pairs that
     * verification then rejects — the pair VOLUME, not its layout, is
@@ -166,17 +161,7 @@ object SetSimJoin {
     * matches — shuffles |candidates|·|shared tokens| rows; with
     * millions of candidates that re-shuffle dwarfs the verify compute,
     * while the in-row form adds ZERO verify shuffle. */
-  def setSimJoin(items: DataFrame, theta: Double): DataFrame =
-    setSimJoin(items, theta, hashKeys = true)
-
-  /** As [[setSimJoin]], with the candidate-key representation
-    * explicit: `hashKeys = true` (the default entry point) ships
-    * 8-byte xxhash64 keys through the candidate shuffle; `false`
-    * ships the token strings — same output bit-for-bit (see the
-    * object scaladoc for why collisions cannot change the result),
-    * kept for the equality spec and for plan-debugging with
-    * readable keys. */
-  def setSimJoin(items: DataFrame, theta: Double, hashKeys: Boolean): DataFrame = {
+  def setSimJoin(items: DataFrame, theta: Double): DataFrame = {
     require(theta > 0 && theta <= 1, s"theta must be in (0, 1], got $theta")
     // deliberately NOT checkpointed: the relation is a cheap projection
     // of the item scan, and cutting it would erase the source stats —
@@ -185,7 +170,7 @@ object SetSimJoin {
     // candidate set. With stats intact the plan adapts: broadcast at
     // dimension-sized |items|, shuffle join at corpus scale.
     val lists = tokenLists(items)
-    val cand = candidatePairs(lists, theta, hashKeys)
+    val cand = candidatePairs(lists, theta)
     val jac: Column =
       col("c").cast("double") / (col("na") + col("nb") - col("c"))
     cand
@@ -208,8 +193,7 @@ object SetSimJoin {
     * prefix/position filters, pre-verification) — extracted so
     * diagnostics (tools/ScalingSweep) can COUNT candidates at
     * different scales without duplicating the generation logic. */
-  private[graft] def candidatePairs(lists: DataFrame, theta: Double,
-      hashKeys: Boolean = true): DataFrame = {
+  private[graft] def candidatePairs(lists: DataFrame, theta: Double): DataFrame = {
     val tok = lists.select(col("id"), explode(col("ws")).as("w"))
     val sz = lists.select(col("id"), size(col("ws")).cast("long").as("nn"))
     val f = tok.groupBy("w").agg(count(lit(1)).as("cf"))
@@ -250,18 +234,15 @@ object SetSimJoin {
             .as("k"))
           .select(col("id"), col("nn"),
             col("k.w1").as("w1"), col("k.w2").as("w2"), col("k.r2").as("r"))
-        // hashed form: collapse the ordered pair to ONE 8-byte key
-        // BEFORE the cut, so the checkpointed relation and everything
-        // downstream of it (pcf join, repartitions, self-join) never
-        // carries the strings. xxhash64 over both columns is
-        // order-sensitive, matching the ordered (w1, w2) emission.
+        // collapse the ordered pair to ONE 8-byte key BEFORE the cut,
+        // so the checkpointed relation and everything downstream of it
+        // (pcf join, repartitions, self-join) never carries the
+        // strings. xxhash64 over both columns is order-sensitive,
+        // matching the ordered (w1, w2) emission.
         val pairKeys = Checkpoints.cut(
-          if (hashKeys)
-            rawPairKeys.select(col("id"), col("nn"),
-              xxhash64(col("w1"), col("w2")).as("hk"), col("r"))
-          else rawPairKeys)
-        val candMulti = blockedCandidates(pairKeys,
-          if (hashKeys) Seq("hk") else Seq("w1", "w2"), kTokens = 2, theta)
+          rawPairKeys.select(col("id"), col("nn"),
+            xxhash64(col("w1"), col("w2")).as("hk"), col("r")))
+        val candMulti = blockedCandidates(pairKeys, kTokens = 2, theta)
         // θ > 0.5 remainder: two single-token items qualify iff
         // identical. Equality self-join on the nn = 1 subset —
         // ordinary hash join, and the candidates flow through the same
@@ -274,17 +255,13 @@ object SetSimJoin {
         candMulti.unionByName(candSingle)
       } else {
         // single-token keys over the classic prefix; checkpointed for
-        // the same three-consumer reason as the pair path. Hashed form
-        // swaps the token string for xxhash64(w) — same
+        // the same three-consumer reason as the pair path, with the
+        // token string swapped for xxhash64(w) — same
         // collision-is-only-extra-candidates argument as the pair key.
-        val raw = prefix(1)
         val keyed = Checkpoints.cut(
-          if (hashKeys)
-            raw.select(col("id"), xxhash64(col("w")).as("hk"),
-              col("r"), col("nn"))
-          else raw)
-        blockedCandidates(keyed, if (hashKeys) Seq("hk") else Seq("w"),
-          kTokens = 1, theta)
+          prefix(1).select(col("id"), xxhash64(col("w")).as("hk"),
+            col("r"), col("nn")))
+        blockedCandidates(keyed, kTokens = 1, theta)
       }
     cand
   }

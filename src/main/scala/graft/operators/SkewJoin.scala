@@ -9,28 +9,14 @@ import org.apache.spark.sql.functions._
   * (a hub module every repo depends on, a hot user), a plain shuffle
   * join lands that key's rows on ONE reducer. AQE's skew-join split
   * handles sort-merge cases adaptively; this utility is the explicit,
-  * plan-stable alternative: the skewed (fact) side gets a random salt
-  * in [0, buckets), the build side is replicated `buckets` times, and
-  * the join key becomes (key, salt) — spreading each hot key over
+  * plan-stable alternative: a hot key's fact rows get a random salt
+  * in [0, buckets), its build rows are replicated `buckets` times,
+  * and the join key becomes (key, salt) — spreading that key over
   * `buckets` reducers. Results are exactly those of the plain join
   * (spec-asserted); the build side must be the smaller relation since
   * it is replicated.
   */
 object SkewJoin {
-
-  /** Join `fact` ⋈ `build` on `factKey === buildKey`, salted over
-    * `buckets` reducers per key. Inner join semantics. */
-  def salted(fact: DataFrame, build: DataFrame, factKey: String,
-      buildKey: String, buckets: Int): DataFrame = {
-    val saltedFact = fact.withColumn("__salt",
-      (rand(seed = 42) * buckets).cast("int"))
-    val replicatedBuild = build.withColumn("__salt",
-      explode(array((0 until buckets).map(lit): _*)))
-    saltedFact.join(replicatedBuild,
-        col(factKey) === col(buildKey) &&
-          saltedFact("__salt") === replicatedBuild("__salt"))
-      .drop("__salt")
-  }
 
   /** Salted join with PER-KEY bucket counts derived from a measured
     * skew profile (the [[Profile.skewProfile]] / q102 output shape:

@@ -58,7 +58,7 @@ object KMeans {
       grp: Seq[String] = Nil): (DataFrame, DataFrame) = {
     require(iters >= 1, "kmeans needs at least one assignment pass")
     val g = grp.map(col)
-    // argmin as one partial agg (r14, guide §2.4): min(struct(dist,
+    // argmin as one partial agg: min(struct(dist,
     // cell)) is exactly the row_number()-over-(dist ASC, cell ASC)
     // winner (ties fall through to the smaller cell) without the
     // per-iteration window sort; dist ≥ 0, no sign games needed.
@@ -166,24 +166,9 @@ object KMeans {
     * every SF); a real embedding corpus runs 0.9+. */
   val SemDedupTau = 0.42
 
-  def q116SemanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedup(vecs(spark, dir), K)
-
-  /** [[semanticDedup]] with k DERIVED from the corpus: one cell per
-    * ~`targetCell` vectors (never below [[K]]), which is the "k scales
-    * with the corpus" contract from the SemDeDup Scaladoc made
-    * executable — cell populations stay ~targetCell at ANY corpus
-    * size, so the within-cell quadratic stays bounded per cell and
-    * total pair work stays ~n·targetCell (linear in n). The sweep
-    * (BENCH_SCALING.md) measures both this and the fixed-k form. */
-  def semanticDedupAuto(v: DataFrame, targetCell: Int = 500): DataFrame = {
-    val n = v.count()
-    val k = math.max(K.toLong, (n + targetCell - 1) / targetCell).toInt
-    semanticDedup(v, k)
-  }
-
-  private[graft] def semanticDedup(v: DataFrame, k: Int): DataFrame = {
-    val assign = assignments(v, k, Iters)
+  def q116SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
+    val v = vecs(spark, dir)
+    val assign = assignments(v, K, Iters)
     val withE = assign.join(v, "vec_id")
     val pairs = withE.as("x").join(withE.as("y"),
         col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
@@ -201,7 +186,7 @@ object KMeans {
       .union(pairs.select(col("b").as("node"))).distinct()
     val comp = graft.graph.StarContraction.ccAuto(paired,
       pairs.select(col("a").as("u"), col("b").as("v")))
-    val out = v.select(col("vec_id"))
+    v.select(col("vec_id"))
       .join(comp.select(col("node").as("vec_id"), col("component")),
         Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -209,7 +194,6 @@ object KMeans {
       .withColumn("is_rep",
         (col("cluster") === col("vec_id")).cast("long"))
       .orderBy("vec_id")
-    out
   }
 
   // ---------------------------------------------------------------- q121

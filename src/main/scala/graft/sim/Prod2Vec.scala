@@ -48,30 +48,21 @@ object Prod2Vec {
     * every repeat-co-purchase edge's endpoints still embedded at all
     * three SFs, so q229's positive set is untouched. Tied to
     * [[CoPurchase.TriMinSupport]] so the trainer's vocabulary and the
-    * audit's positive edges share one threshold (VERDICT r13 #1). */
+    * audit's positive edges share one threshold. */
   val MinSupport: Long = CoPurchase.TriMinSupport
 
   /** (u, v, n_uv): symmetric basket co-occurrence counts over
     * distinct (order, part) pairs, floored at [[MinSupport]] distinct
-    * orders. The floor runs after the partial-agg count — map-side
-    * combine still sees every pair, but only the repeat tail
-    * survives into the PPMI stage. */
+    * orders — [[CoPurchase.pairSupport]]'s (src < dst, m) rows, kept
+    * at the floor and emitted in both directions (n_uv = n_vu: both
+    * count the orders holding the two parts). The floor runs after
+    * the partial-agg count — map-side combine still sees every pair,
+    * but only the repeat tail survives into the PPMI stage. */
   private[graft] def basketPairs(t: Tables): DataFrame = {
-    // ONE exchange instead of two (r15, guide §2.4): the old form
-    // shuffled lineitem for the distinct (order, part) relation and
-    // then RE-shuffled it for the order-keyed self-join. collect_set
-    // dedups inside a single order-keyed agg (map-side combinable),
-    // and the ordered pairs of each basket expand in-row — the same
-    // Σ basket² rows flow into the (u, v) count either way.
-    val baskets = t.lineitem
-      .select(col("l_orderkey").as("o"),
-        col("l_partkey").cast("long").as("p"))
-      .groupBy("o").agg(collect_set(col("p")).as("ps"))
-    baskets
-      .select(explode(graft.functions.OrderedPairs(col("ps"))).as("pr"))
-      .groupBy(col("pr.u").as("u"), col("pr.v").as("v"))
-      .agg(count(lit(1)).as("n_uv"))
-      .filter(col("n_uv") >= MinSupport)
+    val rep = CoPurchase.pairSupport(t).filter(col("m") >= MinSupport)
+    rep.select(col("src").as("u"), col("dst").as("v"), col("m").as("n_uv"))
+      .union(rep.select(col("dst").as("u"), col("src").as("v"),
+        col("m").as("n_uv")))
   }
 
   /** The trained table (unordered — q228 adds the presentation
@@ -110,8 +101,8 @@ object Prod2Vec {
     * (repeatEdges ∪ its reverse — both are "ordered part pairs
     * sharing ≥ 2 distinct orders"), so the lineitem self-join that
     * used to run twice (trainer input + repeatEdges) runs once,
-    * is cut, and feeds both the PPMI chain and the positives
-    * (VERDICT r13 #1's stage-collapse lever). ppmiRows takes its
+    * is cut, and feeds both the PPMI chain and the positives.
+    * ppmiRows takes its
     * input through `Checkpoints.cutOnce`, so the pre-cut pairs
     * relation is re-read, not materialized a second time. */
   def q229Prod2vecLinkAuc(spark: SparkSession, dir: String): DataFrame = {

@@ -226,24 +226,6 @@ object Similarity {
       .select(col("a"), col("b"), round(col("sim"), 6).as("sim"))
       .orderBy("a", "b")
 
-  /** [[neardupPairs]] with the rows-per-band DERIVED from the corpus:
-    * r = ⌈log₂(n / targetBucket)⌉ keeps the EXPECTED bucket population
-    * ~targetBucket at any corpus size (each extra row halves it), so
-    * bucket-collision pair volume stays ~n·targetBucket/2 — linear in
-    * n — instead of the fixed-r n²/2^r quadratic (measured 100× for
-    * 10× in BENCH_SCALING.md). The default targetBucket reproduces
-    * r = [[NeardupRows]] exactly at the sf0.1 corpus size (2000/250 →
-    * r = 3), so the auto form IS q26 there; recall shifts with r the
-    * standard S-curve way — band count is the recall knob to re-aim
-    * when r rises. */
-  def neardupPairsAuto(v: DataFrame, bands: Int = NeardupBands,
-      targetBucket: Int = 250): DataFrame = {
-    val n = v.count().max(1L)
-    val r = math.max(1,
-      math.ceil(math.log(n.toDouble / targetBucket) / math.log(2.0)).toInt)
-    neardupPairs(v, r, bands)
-  }
-
   // ---------------------------------------------------------------- q41
   /** IVF-style ANN: a coarse quantizer of [[IvfCells]] deterministic
     * direction vectors (md5-derived, so the oracle reproduces them;

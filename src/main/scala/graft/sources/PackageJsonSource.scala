@@ -40,17 +40,12 @@ object PackageJsonSource {
     * these constantly on real package.json dumps —
     * GitHubMinerHelper.ts catch blocks) are captured in a
     * `_corrupt_record` column instead of poisoning the scan.
-    * Returns (good rows with the manifest schema, corrupt raw lines)
-    * so the pipeline can quarantine rejects to a side output. */
-  def readLenient(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val r = readLenientManaged(spark, path)
-    (r.good, r.bad)
-  }
-
-  /** [[readLenient]] plus ownership of the cached scan: callers that
-    * run repeatedly in one session (q159 under Bench) must call
-    * [[LenientRead.release]] once done, or each invocation leaks a
-    * cache entry for the session lifetime. */
+    * Returns the good rows with the manifest schema and the corrupt
+    * raw lines, so the pipeline can quarantine rejects to a side
+    * output. The scan is cached: callers that run repeatedly in one
+    * session (q159 under Bench) must call [[LenientRead.release]]
+    * once done, or each invocation leaks a cache entry for the
+    * session lifetime. */
   final case class LenientRead(good: DataFrame, bad: DataFrame,
       private val raw: DataFrame) {
     def release(): Unit = raw.unpersist()
@@ -115,7 +110,7 @@ object PackageJsonSource {
     // null-name node whose xxhash64 id is NON-null — Spark would count
     // it as a key while a SQL count(DISTINCT name) oracle silently
     // drops it. Exclude null names from the graph universe so both
-    // engines audit the same relation (ADVICE r10).
+    // engines audit the same relation.
     val nodes = e.modules.filter(col("name").isNotNull)
       .select(xxhash64(col("name")).as("node"), col("name"))
     val edges = e.edges
@@ -126,14 +121,6 @@ object PackageJsonSource {
       .dropDuplicates("src", "dst")
     (nodes, edges)
   }
-
-  /** OWNS edges (user → repo), mirror of the reference's
-    * (GitUser)-[:OWNS]->(GitRepo). */
-  def ownsEdges(manifests: DataFrame): DataFrame =
-    manifests.select(col("owner").as("login"), col("name").as("repo"))
-      .filter(col("login").isNotNull)
-      .dropDuplicates("login", "repo")
-      .withColumn("edge_type", lit("OWNS"))
 
   /** Repo-committed JSON-lines manifest fixture mirroring the
     * reference's examples/example-package.json shape — the ingest

@@ -40,15 +40,6 @@ object ParquetSink {
     }
   }
 
-  /** Bucketed + sorted table write: both sides of a future equi-join
-    * bucketed by the key join with ZERO exchange (verified by spec on
-    * the executed plan). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      nBuckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
-      .saveAsTable(table)
-
   /** q155: the idempotent sink oracle-checked END TO END — orders are
     * written partition-by-status TWICE (the rerun that must converge,
     * not append), read back, and summarized per partition. The oracle

@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
-/** Event-stream operators over the `events` table. Each operator has
-  * two forms:
-  *  - a batch-equivalent DataFrame plan (the `queries()` entry,
-  *    oracle-checked against DuckDB), and
-  *  - a real Structured Streaming form in [[Streaming]] (spec-driven
-  *    with MemoryStream) with identical semantics.
+/** Event-stream operators over the `events` table, each a
+  * batch-equivalent DataFrame plan (the `queries()` entry,
+  * oracle-checked against DuckDB). q161, q163, q216 and q217 run
+  * their [[Streaming]] transform itself, so the streaming form is
+  * what the oracle checks.
   *
   * All time math is done on epoch micros/millis (BIGINT) so the ns
   * parquet timestamps compare identically across Spark (µs) and

@@ -33,12 +33,10 @@ import graft.{Checkpoints, Tables}
   * rows) — the key relation is linear in corpus size with no
   * per-pair term; but a FIXED segment length has the fixed-band LSH
   * failure mode: background collisions grow ~C(n,2)·p(L) (measured
-  * 93× candidates at 10× on the scale corpus), so the 100 TB entry
-  * point is [[editNeardupAuto]], which derives the segment length
-  * from n and is measured linear; the join key is a short substring
-  * (at 100 TB, xxhash64(key) shrinks the shuffle the q164 way);
-  * verification is
-  * one in-row `levenshtein` over 64-char strings on candidates only
+  * 93× candidates at 10× on the scale corpus, BENCH_SCALING.md); the
+  * join key is a short substring (at 100 TB, xxhash64(key) shrinks
+  * the shuffle the q164 way); verification is one in-row
+  * `levenshtein` over 64-char strings on candidates only
   * (O(64²) each; Spark's 3-arg threshold form computes the banded
   * O(64·k) variant but signals overflow as -1, which has no DuckDB
   * mirror — at 100 TB swap it in once the oracle gate is behind).
@@ -61,25 +59,20 @@ object EditOps {
   val NSeg: Int = EdK + 1
   val SegLen: Int = PrefixLen / NSeg
 
-  /** (doc_id, s) — the normalized padded prefix relation at a given
-    * prefix length. */
-  private[graft] def prefixes(docs: DataFrame,
-      prefixLen: Int = PrefixLen): DataFrame =
+  /** (doc_id, s) — the normalized padded prefix relation. */
+  private[graft] def prefixes(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      rpad(substring(col("s"), 1, prefixLen), prefixLen, "#").as("s"))
+      rpad(substring(col("s"), 1, PrefixLen), PrefixLen, "#").as("s"))
 
   /** The candidate stage alone ((a, b) pairs meeting on a seg/probe
     * key, pre-verification) — extracted so tools/ScalingSweep can
     * count candidates at different scales without duplicating the
-    * generation logic. `pre` is the [[prefixes]] relation at
-    * `NSeg * segLen` chars. */
-  private[graft] def candidatePairs(pre: DataFrame,
-      segLen: Int = SegLen): DataFrame = {
-    val prefixLen = NSeg * segLen
+    * generation logic. `pre` is the [[prefixes]] relation. */
+  private[graft] def candidatePairs(pre: DataFrame): DataFrame = {
     // seg side: the 4 fixed segments, each tagged with its index
     val seg = pre.select(col("doc_id"), explode(expr(
       s"""transform(sequence(1, $NSeg), i ->
-         |  named_struct('i', i, 'k', substring(s, (i-1)*$segLen + 1, $segLen)))"""
+         |  named_struct('i', i, 'k', substring(s, (i-1)*$SegLen + 1, $SegLen)))"""
         .stripMargin)).as("e"))
       .select(col("doc_id"), col("e.i").as("i"), col("e.k").as("k"))
     // probe side: substrings at the segment positions shifted by ±k
@@ -88,10 +81,10 @@ object EditOps {
     val prb = pre.select(col("doc_id"), explode(expr(
       s"""flatten(transform(sequence(1, $NSeg), i ->
          |  transform(filter(sequence(-$EdK, $EdK),
-         |      d -> (i-1)*$segLen + 1 + d >= 1 AND
-         |           (i-1)*$segLen + 1 + d <= $prefixLen - $segLen + 1),
+         |      d -> (i-1)*$SegLen + 1 + d >= 1 AND
+         |           (i-1)*$SegLen + 1 + d <= $PrefixLen - $SegLen + 1),
          |    d -> named_struct('i', i,
-         |      'k', substring(s, (i-1)*$segLen + 1 + d, $segLen)))))"""
+         |      'k', substring(s, (i-1)*$SegLen + 1 + d, $SegLen)))))"""
         .stripMargin)).as("e"))
       .select(col("doc_id"), col("e.i").as("i"), col("e.k").as("k"))
       .distinct()
@@ -103,95 +96,17 @@ object EditOps {
       .distinct()
   }
 
-  /** [[editNeardupPairs]] at any prefix length (a multiple of
-    * [[NSeg]]); at [[PrefixLen]] this IS q218 — the oracled row. */
-  private[graft] def editNeardupPairsAt(docs: DataFrame,
-      prefixLen: Int): DataFrame = {
-    require(prefixLen % NSeg == 0, s"prefixLen must be a multiple of $NSeg")
-    val pre = Checkpoints.cut(prefixes(docs, prefixLen))
-    val cand = candidatePairs(pre, prefixLen / NSeg)
-    cand
+  /** All pairs (a < b, ED(prefix_a, prefix_b) ≤ [[EdK]]) with their
+    * exact distance. `docs` must carry (doc_id, s). */
+  def editNeardupPairs(docs: DataFrame): DataFrame = {
+    val pre = Checkpoints.cut(prefixes(docs))
+    candidatePairs(pre)
       .join(pre.select(col("doc_id").as("a"), col("s").as("sa")), Seq("a"))
       .join(pre.select(col("doc_id").as("b"), col("s").as("sb")), Seq("b"))
       .select(col("a"), col("b"),
         levenshtein(col("sa"), col("sb")).cast("long").as("ed"))
       .filter(col("ed") <= EdK)
       .orderBy("a", "b")
-  }
-
-  /** All pairs (a < b, ED(prefix_a, prefix_b) ≤ [[EdK]]) with their
-    * exact distance. `docs` must carry (doc_id, s). */
-  def editNeardupPairs(docs: DataFrame): DataFrame =
-    editNeardupPairsAt(docs, PrefixLen)
-
-  /** Modeled per-char decay of the background segment-collision rate
-    * on a template-generated corpus (measured ≈ 2.2·10⁻⁴ per 16-char
-    * segment on this family ⟹ ≈ 0.59/char; 0.6 is the calibration
-    * point, the [[TextOps.AutoBgJ]] discipline). */
-  val SegBgC = 0.6
-
-  /** Segment length derived from corpus size: smallest L with
-    * n·SegBgC^L ≤ perDoc — the expected number of OTHER docs
-    * colliding with a given doc on one segment key stays ≤ perDoc,
-    * so candidate volume stays ~n·NSeg·(2k+1)·perDoc — LINEAR in n —
-    * instead of the fixed-L C(n,2)·SegBgC^L quadratic (measured 93×
-    * candidates at 10× in BENCH_SCALING.md). Floored at [[SegLen]]
-    * so the auto form never weakens the oracled geometry. */
-  private[graft] def autoSegLen(n: Long, perDoc: Int = 2,
-      c: Double = SegBgC): Int =
-    math.max(SegLen, math.ceil(
-      math.log(n.max(1L).toDouble / perDoc) / math.log(1.0 / c)).toInt)
-
-  /** Length classes for the auto geometry P = NSeg·L: docs whose
-    * effective content length clen = min(len, P) exceeds P − L have
-    * NO pure-'#' segment (every segment holds ≥ 1 content char), so
-    * the grown geometry applies with no padding hot-key; docs at
-    * clen ≤ P − L + k take the base oracled geometry instead. The
-    * k-wide overlap band makes the split complete: a qualifying pair
-    * has |clen_a − clen_b| ≤ k (each pad-length surplus char costs
-    * an edit — '#' never occurs in content), so both members always
-    * land in a common class. */
-  private[graft] def autoClasses(docs: DataFrame,
-      L: Int): (DataFrame, DataFrame) = {
-    val p = NSeg * L
-    val withLen = docs.withColumn("clen",
-      least(length(col("s")), lit(p)))
-    (withLen.filter(col("clen") > p - L),
-      withLen.filter(col("clen") <= p - L + EdK))
-  }
-
-  /** [[editNeardupPairs]] with the prefix length DERIVED from the
-    * corpus: the 100 TB entry point. perDoc = 2 reproduces
-    * L = 16 exactly at the suite's sf0.1 corpus (n = 5000 →
-    * ⌈ln(2500)/ln(1/0.6)⌉ = 16), so the auto form collapses to the
-    * oracled row there (spec-asserted). The re-aim contract matches
-    * [[TextOps.ngramJaccardAuto]]: at larger corpora LONG documents
-    * are compared on LONGER prefixes — a strictly tighter near-dup
-    * definition — which is what keeps their candidate volume linear
-    * while staying exact-complete for ED ≤ k at that definition.
-    *
-    * The naive grown geometry applied to ALL docs is WORSE than the
-    * fixed one (measured 463 k vs 254 k candidates at 10×): every doc
-    * shorter than P − L contributes a pure-'#' segment, and those
-    * collapse into one per-index hot key whose group is the entire
-    * short tail — a C(m,2) blob that grows with the corpus. The
-    * length-class split ([[autoClasses]]) removes it: the long class
-    * has no pure-pad segment by construction, and the short tail
-    * (bounded fraction of a natural corpus; ultra-short docs are
-    * what q20's exact pass drains first in a real pipeline) keeps
-    * the base geometry. A pair qualifying in both classes' overlap
-    * band reports its best (minimum) distance across geometries. */
-  def editNeardupAuto(docs: DataFrame, perDoc: Int = 2,
-      c: Double = SegBgC): DataFrame = {
-    val L = autoSegLen(docs.count(), perDoc, c)
-    if (L == SegLen) editNeardupPairsAt(docs, PrefixLen)
-    else {
-      val (lng, sht) = autoClasses(docs, L)
-      editNeardupPairsAt(lng, NSeg * L)
-        .unionByName(editNeardupPairsAt(sht, PrefixLen))
-        .groupBy("a", "b").agg(min("ed").as("ed"))
-        .orderBy("a", "b")
-    }
   }
 
   /** q218: character near-dup pairs over the document corpus. */

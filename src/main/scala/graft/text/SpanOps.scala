@@ -57,7 +57,7 @@ object SpanOps {
     // relation is computed ONCE for the dup agg and the join-back
     // spread: the gram explode AND its map-side combine run in the
     // scan's own stage — on a one-file local scan that is one task
-    // doing the whole corpus's gram work (r15, guide §2.5)
+    // doing the whole corpus's gram work
     val pos = graft.Checkpoints.cut(
       graft.Partitioning.spread(d.filter(length(col("s")) >= k))
         .select(col("doc_id"),
@@ -124,7 +124,7 @@ object SpanOps {
     // segments, the per-doc tail agg, and the untouched anti-join) —
     // live, the whole duplicate-span pipeline above it (gram agg +
     // join-back + islands window) re-executes once per consumer
-    // (r15, guide §5 reuse — the q134 pattern)
+    // (the q134 reuse pattern)
     val spans = graft.Checkpoints.cut(spans0)
     val byDoc = Window.partitionBy("doc_id").orderBy("span_start")
     // segment BEFORE each span: [prev_end, span_start)
@@ -285,7 +285,7 @@ object SpanOps {
   /** Selected winnowing fingerprints: (doc_id, mv) distinct, mv the
     * composite (hash·2²⁰ + 2²⁰−1−pos) of each window's pick —
     * computed IN-ROW per document by
-    * [[graft.functions.WinnowingPicks]] (r15, guide §2.4): the
+    * [[graft.functions.WinnowingPicks]]: the
     * selection is a pure per-doc function of the text, so the old
     * exploded form's corpus-wide gram exchange, per-doc sort and
     * O(w)-frame window were shuffle and sort for a row-local loop.
@@ -297,7 +297,7 @@ object SpanOps {
         explode(graft.functions.WinnowingPicks(col("s"), k, w)).as("mv"))
 
   private[graft] def winnowing(d: DataFrame, k: Int, w: Int): DataFrame = {
-    // r14 optimization (guide §1.2): the per-doc gram COUNT is pure
+    // the per-doc gram COUNT is pure
     // arithmetic — PositionedGrams emits one gram per position
     // 1..len−k+1, so n_grams = length(s) − k + 1 — which removes the
     // second full gram+md5 scan the previous gcnt pass paid (the
@@ -355,83 +355,26 @@ object SpanOps {
     * k-gram it surfaces with its near-zero Jaccard; a collision-only
     * pair with ZERO shared grams is dropped by the inner intersection
     * join (the DuckDB oracle's inner join does the same, so both
-    * engines agree — ADVICE r12 pinned this asymmetry as doc-only). */
+    * engines agree). */
   def q241WinnowingPairs(spark: SparkSession, dir: String): DataFrame =
-    fingerprintPairs(TextOps.docs(spark, dir), PairK, PairW)
+    fingerprintPairs(TextOps.docs(spark, dir))
 
-  /** Doc-frequency cap for [[fingerprintPairs]]' 100 TB entry point
-    * (`dfCap` > 0): fingerprints selected by MORE than `dfCap`
-    * documents are dropped before the pair join — the MOSS
-    * boilerplate rule (Schleimer et al. §4 deployment: "ignore
-    * fingerprints that occur in many documents"). A fingerprint with
-    * doc-frequency f contributes C(f,2) candidate pairs, so corpus-
-    * frequent grams (license headers, site boilerplate — or a small
-    * vocabulary at bench scale) make the uncapped join QUADRATIC
-    * (measured exponent 2.0 at 1×/3×/10×, BENCH_SCALING Part 17);
-    * the cap bounds each fingerprint's contribution at C(cap,2),
-    * making candidates linear in selected-fingerprint volume. The
-    * recall guarantee then holds for runs shared by ≤ dfCap docs —
-    * exactly the near-dup-pair semantics; content shared more widely
-    * than the cap is boilerplate, the thing q175 scores and a pair
-    * relation should NOT enumerate pairwise. */
-  val PairDfCap = 16
-
-  /** Gram-width ladder and per-doc candidate budget for
-    * [[fingerprintPairsAuto]]. */
-  val AutoKLadder: Seq[Int] = Seq(PairK, 32, 40, 48)
-  val AutoPairsPerDoc = 4.0
-
-  /** [[fingerprintPairs]] with the gram width k chosen by MEASUREMENT
-    * — the corpus-entropy knob the fixed geometry lacks (the
-    * ngramJaccardAuto convention, but keyed to the quantity that
-    * actually explodes). Part 17's finding: the q241 candidate
-    * quadratic on the low-entropy bench corpus is NOT boilerplate
-    * (the df-cap is inert — pairs ride many df 2–16 fingerprints,
-    * background collisions of a 30-word vocabulary where a 39-char
-    * run is commonplace); lengthening the gram restores selectivity
-    * (measured exponent 2.01 at k=24 → 1.03 at k=40, the injected
-    * true-dup answer). The probe is exact and cheap: for each ladder
-    * k, ONE winnowing pass + one agg computes Σ_h C(df_h, 2) — the
-    * fingerprint join's candidate volume itself, BEFORE paying for
-    * the join — and the first k whose volume fits
-    * [[AutoPairsPerDoc]]·|docs| wins (ladder end otherwise). Scalars
-    * only on the driver; collapses to the oracled geometry (k =
-    * [[PairK]]) whenever that fits, spec-pinned bit-equal. */
-  def fingerprintPairsAuto(d0: DataFrame): DataFrame = {
-    val d = d0.pipe(graft.Checkpoints.cutOnce)
-    val n = d.count().max(1L) // scalar: the candidate budget base
-    val k = AutoKLadder.find { k =>
-      val fps = winnowingPicks(d, k, PairW)
-        .select(col("doc_id"), expr("mv div 1048576").as("h")).distinct()
-      val cost = fps.groupBy("h").agg(count(lit(1)).as("df"))
-        .agg(coalesce(sum(expr("df * (df - 1) div 2")), lit(0L)))
-        .first().getLong(0) // scalar: the would-be join volume
-      cost <= AutoPairsPerDoc * n
-    }.getOrElse(AutoKLadder.last)
-    fingerprintPairs(d, k, PairW)
-  }
-
-  private[graft] def fingerprintPairs(d0: DataFrame, k: Int,
-      w: Int, dfCap: Int = 0): DataFrame = {
-    // cutOnce: q244/winnowingDedupAuto/fingerprintPairsAuto hand in an
-    // already-cut corpus — cutting again would materialize and store
-    // the identical relation twice per query (ADVICE r12)
+  /** q241's pairs over any (doc_id, s) corpus at gram width [[PairK]]
+    * and window [[PairW]]. */
+  private[graft] def fingerprintPairs(d0: DataFrame): DataFrame = {
+    val (k, w) = (PairK, PairW)
+    // cutOnce: q244 hands in an already-cut corpus — cutting again
+    // would materialize and store the identical relation twice
     val d = d0.pipe(graft.Checkpoints.cutOnce)
     // (doc, hash, witness pos): min position per selected hash — the
-    // selection itself is one in-row loop per doc ([[winnowingPicks]],
-    // r15), so the only corpus-wide shuffle left here is the per-doc
-    // pick set (~2/(w+1) of gram volume) into this agg
-    val fpsAll = winnowingPicks(d, k, w)
+    // selection itself is one in-row loop per doc ([[winnowingPicks]]),
+    // so the only corpus-wide shuffle left here is the per-doc pick
+    // set (~2/(w+1) of gram volume) into this agg
+    val fps = winnowingPicks(d, k, w)
       .select(col("doc_id"), expr("mv div 1048576").as("h"),
         (lit(1048575L) - expr("mv % 1048576")).as("pos"))
       .groupBy("doc_id", "h").agg(min(col("pos")).as("pos"))
       .pipe(graft.Checkpoints.cut)
-    // dfCap > 0: stop-fingerprint filter (one partial agg + semi join)
-    val fps = if (dfCap > 0) {
-      val keep = fpsAll.groupBy("h").agg(count(lit(1)).as("df"))
-        .filter(col("df") <= dfCap).select("h")
-      fpsAll.join(keep, "h").pipe(graft.Checkpoints.cut)
-    } else fpsAll
     // bucket join on the hash; each pair aggregates its shared count
     // and the deterministic witness (smallest shared hash)
     val pairs = fps.select(col("h"), col("doc_id").as("doc_a"),
@@ -446,7 +389,7 @@ object SpanOps {
         col("w0.pa").as("witness_pos_a"), col("w0.pb").as("witness_pos_b"))
       .pipe(graft.Checkpoints.cut)
     // verification 1: exact k-gram Jaccard — IN-ROW (the q99
-    // discipline, r14 guide §2.3): each candidate pair joins the
+    // discipline): each candidate pair joins the
     // per-doc distinct-gram ARRAY twice and intersects in-row, so the
     // verify ships |pairs| + |docs| rows instead of exploding every
     // pair into |grams(doc_a)| rows for a (doc, gram)-keyed
@@ -455,15 +398,13 @@ object SpanOps {
     // join's semantics, now an explicit inter ≥ 1 filter (the DuckDB
     // mirror's inner join does the same).
     //
-    // r15 (guide §2.4): the array is a row-local function of the
-    // text — [[graft.functions.DistinctGrams]] builds it in ONE loop
-    // per doc, replacing the corpus-wide positioned-gram explode →
-    // distinct exchange → collect_list that rebuilt the same sets.
-    // And only docs that actually appear in a candidate pair need
-    // one (the TextOps.jaccardVerified semi-join-prune discipline);
-    // the old form built arrays for the whole corpus. Array ORDER
-    // differs from the old shuffle-arrival order — irrelevant, the
-    // only consumers are array_intersect/size (set semantics).
+    // The array is a row-local function of the text —
+    // [[graft.functions.DistinctGrams]] builds it in ONE loop per doc,
+    // with no corpus-wide gram explode or exchange. Only docs that
+    // appear in a candidate pair need one (the
+    // TextOps.jaccardVerified semi-join-prune discipline). Array
+    // ORDER is unspecified — the only consumers are
+    // array_intersect/size (set semantics).
     val candDocs = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val ga = graft.Partitioning.spread(d)
@@ -473,7 +414,7 @@ object SpanOps {
         graft.functions.DistinctGrams(col("s"), k).as("gs"), col("s"))
       .pipe(graft.Checkpoints.cut)
     // The gram-array chain and the witness-text chain are SEPARATE
-    // joins re-united on the narrow (doc_a, doc_b) key (r15, measured
+    // joins re-united on the narrow (doc_a, doc_b) key (measured
     // 2.9 → 1.2 s): carried together, every row of the second join
     // holds a ~70 KB gram array AND the doc text, and the join's
     // sort/serialization of those wide rows dominated the verify.
@@ -527,24 +468,13 @@ object SpanOps {
     * ONLY over paired docs (the corpus-sized singleton majority is
     * labeled by one left join afterward, q44's discipline); survivor
     * selection is one cluster-keyed partial agg. */
-  def q244WinnowingDedup(spark: SparkSession, dir: String): DataFrame = {
-    val d = TextOps.docs(spark, dir).pipe(graft.Checkpoints.cut)
-    dedupFromPairs(d, fingerprintPairs(d, PairK, PairW))
-  }
+  def q244WinnowingDedup(spark: SparkSession, dir: String): DataFrame =
+    winnowingDedup(TextOps.docs(spark, dir))
 
-  /** The 100 TB dedup entry point: [[fingerprintPairsAuto]]'s
-    * measured gram width feeding the same cluster + survivor stage —
-    * so the candidate step stays within its per-doc budget on ANY
-    * corpus entropy (Part 17), with identical output to q244 whenever
-    * the oracled width fits (spec-pinned). */
-  def winnowingDedupAuto(d0: DataFrame): DataFrame = {
+  /** q244's pipeline over any (doc_id, s) corpus. */
+  private[graft] def winnowingDedup(d0: DataFrame): DataFrame = {
     val d = d0.pipe(graft.Checkpoints.cut)
-    dedupFromPairs(d, fingerprintPairsAuto(d))
-  }
-
-  /** Cluster + survivor stage shared by q244 and the auto entry. */
-  private[graft] def dedupFromPairs(d: DataFrame, rawPairs: DataFrame): DataFrame = {
-    val pairs = rawPairs
+    val pairs = fingerprintPairs(d)
       .filter(col("jaccard") >= DedupTheta)
       .select(col("doc_a"), col("doc_b"))
       .pipe(graft.Checkpoints.cut)
@@ -681,7 +611,7 @@ object SpanOps {
     * q241 mirror. */
   private def winnowSelCtes(k: Int, w: Int): String =
     s"""${TextOps.normCte},
-       |-- NOTE (guard asymmetry, ADVICE r12): the Spark side
+       |-- NOTE (guard asymmetry): the Spark side
        |-- raise_errors on docs with > 2^20 grams (composite order
        |-- would corrupt); this mirror has no such guard and would
        |-- silently compute a corrupt order on such a corpus. The
@@ -798,7 +728,7 @@ object SpanOps {
 
     "q239_winnowing" ->
       s"""WITH ${TextOps.normCte},
-         |-- guard asymmetry (ADVICE r12): no 2^20 position guard here;
+         |-- guard asymmetry: no 2^20 position guard here;
          |-- Spark raise_errors first on an over-bound corpus, so the
          |-- one-sided gap cannot pass the gate silently
          |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,

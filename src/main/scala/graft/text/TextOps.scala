@@ -99,7 +99,7 @@ object TextOps {
     * extra cand columns to keep (functionally dependent on (a, b)). */
   private def jaccardVerified(d: DataFrame, sizes: DataFrame, cand: DataFrame,
       thresh: Double, carry: Seq[String] = Nil): DataFrame = {
-    // IN-ROW exact verify (the q99 discipline, r14 guide §2.3):
+    // IN-ROW exact verify (the q99 discipline):
     // CharGrams already emits each doc's DISTINCT gram set as one
     // array, so a candidate pair joins the two arrays and intersects
     // in-row — |pairs| + |candidate docs| rows through the verify
@@ -144,47 +144,14 @@ object TextOps {
     * template-generated corpora cluster at j≈0.2-0.4 and would
     * collapse narrow bands into quadratic blocks), exact join+agg
     * Jaccard ≥ 0.5 on candidates. */
-  def q21NgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardPairs(docs(spark, dir), 3, 5)
-
-  /** q21's pipeline at any band geometry: `bands` bands × `r` 16-bit
-    * lanes, minhash depth derived (⌈bands·r/8⌉ md5s per gram). At the
-    * fixed (3, 5) this IS q21 — the oracled row. */
-  private[graft] def ngramJaccardPairs(d: DataFrame, bands: Int, r: Int): DataFrame = {
-    val sig = Checkpoints.cut(laneSigs(d, (bands * r + 7) / 8))
-    val cand = Checkpoints.cut(candidates(bandRelation(sig, bands, r)).distinct())
+  def q21NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
+    val d = docs(spark, dir)
+    val sig = Checkpoints.cut(laneSigs(d, 2)) // ⌈3·5/8⌉ md5s per gram
+    val cand = Checkpoints.cut(candidates(bandRelation(sig, 3, 5)).distinct())
     jaccardVerified(d, sig.select("doc_id", "nn"), cand, 0.5)
       .select(col("a"), col("b"), col("jaccard"))
       .orderBy("a", "b")
   }
-
-  /** Modeled background pairwise similarity of a template-generated
-    * corpus (measured j≈0.2-0.4 here; 0.3 is the calibration point).
-    * Each band's background collision rate decays as jBg^r, so one
-    * extra lane per ÷jBg growth in n holds candidate volume linear. */
-  val AutoBgJ = 0.3
-
-  /** Lanes-per-band derived from corpus size: smallest r with
-    * n·jBg^r ≤ perDoc, i.e. the expected number of OTHER docs
-    * colliding with a given doc in one band stays ≤ perDoc, so
-    * band-candidate volume stays ~n·bands·perDoc/2 — linear in n —
-    * instead of the fixed-r C(n,2)·jBg^r quadratic (measured 101× at
-    * 10× in BENCH_SCALING.md). The [[graft.sim.Similarity.neardupPairsAuto]]
-    * pattern, with the S-curve exponent as the knob instead of the
-    * hyperplane bucket count. */
-  private[graft] def autoRank(n: Long, perDoc: Int, jBg: Double): Int =
-    math.max(1, math.ceil(
-      math.log(n.max(1L).toDouble / perDoc) / math.log(1.0 / jBg)).toInt)
-
-  /** [[q21NgramJaccard]] with r DERIVED from the corpus: the 100 TB
-    * entry point. perDoc = 25 reproduces r = 5 exactly at the suite's
-    * sf0.1 corpus (n = 5000 → ⌈ln(200)/ln(1/0.3)⌉ = 5), so the auto
-    * form collapses to the oracled row there (spec-asserted); band
-    * count stays the recall knob to re-aim the S-curve when r rises
-    * (neardupPairsAuto's documented contract). */
-  def ngramJaccardAuto(d: DataFrame, bands: Int = 3, perDoc: Int = 25,
-      jBg: Double = AutoBgJ): DataFrame =
-    ngramJaccardPairs(d, bands, autoRank(d.count(), perDoc, jBg))
 
   // ---------------------------------------------------------------- q22
   /** MinHash + LSH near-dup, full pipeline: 8 minhash permutations
@@ -193,27 +160,16 @@ object TextOps {
     * pairs (recall 1-(1-j⁴)² ≈ 0.97 at the planted-dup regime j≥0.92,
     * measured 1.0 on the corpus — spec-asserted; background ∝ j_bg⁴);
     * exact join+agg Jaccard ≥ 0.5 over candidate-doc grams only. */
-  def q22DedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    minhashPairs(docs(spark, dir), 2, 4)
-
-  /** q22's pipeline at any band geometry (carries n_shared_bands). At
-    * the fixed (2, 4) this IS q22 — the oracled row. */
-  private[graft] def minhashPairs(d: DataFrame, bands: Int, r: Int): DataFrame = {
-    val sig = Checkpoints.cut(laneSigs(d, (bands * r + 7) / 8))
-    val cand = Checkpoints.cut(candidates(bandRelation(sig, bands, r))
+  def q22DedupMinhash(spark: SparkSession, dir: String): DataFrame = {
+    val d = docs(spark, dir)
+    val sig = Checkpoints.cut(laneSigs(d, 1))
+    val cand = Checkpoints.cut(candidates(bandRelation(sig, 2, 4))
       .groupBy("a", "b").agg(count(lit(1)).as("n_shared_bands")))
     jaccardVerified(d, sig.select("doc_id", "nn"), cand, 0.5,
         carry = Seq("n_shared_bands"))
       .select(col("a"), col("b"), col("n_shared_bands"), col("jaccard"))
       .orderBy("a", "b")
   }
-
-  /** [[q22DedupMinhash]] with r DERIVED from the corpus — see
-    * [[ngramJaccardAuto]]. perDoc = 100 reproduces r = 4 exactly at
-    * the suite's sf0.1 corpus (n = 5000 → ⌈ln(50)/ln(1/0.3)⌉ = 4). */
-  def minhashAuto(d: DataFrame, bands: Int = 2, perDoc: Int = 100,
-      jBg: Double = AutoBgJ): DataFrame =
-    minhashPairs(d, bands, autoRank(d.count(), perDoc, jBg))
 
   // ---------------------------------------------------------------- q87
   /** INCREMENTAL dedup — the daily-ingest shape: dedup a NEW BATCH

@@ -43,37 +43,15 @@ object ScalingSweep {
       graft.operators.SetSimJoin
         .candidatePairs(lists, graft.operators.SetSimJoin.Theta).count()
     })
-    // ER candidates, q203's SF-relative scoping (first two part-key
-    // deciles; registry = decile 1, batch = decile 2): the full
-    // blocked volume over the slice vs the batch-touching restriction
-    // the incremental form actually generates — the curve shows the
-    // restriction holding the increment's cost at the batch's scale
-    def erSlice: (org.apache.spark.sql.DataFrame, Long) = {
-      val part = t.part
-      val rb = (part.agg(max(col("p_partkey")).cast("long")).first()
-        .getLong(0) + 1) / 10
-      (part.filter(col("p_partkey") < 2 * rb), rb)
-    }
+    // ER candidates, q203's SF-relative scoping: the full blocked
+    // volume over the first two part-key deciles (registry = decile 1,
+    // batch = decile 2)
     report("q203_pairs_full", {
-      val (slice, _) = erSlice
-      graft.operators.EntityResolution.candidatePairs(slice).count()
-    })
-    report("q203_pairs_incr", {
-      val (slice, rb) = erSlice
-      graft.operators.EntityResolution
-        .candidatePairs(slice, Some(rb)).count()
-    })
-    // the production claim isolated: a FIXED 2000-record batch
-    // against the growing decile-1 registry. Batch-touching
-    // candidates should ride registry COLLISION DENSITY (linear in
-    // corpus), while the registry's internal pair volume (which the
-    // incremental form never regenerates) is the quadratic one above
-    report("q203_pairs_fixedbatch", {
       val part = t.part
       val rb = (part.agg(max(col("p_partkey")).cast("long")).first()
         .getLong(0) + 1) / 10
       graft.operators.EntityResolution.candidatePairs(
-        part.filter(col("p_partkey") < rb + 2000), Some(rb)).count()
+        part.filter(col("p_partkey") < 2 * rb)).count()
     })
     report("q21_pairs", {
       val d = graft.text.TextOps.docs(spark, dir)
@@ -90,39 +68,16 @@ object ScalingSweep {
     // q241 fingerprint-join candidates (pre-verify): distinct doc
     // pairs sharing >=1 selected winnowing fingerprint — the volume
     // the guarantee-bearing family pays instead of all-pairs
-    def q241Pairs(dfCap: Int): Long = {
+    report("q241_pairs", {
       val d = graft.text.TextOps.docs(spark, dir)
-      val fpsAll = graft.text.SpanOps.winnowingPicks(d,
+      val fps = graft.text.SpanOps.winnowingPicks(d,
           graft.text.SpanOps.PairK, graft.text.SpanOps.PairW)
         .select(col("doc_id"), expr("mv div 1048576").as("h")).distinct()
-      val fps = if (dfCap > 0) {
-        val keep = fpsAll.groupBy("h").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= dfCap).select("h")
-        fpsAll.join(keep, "h")
-      } else fpsAll
       fps.select(col("h"), col("doc_id").as("a"))
         .join(fps.select(col("h"), col("doc_id").as("b")), Seq("h"))
         .filter(col("a") < col("b"))
         .select("a", "b").distinct().count()
-    }
-    report("q241_pairs", q241Pairs(0))
-    report("q241_pairs_capped", q241Pairs(graft.text.SpanOps.PairDfCap))
-    report("q241_pairs_auto", {
-      val d = graft.text.TextOps.docs(spark, dir)
-      graft.text.SpanOps.fingerprintPairsAuto(d).count()
     })
-    def autoBandPairs(bands: Int, perDoc: Int): Long = {
-      val d = graft.text.TextOps.docs(spark, dir)
-      val r = graft.text.TextOps.autoRank(
-        d.count(), perDoc, graft.text.TextOps.AutoBgJ)
-      val sig = graft.Checkpoints.cut(
-        graft.text.TextOps.laneSigs(d, (bands * r + 7) / 8))
-      println(s"  (auto r = $r)")
-      graft.text.TextOps.candidates(
-        graft.text.TextOps.bandRelation(sig, bands, r)).distinct().count()
-    }
-    report("q21_pairs_auto", autoBandPairs(3, 25))
-    report("q22_pairs_auto", autoBandPairs(2, 100))
     report("copurchase_edges", graft.graph.CoPurchase.edges(t, None).count())
 
     report("q218_pairs", {
@@ -133,26 +88,6 @@ object ScalingSweep {
     report("q218_matches", {
       graft.text.EditOps.q218EditNeardup(spark, dir).count()
     })
-    report("q218_pairs_auto", {
-      // the class-split auto form: long docs at the grown geometry,
-      // the padded short tail at the base oracled geometry (naive
-      // grown-for-all measured WORSE — pure-'#' hot keys, see
-      // EditOps.editNeardupAuto scaladoc)
-      val d = graft.text.TextOps.docs(spark, dir)
-      val L = graft.text.EditOps.autoSegLen(d.count())
-      println(s"  (auto segLen = $L)")
-      if (L == graft.text.EditOps.SegLen) {
-        val pre = graft.Checkpoints.cut(graft.text.EditOps.prefixes(d))
-        graft.text.EditOps.candidatePairs(pre).count()
-      } else {
-        val (lng, sht) = graft.text.EditOps.autoClasses(d, L)
-        val preL = graft.Checkpoints.cut(graft.text.EditOps.prefixes(
-          lng, graft.text.EditOps.NSeg * L))
-        val preS = graft.Checkpoints.cut(graft.text.EditOps.prefixes(sht))
-        graft.text.EditOps.candidatePairs(preL, L).count() +
-          graft.text.EditOps.candidatePairs(preS).count()
-      }
-    })
     // q219's bench stratum (doc_id < 50) shares no word-8-gram with
     // the scale corpus (no planted contamination there), which would
     // measure an empty prune; plant a deterministic bench of 50 FULL
@@ -161,7 +96,7 @@ object ScalingSweep {
     report("q219_pairs", {
       val d = graft.text.TextOps.docs(spark, dir).select("doc_id", "s")
       // max(1, …): a sub-50-doc corpus otherwise makes stride 0 and
-      // the modulo below divides by zero (ADVICE r9)
+      // the modulo below divides by zero
       val stride = math.max(1L, d.count() / 50)
       val bench = d.filter(col("doc_id") % stride === 0 &&
           col("doc_id") < stride * 50)
@@ -179,13 +114,11 @@ object ScalingSweep {
     // of the automaton's case), and the bigram explode + join
     // (corpus-grain shuffle; count-exact, the spec's equality
     // partner). The printed times are the comparison.
-    // gate the whole block in one consistent direction (ADVICE r9 —
-    // the previous mixed-direction clauses were partly dead): run it
-    // when a filter term targets q220 from either side, i.e. names a
-    // q220 report (o.contains) or abbreviates one ("220" ⊂ "q220")
-    // the abbreviation clause requires >=3 chars: a bare "q"/"2"/"22"
-    // aimed at some other report must not trigger this heavy block
-    // (ADVICE r10 — "q220".contains matches any of its substrings)
+    // the block runs when a filter term targets q220 from either
+    // side, i.e. names a q220 report (o.contains) or abbreviates one
+    // ("220" ⊂ "q220"); the abbreviation clause requires >=3 chars, so
+    // a bare "q"/"2"/"22" aimed at some other report does not trigger
+    // this heavy block ("q220".contains matches any of its substrings)
     if (only.isEmpty ||
         only.exists(o => o.contains("q220") ||
           (o.length >= 3 && "q220".contains(o)))) {
@@ -253,32 +186,21 @@ object ScalingSweep {
         .groupBy("cell").agg(count(lit(1)).as("g"))
         .agg(sum(expr("g * (g - 1) div 2"))).collect()(0).getLong(0)
     report("q116_cell_pairs_k8", cellPairs(8))
-    report("q116_cell_pairs_auto", {
-      val n = v.count()
-      cellPairs(math.max(8L, (n + 499) / 500).toInt)
-    })
     def bucketPairs(r: Int): Long =
       graft.sim.Similarity
         .bandedBuckets(v, r, graft.sim.Similarity.NeardupBands)
         .groupBy("j", "bkt").agg(count(lit(1)).as("g"))
         .agg(sum(expr("g * (g - 1) div 2"))).collect()(0).getLong(0)
     report("q26_bucket_pairs", bucketPairs(graft.sim.Similarity.NeardupRows))
-    report("q26_bucket_pairs_auto", {
-      val n = v.count().max(1L)
-      bucketPairs(math.max(1,
-        math.ceil(math.log(n.toDouble / 250) / math.log(2.0)).toInt))
-    })
-
     // q228/q229: the basket co-occurrence relation the prod2vec
-    // trainer aggregates (Σ basket² rows pre-agg, reported post-agg)
-    // and the sampled audit's candidate volume (|E|·(K+1) bound)
+    // trainer aggregates (reported post-agg, floored, both directions)
+    // and the sampled audit's candidate volume (|E|·(K+1) bound) over
+    // the same relation as its positive edge set
     report("q228_pairs", graft.sim.Prod2Vec.basketPairs(t).count())
     report("q229_cand", {
       val emb = graft.sim.Prod2Vec.embeddings(spark, dir)
-      val rep = graft.graph.CoPurchase.repeatEdges(
-        t, graft.graph.CoPurchase.TriMinSupport)
-      val sym = rep.unionByName(
-        rep.select(col("dst").as("src"), col("src").as("dst")))
+      val sym = graft.sim.Prod2Vec.basketPairs(t)
+        .select(col("u").as("src"), col("v").as("dst"))
       graft.graph.NodeEmbeddings
         .scoredSampledPairs(emb, sym, graft.sim.Prod2Vec.NegK).count()
     })

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.graphx.lib.LabelPropagation
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.{Algorithms, CoPurchase, GraphxBridge, Louvain, TradeGraph}
+import graft.graph.{Algorithms, CoPurchase, Louvain, TradeGraph}
 
 class AlgorithmsSpec extends SparkSpec {
   import spark.implicits._
@@ -26,6 +28,30 @@ class AlgorithmsSpec extends SparkSpec {
       Superstep.Unmeasured
     }
     (run.out, deltas.toList)
+  }
+
+  /** (node) + (src, dst) frames as a GraphX graph, for the parity
+    * checks against GraphX's Pregel implementations. */
+  private def toGraph(nodes: DataFrame, edges: DataFrame): Graph[Long, Long] =
+    Graph(nodes.select(col("node").cast("long")).rdd
+        .map(r => (r.getLong(0), r.getLong(0))),
+      edges.select(col("src").cast("long"), col("dst").cast("long")).rdd
+        .map(r => Edge(r.getLong(0), r.getLong(1), 1L)))
+
+  /** The closure formulation scc(v) = min{u : v→*u and u→*v} — it
+    * materializes the O(V²) reachability pair set, so it serves only
+    * as the agreement reference for [[Algorithms.sccLabels]]. */
+  private def sccViaClosure(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val e = Checkpoints.cut(edges.select("src", "dst").distinct())
+    val reach = Algorithms.transitiveClosure(e) // eager fixpoint
+    Checkpoints.release(e)
+    val mutual = reach.as("f")
+      .join(reach.as("b"),
+        col("f.src") === col("b.dst") && col("f.dst") === col("b.src"))
+      .select(col("f.src").as("node"), col("f.dst").as("peer"))
+    nodes.select(col("node"), col("node").as("peer"))
+      .union(mutual)
+      .groupBy("node").agg(min(col("peer")).as("scc"))
   }
 
   test("transitive closure finds the cycle and the spur") {
@@ -115,8 +141,7 @@ class AlgorithmsSpec extends SparkSpec {
     // that one documented global factor.
     val cycleN = Seq(1L, 2L, 3L).toDF("node")
     val cycleE = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val gxc = GraphxBridge.pagerank(GraphxBridge.toGraph(cycleN, cycleE), 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val gxc = toGraph(cycleN, cycleE).staticPageRank(5).vertices.collect().toMap
     val dfc = Algorithms.pagerank(cycleN, cycleE, 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gxc.keySet == dfc.keySet)
@@ -125,8 +150,7 @@ class AlgorithmsSpec extends SparkSpec {
         s"sink-free parity drift at node $n: graphx ${gxc(n)} vs df $v")
     }
     // the sinked fixture (spur 1->5, isolated 4): same up to n/sum
-    val gx = GraphxBridge.pagerank(GraphxBridge.toGraph(nodes, edges), 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val gx = toGraph(nodes, edges).staticPageRank(5).vertices.collect().toMap
     val df = Algorithms.pagerank(nodes, edges, 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gx.keySet == df.keySet)
@@ -138,17 +162,14 @@ class AlgorithmsSpec extends SparkSpec {
   }
 
   test("GraphX bridge agrees with DataFrame connected components") {
-    val g = GraphxBridge.toGraph(nodes, edges)
-    val gx = GraphxBridge.connectedComponents(g)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gx = toGraph(nodes, edges).connectedComponents().vertices.collect().toMap
     val df = Algorithms.connectedComponents(nodes, undirected)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gx == df) // both use min-vertex-id as component label
   }
 
   test("GraphX label propagation produces a community per node") {
-    val g = GraphxBridge.toGraph(nodes, edges)
-    val lp = GraphxBridge.labelPropagation(g, 5).collect()
+    val lp = LabelPropagation.run(toGraph(nodes, edges), 5).vertices.collect()
     assert(lp.length == 5)
   }
 
@@ -156,10 +177,8 @@ class AlgorithmsSpec extends SparkSpec {
     val t = Tables(spark, sfDir())
     val df = Algorithms.q16Scc(spark, sfDir())
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val g = GraphxBridge.toGraph(
-      TradeGraph.nodes(t).select("node"), TradeGraph.edges(t))
-    val gx = GraphxBridge.stronglyConnectedComponents(g, 50)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val gx = toGraph(TradeGraph.nodes(t).select("node"), TradeGraph.edges(t))
+      .stronglyConnectedComponents(50).vertices.collect().toMap
     assert(gx == df) // both label an SCC with its minimum vertex id
   }
 
@@ -374,7 +393,7 @@ class AlgorithmsSpec extends SparkSpec {
     val ns = TradeGraph.nodes(t).select("node")
     val es = TradeGraph.edges(t)
     assert(labels(Algorithms.sccLabels(ns, es)) ==
-      labels(Algorithms.sccViaClosure(ns, es)))
+      labels(sccViaClosure(ns, es)))
     // random digraph with planted cycles and cross edges
     val rnd = new scala.util.Random(7)
     val n = 40L
@@ -384,7 +403,7 @@ class AlgorithmsSpec extends SparkSpec {
     val rn = (0L until n).toDF("node")
     val re = (planted ++ random).toDF("src", "dst")
     assert(labels(Algorithms.sccLabels(rn, re)) ==
-      labels(Algorithms.sccViaClosure(rn, re)))
+      labels(sccViaClosure(rn, re)))
     // the worst case for round count: an ascending-id chain of
     // singleton SCCs (one root unlocked per round) — must still
     // terminate and label each node itself

@@ -232,8 +232,7 @@ class CoresCentralitySpec extends SparkSpec {
     // deterministic sparse pseudo-random graph (300 nodes, avg degree
     // 4): the bounded-degree regime where Jones-Plassmann's wave
     // count stays shallow (dense graphs go ~max-clique-deep — the
-    // Scaladoc's measured-104-waves co-purchase caveat — and should
-    // color via one q131 MIS per color class instead)
+    // Scaladoc's measured-104-waves co-purchase caveat)
     val n = 300L
     val edges = (0L until n).flatMap(i =>
       Seq((i, (i * 7 + 1) % n), (i, (i * 13 + 2) % n)))
@@ -265,48 +264,6 @@ class CoresCentralitySpec extends SparkSpec {
     // bounded degree → shallow priority DAG
     val maxWave = out.values.map(_._2).max
     assert(maxWave <= 40, s"took $maxWave waves for ${out.size} nodes")
-  }
-
-  test("misColoring: proper, deterministic, and shallower than JP on a dense graph") {
-    import spark.implicits._
-    // dense regime: 3 overlapping 20-cliques (60 nodes, avg degree
-    // ~19) — JP's wave depth here is ~clique-deep, the documented
-    // fallback trigger
-    val cliques = Seq(0L until 20L, 15L until 35L, 30L until 50L)
-    val edges = cliques.flatMap(c =>
-      for (a <- c; b <- c if a < b) yield (a, b)).distinct
-    val nodes = (0L until 50L).toDF("node")
-    val e = edges.toDF("src", "dst")
-    val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-
-    val jp = graft.graph.Cores.greedyColoring(nodes, und).collect()
-      .map(r => r.getAs[Long]("node") ->
-        ((r.getAs[Long]("color"), r.getAs[Long]("wave")))).toMap
-    val mis = graft.graph.Cores.misColoring(nodes, und).collect()
-      .map(r => r.getAs[Long]("node") ->
-        ((r.getAs[Long]("color"), r.getAs[Long]("wave")))).toMap
-    assert(mis.keySet == jp.keySet)
-    // proper: no edge joins two same-colored nodes
-    edges.foreach { case (a, b) =>
-      assert(mis(a)._1 != mis(b)._1, s"edge ($a,$b) monochrome")
-    }
-    // deterministic: a second run reproduces the assignment exactly
-    val mis2 = graft.graph.Cores.misColoring(nodes, und).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("color")).toMap
-    assert(mis.view.mapValues(_._1).toMap == mis2)
-    // the A/B the fallback exists for: sweep count ≤ colors used,
-    // strictly below JP's clique-deep wave count
-    val jpWaves = jp.values.map(_._2).max
-    val misSweeps = mis.values.map(_._2).max
-    val misColors = mis.values.map(_._1).toSet.size
-    assert(misSweeps <= misColors,
-      s"$misSweeps sweeps > $misColors colors")
-    assert(misSweeps < jpWaves,
-      s"MIS sweeps $misSweeps not below JP waves $jpWaves on a dense graph")
-    // routing: dense graph → misColoring path, sparse graph → JP
-    val auto = graft.graph.Cores.coloringAuto(nodes, und).collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("color")).toMap
-    assert(auto == mis.view.mapValues(_._1).toMap)
   }
 
   test("q94: degree histogram accounts for every node and every edge end") {

@@ -60,57 +60,6 @@ class EditOpsSpec extends SparkSpec {
     assert(has(1L, 5L), "mixed k-edit pair missed")
   }
 
-  test("auto segment length collapses to the oracled geometry at suite scale") {
-    // n = 5000 (sf0.1) -> ceil(ln(2500)/ln(1/0.6)) = 16 = SegLen
-    assert(EditOps.autoSegLen(5000L) == EditOps.SegLen)
-    // and grows with the corpus (the linearity knob)
-    assert(EditOps.autoSegLen(50000L) > EditOps.SegLen)
-    assert(EditOps.autoSegLen(150000L) >= EditOps.autoSegLen(50000L))
-    // auto form == the oracled row at the suite's largest SF
-    val docs = graft.text.TextOps.docs(spark, sfDir("0.1"))
-    val auto = EditOps.editNeardupAuto(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val fixed = EditOps.q218EditNeardup(spark, sfDir("0.1"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(auto == fixed)
-    assert(auto.nonEmpty)
-  }
-
-  test("the length-class split path equals the brute-force reference when forced") {
-    // c = 0.75 pushes autoSegLen past SegLen at the sf0.001 corpus,
-    // forcing the grown-geometry + short-tail union path that the
-    // suite-scale collapse test never exercises
-    val docs = graft.text.TextOps.docs(spark, sfDir()).select("doc_id", "s")
-    val n = docs.count()
-    val c = 0.75
-    val L = EditOps.autoSegLen(n, 2, c)
-    assert(L > EditOps.SegLen, s"calibration did not force the split (L = $L)")
-    val p = EditOps.NSeg * L
-    val got = EditOps.editNeardupAuto(docs, 2, c)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // reference: the documented class semantics, brute-forced —
-    // long×long pairs at the grown prefix, short×short at the base
-    // prefix, overlap-band pairs at the min of both
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    def padTo(s: String, len: Int): String =
-      s.take(len).padTo(len, '#')
-    def clen(s: String): Int = math.min(s.length, p)
-    val want = (for {
-      (a, sa) <- rows; (b, sb) <- rows if a < b
-      longPair = clen(sa) > p - L && clen(sb) > p - L
-      shortPair = clen(sa) <= p - L + EditOps.EdK &&
-        clen(sb) <= p - L + EditOps.EdK
-      dLong = if (longPair) Some(lev(padTo(sa, p), padTo(sb, p))) else None
-      dShort = if (shortPair)
-        Some(lev(padTo(sa, EditOps.PrefixLen),
-          padTo(sb, EditOps.PrefixLen))) else None
-      d = (dLong.toSeq ++ dShort.toSeq).filter(_ <= EditOps.EdK)
-      if d.nonEmpty
-    } yield (a, b, d.min.toLong)).toSet
-    assert(got == want)
-    assert(want.nonEmpty, "degenerate: the forced split found nothing")
-  }
-
   test("q218 on the corpus equals brute force at sf0.001") {
     val docs = graft.text.TextOps.docs(spark, sfDir())
       .select("doc_id", "s").as[(Long, String)].collect()

@@ -103,41 +103,6 @@ class EntityResolutionSpec extends SparkSpec {
     assert(inc.map(r => (r._1, r._2, r._4, r._5, r._6)) == global)
   }
 
-  test("membership path == global: persisted registry, one CC") {
-    val rb = 5L
-    val rows = Seq(
-      // registry entity {1, 2}: a real standing merge (J = 4/6 ≥ tau)
-      // — its membership STAR edge (2 → 1) is what the production
-      // path feeds instead of re-verifying registry pairs
-      (1L, "alpha beta", "B1", "T1", 1L, 100.0),
-      (2L, "alpha beta", "B1", "T1", 2L, 101.0),
-      // registry entity {3, 4}: untouched by the batch — must ride
-      // the membership edge into the output unchanged
-      (3L, "gamma delta", "B2", "T2", 3L, 90.0),
-      (4L, "gamma delta", "B2", "T2", 4L, 91.0),
-      // batch record joining the standing entity {1, 2}
-      (6L, "alpha beta", "B1", "T1", 1L, 102.0),
-      // batch-only pair → a new entity
-      (7L, "dup item", "B5", "T5", 5L, 70.0),
-      (8L, "dup item", "B5", "T5", 6L, 71.0),
-    )
-    // the persisted membership table a deployment would feed in
-    val membership = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L))
-      .toDF("node", "component")
-    val viaMembership = EntityResolution.resolveIncrementalFromMembership(
-        toDf(rows), membership, rb, EntityResolution.ErTau)
-      .as[(Long, Long, String, Long, String, Double)].collect().toSeq
-    val viaGlobal = EntityResolution.resolveIncremental(
-        toDf(rows), rb, EntityResolution.ErTau)
-      .as[(Long, Long, String, Long, String, Double)].collect().toSeq
-    assert(viaMembership == viaGlobal)
-    val byEntity = viaMembership.map(r => r._1 -> r).toMap
-    assert(byEntity(1L)._2 == 3L && byEntity(1L)._3 == "grew")
-    assert(byEntity(3L)._2 == 2L && byEntity(3L)._3 == "unchanged",
-      "an untouched standing entity must survive via its membership star")
-    assert(byEntity(7L)._2 == 2L && byEntity(7L)._3 == "new")
-  }
-
   test("q203 on the sf corpus == global resolution + member-strata status") {
     val part = Tables(spark, sfDir()).part
     val rb = (part.agg(max(col("p_partkey")).cast("long")).first()

@@ -267,27 +267,4 @@ class KMeansSpec extends SparkSpec {
     // its representative is strictly smaller
     rows.filter(_._3 == 0L).foreach { case (id, c, _) => assert(c < id) }
   }
-
-  test("semanticDedupAuto: corpus-derived k bounds cell populations") {
-    // with targetCell >= n the derived k collapses to K and the result
-    // IS q116's (same blocking, same pairs) — the plumbing adds nothing
-    val n = vecs.count()
-    val auto = KMeans.semanticDedupAuto(vecs, targetCell = n.toInt + 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val fixed = KMeans.q116SemanticDedup(spark, sfDir())
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(auto.toSeq == fixed.toSeq)
-    // with a small target the derived k rises and cell populations stay
-    // ~target: the within-cell quadratic is bounded per cell (the
-    // SemDeDup scale contract, executable form)
-    val target = 40
-    val k = math.max(KMeans.K.toLong, (n + target - 1) / target).toInt
-    val sizes = KMeans.assignments(vecs, k, KMeans.Iters)
-      .groupBy("cell").agg(count(lit(1)).as("g"))
-      .collect().map(_.getLong(1))
-    assert(sizes.sum == n)
-    // Lloyd cells aren't equal-sized; assert a loose multiple of target
-    assert(sizes.max <= 8L * target,
-      s"max cell ${sizes.max} far above target $target at k=$k")
-  }
 }

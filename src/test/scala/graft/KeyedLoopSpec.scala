@@ -18,12 +18,6 @@ class KeyedLoopSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val MinPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   /** The plan `df` ran, AQE's query stages included. */
   private def ran(df: DataFrame): SparkPlan = {
     df.collect()

@@ -38,12 +38,6 @@ class PackageJsonSourceSpec extends SparkSpec {
     assert(once.users.count() == twice.users.count())
   }
 
-  test("OWNS edges link users to their repos") {
-    val owns = PackageJsonSource.ownsEdges(manifests).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(owns == Set(("ada", "alpha"), ("ada", "gamma"), ("bob", "beta")))
-  }
-
   test("cascade delete drops edge types first, then orphaned modules") {
     val e = PackageJsonSource.entities(manifests)
     val before = e.modules.count()
@@ -76,11 +70,12 @@ class PackageJsonSourceSpec extends SparkSpec {
         |{not json at all
         |{"name": "ok2", "owner": "bob"}
         |""".stripMargin)
-    val (good, bad) = PackageJsonSource.readLenient(spark, f.toString)
-    assert(good.count() == 2)
-    assert(good.collect().map(_.getAs[String]("name")).toSet == Set("ok1", "ok2"))
-    assert(bad.count() == 1)
-    assert(bad.first().getString(0).contains("not json"))
+    val r = PackageJsonSource.readLenientManaged(spark, f.toString)
+    assert(r.good.count() == 2)
+    assert(r.good.collect().map(_.getAs[String]("name")).toSet == Set("ok1", "ok2"))
+    assert(r.bad.count() == 1)
+    assert(r.bad.first().getString(0).contains("not json"))
+    r.release()
   }
 
   test("salted skew join returns exactly the plain join's rows") {
@@ -93,14 +88,8 @@ class PackageJsonSourceSpec extends SparkSpec {
     val plain = fact.join(build, col("k") === col("bk"))
       .select("k", "payload", "label").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    val salted = SkewJoin.salted(fact, build, "k", "bk", buckets = 8)
-      .select("k", "payload", "label").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    assert(salted.toSeq == plain.toSeq)
-
-    // profile-driven variant: buckets per key derived from measured
-    // counts; hot key 1 gets >1 bucket, cold keys 1 — results still
-    // exactly the plain join's
+    // buckets per key derived from measured counts; hot key 1 gets >1
+    // bucket, cold keys 1 — results exactly the plain join's
     val profile = graft.operators.Profile.skewProfile(
       fact.select(col("k")), "k")
     val byProfile = SkewJoin.saltedByProfile(fact, build, "k", "bk",
@@ -117,7 +106,7 @@ class PackageJsonSourceSpec extends SparkSpec {
   }
 
   test("null-name manifest: dep targets keep their nodes, null-src edges drop") {
-    // the audit-universe contract (ADVICE r10 + review r11): a
+    // the audit-universe contract: a
     // manifest line with no name still CONTRIBUTES its dependency
     // targets to the module universe (entities() builds modules from
     // all dep targets), while moduleGraph drops both the null-name

@@ -29,8 +29,10 @@ class ParquetSinkSpec extends SparkSpec {
   test("bucketed tables join without an exchange") {
     val left = (1L to 200L).map(i => (i, s"l$i")).toDF("k", "lv")
     val right = (1L to 200L).map(i => (i, s"r$i")).toDF("k", "rv")
-    ParquetSink.writeBucketed(left, "bkt_left", "k", 4)
-    ParquetSink.writeBucketed(right, "bkt_right", "k", 4)
+    // the bucketed + sorted table write q156 runs
+    for ((df, table) <- Seq(left -> "bkt_left", right -> "bkt_right"))
+      df.write.mode("overwrite").format("parquet")
+        .bucketBy(4, "k").sortBy("k").saveAsTable(table)
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

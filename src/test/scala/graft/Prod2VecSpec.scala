@@ -3,6 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.sim.Prod2Vec
 
@@ -17,6 +18,23 @@ class Prod2VecSpec extends SparkSpec {
     assert(rows.keys.forall { case (u, v) => u != v }, "self-pair")
     for (((u, v), n) <- rows)
       assert(rows.get((v, u)).contains(n), s"asymmetric ($u,$v)")
+  }
+
+  test("q104, q228 and q229 give identical rows at 1 and 7 shuffle partitions") {
+    // all three read CoPurchase.pairSupport, the one basket-pair relation
+    val names = Seq("q104_copurchase_triangles", "q228_prod2vec",
+      "q229_prod2vec_link_auc")
+    def rows: Map[String, Seq[Row]] = names.map { q =>
+      val out = SparkEntry.queries(q)(spark, sfDir()).collect().toSeq
+      Checkpoints.releaseAll(spark)
+      q -> out
+    }.toMap
+    val one = withConf("spark.sql.shuffle.partitions", "1")(rows)
+    val seven = withConf("spark.sql.shuffle.partitions", "7")(rows)
+    names.foreach { q =>
+      assert(one(q).nonEmpty, q)
+      assert(seven(q) == one(q), s"$q differs between 1 and 7 shuffle partitions")
+    }
   }
 
   test("q228 rows are unit-norm per node") {

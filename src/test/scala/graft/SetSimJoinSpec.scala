@@ -63,25 +63,6 @@ class SetSimJoinSpec extends SparkSpec {
       "fixture lacks single-shared-token qualifying pairs")
   }
 
-  test("hashed candidate keys are bit-equal to string keys in both θ regimes") {
-    // the suite path (hashKeys = true) vs the readable-key form, on
-    // real sf0.001 part names — θ = 0.6 exercises the pair-key path,
-    // θ = 0.45 the single-token path. Equality is unconditional (a
-    // collision can only merge key groups → extra candidates → exact
-    // verification rejects them), so compare raw doubles, no epsilon.
-    val items = Tables(spark, sfDir()).part
-      .select(col("p_partkey").cast("long").as("id"), col("p_name").as("name"))
-    for (theta <- Seq(SetSimJoin.Theta, 0.45)) {
-      def rows(hashKeys: Boolean) =
-        SetSimJoin.setSimJoin(items, theta, hashKeys).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
-      val hashed = rows(hashKeys = true)
-      val strings = rows(hashKeys = false)
-      assert(hashed == strings, s"hashed/string outputs differ at θ=$theta")
-      assert(hashed.nonEmpty, s"fixture must produce pairs at θ=$theta")
-    }
-  }
-
   test("a frequent shared token outside both prefixes still can't lose a pair") {
     // A and B share 4 of 5 tokens; 'zz'/'yy' are globally rare so the
     // COMMON tokens are pushed to the prefix tail — the adversarial

@@ -76,26 +76,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("neardupPairsAuto: derived r reproduces fixed-r at the matched target, bounds buckets below it") {
-    val v = vecs(sfDir("0.01")) // 500 vectors
-    val n = v.count()
-    // targetBucket = n/2^NeardupRows makes the derived r equal the
-    // fixed NeardupRows — the auto form IS the fixed form there
-    val matched = ((n + (1L << Similarity.NeardupRows) - 1) /
-      (1L << Similarity.NeardupRows)).toInt // ceil(n/2^r) → derived r = r
-    val auto = Similarity.neardupPairsAuto(v, targetBucket = matched)
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fixed = Similarity.neardupPairs(v,
-        Similarity.NeardupRows, Similarity.NeardupBands)
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto == fixed)
-    // a small target raises r and shrinks expected bucket loads: the
-    // collision pair volume must drop well below the matched-r volume
-    val tight = Similarity.neardupPairsAuto(v, targetBucket = 16).count()
-    assert(tight < fixed.size,
-      s"tight banding produced $tight pairs vs ${fixed.size} at r=3")
-  }
-
   test("dedup-regime banding (r=8, L=6): planted dups recalled, candidates sub-quadratic") {
     // the 100 TB configuration: true duplicates sit at cos ≥ 0.99, so
     // wider bands (256 buckets each) keep recall ~1 while background

@@ -221,7 +221,7 @@ class SpanOpsSpec extends SparkSpec {
       (3L, "entirely distinct content sharing no long runs with others x"),
       (4L, s"third copy holder $run trailing remainder text"))
       .toDF("doc_id", "s")
-    val got = SpanOps.fingerprintPairs(docs, k, w)
+    val got = SpanOps.fingerprintPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getDouble(3), r.getLong(6)))).toMap
     // all three run-carrying docs pair up; doc 3 pairs with nobody
@@ -241,30 +241,6 @@ class SpanOpsSpec extends SparkSpec {
     val expect = ga.intersect(gb).size.toDouble / ga.union(gb).size
     assert(math.abs(got((1L, 2L))._2 - expect) < 1e-6 + 5e-7,
       s"jaccard ${got((1L, 2L))._2} vs hand $expect")
-  }
-
-  test("fingerprint pairs df-cap: boilerplate dropped, rare runs kept, no-op when slack") {
-    val (k, w) = (SpanOps.PairK, SpanOps.PairW)
-    val boiler = ("standard license header text " * 3).take(k + w - 1)
-    val rare = ("unique shared duplicated run " * 3).take(k + w - 1)
-    // docs 1-5 all carry the boilerplate run; only 1 and 2 share the
-    // rare run. dfCap=3 must drop the boilerplate fingerprints (df=5)
-    // and keep the (1,2) pair alive through the rare run (df=2).
-    val docs = (1L to 5L).map { i =>
-      val extra = if (i <= 2) s" plus the $rare segment" else ""
-      (i, s"document number $i body $boiler filler ${i * 7919}$extra")
-    }.toDF("doc_id", "s")
-    val capped = SpanOps.fingerprintPairs(docs, k, w, dfCap = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(capped == Set((1L, 2L)),
-      s"cap must keep only the rare-run pair, got $capped")
-    // a cap that never binds is a no-op: identical to the exact form
-    val uncapped = SpanOps.fingerprintPairs(docs, k, w)
-      .collect().map(_.toSeq).toSet
-    val slack = SpanOps.fingerprintPairs(docs, k, w, dfCap = 1000)
-      .collect().map(_.toSeq).toSet
-    assert(slack == uncapped)
-    assert(uncapped.size == 10, s"all C(5,2) pairs share boilerplate: ${uncapped.size}")
   }
 
   test("keep-first scrub: first copy survives, later copies and self-repeats go") {
@@ -303,7 +279,6 @@ class SpanOpsSpec extends SparkSpec {
   }
 
   test("winnowing dedup: clusters verified pairs, keep-best survivor, singletons intact") {
-    val (k, w) = (SpanOps.PairK, SpanOps.PairW)
     val run = ("zqxjv" * 12).take(45)
     // docs 1-3 are near-identical (chained shared content: 1~2, 2~3),
     // doc 4 unrelated, doc 5 shares a run with nobody above theta
@@ -317,7 +292,7 @@ class SpanOpsSpec extends SparkSpec {
         "of completely different words stretching on and on and on"))
       .toDF("doc_id", "s")
     // compute exactly what q244's pipeline does on this fixture
-    val pairs = SpanOps.fingerprintPairs(docs, k, w)
+    val pairs = SpanOps.fingerprintPairs(docs)
       .filter(org.apache.spark.sql.functions.col("jaccard") >= SpanOps.DedupTheta)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.nonEmpty && pairs.forall { case (a, b) => a <= 3 && b <= 3 },
@@ -334,47 +309,10 @@ class SpanOpsSpec extends SparkSpec {
       org.apache.spark.sql.functions.length(col("s")).as("len"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(lens(2L) > lens(1L) && lens(2L) > lens(3L))
-    // the auto entry collapses to the fixed-width pipeline when the
-    // oracled geometry fits the budget (it does on this fixture)
-    val autoOut = SpanOps.winnowingDedupAuto(docs)
-      .collect().map(_.toSeq).toSeq
-    val fixedOut = SpanOps.dedupFromPairs(docs,
-        SpanOps.fingerprintPairs(docs, k, w))
-      .collect().map(_.toSeq).toSeq
-    assert(autoOut == fixedOut && autoOut.nonEmpty)
-    val survivors = autoOut.count(r => r(3).asInstanceOf[Boolean])
+    val out = SpanOps.winnowingDedup(docs).collect().map(_.toSeq).toSeq
+    assert(out.nonEmpty)
+    val survivors = out.count(r => r(3).asInstanceOf[Boolean])
     assert(survivors == 3, // one for cluster {1,2,3}, docs 4 and 5 solo
-      s"expected 3 survivors, got $survivors in $autoOut")
-  }
-
-  test("fingerprint pairs auto-k: collapses to oracled geometry when it fits, widens on low entropy") {
-    val (k, w) = (SpanOps.PairK, SpanOps.PairW)
-    // high-entropy corpus: k=24 volume fits the budget -> bit-equal
-    val run = ("zqxjv" * 8).take(k + w - 1)
-    val hi = Seq(
-      (1L, s"first document body with the planted $run and a tail"),
-      (2L, s"second unrelated prefix then $run closing words here"),
-      (3L, "entirely distinct content sharing no long runs with others x"))
-      .toDF("doc_id", "s")
-    assert(SpanOps.fingerprintPairsAuto(hi).collect().map(_.toSeq).toSeq ==
-      SpanOps.fingerprintPairs(hi, k, w).collect().map(_.toSeq).toSeq)
-    // commonplace-run corpus: every doc carries the SAME 39-char run
-    // (= k+w-1, so k=24 GUARANTEES all C(40,2) pairs — the background-
-    // collision regime Part 17 measured), flanked by per-doc unique
-    // text. Runs of 39 < k'+w-1 stop being guaranteed at k' >= 32 and
-    // can't even share a gram at k' >= 40, so the ladder must settle
-    // on a width where the pair volume fits the budget.
-    val common = ("shared commonplace run body pad" * 2).take(k + w - 1)
-    val salad = (1L to 40L).map { i =>
-      val u = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"salt$i".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      (i, s"$u $common ${u.reverse}")
-    }.toDF("doc_id", "s")
-    val nLow = SpanOps.fingerprintPairsAuto(salad).count()
-    val nFixed = SpanOps.fingerprintPairs(salad, k, w).count()
-    assert(nFixed == 40L * 39 / 2, s"fixed k drowns: $nFixed")
-    assert(nLow < nFixed, s"auto must widen k: $nLow vs $nFixed")
-    assert(nLow <= (SpanOps.AutoPairsPerDoc * 40).toLong,
-      s"auto result must fit the per-doc budget: $nLow")
+      s"expected 3 survivors, got $survivors in $out")
   }
 }

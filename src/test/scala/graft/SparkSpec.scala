@@ -16,4 +16,11 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sfDir(sf: String = "0.001"): String = s"/root/testdata/sf$sf"
+
+  /** `body` with the session conf `key` set to `value`, restored after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

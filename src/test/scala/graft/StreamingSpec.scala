@@ -5,56 +5,33 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.{StreamOps, Streaming}
 
+object StreamingSpec {
+  /** One event row as a MemoryStream feeds it. */
+  case class Event(event_id: Long, ts: Timestamp, user_id: Long,
+    event_type: String, value: Double)
+}
+
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+  import StreamingSpec.Event
 
   private def ts(minute: Long): Timestamp =
     new Timestamp(1700000000000L + minute * 60000L)
 
   private val sample = Seq(
-    Streaming.Event(1L, ts(0), 7L, "view", 1.0),
-    Streaming.Event(2L, ts(10), 7L, "view", 2.0),
-    Streaming.Event(3L, ts(70), 7L, "click", 3.0), // 60-min gap → new session
-    Streaming.Event(4L, ts(75), 8L, "view", 4.0),
-    Streaming.Event(5L, ts(130), 7L, "view", 5.0), // another gap
+    Event(1L, ts(0), 7L, "view", 1.0),
+    Event(2L, ts(10), 7L, "view", 2.0),
+    Event(3L, ts(70), 7L, "click", 3.0), // 60-min gap → new session
+    Event(4L, ts(75), 8L, "view", 4.0),
+    Event(5L, ts(130), 7L, "view", 5.0), // another gap
   )
-
-  test("streaming windowed agg matches the batch plan on the same data") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Streaming.Event]
-    ms.addData(sample)
-    val q = Streaming.windowedAgg(ms.toDF())
-      .writeStream.format("memory").queryName("wagg")
-      .outputMode("append").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    // append mode holds back windows until the watermark passes; drive
-    // the watermark forward with a late sentinel batch
-    val ms2 = MemoryStream[Streaming.Event]
-    ms2.addData(sample)
-    ms2.addData(Seq(Streaming.Event(99L, ts(600), 9L, "view", 0.0)))
-    val q2 = Streaming.windowedAgg(ms2.toDF())
-      .writeStream.format("memory").queryName("wagg2")
-      .outputMode("append").start()
-    try { q2.processAllAvailable() } finally { q2.stop() }
-    val got = spark.table("wagg2")
-      .select("bucket", "event_type", "n", "total").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val want = sample.toDF()
-      .withColumn("bucket", floor(unix_millis(col("ts")) / lit(3600000.0)).cast("long"))
-      .groupBy("bucket", "event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(want.subsetOf(got))
-  }
 
   test("streaming hopping windows match the batch explode on closed windows") {
     implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Streaming.Event]
+    val ms = MemoryStream[Event]
     ms.addData(sample)
     // sentinel far in the future closes every sample window
-    ms.addData(Seq(Streaming.Event(99L, ts(6000), 9L, "view", 0.0)))
+    ms.addData(Seq(Event(99L, ts(6000), 9L, "view", 0.0)))
     val q = Streaming.hoppingCounts(ms.toDF())
       .writeStream.format("memory").queryName("hop")
       .outputMode("append").start()
@@ -70,24 +47,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("stateful sessionization emits gap-closed sessions") {
-    implicit val s = spark
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Streaming.Event]
-    ms.addData(sample)
-    val q = Streaming.sessionize(ms.toDS(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-      .writeStream.format("memory").queryName("sess")
-      .outputMode("append").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val rows = spark.table("sess").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_id"),
-        r.getAs[Long]("n_events"))).toSet
-    // user 7: sessions 1 (events 1,2) and 2 (event 3) closed by gaps;
-    // session 3 (event 5) and user 8's session stay open (no emission)
-    assert(rows == Set((7L, 1L, 2L), (7L, 2L, 1L)))
-  }
-
   test("batch sessionization q33 segments by the 30-minute gap") {
     val df = StreamOps.q33Sessionization(spark, sfDir())
     val bad = df.filter(col("n_events") < 1).count()
@@ -98,80 +57,20 @@ class StreamingSpec extends SparkSpec {
     assert(firstIds == 0)
   }
 
-  test("streaming distinct users approximates the exact batch count") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Streaming.Event]
-    // 40 users in one bucket + a watermark-driving sentinel far ahead
-    val burst = (1 to 40).map(i =>
-      Streaming.Event(i.toLong, ts(i % 30), i.toLong % 40, "view", 1.0))
-    ms.addData(burst)
-    ms.addData(Seq(Streaming.Event(99L, ts(600), 9L, "view", 0.0)))
-    val q = Streaming.windowedUsers(ms.toDF())
-      .writeStream.format("memory").queryName("wusers")
-      .outputMode("append").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val got = spark.table("wusers").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bucket0 = ts(0).getTime / 3600000L
-    assert(got.contains(bucket0))
-    val approx = got(bucket0).toDouble
-    assert(math.abs(approx - 40.0) / 40.0 < 0.15,
-      s"HLL estimate $approx too far from exact 40")
-  }
-
-  test("session ids stay monotone across idle-timeout flushes") {
-    val gap = StreamOps.SessionGapUs
-    var st = Streaming.SessionState(0L, 0L, Long.MinValue, Long.MinValue)
-    // first event opens session 1
-    st = Streaming.step(7L, st, 1000L, gap)._2
-    assert(st.sessionId == 1L && st.nEvents == 1L)
-    // idle timeout: the handler flushes and keeps the counter
-    // (nEvents = 0 sentinel) — mirror what the timeout branch does
-    st = st.copy(nEvents = 0L)
-    // next event must continue at session 2, not restart at 1
-    val (out, st2) = Streaming.step(7L, st, 2000L, gap)
-    assert(out.isEmpty)
-    assert(st2.sessionId == 2L && st2.nEvents == 1L)
-    // gap-close inside a batch also increments monotonically
-    val (flushed, st3) = Streaming.step(7L, st2, 2000L + gap + 1, gap)
-    assert(flushed.exists(_.session_id == 2L))
-    assert(st3.sessionId == 3L)
-  }
-
-  test("stream dedup drops redelivered event ids within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Streaming.Event]
-    // event 2 redelivered twice (identical and with a drifted ts) —
-    // at-least-once delivery; event 99 drives the watermark forward
-    ms.addData(sample)
-    ms.addData(Seq(
-      Streaming.Event(2L, ts(10), 7L, "view", 2.0),
-      Streaming.Event(2L, ts(11), 7L, "view", 2.0),
-      Streaming.Event(99L, ts(600), 9L, "view", 0.0)))
-    val q = Streaming.dedupStream(ms.toDF())
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val ids = spark.table("dedup").collect().map(_.getAs[Long]("event_id"))
-    assert(ids.length == ids.distinct.length, "duplicate event_id survived")
-    assert(ids.count(_ == 2L) == 1)
-    assert(sample.map(_.event_id).toSet.subsetOf(ids.toSet))
-  }
-
   test("stream-stream join matches right events within the hour horizon") {
     implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Streaming.Event]
-    val clicks = MemoryStream[Streaming.Event]
+    val views = MemoryStream[Event]
+    val clicks = MemoryStream[Event]
     views.addData(Seq(
-      Streaming.Event(1L, ts(0), 7L, "view", 1.0),
-      Streaming.Event(2L, ts(5), 8L, "view", 1.0)))
+      Event(1L, ts(0), 7L, "view", 1.0),
+      Event(2L, ts(5), 8L, "view", 1.0)))
     clicks.addData(Seq(
-      Streaming.Event(10L, ts(30), 7L, "click", 1.0),  // within horizon
-      Streaming.Event(11L, ts(120), 7L, "click", 1.0), // past the hour
-      Streaming.Event(12L, ts(20), 9L, "click", 1.0))) // other user
+      Event(10L, ts(30), 7L, "click", 1.0),  // within horizon
+      Event(11L, ts(120), 7L, "click", 1.0), // past the hour
+      Event(12L, ts(20), 9L, "click", 1.0))) // other user
     // watermark-driving sentinels on both sides
-    views.addData(Seq(Streaming.Event(98L, ts(600), 5L, "view", 0.0)))
-    clicks.addData(Seq(Streaming.Event(99L, ts(600), 6L, "click", 0.0)))
+    views.addData(Seq(Event(98L, ts(600), 5L, "view", 0.0)))
+    clicks.addData(Seq(Event(99L, ts(600), 6L, "click", 0.0)))
     val q = Streaming.streamStreamJoin(views.toDF(), clicks.toDF())
       .writeStream.format("memory").queryName("ssjoin")
       .outputMode("append").start()
@@ -227,12 +126,12 @@ class StreamingSpec extends SparkSpec {
 
   test("S8 hll sketch: streaming emission converges to the batch answer") {
     implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[Streaming.Event]
+    val ms = MemoryStream[Event]
     val burst = (1 to 40).map(i =>
-      Streaming.Event(i.toLong, ts(i % 30), i.toLong % 25, "view", 1.0))
+      Event(i.toLong, ts(i % 30), i.toLong % 25, "view", 1.0))
     ms.addData(burst)
     // watermark-driving sentinel far ahead closes the first window
-    ms.addData(Seq(Streaming.Event(99L, ts(600), 9L, "view", 0.0)))
+    ms.addData(Seq(Event(99L, ts(600), 9L, "view", 0.0)))
     val q = Streaming.hllWindowedUsers(ms.toDF())
       .writeStream.format("memory").queryName("hllusers")
       .outputMode("append").start()

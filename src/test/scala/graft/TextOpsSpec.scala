@@ -40,38 +40,6 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
-  test("q21/q22 auto banding: suite-scale collapse + derived-r recall") {
-    import TextOps.{autoRank, AutoBgJ}
-    // calibration: at the suite's sf0.1 corpus (n = 5000) the derived
-    // geometry IS the oracled fixed geometry — the auto forms
-    // collapse to q21/q22 exactly there (oracle rows unchanged)
-    assert(autoRank(5000, 25, AutoBgJ) == 5, "q21 auto must collapse at sf0.1")
-    assert(autoRank(5000, 100, AutoBgJ) == 4, "q22 auto must collapse at sf0.1")
-    // each ÷jBg growth in n adds ~one lane (the linear-candidates
-    // invariant); 10× the sf0.1 corpus → +2 lanes for jBg = 0.3
-    assert(autoRank(50000, 25, AutoBgJ) == 7)
-    assert(autoRank(50000, 100, AutoBgJ) == 6)
-    assert(autoRank(1, 25, AutoBgJ) == 1, "degenerate corpora floor at r = 1")
-    // behavioral collapse: with perDoc calibrated so THIS corpus
-    // (n = 500) derives the fixed r, auto == fixed bit-for-bit
-    val d = TextOps.docs(spark, sfDir())
-    assert(autoRank(500, 3, AutoBgJ) == 5)
-    assert(TextOps.ngramJaccardAuto(d, perDoc = 3).collect().toSeq ==
-      TextOps.q21NgramJaccard(spark, sfDir()).collect().toSeq)
-    assert(autoRank(500, 10, AutoBgJ) == 4)
-    assert(TextOps.minhashAuto(d, perDoc = 10).collect().toSeq ==
-      TextOps.q22DedupMinhash(spark, sfDir()).collect().toSeq)
-    // at default calibration the small corpus derives a SHORTER band
-    // (more candidates); verification is exact either way, so the
-    // auto forms must still clear the brute-force recall bar
-    val truth = bruteForceJaccardPairs(0.5, sfDir())
-    for (auto <- Seq(TextOps.ngramJaccardAuto(d), TextOps.minhashAuto(d))) {
-      val got = auto.select("a", "b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert((truth & got).size.toDouble / truth.size >= 0.9)
-    }
-  }
-
   test("q20 exact-dedup groups cover every document") {
     val total = TextOps.q20DedupExact(spark, sfDir()).agg(
       org.apache.spark.sql.functions.sum("dup_count")).first().getLong(0)
@@ -220,7 +188,7 @@ class TextOpsSpec extends SparkSpec {
     // and distance-2 docs share 2/4 (J ≈ 0.35 < θ): every verified
     // component is a PATH — min-label propagation's high-diameter
     // hazard, the exact structure the ccAuto routing exists for
-    // (VERDICT r12 next-round #2; BENCH_SCALING Parts 14/18).
+    // (BENCH_SCALING Parts 14/18).
     // hashed tokens: every 5-gram depends on the whole (chain, block)
     // identity, so cross-chain/cross-block gram collisions vanish
     // (indexed tokens like "w13b000y00" share their suffix grams
