@@ -22,10 +22,9 @@ object Bench {
     * `telemetry` (name → [[BenchTelemetry.Snap]] json) is emitted as a
     * sibling `"telemetry"` object when present — the per-query
     * stage/shuffle/spill/GC/load capture that makes a flagged run
-    * carry its own diagnosis (VERDICT r10 #1). `filter`, when set,
-    * stamps the line as a PARTIAL run (`"filtered":[...]`) so a
-    * bench_filtered.json artifact can never masquerade as a suite
-    * total (VERDICT r10 #6). */
+    * carry its own diagnosis. `filter`, when set, stamps the line as a
+    * PARTIAL run (`"filtered":[...]`) so a bench_filtered.json
+    * artifact can never masquerade as a suite total. */
   private[graft] def fullLine(
       results: Seq[(String, Double, Boolean)], sfDir: String,
       telemetry: Map[String, String] = Map.empty,

@@ -5,11 +5,10 @@ import java.lang.management.ManagementFactory
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.Success
 
-/** Per-query execution telemetry for [[Bench]] (VERDICT r10 #1: make
-  * the bench self-diagnosing). Four driver rounds in a row an
-  * in-suite spike on the candidate-explosion queries (q99/q22/q229)
-  * had to be adjudicated by after-the-fact isolated re-measures
-  * because the bench recorded wall time only. This listener captures,
+/** Per-query execution telemetry for [[Bench]], so the bench
+  * diagnoses itself: an in-suite spike on a candidate-explosion query
+  * (q99/q22/q229) is explained by the run that shows it, not by an
+  * after-the-fact isolated re-measure of wall time. This listener captures,
   * per query: stage/task counts, shuffle read/write rows+bytes, spill
   * bytes, executor GC/run/CPU time, peak execution memory and failed
   * tasks — plus box-level context (1-min load average, system vs

@@ -2,12 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
   PartitioningCollection, SinglePartition}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, StatsBridge}
@@ -49,6 +51,16 @@ import org.apache.spark.sql.types._
   * plain first, to measure the bytes its partition count comes from.
   * Other cuts report what Spark's own checkpoint gives them: no
   * partitioning, for a plan AQE ran.
+  *
+  * A cut's blocks have one owner: the innermost open [[scoped]] body
+  * when the cut is made. When that body returns, its scope frees every
+  * cut it owns that the result does not read ([[Scope.retain]]) and
+  * hands the rest to the enclosing scope; a cut made with no scope
+  * open, or handed out of the outermost one, lives until
+  * [[releaseAll]]. Operator code frees nothing by hand: each
+  * registered query runs in a scope ([[SparkEntry.queries]]), each
+  * [[Superstep]] loop is one, and a phase whose cuts must die before
+  * more eager work runs is wrapped in its own.
   */
 object Checkpoints {
 
@@ -58,6 +70,72 @@ object Checkpoints {
 
   /** Observation names must be unique within a plan. */
   private val cutIds = new AtomicLong
+
+  /** The cuts one [[scoped]] body made (or took over from the scopes
+    * nested in it) and has not freed. */
+  private[graft] final class Scope private[Checkpoints] {
+    private[Checkpoints] var owned = Vector.empty[RDD[_]]
+
+    /** Free every cut this scope owns that `live` does not read
+      * ([[reads]]); the rest stay owned. */
+    def retain(live: Any): Unit = {
+      val ids = reads(live)
+      val (keep, dead) = owned.partition(r => ids.contains(r.id))
+      dead.foreach(_.unpersist(blocking = false))
+      owned = keep
+    }
+  }
+
+  /** The open scopes of this thread, innermost first. */
+  private val open = ThreadLocal.withInitial[List[Scope]](() => Nil)
+
+  /** `body` in a new scope: every cut made while it runs is the
+    * scope's. When it returns, the cuts its result does not read are
+    * freed and the rest handed to the enclosing scope (with none open,
+    * left for [[releaseAll]]). If it throws, all of them are handed on. */
+  def scoped[T](body: => T): T = scope(_ => body)
+
+  /** [[scoped]], with the scope handed to `body`, which may
+    * [[Scope.retain]] what it still needs partway through (a loop, at
+    * the end of each round). */
+  private[graft] def scope[T](body: Scope => T): T = {
+    val s = new Scope
+    val outer = open.get
+    open.set(s :: outer)
+    try {
+      val out = body(s)
+      s.retain(out)
+      out
+    } finally {
+      open.set(outer)
+      outer.headOption.foreach(_.owned ++= s.owned)
+    }
+  }
+
+  /** Ids of the RDDs `live` reads: for every Dataset inside it
+    * (tuples, case classes, collections), the RDD of each `LogicalRDD`
+    * and `ExternalRDD` leaf of its analyzed plan and of the plans of
+    * its subqueries, with those RDDs' lineage. A cut read through a
+    * projection, a union or a subquery is read; so is one read only
+    * through the lineage of a frame built over an RDD
+    * (`createDataFrame(cut.rdd…)`). */
+  private[graft] def reads(live: Any): Set[Int] = {
+    val seen = mutable.Set.empty[Int]
+    def lineage(rdd: RDD[_]): Unit =
+      if (seen.add(rdd.id)) rdd.dependencies.foreach(d => lineage(d.rdd))
+    def walk(v: Any): Unit = v match {
+      case ds: Dataset[_] => ds.queryExecution.analyzed.foreachWithSubqueries {
+        case lr: LogicalRDD => lineage(lr.rdd)
+        case er: ExternalRDD[_] => lineage(er.rdd)
+        case _ =>
+      }
+      case xs: Iterable[_] => xs.foreach(walk)
+      case p: Product => p.productIterator.foreach(walk)
+      case _ =>
+    }
+    walk(live)
+    seen.toSet
+  }
 
   /** Materialize `df` and cut its lineage, honoring [[ConfKey]]. If
     * the context already has a different checkpoint dir, the
@@ -144,6 +222,10 @@ object Checkpoints {
       if (h.n == 1) df.coalesce(1) else df.repartition(h.n, col(h.key)))
     val observed = placed.observe(name, metrics.head, metrics.tail: _*)
     val c = materialize(observed)
+    c.queryExecution.analyzed match {
+      case lr: LogicalRDD => open.get.headOption.foreach(_.owned :+= lr.rdd)
+      case _ =>
+    }
     // read from the plan that just ran: the checkpoint action executes
     // `observed`'s own QueryExecution, so its metric collectors are
     // filled when the action returns
@@ -232,34 +314,10 @@ object Checkpoints {
       case _ => cut(df)
     }
 
-  /** Free the cached blocks behind checkpointed DataFrames that are no
-    * longer reachable (superseded loop iterations). Without this an
-    * iterative algorithm retains every iteration's blocks for the
-    * lifetime of the session — at cluster scale that is a memory leak
-    * proportional to iterations × frontier size, and even locally the
-    * accumulated deserialized blocks degrade GC across a long session.
-    * Safe on aliased/released inputs: unpersist is idempotent.
-    *
-    * Only the frame's OWN checkpoint (the plan root) is freed: a frame
-    * merely derived from a checkpoint does not own its ancestor's
-    * blocks, and unpersisting every LogicalRDD reachable in the plan
-    * would silently free still-needed ancestors (for localCheckpoint,
-    * destroying the only copy). Passing a derived frame is a no-op
-    * with a warning — release the cut frame itself instead. */
-  def release(dfs: DataFrame*): Unit =
-    dfs.filter(_ != null).foreach { df =>
-      df.queryExecution.analyzed match {
-        case lr: LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case other => log.warn(
-          s"release() called on a non-checkpoint plan root " +
-            s"(${other.nodeName}); nothing freed — pass the cut frame")
-      }
-    }
-
   /** Drop every persisted RDD and SQL-cached plan in the session —
     * end-of-query hygiene for Verify/Bench, where queries are
-    * independent and nothing may carry blocks into the next one. */
+    * independent and nothing may carry blocks into the next one: it
+    * frees the cuts a query's answer read, which its scope handed out. */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sqlContext.clearCache()
     spark.sparkContext.getPersistentRDDs.values

@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   *     position for free — no window, no exchange. Only the LOW 33
   *     bits (the local index) are read from the mono encoding; the
   *     partition id comes from the public function, never from
-  *     shifting the mono value (ADVICE r13 — the high-bits layout is
-  *     an implementation detail).
+  *     shifting the mono value (its high-bits layout is an
+  *     implementation detail).
   *  3. per-partition counts → cumulative offsets (one tiny agg; the
   *     offsets relation is #partitions rows, broadcast back).
   *
@@ -57,16 +57,14 @@ object Ordinals {
       rankCol: String, first: Long = 1L): DataFrame =
     denseByWithMeta(df, sortCols, rankCol, first)._1
 
-  /** [[denseBy]] plus the internal lineage-cut frame (so iterative
-    * callers can [[Checkpoints.release]] the superseded round's
-    * blocks — the cut is otherwise unreachable and would accumulate
-    * per iteration) and the EXACT row count (free: the per-partition
+  /** [[denseBy]] plus the EXACT row count (free: the per-partition
     * counts are already collected for the offsets, so callers that
     * need |df| — e.g. a doubling loop's convergence scalar — skip a
-    * count job). */
+    * count job). The ranked frame reads an internal cut, which lives
+    * as long as the caller's scope reads the ranks. */
   def denseByWithMeta(df: DataFrame,
       sortCols: Seq[org.apache.spark.sql.Column], rankCol: String,
-      first: Long = 1L): (DataFrame, DataFrame, Long) = {
+      first: Long = 1L): (DataFrame, Long) = {
     val mono = "__graft_ord_mono"
     val pid = "__graft_ord_pid"
     val cutFrame = Checkpoints.cut(
@@ -93,7 +91,7 @@ object Ordinals {
       .withColumn(rankCol,
         col("__off") + (col(mono).bitwiseAND(lit((1L << 33) - 1))) + first)
       .drop(mono, pid, "__off")
-    (ranked, cutFrame, counts.map(_._2).sum)
+    (ranked, counts.map(_._2).sum)
   }
 
   /** Exact `ntile(n)` over a global total order WITHOUT the
@@ -108,7 +106,7 @@ object Ordinals {
       n: Int, bucketCol: String): DataFrame = {
     require(n >= 1, s"ntile needs n >= 1, got $n")
     val rk = "__graft_ntile_rank"
-    val (ranked, _, total) = denseByWithMeta(df, sortCols, rk)
+    val (ranked, total) = denseByWithMeta(df, sortCols, rk)
     ranked.withColumn(bucketCol, ntileOfRank(rk, total, n)).drop(rk)
   }
 

@@ -9,8 +9,8 @@ object Partitioning {
     * partitions than the default parallelism — the local
     * one-small-parquet-file case, where a downstream per-row JVM loop
     * (gram hashing, winnowing selection) would otherwise run on 1–2
-    * scan tasks while the rest of the machine idles (guide §2.5,
-    * input-side parallelism). Scale-adaptive, not a tuned constant:
+    * scan tasks while the rest of the machine idles (input-side
+    * parallelism). Scale-adaptive, not a tuned constant:
     * at production scale a corpus scan already carries ≥ parallelism
     * partitions and this is the identity — the round-robin exchange
     * (and its determinism sort) is only ever paid on inputs small

@@ -17,9 +17,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q05DegreeCentrality(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each runs in
+    * its own [[Checkpoints.scoped]] body: when it returns, every cut it
+    * made that the answer does not read is freed, and the rest live
+    * until the caller's scope ends or [[Checkpoints.releaseAll]]. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ TypedEdges.queries ++ AsofJoin.queries ++
+    (Relational.queries ++ TypedEdges.queries ++ AsofJoin.queries ++
       RangeJoin.queries ++ JsonOps.queries ++ EventOps.queries ++
       Profile.queries ++ Olap.queries ++ Layout.queries ++
       SkewJoin.queries ++
@@ -43,7 +46,9 @@ object SparkEntry {
       SourceOps.queries ++ EditOps.queries ++ SuffixArray.queries ++
       Classify.queries ++ TermOps.queries ++
       Similarity.queries ++ KMeans.queries ++ Prod2Vec.queries ++
-      StreamOps.queries
+      StreamOps.queries).map { case (name, q) =>
+        name -> ((spark: SparkSession, dir: String) => Checkpoints.scoped(q(spark, dir)))
+      }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,9 +1,6 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-import scala.util.DynamicVariable
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.internal.SQLConf
 import graft.Checkpoints.Hashed
 
@@ -13,12 +10,14 @@ import graft.Checkpoints.Hashed
   *
   *  - every frame a round materializes goes through [[Round.cut]]
   *    (i.e. [[Checkpoints.cut]]), so plans stay flat at any depth;
-  *  - at the end of each round, every frame the loop cut that the new
-  *    state no longer reads is released — superseded rounds, aliased
+  *  - a loop is one [[Checkpoints.scope]]: at the end of each round
+  *    (round 0 included) it frees every cut made since the loop began
+  *    that the new state does not read — superseded rounds, aliased
   *    seeds (a semi-naive frontier that starts as the visited set) and
-  *    one-shot per-round intermediates alike. "Reads" is structural:
-  *    a frame keeps alive exactly the cut roots its logical plan scans,
-  *    so a projection or union view over cut frames keeps its parts;
+  *    one-shot per-round intermediates alike — and when it returns,
+  *    every one its result does not read. "Reads" is structural: a frame keeps alive the
+  *    cuts its logical plan scans, so a projection or union view over
+  *    cut frames keeps its parts;
   *  - the round counter, and the stop rule: a change count of 0 or the
   *    caller's round budget;
   *  - the capped union-view accumulator ([[UnionView]]).
@@ -31,10 +30,10 @@ import graft.Checkpoints.Hashed
   * ([[Checkpoints.rowCount]], [[Round.cut]] with a `where`) instead of
   * running a `count()`.
   *
-  * Loops nest: when a loop runs inside another loop's round (SCC's
-  * color fixpoint inside its peel round, Borůvka's relabel CC), the
-  * frames it hands back become the enclosing round's, freed once the
-  * enclosing state stops reading them.
+  * Loops nest as scopes do: when a loop runs inside another loop's
+  * round (SCC's color fixpoint inside its peel round, Borůvka's
+  * relabel CC), the cuts its result reads pass to the enclosing loop,
+  * which frees them once its state stops reading them.
   *
   * A keyed loop ([[loopOn]]) declares its partition key, as Pregelix
   * co-partitions vertex state with the edges by vertex id. Its
@@ -74,28 +73,13 @@ private[graft] object Superstep {
     * cut every frame it materializes goes through — in a keyed loop
     * ([[loopOn]]), hash-partitioned on the loop's key. */
   final class Round private[Superstep] (val n: Int, keyed: Option[Hashed]) {
-    private[Superstep] val cuts = ArrayBuffer.empty[DataFrame]
-
-    private def own(c: DataFrame): DataFrame = {
-      cuts += c
-      c
-    }
-
     def cut(df: DataFrame): DataFrame =
-      own(keyed.fold(Checkpoints.cut(df))(Checkpoints.cut(df, _)))
+      keyed.fold(Checkpoints.cut(df))(Checkpoints.cut(df, _))
 
     /** [[cut]] that also returns how many of the cut rows match
       * `where`, counted by the cut's own job. */
-    def cut(df: DataFrame, where: Column): (DataFrame, Long) = {
-      val (c, n) = keyed.fold(Checkpoints.cut(df, where))(Checkpoints.cut(df, where, _))
-      (own(c), n)
-    }
-
-    /** `rel` cut as the loop-invariant relation of a keyed loop that
-      * runs inside this round, hash-partitioned on `by` as
-      * [[Superstep.coPartition]] partitions it. */
-    def coPartition(rel: DataFrame, by: String): DataFrame =
-      own(Superstep.coPartition(rel, by))
+    def cut(df: DataFrame, where: Column): (DataFrame, Long) =
+      keyed.fold(Checkpoints.cut(df, where))(Checkpoints.cut(df, where, _))
   }
 
   /** An accumulator kept as a union VIEW over its parts (cut frames or
@@ -118,23 +102,6 @@ private[graft] object Superstep {
   /** What a loop hands back: its result, the number of steps run, and
     * whether it stopped on a change count of 0 (not on the budget). */
   final case class Run[R](out: R, rounds: Int, converged: Boolean)
-
-  private val enclosing = new DynamicVariable[Option[Round]](None)
-
-  /** RDD ids of the cut roots `state` reads: every LogicalRDD leaf of
-    * every Dataset inside it (tuples, case classes, collections). */
-  private def reads(state: Any): Set[Int] = state match {
-    case df: Dataset[_] =>
-      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
-    case xs: Iterable[_] => xs.iterator.flatMap(reads).toSet
-    case p: Product => p.productIterator.flatMap(reads).toSet
-    case _ => Set.empty
-  }
-
-  private def rddId(cut: DataFrame): Int = cut.queryExecution.analyzed match {
-    case lr: LogicalRDD => lr.rdd.id
-    case _ => -1
-  }
 
   /** Partition count of a keyed loop over the cut `rel`: the count
     * AQE's shuffle-partition coalescing targets for a shuffle of the
@@ -177,77 +144,59 @@ private[graft] object Superstep {
     * placed ([[Checkpoints.place]]) into the partition count they give:
     * at one partition that cut is re-rooted in place when its rows
     * already lie in one, else it is cut again, partitioned, and the
-    * first cut released. A cut that already reports its rows clustered
-    * on `by` ([[Checkpoints.partitionsOn]]) is returned as is: a caller
-    * that reuses the relation after the loop cuts it once, partitioned,
-    * where it builds it. */
+    * first cut freed as it returns. A cut that already reports its
+    * rows clustered on `by` ([[Checkpoints.partitionsOn]]) is returned
+    * as is: a caller that reuses the relation after the loop cuts it
+    * once, partitioned, where it builds it. */
   def coPartition(rel: DataFrame, by: String): DataFrame =
     if (Checkpoints.partitionsOn(rel, by).isDefined) rel
-    else {
+    else Checkpoints.scoped {
       val c = Checkpoints.cutOnce(rel)
-      val placed = Checkpoints.place(c, Hashed(by, partitions(c)))
-      if (rddId(c) != rddId(rel) && rddId(placed) != rddId(c)) Checkpoints.release(c)
-      placed
+      Checkpoints.place(c, Hashed(by, partitions(c)))
     }
 
   /** The loop. `init` builds the seed state in round 0 and reports its
     * change signal (0: nothing to do, no step runs); each step maps
     * the state to the next one plus the round's change count. Runs
-    * until a change count of 0 or `maxRounds` steps, then releases
-    * every frame the loop cut that `result` does not read. */
+    * until a change count of 0 or `maxRounds` steps. The loop is a
+    * [[Checkpoints.scope]]: each round, round 0 included, ends by
+    * freeing the cuts made in the loop that its state does not read,
+    * and the loop ends by freeing those `result` does not read. */
   def loop[S, R](maxRounds: Int)(init: Round => (S, Long))(
       step: (S, Round) => (S, Long))(result: S => R): Run[R] =
-    run(maxRounds, None, None)(init)(step)(result)
+    run(maxRounds, None)(init)(step)(result)
 
   /** A [[loop]] over state keyed by its column `key`, co-partitioned
     * with the loop-invariant relation `inv` on its column `by`: `inv`
     * is [[coPartition]]ed (a caller's co-partitioned cut is used as
-    * is, a cut made here is released with the loop), and every frame a
-    * round cuts is hash-partitioned on `key` into `inv`'s partition
-    * count. `step` reads the co-partitioned `inv` as its first
-    * argument. */
+    * is; a cut made here lives until the loop returns, freed then
+    * unless the result reads it), and every frame a round cuts is
+    * hash-partitioned on `key` into `inv`'s partition count. `step`
+    * reads the co-partitioned `inv` as its first argument. */
   def loopOn[S, R](inv: DataFrame, by: String, key: String, maxRounds: Int)(
       init: Round => (S, Long))(step: (DataFrame, S, Round) => (S, Long))(
-      result: S => R): Run[R] = {
+      result: S => R): Run[R] = Checkpoints.scoped {
     val e = coPartition(inv, by)
     val n = Checkpoints.partitionsOn(e, by).getOrElse(partitions(e))
-    run(maxRounds, Some(Hashed(key, n)), Some(e).filter(rddId(_) != rddId(inv)))(init)(
-      (s, r) => step(e, s, r))(result)
+    run(maxRounds, Some(Hashed(key, n)))(init)((s, r) => step(e, s, r))(result)
   }
 
-  /** [[loop]], its rounds cutting as `keyed`; `pinned` is a frame the
-    * loop made before round 0 and releases only with the loop. */
-  private def run[S, R](maxRounds: Int, keyed: Option[Hashed], pinned: Option[DataFrame])(
-      init: Round => (S, Long))(step: (S, Round) => (S, Long))(result: S => R): Run[R] = {
-    var owned = Vector.empty[DataFrame]
-    def inRound[T](r: Round)(body: => T): T = {
-      val out = enclosing.withValue(Some(r))(body)
-      owned ++= r.cuts
-      out
+  /** [[loop]], its rounds cutting as `keyed`. */
+  private def run[S, R](maxRounds: Int, keyed: Option[Hashed])(
+      init: Round => (S, Long))(step: (S, Round) => (S, Long))(result: S => R): Run[R] =
+    Checkpoints.scope { scope =>
+      var (state, changed) = init(new Round(0, keyed))
+      scope.retain(state)
+      var rounds = 0
+      while (changed != 0 && rounds < maxRounds) {
+        rounds += 1
+        val (next, c) = step(state, new Round(rounds, keyed))
+        scope.retain(next)
+        state = next
+        changed = c
+      }
+      Run(result(state), rounds, changed == 0)
     }
-    def retain(live: Any): Unit = {
-      val ids = reads(live)
-      val (keep, dead) = owned.partition(c => ids.contains(rddId(c)))
-      Checkpoints.release(dead: _*)
-      owned = keep
-    }
-    val r0 = new Round(0, keyed)
-    var (state, changed) = inRound(r0)(init(r0))
-    var rounds = 0
-    while (changed != 0 && rounds < maxRounds) {
-      rounds += 1
-      val r = new Round(rounds, keyed)
-      val (next, c) = inRound(r)(step(state, r))
-      retain(next)
-      state = next
-      changed = c
-    }
-    val out = result(state)
-    owned ++= pinned
-    retain(out)
-    enclosing.value.foreach(_.cuts ++= owned)
-    Run(out, rounds, changed == 0)
-  }
 
   /** Single-frame loop: the seed is cut, each step's frame is cut and
     * replaces the previous one, `changes(prev, next)` is the signal. */

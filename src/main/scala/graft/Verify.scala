@@ -21,15 +21,14 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // per-query outcome manifest: builder-side evidence of exactly
     // what this run produced (name → row count, or the error) — the
-    // diagnostic trail for rounds where the downstream oracle-compare
-    // artifact comes back empty while Verify itself ran green
-    // (CORRECTNESS_r11/r12 = `{}`, VERDICT r12 "What's wrong" #1).
+    // diagnostic trail for a run whose downstream oracle-compare
+    // artifact comes back empty while Verify itself ran green.
     val outcomes = scala.collection.mutable.LinkedHashMap[String, String]()
     // the manifest is rewritten after EVERY query, not once at the
     // end: its whole purpose is the diagnostic trail for runs that die
-    // mid-loop (driver OOM/kill — one plausible cause of the empty
-    // rounds), and a single end-of-run write would lose exactly the
-    // evidence those runs need (ADVICE r13)
+    // mid-loop (driver OOM/kill — one plausible cause of an empty
+    // compare), and a single end-of-run write would lose exactly the
+    // evidence those runs need
     def flushManifest(): Unit =
       Files.writeString(Paths.get(s"$outDir/manifest.json"),
         outcomes.map { case (k, v) => s"${jsonStr(k)}: $v" }

@@ -39,7 +39,7 @@ case class PhraseHits(child: Expression, phrases: Seq[String])
   require(phrases.forall(p => p.nonEmpty && !p.startsWith(" ") &&
     !p.endsWith(" ")), "phrases must be non-empty and trimmed")
   // a duplicated phrase would get two pattern ids and silently double
-  // its n_hits/n_terms contribution — a blocklist is a SET (ADVICE r9)
+  // its n_hits/n_terms contribution — a blocklist is a SET
   require(phrases.distinct.size == phrases.size,
     "duplicate phrases in blocklist")
 

@@ -35,8 +35,8 @@ case class PhraseRedact(child: Expression, phrases: Seq[String])
   require(phrases.forall(p => p.nonEmpty && !p.startsWith(" ") &&
     !p.endsWith(" ")), "phrases must be non-empty and trimmed")
   // coverage is idempotent under duplicates, so a duplicated list is
-  // harmless here — deduplicate silently rather than throw (ADVICE
-  // r10: the r9 hard require broke previously-valid callers).
+  // harmless here — deduplicate silently rather than throw, so a
+  // list that is valid elsewhere is valid here.
   // PhraseHits keeps its require: there duplicates would double-count.
   private val distinctPhrases: Seq[String] = phrases.distinct
 

@@ -159,8 +159,8 @@ object CharGrams {
   * intersects to 0 either way). One JVM loop per row: the exploded
   * alternative shuffles the corpus's full positioned-gram relation
   * through a distinct + collect_list just to rebuild a per-doc set
-  * that is a pure row-local function of the text (r15, guide §2.4 —
-  * the q241/q244 verify's gram arrays). */
+  * that is a pure row-local function of the text (the q241/q244
+  * verify's gram arrays). */
 case class DistinctGrams(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
 
@@ -204,9 +204,9 @@ object DistinctGrams {
   * Replaces the exploded formulation — positioned-gram explode →
   * corpus-wide hash exchange on doc_id → per-doc sort → O(w)-frame
   * window min → distinct — with one O(n) monotonic-deque pass per
-  * document and NO shuffle at all (r15, guide §2.4: the selection is
-  * a pure per-doc function; only the selected ~2/(w+1) density ever
-  * needs to leave the row). Output set is bit-identical: same
+  * document and NO shuffle at all (the selection is a pure per-doc
+  * function; only the selected ~2/(w+1) density ever needs to leave
+  * the row). Output set is bit-identical: same
   * composite arithmetic, same full-window rule, same distinct.
   *
   * Positions are 1-based and must stay under 2²⁰ for the composite's

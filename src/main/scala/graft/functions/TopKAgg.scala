@@ -110,8 +110,8 @@ object TopKAgg {
   * value wins, ties break toward the SMALLER payload — mirror a SQL
   * window with `ORDER BY v DESC, id ASC`. Output: array of {v, id}
   * structs, best first, where `id` KEEPS the payload's input type
-  * (ADVICE r13 — the earlier form cast every payload to LONG, which
-  * threw on string/date join keys and silently narrowed int ones).
+  * (a LONG cast would throw on string/date join keys and silently
+  * narrow int ones).
   * Payload may be any orderable type (the tie-break needs an order);
   * ties on non-atomic payloads follow Spark's interpreted ordering.
   * Null sort values and null payloads are skipped. */

@@ -16,16 +16,11 @@ import graft.{Checkpoints, Superstep, Tables}
   * shuffle partitioning reused across iterations, AQE free to
   * broadcast a shrinking frontier). Loop conditions only ever read
   * driver-side scalars (`count`), never row data. Each loop is one
-  * [[Superstep]] call: the kernel cuts every round's state, releases
+  * [[Superstep]] call: the kernel cuts every round's state, frees
   * what the round supersedes, counts rounds and stops; the code here
   * is only each algorithm's step and change signal.
   */
 object Algorithms {
-
-  /** Materialize the (tiny) edge list once per algorithm run so the
-    * lineitem-scale derivation isn't re-executed every iteration. */
-  private def checkpointedEdges(t: Tables): DataFrame =
-    TradeGraph.edges(t).select("src", "dst").pipe(Checkpoints.cut)
 
   // ---------------------------------------------------------------- q11
   /** k-hop neighborhood from a root: nodes reachable in ≤ k hops with
@@ -53,10 +48,7 @@ object Algorithms {
     }(_.union(_))
 
   def q11Khop(spark: SparkSession, dir: String): DataFrame = {
-    val e = checkpointedEdges(Tables(spark, dir))
-    val out = khop(e) // eager loop: e is consumed before this returns
-    Checkpoints.release(e)
-    out
+    khop(TradeGraph.cutEdges(Tables(spark, dir)))
   }
 
   // ---------------------------------------------------------------- q19
@@ -83,10 +75,7 @@ object Algorithms {
   }
 
   def q19DependencyChains(spark: SparkSession, dir: String): DataFrame = {
-    val e = checkpointedEdges(Tables(spark, dir))
-    val out = dependencyChains(e, 0L, 4) // eager: ends on a cut union
-    Checkpoints.release(e)
-    out
+    dependencyChains(TradeGraph.cutEdges(Tables(spark, dir)), 0L, 4)
   }
 
   /** Bounded cycle-guarded path enumeration (q19, q59): `seed` rows
@@ -118,9 +107,7 @@ object Algorithms {
     * NP-hard unbounded; the depth bound is the declared contract, as
     * in the reference's workaround. */
   def q66LongestChains(spark: SparkSession, dir: String): DataFrame = {
-    val e = checkpointedEdges(Tables(spark, dir))
-    val chains = dependencyChains(e, 0L, 4) // eager: ends on a cut union
-    Checkpoints.release(e)
+    val chains = dependencyChains(TradeGraph.cutEdges(Tables(spark, dir)), 0L, 4)
     val maxd = chains.agg(max(col("depth")).as("maxd"))
     chains.crossJoin(broadcast(maxd))
       .filter(col("depth") === col("maxd"))
@@ -143,22 +130,24 @@ object Algorithms {
     * the cost is proportional to the answer, not to the graph. */
   def q50AllShortestPaths(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = checkpointedEdges(Tables(spark, dir))
-    val da = bfs(e, Seq(0L).toDF("node"), "dist", Int.MaxValue)
-    val tgt = da.filter(col("node") =!= 0L)
-      .orderBy(col("dist").desc, col("node").desc).limit(1)
-      .select(col("node"), col("dist").as("plen"))
-      .pipe(Checkpoints.cut)
-    val rev = e.select(col("dst").as("src"), col("src").as("dst"))
-    val db = bfs(rev, tgt.select("node"), "dist", Int.MaxValue)
-    val dag = e
-      .join(da.select(col("node").as("src"), col("dist").as("ha")), "src")
-      .join(db.select(col("node").as("dst"), col("dist").as("hb")), "dst")
-      .crossJoin(broadcast(tgt.select(col("plen"))))
-      .filter(col("ha") + lit(1L) + col("hb") === col("plen"))
-      .select("src", "dst")
-      .pipe(Checkpoints.cut)
-    Checkpoints.release(da, db, e)
+    // the edges and both distance maps die once the DAG is cut
+    val (tgt, dag) = Checkpoints.scoped {
+      val e = TradeGraph.cutEdges(Tables(spark, dir))
+      val da = bfs(e, Seq(0L).toDF("node"), "dist", Int.MaxValue)
+      val tgt = da.filter(col("node") =!= 0L)
+        .orderBy(col("dist").desc, col("node").desc).limit(1)
+        .select(col("node"), col("dist").as("plen"))
+        .pipe(Checkpoints.cut)
+      val rev = e.select(col("dst").as("src"), col("src").as("dst"))
+      val db = bfs(rev, tgt.select("node"), "dist", Int.MaxValue)
+      (tgt, e
+        .join(da.select(col("node").as("src"), col("dist").as("ha")), "src")
+        .join(db.select(col("node").as("dst"), col("dist").as("hb")), "dst")
+        .crossJoin(broadcast(tgt.select(col("plen"))))
+        .filter(col("ha") + lit(1L) + col("hb") === col("plen"))
+        .select("src", "dst")
+        .pipe(Checkpoints.cut))
+    }
     // walk the DAG: all maximal walks from the root end at the target
     // at depth L simultaneously (da/db pin every step's distance)
     val walks = Superstep.loop(Int.MaxValue) { r =>
@@ -170,15 +159,13 @@ object Algorithms {
       val n = Checkpoints.rowCount(next)
       (if (n > 0) next else frontier, n)
     }(identity).out
-    Checkpoints.release(dag)
-    val out = walks
+    walks
       .join(tgt.select(col("node").as("leaf")), Seq("leaf"), "left_semi")
       .select(
         expr("array_join(transform(path, x -> cast(x as string)), '->')")
           .as("path_str"),
         (size(col("path")) - 1).cast("long").as("hops"))
       .orderBy("path_str")
-    out
   }
 
   // ---------------------------------------------------------------- q59
@@ -193,16 +180,12 @@ object Algorithms {
     * frontier as q19, keyed by first hop; counts aggregate per first
     * hop, so only (first, leaf) pairs leave the loop. */
   def q59SubdepPathCounts(spark: SparkSession, dir: String): DataFrame = {
-    val e = checkpointedEdges(Tables(spark, dir))
+    val e = TradeGraph.cutEdges(Tables(spark, dir))
     val seed = e.filter(col("src") === 0L)
       .select(col("dst").as("first"), col("dst").as("leaf"),
         array(lit(0L), col("dst")).as("path"))
     val pairs = guardedPaths(e, seed, 4)((frontier, _) => frontier.select("first", "leaf"))
-    // materialize the first-hop list before releasing e — the final
-    // join reads it lazily, and a released localCheckpoint is gone
-    val firsts = Checkpoints.cut(
-      e.filter(col("src") === 0L).select(col("dst").as("first")).distinct())
-    Checkpoints.release(e)
+    val firsts = e.filter(col("src") === 0L).select(col("dst").as("first")).distinct()
     val counts = pairs.groupBy("first")
       .agg(count(lit(1)).as("n_paths"), countDistinct(col("leaf")).as("n_distinct"))
     firsts
@@ -267,8 +250,6 @@ object Algorithms {
       .join(perNode, Seq("node"), "left")
       .select(col("node"), coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .orderBy("node")
-    // und stays live for this lazy plan; Verify/Bench clear blocks
-    // per query
   }
 
   def q63TriangleCounts(spark: SparkSession, dir: String): DataFrame = {
@@ -300,9 +281,7 @@ object Algorithms {
   /** Reachable-set size per node (all nation nodes, zero included). */
   def q12TransitiveClosure(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val closure = transitiveClosure(e) // eager fixpoint
-    Checkpoints.release(e)
+    val closure = transitiveClosure(TradeGraph.cutEdges(t))
     val reach = closure.groupBy("src").agg(count(lit(1)).as("n_reachable"))
     TradeGraph.nodes(t)
       .join(reach, col("node") === col("src"), "left")
@@ -335,12 +314,9 @@ object Algorithms {
     * O(V²) rows and is only sane on small graphs. */
   def q13ShortestPaths(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
     val sources = TradeGraph.nodes(t).select("node")
       .filter(pmod(col("node"), lit(5L)) === 0L)
-    val out = shortestPaths(e, Some(sources)) // eager loop
-    Checkpoints.release(e)
-    out
+    shortestPaths(TradeGraph.cutEdges(t), Some(sources))
   }
 
   // ---------------------------------------------------------------- q67
@@ -381,10 +357,7 @@ object Algorithms {
 
   def q67WeightedShortestPaths(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = TradeGraph.edges(t).pipe(Checkpoints.cut)
-    val out = weightedShortestPaths(e, 0L) // eager loop
-    Checkpoints.release(e)
-    out.orderBy("node")
+    weightedShortestPaths(Checkpoints.cut(TradeGraph.edges(t)), 0L).orderBy("node")
   }
 
   // ---------------------------------------------------------------- q14
@@ -447,13 +420,6 @@ object Algorithms {
     damped(nodes, edges.select(col("src"), col("dst")), count(lit(1)),
       col("r") / col("od"), r0, reset, iters)(changes)
 
-  /** Total L1 rank movement Σ|r_t − r_{t−1}| between two rounds. */
-  private[graft] def movement(prev: DataFrame, next: DataFrame): Double =
-    next
-      .join(prev.select(col("node").as("pn"), col("r").as("pr")),
-        col("node") === col("pn"))
-      .agg(sum(abs(col("r") - col("pr")))).first().getDouble(0)
-
   /** Personalized PageRank: teleport mass flows only to the source
     * set, so rank measures proximity-weighted reachability FROM the
     * sources — the recommendation/expansion primitive (Neo4j GDS
@@ -474,30 +440,6 @@ object Algorithms {
         pmod(col("node"), lit(5L)) === lit(0L), 5)
       .select(col("node"), round(col("r"), 6).as("ppr"))
       .orderBy("node")
-  }
-
-  /** PageRank to a TOLERANCE instead of a fixed budget — the scale
-    * control for the reference's 100-iteration usage
-    * (documentation/queries.md:180-182): stop as soon as the total L1
-    * rank movement Σ|r_t − r_{t−1}| drops to `tol`, so well-mixed
-    * graphs pay only the iterations they need. Returns (ranks,
-    * iterations run, final movement); raises when `maxIters` runs out
-    * with the movement still above `tol`. Movement contracts by ~the
-    * damping factor per iteration (spec-asserted on the co-purchase
-    * graph), so iterations ≈ log(tol)/log(0.85) — convergence is
-    * geometric, never budget-starved. Costs one extra join-agg scalar
-    * action per iteration vs [[pagerank]]. */
-  def pagerankConverged(nodes: DataFrame, edges: DataFrame, tol: Double,
-      maxIters: Int = 100): (DataFrame, Int, Double) = {
-    var delta = Double.MaxValue
-    val run = uniform(nodes, edges, lit(1.0), lit(0.15), maxIters) { (prev, next) =>
-      delta = movement(prev, next)
-      if (delta > tol) 1L else 0L
-    }
-    if (!run.converged)
-      throw new IllegalStateException(s"pagerankConverged: not converged after " +
-        s"${run.rounds} iterations — L1 movement $delta is still above tol $tol")
-    (run.out, run.rounds, delta)
   }
 
   def q14Pagerank(spark: SparkSession, dir: String): DataFrame = {
@@ -626,7 +568,7 @@ object Algorithms {
   def sccLabels(nodes: DataFrame, edges: DataFrame): DataFrame =
     Superstep.loop(Int.MaxValue) { r =>
       val remaining = r.cut(nodes.select("node"))
-      val live = r.coPartition(edges.select("src", "dst").distinct()
+      val live = Superstep.coPartition(edges.select("src", "dst").distinct()
         .filter(col("src") =!= col("dst")), "dst")
       ((remaining, live, null: DataFrame), Superstep.Unmeasured)
     } { case ((remaining, live, done), r) =>
@@ -649,7 +591,7 @@ object Algorithms {
         .select(col("node"), col("color").as("scc")))
       val nextDone = if (done == null) emitted else r.cut(done.union(emitted))
       val nextRemaining = r.cut(remaining.join(mark, Seq("node"), "left_anti"))
-      val nextLive = r.coPartition(live
+      val nextLive = Superstep.coPartition(live
         .join(mark.select(col("node").as("src")), Seq("src"), "left_anti")
         .join(mark.select(col("node").as("dst")), Seq("dst"), "left_anti")
         .select("src", "dst"), "dst")
@@ -676,10 +618,7 @@ object Algorithms {
 
   def q16Scc(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val out = sccLabels(TradeGraph.nodes(t).select("node"), e)
-    Checkpoints.release(e)
-    out.orderBy("node")
+    sccLabels(TradeGraph.nodes(t).select("node"), TradeGraph.cutEdges(t)).orderBy("node")
   }
 
   // ---------------------------------------------------------------- q65
@@ -690,9 +629,7 @@ object Algorithms {
     * partition count ≪ corpus; the heavy work is [[sccLabels]]. */
   def q65SccTopPartitions(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val s = sccLabels(TradeGraph.nodes(t).select("node"), e)
-    Checkpoints.release(e)
+    val s = sccLabels(TradeGraph.nodes(t).select("node"), TradeGraph.cutEdges(t))
     s.join(TradeGraph.nodes(t), Seq("node"))
       .groupBy("scc")
       .agg(count(lit(1)).as("n_members"),
@@ -738,19 +675,14 @@ object Algorithms {
         col("l") =!= col("pl"))
     }(identity).out
     val sizes = lab.groupBy("scc").agg(count(lit(1)).as("n_members"))
-    val out = lvl.join(sizes, Seq("scc"))
+    lvl.join(sizes, Seq("scc"))
       .select(col("scc"), col("l").as("level"), col("n_members"))
       .orderBy("level", "scc")
-    Checkpoints.release(ce)
-    out
   }
 
   def q149SccCondensation(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val out = sccCondensation(TradeGraph.nodes(t).select("node"), e)
-    Checkpoints.release(e)
-    out
+    sccCondensation(TradeGraph.nodes(t).select("node"), TradeGraph.cutEdges(t))
   }
 
   // ---------------------------------------------------------------- q17
@@ -769,7 +701,7 @@ object Algorithms {
 
   def q17PreferentialAttachment(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
+    val e = TradeGraph.cutEdges(t)
     val degAll = TradeGraph.nodes(t).select(col("node"))
       .join(e.select(col("src").as("n")).union(e.select(col("dst").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg")), col("node") === col("n"), "left")
@@ -794,7 +726,7 @@ object Algorithms {
     * many partners it has in turn (the reference's "deps of my deps"
     * breakdown). */
   def q18SubdepCounts(spark: SparkSession, dir: String): DataFrame = {
-    val e = checkpointedEdges(Tables(spark, dir))
+    val e = TradeGraph.cutEdges(Tables(spark, dir))
     e.filter(col("src") === 0L)
       .select(col("dst").as("dep"))
       .join(e.select(col("src").as("s2"), col("dst").as("d2")),
@@ -860,13 +792,10 @@ object Algorithms {
 
   def q113Hits(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val out = hits(TradeGraph.nodes(t).select("node"), e, HitsIters)
+    hits(TradeGraph.nodes(t).select("node"), TradeGraph.cutEdges(t), HitsIters)
       .select(col("node"), round(col("hub"), 6).as("hub"),
         round(col("auth"), 6).as("auth"))
       .orderBy("node")
-    Checkpoints.release(e)
-    out
   }
 
   // ---------------------------------------------------------------- q115
@@ -970,12 +899,9 @@ object Algorithms {
     * + a component-graph CC whose node set is the CURRENT component
     * count — O(log V) rounds, every step keyed, nothing quadratic.
     *
-    * OWNERSHIP: the returned forest is a union VIEW over ≤
-    * [[Superstep.UnionViewMaxWidth]] per-round checkpointed selections —
-    * Checkpoints.release() on the returned frame is a no-op; a
-    * long-lived session frees the backing blocks via
-    * Checkpoints.releaseAll (the suite's per-query hygiene), or by
-    * cutting the result itself and releasing that. */
+    * The returned forest is a union view over ≤
+    * [[Superstep.UnionViewMaxWidth]] per-round cuts; they live as long
+    * as the scope that reads the forest. */
   def boruvkaMst(und: DataFrame): DataFrame = {
     val e = und.select(col("a"), col("b"), col("w"))
     Superstep.loop(Int.MaxValue) { r =>

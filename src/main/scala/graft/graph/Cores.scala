@@ -32,9 +32,6 @@ import graft.{Checkpoints, Superstep, Tables}
   */
 object Cores {
 
-  private def checkpointedEdges(t: Tables): DataFrame =
-    TradeGraph.edges(t).select("src", "dst").pipe(Checkpoints.cut)
-
   /** Undirected simple neighbor relation (both directions, self-loops
     * dropped) — degree semantics shared by k-core and LPA. */
   private def simpleUndirected(t: Tables): DataFrame =
@@ -66,8 +63,6 @@ object Cores {
         coalesce(col("in_core"), lit(false)).as("in_core"),
         coalesce(col("core_deg"), lit(0L)).as("core_deg"))
       .orderBy("node")
-    // live stays referenced by this lazy plan; Verify/Bench clear
-    // blocks per query
   }
 
   /** Iterative peel to fixpoint (k-core, k-truss): each round keeps
@@ -129,10 +124,8 @@ object Cores {
 
   def q69LabelPropagation(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val u = simpleUndirected(t).pipe(Checkpoints.cut)
-    val out = labelPropagation(TradeGraph.nodes(t).select("node"), u, LpaIters)
-    Checkpoints.release(u)
-    out.orderBy("node")
+    labelPropagation(TradeGraph.nodes(t).select("node"),
+      simpleUndirected(t).pipe(Checkpoints.cut), LpaIters).orderBy("node")
   }
 
   // ---------------------------------------------------------------- q70
@@ -165,7 +158,7 @@ object Cores {
 
   def q70NodeSimilarity(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
+    val e = TradeGraph.cutEdges(t)
     nodeSimilarity(e, NodeSimTopK)
   }
 
@@ -191,13 +184,13 @@ object Cores {
   /** The walk loop itself: one (start, leaf, path) row per walk,
     * shared by q78's listing and q150's co-occurrence statistics. */
   private[graft] def walkPaths(nodes: DataFrame, edges: DataFrame,
-      len: Int): DataFrame = {
+      len: Int): DataFrame = Checkpoints.scoped {
     val w = Window.partitionBy("src").orderBy("dst")
     val nb = edges.select("src", "dst").distinct()
       .withColumn("rk", row_number().over(w).cast("long"))
       .withColumn("d", count(lit(1)).over(Window.partitionBy("src")).cast("long"))
       .pipe(Checkpoints.cut)
-    val walks = Superstep.iterate(nodes.select(col("node").as("start"),
+    Superstep.iterate(nodes.select(col("node").as("start"),
         col("node").as("leaf"), array(col("node")).as("path")), len) { (cur, t) =>
       cur.join(nb,
           col("leaf") === nb("src") &&
@@ -208,8 +201,6 @@ object Cores {
           when(nb("dst").isNull, col("path"))
             .otherwise(concat(col("path"), array(nb("dst")))).as("path"))
     }(Superstep.budgetOnly).out
-    Checkpoints.release(nb)
-    walks
   }
 
   def randomWalks(nodes: DataFrame, edges: DataFrame, len: Int): DataFrame =
@@ -221,10 +212,7 @@ object Cores {
 
   def q78RandomWalks(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val out = randomWalks(TradeGraph.nodes(t).select("node"), e, WalkLen)
-    Checkpoints.release(e)
-    out
+    randomWalks(TradeGraph.nodes(t).select("node"), TradeGraph.cutEdges(t), WalkLen)
   }
 
   // ---------------------------------------------------------------- q126
@@ -293,7 +281,7 @@ object Cores {
     * Output: every node with `in_mis` and the round it settled
     * (selected, or killed by a selected neighbor). */
   private[graft] def maximalIndependentSet(
-      nodes: DataFrame, undirected: DataFrame): DataFrame = {
+      nodes: DataFrame, undirected: DataFrame): DataFrame = Checkpoints.scoped {
     val und = undirected.filter(col("src") =!= col("dst"))
     val pri = nodes.select(col("node"),
       md5(col("node").cast("string")).as("p")).pipe(Checkpoints.cut)
@@ -322,7 +310,6 @@ object Cores {
       val nextLive = r.cut(live.join(newSettled.select("node"), Seq("node"), "left_anti"))
       ((nextLive, settled.add(newSettled, r)), Checkpoints.rowCount(nextLive))
     }(_._2.view).out
-    Checkpoints.release(pri)
     settled.orderBy("node")
   }
 
@@ -346,7 +333,7 @@ object Cores {
     * work, O(V) state, scalar loop condition. Returns (node, color,
     * wave) sorted by node. */
   private[graft] def greedyColoring(
-      nodes: DataFrame, undirected: DataFrame): DataFrame = {
+      nodes: DataFrame, undirected: DataFrame): DataFrame = Checkpoints.scoped {
     val und = undirected.filter(col("src") =!= col("dst"))
     val pri = nodes.select(col("node"),
       md5(col("node").cast("string")).as("p")).pipe(Checkpoints.cut)
@@ -357,7 +344,7 @@ object Cores {
       .filter(col("pd") < col("ps"))
       .select("src", "dst")
       .pipe(Checkpoints.cut)
-    val out = Superstep.loop(Int.MaxValue) { r =>
+    Superstep.loop(Int.MaxValue) { r =>
       ((r.cut(pri.select("node")), Superstep.UnionView.empty), Superstep.Unmeasured)
     } { case ((live, settled), r) =>
       val blocked = hp
@@ -381,8 +368,6 @@ object Cores {
       val nextLive = r.cut(live.join(colored.select("node"), Seq("node"), "left_anti"))
       ((nextLive, settled.add(colored, r)), Checkpoints.rowCount(nextLive))
     }(_._2.view).out.orderBy("node")
-    Checkpoints.release(pri, hp)
-    out
   }
 
   def q136Coloring(spark: SparkSession, dir: String): DataFrame = {
@@ -458,7 +443,7 @@ object Cores {
   val SimRankIters = 3
   val SimRankUnit = 1000000000000L
 
-  def simrank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+  def simrank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = Checkpoints.scoped {
     val e = edges.select("src", "dst").distinct().pipe(Checkpoints.cut)
     val indeg = e.groupBy(col("dst").as("node")).agg(count(lit(1)).as("ind"))
       .pipe(Checkpoints.cut)
@@ -478,12 +463,10 @@ object Cores {
         .filter(col("s") > 0)
       diag.unionByName(upd)
     }(Superstep.budgetOnly).out
-    val out = sims.filter(col("a") < col("b"))
+    sims.filter(col("a") < col("b"))
       .select(col("a"), col("b"),
         round(col("s").cast("double") / SimRankUnit, 6).as("sim"))
       .orderBy(col("sim").desc, col("a").asc, col("b").asc)
-    Checkpoints.release(e, indeg)
-    out
   }
 
   def q142Simrank(spark: SparkSession, dir: String): DataFrame = {
@@ -522,8 +505,6 @@ object Cores {
           " - (n_edges - 2 * mutual_dyads)").as("null_dyads"),
         round(lit(2.0) * col("mutual_dyads") / col("n_edges"), 6)
           .as("reciprocity"))
-    // e stays live for this lazy plan; Verify/Bench clear blocks
-    // per query
   }
 
   def q152DyadCensus(spark: SparkSession, dir: String): DataFrame = {
@@ -574,10 +555,7 @@ object Cores {
 
   def q150WalkPmi(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
-    val e = checkpointedEdges(t)
-    val out = walkPmi(TradeGraph.nodes(t).select("node"), e, WalkLen, PmiWindow)
-    Checkpoints.release(e)
-    out
+    walkPmi(TradeGraph.nodes(t).select("node"), TradeGraph.cutEdges(t), WalkLen, PmiWindow)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

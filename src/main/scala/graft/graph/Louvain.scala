@@ -93,26 +93,29 @@ object Louvain {
     * community) transient storage instead of O(V); at a billion nodes
     * prefer a smaller `iters` over per-sweep eviction, which would
     * reintroduce the per-sweep Q actions. */
-  def louvain(nodes: DataFrame, edges: DataFrame, iters: Int = 6): DataFrame = {
-    val e = weighted(edges).pipe(Checkpoints.cut)
-    val out = louvainOn(nodes, e, iters).select("node", "community")
-    Checkpoints.release(e)
-    out
-  }
+  def louvain(nodes: DataFrame, edges: DataFrame, iters: Int = 6): DataFrame =
+    Checkpoints.scoped {
+      louvainOn(nodes, weighted(edges).pipe(Checkpoints.cut), iters).select("node", "community")
+    }
 
   /** [[louvain]] over an already-normalized, already-materialized
     * (src, dst, ew) edge list — callers that checkpoint the edges
     * anyway ([[louvainTwoLevel]], q58's shared derivation) use this to
-    * avoid a second materialization of the same data. Does NOT release
-    * `e`. */
+    * avoid a second materialization of the same data. */
   private def louvainOn(nodes: DataFrame, e: DataFrame, iters: Int): DataFrame = {
     val m = e.agg(sum(col("ew"))).first() match {
       case r if r.isNullAt(0) => 0.0
       case r => r.getDouble(0)
     }
-    if (m == 0)
-      return nodes.select(col("node"), col("node").as("community"))
-        .pipe(Checkpoints.cut)
+    // the sweeps' adjacency and degrees die with them: the best sweep
+    // reads neither
+    if (m == 0) nodes.select(col("node"), col("node").as("community")).pipe(Checkpoints.cut)
+    else Checkpoints.scoped(sweeps(nodes, e, m, iters))
+  }
+
+  /** The local-move sweeps of [[louvainOn]] over edges of total weight
+    * `m` > 0, and the best sweep's assignment. */
+  private def sweeps(nodes: DataFrame, e: DataFrame, m: Double, iters: Int): DataFrame = {
     // both directions for scoring; self-loops excluded — they move
     // with the node, contributing equally to every candidate
     val und = e.filter(col("src") =!= col("dst"))
@@ -123,9 +126,9 @@ object Louvain {
       .union(e.select(col("dst").as("node"), col("ew")))
       .groupBy("node").agg(sum(col("ew")).as("deg"))
       .pipe(Checkpoints.cut)
-    // the sweep state CARRIES each node's static degree (r14, guide
-    // §2.4): `tot`, `scored` and the post-loop `dc` read deg from the
-    // cached assignment instead of re-joining the deg relation — two
+    // the sweep state CARRIES each node's static degree: `tot`,
+    // `scored` and the post-loop `dc` read deg from the cached
+    // assignment instead of re-joining the deg relation — two
     // joins fewer per sweep, one fewer in the Q job. Degrees are
     // integer-valued doubles (unit edges and their contractions), so
     // every sum over them is order-exact and the carried column can
@@ -134,7 +137,7 @@ object Louvain {
     // Every sweep's assignment stays live (the state is the whole
     // sequence) until the post-loop Q job picks one; the kernel then
     // frees the rest.
-    val best = Superstep.loop(iters) { r =>
+    Superstep.loop(iters) { r =>
       (Vector(r.cut(nodes.select(col("node"), col("node").as("community"))
         .join(deg, Seq("node"), "left").na.fill(0.0, Seq("deg")))),
         Superstep.Unmeasured)
@@ -161,8 +164,8 @@ object Louvain {
             .otherwise(col("dtot")))
         .withColumn("score",
           col("w") / m - col("deg") * col("dtot_x") / (2.0 * m * m))
-      // argmax as one partial agg (r14, guide §2.4): min(struct(-score,
-      // c, …)) picks exactly the row_number()-over-(score DESC, c ASC)
+      // argmax as one partial agg: min(struct(-score, c, …)) picks
+      // exactly the row_number()-over-(score DESC, c ASC)
       // winner — scores are never -0.0 (each is a subtraction whose
       // equal-operand case rounds to +0.0), so negation preserves the
       // total order and ties fall through to the smaller c — without
@@ -177,8 +180,6 @@ object Louvain {
             .otherwise(col("w0.community")).as("community"),
           col("w0.deg").as("deg"))), Superstep.Unmeasured)
     } { assigns => bestSweep(e, m, assigns) }.out
-    Checkpoints.release(adj, deg)
-    best
   }
 
   /** The assignment of highest modularity among every sweep's, the
@@ -215,8 +216,7 @@ object Louvain {
     // bounded collect: one row per SWEEP (iters+1 rows total, a
     // library knob — never data-sized), the per-sweep modularity
     // scalar the driver-side argmax below needs. Same class as the
-    // PolicyOps capped vocabulary collect (ADVICE r10 asked for the
-    // bound to be stated here rather than re-derived per audit).
+    // PolicyOps capped vocabulary collect, with its bound stated here.
     val qBySweep = dc.join(within, Seq("s", "community"), "left")
       .groupBy("s")
       .agg(sum((coalesce(col("lc"), lit(0.0)) / m - halfDc * halfDc)
@@ -224,8 +224,8 @@ object Louvain {
       .collect()
       .map(r => r.getInt(0) -> r.getDecimal(1)).toMap
     // first index of the maximum: the earliest sweep wins ties.
-    // Returned WITH the carried deg column (still the cut frame, so
-    // louvainTwoLevel can release it); louvain() projects for callers
+    // Returned WITH the carried deg column; louvain() projects for
+    // callers
     val bestS = assigns.indices.reduce { (b, s) =>
       if (qBySweep(s).compareTo(qBySweep(b)) > 0) s else b
     }
@@ -256,27 +256,26 @@ object Louvain {
     * driver action — on small graphs the action count, not the data,
     * is the wall-clock. */
   def louvainTwoLevel(nodes: DataFrame, edges: DataFrame,
-      iters: Int = 6, itersL2: Int = OracleItersL2): DataFrame = {
-    // one materialization of the level-1 edges feeds both the sweep
-    // and the contraction (weighted() is idempotent, so an already-
-    // normalized caller frame is not re-derived)
-    val e1 = weighted(edges).pipe(Checkpoints.cut)
-    val l1 = louvainOn(nodes, e1, iters)
-    val superNodes = l1.select(col("community").as("node")).distinct()
-    val superEdges = contract(e1, l1)
-      .select(col("src"), col("dst"), col("weight").as("ew"))
-      .pipe(Checkpoints.cut)
-    Checkpoints.release(e1)
-    val l2 = louvainOn(superNodes, superEdges, itersL2)
-    Checkpoints.release(superEdges)
-    val out = l1
+      iters: Int = 6, itersL2: Int = OracleItersL2): DataFrame = Checkpoints.scoped {
+    // each level's edges die as soon as the next phase stops reading them
+    val (l1, l2) = Checkpoints.scoped {
+      val (l1, superEdges) = Checkpoints.scoped {
+        // one materialization of the level-1 edges feeds both the sweep
+        // and the contraction (weighted() is idempotent, so an already-
+        // normalized caller frame is not re-derived)
+        val e1 = weighted(edges).pipe(Checkpoints.cut)
+        val l1 = louvainOn(nodes, e1, iters)
+        (l1, contract(e1, l1)
+          .select(col("src"), col("dst"), col("weight").as("ew"))
+          .pipe(Checkpoints.cut))
+      }
+      (l1, louvainOn(l1.select(col("community").as("node")).distinct(), superEdges, itersL2))
+    }
+    l1
       .join(l2.select(col("node").as("community"), col("community").as("c2")),
         Seq("community"))
       .select(col("node"), col("c2").as("community"))
       .pipe(Checkpoints.cut)
-    Checkpoints.release(l1)
-    if (!(l2 eq out)) Checkpoints.release(l2)
-    out
   }
 
   /** q38: Louvain communities on the undirected trade graph —

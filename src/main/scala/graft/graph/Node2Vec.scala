@@ -42,9 +42,8 @@ import graft.{Superstep, Tables}
   * frontier stays constant-sized, AQE broadcasts the suite-scale
   * adj2, and a billion-edge adj2 shuffle-joins co-partitioned on its
   * key. The step count is a bounded static unroll. Σ out-deg² is the
-  * family's one super-linear relation: [[node2vecWalks]] exposes the
-  * `minSupport` edge-weight bound (see [[boundedEdges]]) so a
-  * hub-heavy graph never has to build the unbounded table.
+  * family's one super-linear relation: on a hub-heavy graph, bound
+  * the edge list (e.g. by edge weight) before [[node2vecWalks]].
   */
 object Node2Vec {
 
@@ -152,39 +151,18 @@ object Node2Vec {
     walks
   }
 
-  /** Edge-support bound for the adj2 quadratic: keep only edges with
-    * weight (`cnt`) ≥ `minSupport`. adj2 is Σ out-deg² rows — the
-    * paper's own preprocessing cost — and UNBOUNDED hub degrees make
-    * it quadratic in practice (measured: 3.1G candidate rows on the
-    * 10× co-purchase graph, BENCH_SCALING.md Part 11). Weight
-    * thresholding is the q104 repeat-edge answer: hubs are hubs
-    * because of a long tail of weight-1 incidental edges, so
-    * `minSupport = 2` collapses the same 10× table to ~10k rows while
-    * keeping every repeatedly-confirmed transition. `minSupport ≤ 1`
-    * is the identity (no filter in the plan at all). */
-  def boundedEdges(weighted: DataFrame, minSupport: Long): DataFrame =
-    if (minSupport <= 1L) weighted
-    else weighted.filter(col("cnt") >= minSupport)
-
   /** End-to-end second-order walks over ANY weighted edge list
-    * (src, dst, cnt) — the user-facing entry point, with the adj2
-    * degree bound as a first-class knob. Builds the ranked adjacency
-    * and the transition-interval table on the [[boundedEdges]]
-    * subgraph (BOTH sides — the α classification's prev→x edge test
-    * must see the same edge set the walk moves on, or a dropped edge
-    * would still read as "near prev") and unrolls [[walkRows]].
-    * `minSupport = 1` reproduces the unbounded construction exactly
-    * (spec-pinned bit-equal on the trade graph — the oracled q224
-    * path routes through here at 1); at 100 TB on a hub-heavy graph,
-    * set it ≥ 2 (or pre-bound the edge list yourself) — the Σ
-    * out-deg² table is the one relation in this family that is NOT
-    * otherwise linear in the input. */
-  def node2vecWalks(seeds: DataFrame, weighted: DataFrame, len: Int,
-      minSupport: Long = 1L): DataFrame = {
-    val kept = boundedEdges(weighted, minSupport)
-    val adj = RandomWalks.rankedAdjacency(kept)
+    * (src, dst, cnt) — the user-facing entry point. Builds the ranked
+    * adjacency and the transition-interval table on the same edges
+    * (BOTH sides — the α classification's prev→x edge test must see
+    * the edge set the walk moves on) and unrolls [[walkRows]]. The
+    * Σ out-deg² table is the one relation in this family that is NOT
+    * otherwise linear in the input: on a hub-heavy graph, pass an
+    * edge list already bounded by weight. */
+  def node2vecWalks(seeds: DataFrame, weighted: DataFrame, len: Int): DataFrame = {
+    val adj = RandomWalks.rankedAdjacency(weighted)
     walkRows(seeds, adj,
-      transitionIntervals(adj, kept.select("src", "dst")), len)
+      transitionIntervals(adj, weighted.select("src", "dst")), len)
   }
 
   /** q224: [[RandomWalks.WalksPerNode]] node2vec walks of
@@ -196,8 +174,7 @@ object Node2Vec {
 
   /** The unsorted q224 trajectory relation — shared by the q224
     * presentation sort and the node2vec-corpus training/audit pair
-    * (q226/q227). Routes through [[node2vecWalks]] at minSupport = 1
-    * so the oracle gate itself pins the knob's identity case. */
+    * (q226/q227), built by [[node2vecWalks]]. */
   private[graft] def tradeWalks(spark: SparkSession,
       dir: String): DataFrame = {
     val t = Tables(spark, dir)

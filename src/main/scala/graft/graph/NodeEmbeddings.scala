@@ -203,7 +203,7 @@ object NodeEmbeddings {
     * count + (c+1)/2), never a per-row global sort; rank sums are
     * exact integer-plus-half doubles. Self-loop edges can never be
     * positives (u ≠ v). */
-  /** Per-node SCORE VECTORS for the link audits (r15, guide §2.3):
+  /** Per-node SCORE VECTORS for the link audits:
     * `liv[d]` = the trained cell emb(node, d) as its exact 6dp
     * integer (emb·10⁶ — precisely the DECIMAL(18,6) value the old
     * per-dim scoring summed, times 10⁶), `sgn[d]` = the ±1 context
@@ -291,7 +291,7 @@ object NodeEmbeddings {
     // vocabulary ordinal via the distributed sort+zipWithIndex
     // primitive (graft.Ordinals) — NOT an unpartitioned row_number
     // window, which would sort the full embedded node set in one task
-    // (the 100 TB vocabulary funnel; VERDICT r12 "What's wrong" #2).
+    // (the 100 TB vocabulary funnel).
     // Ranks over distinct sorted nodes are bit-identical either way.
     val ranked = graft.Checkpoints.cut(
       graft.Ordinals.dense(sv.select("node"), Seq("node"), "rk"))

@@ -85,8 +85,8 @@ object RandomWalks {
     * Each step is one [[Superstep]] round (uncut, step s's plan would
     * replay joins 1..s and the union O(len²) joins — BENCH_SCALING.md
     * Part 11). The output union view reads every step's frontier, so
-    * they outlive the loop; the caller frees them via
-    * [[graft.Checkpoints.releaseAll]].
+    * they outlive the loop, as long as the caller's scope reads the
+    * walks.
     *
     * The adjacency is CACHED pre-partitioned on src and sorted within
     * partitions — persist, not checkpoint, because a cached plan

@@ -153,7 +153,7 @@ object StarContraction {
     * derives `nodes` from the edge endpoints or filters both from one
     * keyspace. */
   def ccAuto(nodes: DataFrame, edges: DataFrame,
-      probeRounds: Int = 8): DataFrame = {
+      probeRounds: Int = 8): DataFrame = Checkpoints.scoped {
     require(probeRounds >= 0, s"probeRounds $probeRounds must be >= 0")
     val und = edges.select(col("u"), col("v"))
       .filter(col("u") =!= col("v"))
@@ -164,21 +164,21 @@ object StarContraction {
       .pipe(Superstep.coPartition(_, "dst"))
     val probe = Algorithms.minLabels(nodes, und, probeRounds, "ccAuto")
     val comp = probe.out.select("node", "component")
-    if (probe.converged) { Checkpoints.release(und); return comp }
-    // diameter exceeds the probe: contract by probe labels, star the
-    // quotient, compose. Quotient nodes = surviving labels.
-    val lu = comp.select(col("node").as("src"), col("component").as("qu"))
-    val lv = comp.select(col("node").as("dst"), col("component").as("qv"))
-    val qEdges = und.join(lu, "src").join(lv, "dst")
-      .filter(col("qu") =!= col("qv"))
-      .select(col("qu").as("u"), col("qv").as("v")).distinct()
-    val qNodes = comp.select(col("component").as("node")).distinct()
-    val qComp = components(qNodes, qEdges)
-      .select(col("node").as("qn"), col("component").as("root"))
-    val out = comp.join(qComp, col("component") === col("qn"))
-      .select(col("node"), col("root").as("component"))
-    Checkpoints.release(und)
-    out
+    if (probe.converged) comp
+    else {
+      // diameter exceeds the probe: contract by probe labels, star the
+      // quotient, compose. Quotient nodes = surviving labels.
+      val lu = comp.select(col("node").as("src"), col("component").as("qu"))
+      val lv = comp.select(col("node").as("dst"), col("component").as("qv"))
+      val qEdges = und.join(lu, "src").join(lv, "dst")
+        .filter(col("qu") =!= col("qv"))
+        .select(col("qu").as("u"), col("qv").as("v")).distinct()
+      val qNodes = comp.select(col("component").as("node")).distinct()
+      val qComp = components(qNodes, qEdges)
+        .select(col("node").as("qn"), col("component").as("root"))
+      comp.join(qComp, col("component") === col("qn"))
+        .select(col("node"), col("root").as("component"))
+    }
   }
 
   // ---------------------------------------------------------------- q233

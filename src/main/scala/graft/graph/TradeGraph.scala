@@ -49,6 +49,11 @@ object TradeGraph {
   def edges(t: Tables): DataFrame =
     ranked(t).select("src", "dst", "cnt")
 
+  /** The (src, dst) pairs of [[edges]], cut once, so a loop over them
+    * does not re-run the lineitem-scale derivation every round. */
+  def cutEdges(t: Tables): DataFrame =
+    graft.Checkpoints.cut(edges(t).select("src", "dst"))
+
   /** Typed edge view: partner rank → dependency type (rank 1 =
     * DEPENDS_ON, 2 = DEV_DEPENDS_ON, 3 = PEER_DEPENDS_ON) — the
     * deterministic analog of the reference's typed relationship set
@@ -79,8 +84,8 @@ object TradeGraph {
   // and DuckDB 1.0 inlines a bare CTE into EVERY reference — under a
   // WITH RECURSIVE consumer (the walk oracles) that re-ran the join
   // once per recursion iteration per reference; measured 31.6 s on
-  // q226's oracle before the hints, ~3 s after (VERDICT r13 #5's
-  // oracle-budget class)
+  // q226's oracle before the hints, ~3 s after (the oracle pass has
+  // a time budget)
   val sqlCte: String =
     """pair AS MATERIALIZED (
       |  SELECT CAST(c.c_nationkey AS BIGINT) AS src,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal.{MediaCodec, MediaRecord}
 
 /** Image perceptual-hash near-duplicate detection — the multimodal
-  * member of the dedup family (VERDICT r13 #3): the standard
+  * member of the dedup family: the standard
   * image-dedup stage of a multimodal training pipeline, composed from
   * machinery the library already proves out — [[Multimodal]]'s
   * partition-batched codec for decode, L4's simhash bit-banding for

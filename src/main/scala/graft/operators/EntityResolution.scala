@@ -265,14 +265,12 @@ object EntityResolution {
       .join(rank.select(col("node").as("b"), col("h").as("hb")), Seq("b"))
       .select(col("ha").as("a"), col("hb").as("b"))
     val core = refineCore(hp)
-    val out = graft.Checkpoints.cut(core.out
+    core.copy(out = graft.Checkpoints.cut(core.out
       .join(rank.select(col("h").as("node"), col("node").as("orig")),
         Seq("node"))
       .join(rank.select(col("h").as("component"), col("node").as("origC")),
         Seq("component"))
-      .select(col("orig").as("node"), col("origC").as("component")))
-    graft.Checkpoints.release(rank, core.out)
-    core.copy(out = out)
+      .select(col("orig").as("node"), col("origC").as("component"))))
   }
 
   /** The plain-long local-minima loop behind [[refineByCenter]]:
@@ -291,7 +289,7 @@ object EntityResolution {
       p.select(col("a").as("src"), col("b").as("dst"))
         .union(p.select(col("b").as("src"), col("a").as("dst"))))
     var nSeed = 0L
-    val run = Superstep.loop(Int.MaxValue) { r =>
+    Superstep.loop(Int.MaxValue) { r =>
       val active = r.cut(und.select(col("src").as("node")).distinct())
       nSeed = graft.Checkpoints.rowCount(active)
       ((active, Superstep.UnionView.empty), nSeed)
@@ -340,8 +338,6 @@ object EntityResolution {
               .select(col("node"), col("component"))))
       }
     }
-    graft.Checkpoints.release(und)
-    run
   }
 
   /** [[resolveEntities]] with the [[refineByCenter]] guard between
@@ -354,9 +350,7 @@ object EntityResolution {
     val cand = candidates(blockingKeys(sigs))
     // cut: the match relation feeds every refinement round
     val pairs = graft.Checkpoints.cut(verifiedPairs(sigs, cand, tau))
-    val refined = refineByCenter(pairs, hashPriority).out
-    graft.Checkpoints.release(pairs) // refined is materialized (cut)
-    survive(parts, refined, None)
+    survive(parts, refineByCenter(pairs, hashPriority).out, None)
   }
 
   /** Candidate pairs from raw records (diagnostics entry point). */

@@ -140,10 +140,9 @@ object Olap {
   /** RFM segmentation — recency / frequency / monetary quintiles per
     * customer, then the segment report (population + revenue per RFM
     * cell): the classic customer-base decomposition. One partial agg
-    * per customer, then ONE ranking pass for all three quintiles
-    * (VERDICT r13 #6 — the earlier form chained three independent
-    * [[graft.Ordinals.ntileBy]] range-sorts of the same customer
-    * relation): each metric melts to a common descending-sortable
+    * per customer, then ONE ranking pass for all three quintiles (not
+    * three independent [[graft.Ordinals.ntileBy]] range-sorts of the
+    * same customer relation): each metric melts to a common descending-sortable
     * LONG key (recency = −[[epochMicros]], frequency = −count,
     * monetary = −cents; decimal(18,2)·100 ≤ 10¹⁸ < 2⁶³ by the TYPE
     * bound, so the cents cast can never overflow), the 3N-row melted

@@ -97,7 +97,7 @@ object Profile {
     // funnel this profile exists to help avoid. TopKKeyedAgg's tie
     // order (v desc, id asc) mirrors the window's (cnt desc, key asc);
     // counts are exact in double below 2^53. The aggregate is
-    // payload-type-generic (ADVICE r13): a string/int/date join key —
+    // payload-type-generic: a string/int/date join key —
     // the documented "prospective join key" use of this public API —
     // rides through unchanged and the output `key` column keeps the
     // input key's type.

@@ -21,7 +21,7 @@ import graft.functions.GraftFunctions.dot
   *    window argmin, all streaming over the corpus once;
   *  - the centroid update aggregates (cell, dim) partial sums — a
   *    shuffle of k·d·partitions rows, independent of corpus size.
-  * The loop runs on [[graft.Superstep]], which releases superseded
+  * The loop runs on [[graft.Superstep]], which frees superseded
   * centroid/assignment cuts each round, so memory is O(corpus + k·d),
   * not O(iters · corpus).
   *
@@ -44,8 +44,8 @@ object KMeans {
     dot(e, e) + dot(c, c) - lit(2.0) * dot(e, c)
 
   /** Lloyd loop: (assignment aₜ, centroids cₜ₋₁ — the ones that
-    * produced it). Both are checkpointed; the caller owns their
-    * release.
+    * produced it). Both are cuts; they live as long as the caller's
+    * scope reads them.
     *
     * `grp` trains INDEPENDENT k-means instances per group value in
     * ONE program — every iteration is still exactly one broadcast
@@ -89,18 +89,14 @@ object KMeans {
 
   /** (final assignment, the centroids that produced it) — for the
     * assignment-margin spec, which asserts every runner-up distance
-    * clears the winner by far more than float accumulation noise.
-    * The caller owns the release of both frames. */
+    * clears the winner by far more than float accumulation noise. */
   private[graft] def model(v: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) =
     lloyd(v, k, iters)
 
   /** (vec_id, cell) after `iters` Lloyd iterations from the
     * first-k-by-id init. */
-  def assignments(v: DataFrame, k: Int, iters: Int): DataFrame = {
-    val (assign, cent) = lloyd(v, k, iters)
-    Checkpoints.release(cent)
-    assign
-  }
+  def assignments(v: DataFrame, k: Int, iters: Int): DataFrame =
+    Checkpoints.scoped(lloyd(v, k, iters)._1)
 
   // ---------------------------------------------------------------- q48
   /** Final assignment + cluster sizes after [[Iters]] iterations with
@@ -168,16 +164,17 @@ object KMeans {
 
   def q116SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val v = vecs(spark, dir)
-    val assign = assignments(v, K, Iters)
-    val withE = assign.join(v, "vec_id")
-    val pairs = withE.as("x").join(withE.as("y"),
-        col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
-        Similarity.cosine(col("x.e"), col("y.e")).as("sim"))
-      .filter(col("sim") >= SemDedupTau)
-      .select("a", "b")
-      .pipe(Checkpoints.cut)
-    Checkpoints.release(assign)
+    // the assignment dies once the in-cell pairs are cut
+    val pairs = Checkpoints.scoped {
+      val withE = assignments(v, K, Iters).join(v, "vec_id")
+      withE.as("x").join(withE.as("y"),
+          col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
+        .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
+          Similarity.cosine(col("x.e"), col("y.e")).as("sim"))
+        .filter(col("sim") >= SemDedupTau)
+        .select("a", "b")
+        .pipe(Checkpoints.cut)
+    }
     // CC via the structure-routed ccAuto (q244's router): semantic
     // near-dup chains are min-label's high-diameter collapse mode
     // (BENCH_SCALING Parts 14/18); labels identical (min member id),
@@ -233,12 +230,10 @@ object KMeans {
            |  s -> struct(s AS s, slice(e, s * $subDim + 1, $subDim) AS e))"""
           .stripMargin)).as("p"))
       .select(col("p.s").as("s"), col("vec_id"), col("p.e").as("e"))
-    val (assign, cent) = lloyd(sv, PqK, PqIters, grp = Seq("s"))
-    val bySub = cent.collect()
+    val bySub = Checkpoints.scoped(lloyd(sv, PqK, PqIters, grp = Seq("s"))._2.collect())
       .map(r => (r.getAs[Int]("s"),
         r.getAs[Int]("cell"), r.getAs[scala.collection.Seq[Double]]("c").toSeq))
       .groupBy(_._1)
-    Checkpoints.release(assign, cent)
     (0 until PqM).map(s =>
       bySub(s).map(t => t._2 -> t._3).sortBy(_._1).toIndexedSeq)
   }
@@ -297,12 +292,10 @@ object KMeans {
     // train both quantizers, collect the (tiny) models: coarse = K
     // full-dim centroids, PQ = Dims·PqK scalars — the state every PQ
     // searcher ships. The corpus itself is never collected.
-    val (cAssign, cCent) = lloyd(v, K, Iters)
-    val coarse = cCent.collect()
+    val coarse = Checkpoints.scoped(lloyd(v, K, Iters)._2.collect())
       .map(r => r.getAs[Int]("cell") ->
         r.getAs[scala.collection.Seq[Double]]("c").toSeq)
       .sortBy(_._1).toIndexedSeq
-    Checkpoints.release(cAssign, cCent)
     val books = pqCodebooks(v)
 
     def coarseDists(e: Column): Column = array(coarse.map { case (cell, c) =>

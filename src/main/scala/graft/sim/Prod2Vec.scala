@@ -39,8 +39,7 @@ object Prod2Vec {
   val NegK = 8
 
   /** Support floor on the trainer's pair input — word2vec's
-    * `min_count` pruning (Mikolov et al. 2013) and the node2vec
-    * `minSupport` pattern ([[graft.graph.Node2Vec]]), applied at the
+    * `min_count` pruning (Mikolov et al. 2013), applied at the
     * pair grain: a pair co-purchased in ONE order is coincidence, not
     * signal (the same adjudication [[CoPurchase.repeatEdges]] makes
     * for the graph family), and at scale the singleton tail DOMINATES
@@ -70,12 +69,12 @@ object Prod2Vec {
     *
     * IN-SUITE RECOMPUTATION IS THE CONTRACT: q229 re-runs the same
     * trainer chain (over its own shared-cut pair relation)
-    * rather than reading q228's result because Verify/Bench execute
-    * every query hermetically — `Checkpoints.releaseAll` between
-    * queries frees all cached blocks (the hygiene that makes
-    * per-query bench walls attributable and each oracle row
-    * independent), so a cross-query memo would hold dead block
-    * references. A production caller avoids the recompute by nature
+    * rather than reading q228's result because every registered query
+    * runs hermetically — its scope frees its cuts when it returns and
+    * the harnesses drop every cached block between queries (the
+    * hygiene that makes per-query bench walls attributable and each
+    * oracle row independent), so a cross-query memo would hold dead
+    * block references. A production caller avoids the recompute by nature
     * of the API: train once (`embeddings(...)`, `Checkpoints.cut` it
     * or write it), then hand the SAME relation to
     * [[NodeEmbeddings.linkAucSampled]] and any other consumer —

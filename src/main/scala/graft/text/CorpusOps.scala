@@ -505,8 +505,8 @@ object CorpusOps {
     dsirScored(d, cutoff)
       // corpus-grain dense rank via the distributed sort+zipWithIndex
       // primitive — NOT an unpartitioned row_number window, which
-      // funnels every document's weight through one task (VERDICT r12
-      // "What's wrong" #3). (lw desc, doc_id asc) is a total order, so
+      // funnels every document's weight through one task. (lw desc,
+      // doc_id asc) is a total order, so
       // ranks are bit-identical to the window they replace.
       .pipe(g => graft.Ordinals.denseBy(g,
         Seq(col("lw").desc, col("doc_id").asc), "rank"))

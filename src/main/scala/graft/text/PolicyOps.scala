@@ -64,7 +64,7 @@ object PolicyOps {
 
   /** Hard bound on the harness-derived phrase list (the one collect
     * in this family whose natural size rides the corpus VOCABULARY,
-    * not a model/k constant — VERDICT r9). 200k phrases ≈ the upper
+    * not a model/k constant). 200k phrases ≈ the upper
     * end of measured-flat automaton sizes (ScalingSweep's wall curve
     * is flat 1k→50k; the dense-DFA tables at 200k are ~hundreds of
     * MB per executor — beyond that a deployment should feed its own
@@ -109,7 +109,7 @@ object PolicyOps {
       phrases: Seq[String]): DataFrame =
     // empty blocklist → the all-zero report, matching the oracle's
     // LEFT JOIN semantics (PhraseHits requires a non-empty list; a
-    // corpus whose derived list is empty must not crash — ADVICE r9)
+    // corpus whose derived list is empty must not crash)
     if (phrases.isEmpty)
       docs.select(col("doc_id"), lit(0L).as("n_hits"),
           lit(0L).as("n_terms"), lit(false).as("flagged"))

@@ -587,7 +587,7 @@ object SourceOps {
 
   /** Greedy core over a distinct (source, w) coverage relation.
     *
-    * r14 shape (guide §1.2 — the distributed algorithm first): greedy
+    * Shape (the distributed algorithm first): greedy
     * max-coverage picks are inherently sequential, but the ONLY thing
     * a pick needs is, per source, the count of still-uncovered tokens
     * — a pure function of each token's source MEMBERSHIP SET. With

@@ -39,11 +39,10 @@ import graft.{Checkpoints, Superstep}
   *    deterministic because the keyed rows are distinct).
   *  - The doubling rounds run on [[graft.Superstep]], the kernel
   *    shared with CC/Louvain/k-core: each round's rank relation is
-  *    lineage-cut and the superseded round released. When the caller
+  *    lineage-cut and the superseded round freed. When the caller
   *    needs LCPs, the per-round tables are RETAINED instead (log₂ maxlen
   *    relations of constant-width rows — the standard sparse-table
-  *    space trade) and freed by Verify/Bench's end-of-query
-  *    `releaseAll`.
+  *    space trade), freed with the scope that reads the index.
   *  - Early exit when every suffix's rank is already unique (the
   *    common case long before h reaches maxlen on natural text).
   *
@@ -59,7 +58,7 @@ object SuffixArray {
   val SaDocCap = 100
   val SaMaxLen = 256
 
-  /** Base doubling horizon (r14 optimization, guide §1.2/§2.4): round
+  /** Base doubling horizon: round
     * 0 ranks every suffix by its first [[BaseH]] chars — a fixed-width
     * substring, the same constant-width-sort cost class as the
     * (rank, rank) pair rounds — so the ladder starts at h = [[BaseH]]
@@ -89,11 +88,11 @@ object SuffixArray {
     buildIndex(docs, retainTables = false).sa
 
   /** Core prefix-doubling build. With `retainTables` the per-round
-    * rank relations stay checkpointed for [[adjacentLcps]] (caller
-    * frees them after materializing — Verify/Bench's `releaseAll`);
-    * without, each superseded round is released immediately. */
+    * rank relations and the prefix relation stay cut for
+    * [[adjacentLcps]], as long as the caller's scope reads the index;
+    * without, each superseded round is freed as the next one is cut. */
   private[graft] def buildIndex(docs: DataFrame,
-      retainTables: Boolean): SaIndex = {
+      retainTables: Boolean): SaIndex = Checkpoints.scoped {
     val base = docs.select(col("doc_id"), col("s"))
       .filter(col("s").isNotNull && length(col("s")) >= 1)
     val maxLen = base.agg(coalesce(max(length(col("s"))), lit(0)))
@@ -124,11 +123,10 @@ object SuffixArray {
       // range-sort + broadcast offsets, no .rdd row-conversion seam
       // (BENCH_SCALING Part 19), and the meta form's exact count makes
       // the convergence scalar free.
-      val (r0, r0cut, nPref) = graft.Ordinals.denseByWithMeta(
+      val (r0, nPref) = graft.Ordinals.denseByWithMeta(
         prefs.select("pref").distinct(), Seq(col("pref")), "rank", 0L)
       val ranks = r.cut(prefs.join(r0, "pref")
         .select(col("doc_id"), col("pos"), col("rank")))
-      Checkpoints.release(r0cut)
       val h = BaseH.toLong
       ((ranks, keep(h, ranks), nPref, nPref, h), more(nPref, h))
     } { case ((ranks, tables, distinctRanks, rankBound, h), r) =>
@@ -143,7 +141,7 @@ object SuffixArray {
       // equality): while the value range fits, the (k1, k2) pair
       // re-rank is the ARITHMETIC composite k1·(B+1) + k2 + 1 — a
       // pure projection fused into the round's checkpoint, with no
-      // distinct + range-sort + join-back (r14, guide §1.2). The
+      // distinct + range-sort + join-back. The
       // composite's range squares each round; once it would leave
       // 63 bits (B ≥ 2³¹), one dense re-rank renormalizes it to the
       // distinct-key count and the convergence scalar refreshes.
@@ -157,14 +155,12 @@ object SuffixArray {
             (col("k1") * (rankBound + 1) + col("k2") + 1L).as("rank"))),
           distinctRanks, (rankBound + 1) * (rankBound + 1))
       } else {
-        val (rk, rkCut, nKeys) = graft.Ordinals.denseByWithMeta(
+        val (rk, nKeys) = graft.Ordinals.denseByWithMeta(
           paired.select("k1", "k2").distinct(),
           Seq(col("k1"), col("k2")), "nrank", 0L)
-        val next = r.cut(paired.join(rk, Seq("k1", "k2"))
-          .select(col("doc_id"), col("pos"), col("nrank").as("rank")))
-        Checkpoints.release(rkCut)
         // |distinct keys| IS next's distinct count
-        (next, nKeys, nKeys)
+        (r.cut(paired.join(rk, Seq("k1", "k2"))
+          .select(col("doc_id"), col("pos"), col("nrank").as("rank"))), nKeys, nKeys)
       }
       val h2 = h * 2
       ((next, keep(h2, next) ++ tables, nextDistinct, nextBound, h2),
@@ -174,7 +170,6 @@ object SuffixArray {
         Seq(col("rank"), col("doc_id"), col("pos")), "sa_rank", 1L)
       .select("sa_rank", "doc_id", "pos")
       .sort("sa_rank")
-    if (!retainTables) Checkpoints.release(prefs)
     SaIndex(sa, tables.reverse, if (retainTables) prefs else null)
   }
 
@@ -191,7 +186,7 @@ object SuffixArray {
     * cap handles byte-identical short suffixes, whose ranks agree at
     * every horizon. ⌈log₂ maxlen⌉ rounds × 2 joins over (n−1)
     * constant-width rows; each round is lineage-cut and the
-    * superseded pair relation released.
+    * superseded pair relation freed.
     *
     * `lens`: (doc_id, len) — each doc's indexed length.
     * Output: (sa_rank, doc1, pos1, doc2, pos2, lcp) where sa_rank is
@@ -374,8 +369,8 @@ object SuffixArray {
   def writeSearchIndex(docs: DataFrame, path: String,
       nParts: Int = -1): Unit = {
     val spark = docs.sparkSession
-    // default sizing is INPUT-DERIVED (guide §6: output files in the
-    // 128 MB–1 GB class, directories worth pruning): one index row
+    // default sizing is INPUT-DERIVED (output files in the 128 MB–1 GB
+    // class, directories worth pruning): one index row
     // per corpus char at ~50 B/row (3 longs + the 16-char probe
     // prefix), ~64 MB per directory partition. A 17 MB suite corpus
     // gets one healthy file instead of 32 shards of a few KB; a
@@ -426,7 +421,7 @@ object SuffixArray {
     // not: Spark compares strings byte-wise in UTF-8, where
     // supplementary (astral) characters sort ABOVE U+FFFF, so a
     // partition whose min_pref was `pattern` + an astral char would
-    // be pruned despite holding matches (ADVICE r13)
+    // be pruned despite holding matches
     // Spark's substring counts CODE POINTS; pattern.length counts
     // UTF-16 units — they differ when the pattern itself holds
     // astral chars, so truncate by the code-point count
@@ -446,9 +441,8 @@ object SuffixArray {
   // ---------------------------------------------------------------- q246
   /** q246: the persisted search index's READ path as an oracled
     * query — the 100 TB story [[writeSearchIndex]]/[[searchIndexProbe]]
-    * sell, now with driver-oracle evidence of its own (VERDICT r13
-    * #4; q240 oracles the in-plan answer, and the probe was
-    * previously spec-pinned only). Builds the index into a per-SF
+    * sell, with oracle evidence of its own (q240 oracles the in-plan
+    * answer; the probe is otherwise spec-pinned only). Builds the index into a per-SF
     * scratch directory (E7's idempotent-overwrite sink discipline —
     * rebuilding is a no-op-equivalent), then answers every
     * [[SearchPatterns]] literal through the partition-pruned

@@ -298,12 +298,13 @@ object TextOps {
     * chain-of-near-dups spec drives the full candidates → verify →
     * ccAuto path through this). */
   private[graft] def neardupClustersFromDocs(d: DataFrame): DataFrame = {
-    val sig = Checkpoints.cut(laneSigs(d, 2))
-    val cand = Checkpoints.cut(candidates(bandRelation(sig, 3, 5)).distinct())
-    val pairs = Checkpoints.cut(
-      jaccardVerified(d, sig.select("doc_id", "nn"), cand, 0.5)
+    // the signatures and candidates die once the verified pairs are cut
+    val pairs = Checkpoints.scoped {
+      val sig = Checkpoints.cut(laneSigs(d, 2))
+      val cand = Checkpoints.cut(candidates(bandRelation(sig, 3, 5)).distinct())
+      Checkpoints.cut(jaccardVerified(d, sig.select("doc_id", "nn"), cand, 0.5)
         .select(col("a"), col("b")))
-    Checkpoints.release(sig, cand)
+    }
     val paired = pairs.select(col("a").as("node"))
       .union(pairs.select(col("b").as("node"))).distinct()
     val comp = graft.graph.StarContraction.ccAuto(paired,

@@ -72,7 +72,7 @@ class KMeansSpec extends SparkSpec {
       .agg(min(col("margin") / (col("scale") + lit(1.0))).as("rel"),
         min(col("margin")).as("abs"))
       .first()
-    Checkpoints.release(assign, cent)
+    Checkpoints.releaseAll(spark)
     info(f"min runner-up margin: abs ${m.getDouble(1)}%.3e, " +
       f"rel ${m.getDouble(0)}%.3e")
     assert(m.getDouble(0) > 1e-9,
@@ -201,7 +201,7 @@ class KMeansSpec extends SparkSpec {
       .collect()
       .groupBy(_.getAs[Long]("q_vec"))
       .view.mapValues(_.map(_.getAs[Int]("cell")).toSet).toMap
-    Checkpoints.release(assign, cent)
+    Checkpoints.releaseAll(spark)
     rows.foreach { r =>
       val q = r.getAs[Long]("q_vec")
       assert(probed(q).contains(cells(r.getAs[Long]("cand"))),
@@ -238,7 +238,7 @@ class KMeansSpec extends SparkSpec {
       .view.mapValues(_.sortBy(r => (r.getAs[Double]("d"),
         r.getAs[Long]("cand"))).take(KMeans.TopK)
         .map(_.getAs[Long]("cand")).toSet).toMap
-    Checkpoints.release(assign, cent)
+    Checkpoints.releaseAll(spark)
     val recalls = exact.map { case (q, truth) =>
       (adcTop.getOrElse(q, Set.empty) & truth).size.toDouble / truth.size
     }

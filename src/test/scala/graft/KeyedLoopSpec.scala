@@ -49,7 +49,7 @@ class KeyedLoopSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }(identity)
     assert(run.rounds == 1)
     assert(Checkpoints.partitionsOn(run.out, "node") == Some(n))
-    Checkpoints.release(run.out)
+    Checkpoints.releaseAll(spark)
   }
 
   // the trade graph's relations are a few KB: one partition at the

@@ -104,65 +104,6 @@ class Node2VecSpec extends SparkSpec {
     assert(got.length > seeds.count())
   }
 
-  test("node2vecWalks at minSupport = 1 is bit-equal to the unbounded construction") {
-    // the knob's identity case, on the real trade graph — the q224
-    // oracle rides this path, so the equality here is what licenses
-    // routing the oracled query through node2vecWalks
-    val t = Tables(spark, sfDir())
-    val seeds = t.nation
-      .select(col("n_nationkey").cast("long").as("node"))
-      .select(col("node"),
-        explode(expr(s"sequence(0, ${RandomWalks.WalksPerNode - 1})"))
-          .as("w"))
-      .select(
-        (col("node") * RandomWalks.WalksPerNode + col("w")).as("walk_id"),
-        col("node"))
-    val adj = RandomWalks.adjacency(t)
-    val legacy = Node2Vec.walkRows(seeds, adj,
-        Node2Vec.transitionIntervals(adj, TradeGraph.edges(t)),
-        RandomWalks.WalkLen)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq.sorted
-    val knob = Node2Vec.node2vecWalks(seeds, TradeGraph.edges(t),
-        RandomWalks.WalkLen)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq.sorted
-    assert(knob == legacy)
-    assert(knob.nonEmpty)
-  }
-
-  test("minSupport = 2 equals the pipeline on pre-filtered edges and never walks a dropped edge") {
-    // weighted fixture: weight-1 edges (0→2, 2→0, 1→3) must vanish —
-    // both from the walkable adjacency AND from the α edge test
-    val weighted = Seq(
-      (0L, 1L, 3L), (0L, 2L, 1L), (1L, 0L, 2L), (1L, 2L, 2L),
-      (2L, 0L, 1L), (2L, 1L, 5L), (1L, 3L, 1L), (3L, 0L, 4L))
-      .toDF("src", "dst", "cnt")
-    val seeds = (0L to 3L).map(n => (n, n)).toDF("walk_id", "node")
-    val len = 5
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSeq.sorted
-    val bounded = rows(Node2Vec.node2vecWalks(seeds, weighted, len,
-      minSupport = 2))
-    val manual = rows(Node2Vec.node2vecWalks(seeds,
-      weighted.filter(col("cnt") >= 2), len))
-    assert(bounded == manual, "knob ≠ explicit pre-filter")
-    val kept = Set((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L), (3L, 0L))
-    bounded.groupBy(_._1).foreach { case (id, ws) =>
-      ws.sortBy(_._2).sliding(2).foreach {
-        case Seq((_, _, a), (_, _, b)) =>
-          assert(kept.contains((a, b)), s"dropped edge $a->$b in walk $id")
-        case _ =>
-      }
-    }
-    // the bound is LIVE in the fixture: node 2 is a sink in the
-    // bounded graph via 2→0 only if dropped — its unbounded walk
-    // differs
-    val unbounded = rows(Node2Vec.node2vecWalks(seeds, weighted, len))
-    assert(bounded != unbounded, "threshold changed nothing — fixture too weak")
-  }
-
   test("q226 node2vec embeddings are unit-norm and trained on a DIFFERENT corpus than q223") {
     val rows = Node2Vec.q226Node2vecEmbeddings(spark, sfDir())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

@@ -52,7 +52,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(initial.contains("BroadcastHashJoin"), s"no broadcast in the initial plan:\n$initial")
     assert(!initial.contains("SortMergeJoin"), initial)
-    Checkpoints.release(in, seed, ranks)
+    Checkpoints.releaseAll(spark)
   }
 
   test("q03: part dimension join is a broadcast hash join") {

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The superstep kernel's own contract, on small in-memory graphs:
   * superseded rounds (and the aliased seed of a semi-naive loop) are
-  * freed, the union view stays within its width cap, and the round
-  * count is the number of steps run. */
+  * freed, a keyed loop's relation lives until the loop returns, the
+  * union view stays within its width cap, and the round count is the
+  * number of steps run. */
 class SuperstepSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,7 +43,7 @@ class SuperstepSpec extends SparkSpec {
     }(Superstep.budgetOnly).out
     assert(persisted -- before2 == cutLeaves(ranks).toSet)
     assert(ranks.agg(max("r")).first().getDouble(0) == 1.0 / 64)
-    Checkpoints.release(visited, ranks)
+    Checkpoints.releaseAll(spark)
   }
 
   test("a nested loop's frames are freed with the enclosing round") {
@@ -56,7 +57,26 @@ class SuperstepSpec extends SparkSpec {
     }(identity).out
     assert(out.as[Long].collect().toSeq == Seq(2220L))
     assert(persisted -- before == cutLeaves(out).toSet)
-    Checkpoints.release(out)
+    Checkpoints.releaseAll(spark)
+  }
+
+  test("a round's own cuts and the keyed loop's relation die once nothing reads them") {
+    val before = persisted
+    var inv = Set.empty[Int]
+    val run = Superstep.loopOn(path, "dst", "node", 3) { r =>
+      (r.cut(Seq(0L).toDF("node")), Superstep.Unmeasured)
+    } { (e, state, r) =>
+      // the co-partitioned relation the loop cut lives for every round
+      inv = cutLeaves(e).toSet
+      assert(inv.nonEmpty && inv.subsetOf(persisted))
+      // a cut made in the round outside Round.cut is the loop's too
+      val side = Checkpoints.cut(state.select((col("node") + 1).as("node")))
+      (r.cut(side.union(state).distinct()), Superstep.Unmeasured)
+    }(identity)
+    assert(run.out.as[Long].collect().sorted.toSeq == (0L to 3L))
+    assert(persisted -- before == cutLeaves(run.out).toSet)
+    assert(!inv.exists(persisted))
+    Checkpoints.releaseAll(spark)
   }
 
   test("a union view fed more than 32 parts is re-cut to at most 32 leaves") {
