@@ -247,19 +247,12 @@ object EntityResolution {
     if (!hashPriority) return refineCore(pairs)
     val matched = pairs.select(col("a").as("node"))
       .union(pairs.select(col("b").as("node"))).distinct()
-    // rank via distributed sort + zipWithIndex, NOT a row_number()
-    // window: an unpartitioned window funnels the whole matched set
-    // through ONE task, exactly the single-partition barrier this
-    // guard's scale story forbids; zipWithIndex keeps the range
-    // partitions and assigns offsets with one extra count pass (the
-    // canonical distributed dense-id recipe — the repo's one
-    // legitimate RDD-seam class)
-    val ss = pairs.sparkSession
-    import ss.implicits._
-    val rank = graft.Checkpoints.cut(
-      matched.sort(hashPrio(col("node")), col("node"))
-        .select(col("node")).as[Long].rdd.zipWithIndex()
-        .map { case (n, i) => (n, i + 1L) }.toDF("node", "h"))
+    // a distributed dense rank, NOT a row_number() window: an
+    // unpartitioned window funnels the whole matched set through ONE
+    // task, exactly the single-partition barrier this guard's scale
+    // story forbids; (hash, node) is a strict total order
+    val rank = graft.Ordinals.denseBy(matched,
+      Seq(hashPrio(col("node")), col("node")), "h")
     val hp = pairs
       .join(rank.select(col("node").as("a"), col("h").as("ha")), Seq("a"))
       .join(rank.select(col("node").as("b"), col("h").as("hb")), Seq("b"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Hll
 
 /** Batch event analytics over the events stream — the product-facing
   * query family (funnels, retention cohorts, hopping windows) that
@@ -597,44 +598,29 @@ object EventOps {
     * with the q187 sketch running NEXT TO the exact count. The point
     * at scale: the exact side needs a (bucket, user) DISTINCT — a
     * dedup shuffle whose state is the distinct set itself — while
-    * the sketch side is ONE max-aggregation straight off the raw
-    * events (register max is idempotent under duplicates, so dedup
-    * is free), with O(buckets × 64) state. In streaming form the
-    * registers are also window-MERGEABLE: a tumbling window's sketch
-    * is the bucket-wise max of its panes, which is why this shape
-    * survives `mapGroupsWithState` where exact distinct cannot.
+    * the sketch side is ONE [[Hll.registers]] aggregate straight off
+    * the raw events (register max is idempotent under duplicates, so
+    * dedup is free), with O(buckets × 64) state. The registers are
+    * also window-MERGEABLE: a tumbling window's sketch is the
+    * elementwise max of its panes, which is why the same aggregate
+    * runs as a streaming query (q217) where exact distinct cannot.
     *
     * Small windows land in the linear-counting regime (raw ≤ 2.5m)
     * — the audit exercises the correction branch q187's big sets
-    * skip. Same integer register discipline as q187. */
+    * skip. The oracle checks it against the relational register
+    * form. */
   def q193WindowedHllUsers(spark: SparkSession, dir: String): DataFrame = {
-    import graft.text.SourceOps.{HllM, HllNum, HllWBits}
     val ev = Tables(spark, dir).events
       .withColumn("bucket",
         floor(expr("ts_us div 1000") / lit(3600000.0)).cast("long"))
       .select(col("bucket"), col("user_id"))
     val exact = ev.distinct().groupBy("bucket")
       .agg(count(lit(1)).as("n_exact"))
-    val mask = (1L << HllWBits) - 1
-    val regs = ev
-      .select(col("bucket"),
-        expr("cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)")
-          .as("v"))
-      .select(col("bucket"), shiftright(col("v"), HllWBits).as("reg"),
-        expr(s"instr(lpad(bin(v % ${mask + 1}), $HllWBits, '0'), '1')")
-          .as("pos"))
-      .select(col("bucket"), col("reg"),
-        when(col("pos") === 0, HllWBits + 1).otherwise(col("pos")).as("rho"))
-      .groupBy("bucket", "reg").agg(max(col("rho")).as("mj"))
-    val sketch = regs.groupBy("bucket").agg(
-      (sum(expr(s"shiftleft(cast(1 as bigint), ${HllWBits + 1} - mj)")) +
-        (lit(HllM) - count(lit(1))) * lit(1L << (HllWBits + 1))).as("sumt"),
-      (lit(HllM) - count(lit(1))).as("z"))
-    val raw = lit(HllNum).cast("double") / col("sumt")
-    val est = when(raw <= 2.5 * HllM && col("z") > 0,
-      lit(HllM.toDouble) * log(lit(HllM.toDouble) / col("z"))).otherwise(raw)
+    val sketch = ev.groupBy("bucket")
+      .agg(Hll.registers(Hll.hash60(col("user_id"))).as("regs"))
     sketch.join(exact, "bucket")
-      .select(col("bucket"), col("n_exact"), round(est, 4).as("hll_est"))
+      .select(col("bucket"), col("n_exact"),
+        Hll.estimate(col("regs")).as("hll_est"))
       .withColumn("rel_err_pct",
         round(lit(100.0) * (col("hll_est") - col("n_exact")) / col("n_exact"), 4))
       .orderBy("bucket")
@@ -658,12 +644,12 @@ object EventOps {
     * full recompute this operator exists to avoid; `merge_exact` and
     * `sketch_exact` pin both claims as output columns, hash-checked.
     *
-    * Scale shape: each side is ONE partial agg to type grain +
-    * O(types × 64) register rows; the merge is a types-sized join.
+    * Scale shape: each side is ONE partial agg to type grain, the
+    * registers a 64-INT array per type ([[Hll.registers]], merged by
+    * [[Hll.merge]]); the merge is a types-sized join.
     * At 100 TB the base state is READ (it was persisted), not
     * recomputed — the recompute here exists to prove the algebra. */
   def q195DeltaAggMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    import graft.text.SourceOps.{HllM, HllNum, HllWBits}
     val ev = Tables(spark, dir).events
       .select(col("event_type"), col("value"), col("user_id"),
         expr("cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint)")
@@ -671,60 +657,33 @@ object EventOps {
     val base = ev.filter(col("h") % 5 =!= 0)
     val delta = ev.filter(col("h") % 5 === 0)
 
-    def scalars(d: DataFrame, p: String): DataFrame =
+    def state(d: DataFrame, p: String): DataFrame =
       d.groupBy("event_type").agg(
         count(lit(1)).as(s"${p}_n"),
         sum(round(col("value"), 2).cast("decimal(18,2)")).as(s"${p}_t"),
         min(col("value")).as(s"${p}_mn"),
-        max(col("value")).as(s"${p}_mx"))
-
-    val mask = (1L << HllWBits) - 1
-    def regs(d: DataFrame): DataFrame = d
-      .select(col("event_type"),
-        expr("cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)")
-          .as("v"))
-      .select(col("event_type"), shiftright(col("v"), HllWBits).as("reg"),
-        expr(s"instr(lpad(bin(v % ${mask + 1}), $HllWBits, '0'), '1')").as("pos"))
-      .select(col("event_type"), col("reg"),
-        when(col("pos") === 0, HllWBits + 1).otherwise(col("pos")).as("rho"))
-      .groupBy("event_type", "reg").agg(max(col("rho")).as("mj"))
-
-    def estimate(r: DataFrame, out: String): DataFrame = {
-      val sk = r.groupBy("event_type").agg(
-        (sum(expr(s"shiftleft(cast(1 as bigint), ${HllWBits + 1} - mj)")) +
-          (lit(HllM) - count(lit(1))) * lit(1L << (HllWBits + 1))).as("sumt"),
-        (lit(HllM) - count(lit(1))).as("z"))
-      val raw = lit(HllNum).cast("double") / col("sumt")
-      sk.select(col("event_type"),
-        round(when(raw <= 2.5 * HllM && col("z") > 0,
-          lit(HllM.toDouble) * log(lit(HllM.toDouble) / col("z")))
-          .otherwise(raw), 4).as(out))
-    }
+        max(col("value")).as(s"${p}_mx"),
+        Hll.registers(Hll.hash60(col("user_id"))).as(s"${p}_r"))
 
     // maintained: merge the two states (+, least/greatest, register max)
-    val merged = scalars(base, "b")
-      .join(scalars(delta, "d"), Seq("event_type"), "full_outer")
+    val merged = state(base, "b")
+      .join(state(delta, "d"), Seq("event_type"), "full_outer")
       .select(col("event_type"),
         (coalesce(col("b_n"), lit(0L)) + coalesce(col("d_n"), lit(0L))).as("n"),
         (coalesce(col("b_t"), lit(0).cast("decimal(18,2)")) +
           coalesce(col("d_t"), lit(0).cast("decimal(18,2)"))).as("t"),
         least(col("b_mn"), col("d_mn")).as("mn"),
-        greatest(col("b_mx"), col("d_mx")).as("mx"))
-    val mergedRegs = regs(base).unionByName(regs(delta))
-      .groupBy("event_type", "reg").agg(max(col("mj")).as("mj"))
-    val mergedEst = estimate(mergedRegs, "hll_users")
+        greatest(col("b_mx"), col("d_mx")).as("mx"),
+        Hll.estimate(Hll.merge(col("b_r"), col("d_r"))).as("hll_users"))
     // full recompute — exists to prove the algebra
-    val full = scalars(ev, "f")
-    val fullEst = estimate(regs(ev), "f_est")
-    merged.join(mergedEst, "event_type")
-      .join(full, "event_type").join(fullEst, "event_type")
+    merged.join(state(ev, "f"), "event_type")
       .select(col("event_type"), col("n"),
         col("t").cast("double").as("total"), col("mn").as("vmin"),
         col("mx").as("vmax"), col("hll_users"),
         (col("n") === col("f_n") && col("t") === col("f_t") &&
           col("mn") === col("f_mn") && col("mx") === col("f_mx"))
           .as("merge_exact"),
-        (col("hll_users") === col("f_est")).as("sketch_exact"))
+        (col("hll_users") === Hll.estimate(col("f_r"))).as("sketch_exact"))
       .orderBy("event_type")
   }
 
@@ -749,27 +708,6 @@ object EventOps {
 
   val oracleSql: Map[String, String] = Map(
     "q195_delta_agg_maintenance" -> {
-      import graft.text.SourceOps.{HllM, HllNum, HllWBits}
-      val M = 1L << HllWBits
-      def regCtes(src: String, p: String) =
-        s"""${p}h AS (SELECT event_type, ${graft.text.TextOps.hexToLongSql(
-             "md5(CAST(user_id AS VARCHAR))", 1, 15)} AS v FROM $src),
-           |${p}r AS (SELECT event_type, v // $M AS reg,
-           |  CASE WHEN strpos(lpad(bin(v % $M), $HllWBits, '0'), '1') = 0
-           |       THEN ${HllWBits + 1}
-           |       ELSE strpos(lpad(bin(v % $M), $HllWBits, '0'), '1')
-           |  END AS rho FROM ${p}h),
-           |${p}m AS (SELECT event_type, reg, max(rho) AS mj
-           |          FROM ${p}r GROUP BY 1, 2)""".stripMargin
-      def estCte(regsrc: String, p: String) =
-        s"""${p}sk AS (SELECT event_type,
-           |  sum(1::BIGINT << (${HllWBits + 1} - mj))
-           |    + ($HllM - count(*)) * (1::BIGINT << ${HllWBits + 1}) AS sumt,
-           |  $HllM - count(*) AS z FROM $regsrc GROUP BY 1),
-           |${p}e AS (SELECT event_type,
-           |  round(CASE WHEN $HllNum / sumt <= ${2.5 * HllM} AND z > 0
-           |        THEN $HllM.0 * ln($HllM.0 / z)
-           |        ELSE $HllNum / sumt END, 4) AS est FROM ${p}sk)""".stripMargin
       def sc(src: String, p: String) =
         s"""$p AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
            |  sum(CAST(round("value", 2) AS DECIMAL(18,2))) AS t,
@@ -789,14 +727,14 @@ object EventOps {
          |  coalesce(sb.t, 0) + coalesce(sd.t, 0) AS t,
          |  least(sb.mn, sd.mn) AS mn, greatest(sb.mx, sd.mx) AS mx
          |  FROM sb FULL OUTER JOIN sd ON sb.event_type = sd.event_type),
-         |${regCtes("b", "b")},
-         |${regCtes("d", "d")},
-         |${regCtes("ev", "f")},
+         |${Hll.registersSql("bm", "b", Seq("event_type"), "user_id")},
+         |${Hll.registersSql("dm", "d", Seq("event_type"), "user_id")},
+         |${Hll.registersSql("fm", "ev", Seq("event_type"), "user_id")},
          |mm AS (SELECT event_type, reg, max(mj) AS mj
          |       FROM (SELECT * FROM bm UNION ALL SELECT * FROM dm)
          |       GROUP BY 1, 2),
-         |${estCte("mm", "m")},
-         |${estCte("fm", "f")}
+         |${Hll.estimateSql("me", "mm", Seq("event_type"))},
+         |${Hll.estimateSql("fe", "fm", Seq("event_type"))}
          |SELECT mg.event_type, mg.n, CAST(mg.t AS DOUBLE) AS total,
          |  mg.mn AS vmin, mg.mx AS vmax, me.est AS hll_users,
          |  (mg.n = sf.n AND mg.t = sf.t AND mg.mn = sf.mn
@@ -807,8 +745,7 @@ object EventOps {
          |ORDER BY 1""".stripMargin
     },
 
-    "q193_windowed_hll_users" -> {
-      import graft.text.SourceOps.{HllM, HllNum, HllWBits}
+    "q193_windowed_hll_users" ->
       s"""WITH ev AS (
          |  SELECT CAST(floor(epoch_ms(ts) / 3600000.0) AS BIGINT) AS bucket,
          |         user_id
@@ -816,33 +753,11 @@ object EventOps {
          |e AS (SELECT bucket, CAST(count(DISTINCT user_id) AS BIGINT)
          |        AS n_exact
          |      FROM ev GROUP BY 1),
-         |h AS (SELECT bucket,
-         |        ${graft.text.TextOps.hexToLongSql(
-                    "md5(CAST(user_id AS VARCHAR))", 1, 15)} AS v
-         |      FROM ev),
-         |r AS (SELECT bucket, v // ${1L << HllWBits} AS reg,
-         |        CASE WHEN strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') = 0 THEN ${HllWBits + 1}
-         |             ELSE strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') END AS rho
-         |      FROM h),
-         |m AS (SELECT bucket, reg, max(rho) AS mj FROM r GROUP BY 1, 2),
-         |sk AS (SELECT bucket,
-         |         sum(1::BIGINT << (${HllWBits + 1} - mj))
-         |           + ($HllM - count(*)) * (1::BIGINT << ${HllWBits + 1})
-         |           AS sumt,
-         |         $HllM - count(*) AS z
-         |       FROM m GROUP BY 1),
-         |est AS (SELECT sk.bucket, e.n_exact,
-         |          CASE WHEN $HllNum / sumt <= ${2.5 * HllM} AND z > 0
-         |               THEN $HllM.0 * ln($HllM.0 / z)
-         |               ELSE $HllNum / sumt END AS est
-         |        FROM sk JOIN e USING (bucket))
-         |SELECT bucket, n_exact, round(est, 4) AS hll_est,
-         |       round(100.0 * (round(est, 4) - n_exact) / n_exact, 4)
-         |         AS rel_err_pct
-         |FROM est ORDER BY bucket""".stripMargin
-    },
+         |${Hll.registersSql("m", "ev", Seq("bucket"), "user_id")},
+         |${Hll.estimateSql("es", "m", Seq("bucket"))}
+         |SELECT bucket, n_exact, est AS hll_est,
+         |       round(100.0 * (est - n_exact) / n_exact, 4) AS rel_err_pct
+         |FROM es JOIN e USING (bucket) ORDER BY bucket""".stripMargin,
 
     "q125_ab_lift" ->
       """WITH a AS (SELECT event_type, CAST(user_id % 2 AS INT) AS arm

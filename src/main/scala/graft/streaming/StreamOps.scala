@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Hll
 
 /** Event-stream operators over the `events` table, each a
   * batch-equivalent DataFrame plan (the `queries()` entry,
@@ -185,9 +186,10 @@ object StreamOps {
 
   /** S8 oracled: [[Streaming.hllWindowedUsers]] executed as an actual
     * streaming query — the portable-register HLL sketch as ONE
-    * stateful aggregate per window — checked against the register
-    * relation spelled out in SQL (same md5-derived 60-bit hash, same
-    * exact-BIGINT harmonic sum, same linear-counting branch). */
+    * stateful aggregate per window — checked against the relational
+    * register form in SQL ([[Hll.registersSql]]: same md5-derived
+    * 60-bit hash, same exact-BIGINT harmonic sum, same
+    * linear-counting branch). */
   def q217HllStream(spark: SparkSession, dir: String): DataFrame =
     runAvailableNow(spark, dir, "q217_hll")(Streaming.hllWindowedUsers)
       .orderBy("bucket")
@@ -275,36 +277,15 @@ object StreamOps {
         |FROM e CROSS JOIN (SELECT unnest(generate_series(0, 5)) AS k) t
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // q193's register relation per tumbling hour, estimate-only: the
-    // streaming single-agg sketch must land on the identical value.
-    "q217_hll_stream" -> {
-      import graft.text.SourceOps.{HllM, HllNum, HllWBits}
+    // the relational register form per tumbling hour, estimate-only:
+    // the streaming single-agg sketch must land on the identical value.
+    "q217_hll_stream" ->
       s"""WITH ev AS (
          |  SELECT CAST(floor(epoch_ms(ts) / 3600000.0) AS BIGINT) AS bucket,
          |         user_id
          |  FROM events),
-         |h AS (SELECT bucket,
-         |        ${graft.text.TextOps.hexToLongSql(
-                    "md5(CAST(user_id AS VARCHAR))", 1, 15)} AS v
-         |      FROM ev),
-         |r AS (SELECT bucket, v // ${1L << HllWBits} AS reg,
-         |        CASE WHEN strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') = 0 THEN ${HllWBits + 1}
-         |             ELSE strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') END AS rho
-         |      FROM h),
-         |m AS (SELECT bucket, reg, max(rho) AS mj FROM r GROUP BY 1, 2),
-         |sk AS (SELECT bucket,
-         |         sum(1::BIGINT << (${HllWBits + 1} - mj))
-         |           + ($HllM - count(*)) * (1::BIGINT << ${HllWBits + 1})
-         |           AS sumt,
-         |         $HllM - count(*) AS z
-         |       FROM m GROUP BY 1)
-         |SELECT bucket,
-         |       round(CASE WHEN $HllNum / sumt <= ${2.5 * HllM} AND z > 0
-         |                  THEN $HllM.0 * ln($HllM.0 / z)
-         |                  ELSE $HllNum / sumt END, 4) AS hll_users
-         |FROM sk ORDER BY bucket""".stripMargin
-    },
+         |${Hll.registersSql("m", "ev", Seq("bucket"), "user_id")},
+         |${Hll.estimateSql("es", "m", Seq("bucket"))}
+         |SELECT bucket, est AS hll_users FROM es ORDER BY bucket""".stripMargin,
   )
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Hll
 
 /** Structured Streaming forms of the event operators (SURVEY §2.5).
   * Semantics match the batch-equivalents in [[StreamOps]]; specs drive
@@ -55,47 +56,24 @@ object Streaming {
         col("l.user_id").as("user_id"))
 
   /** S8: windowed distinct-user sketch with PORTABLE registers — the
-    * streaming form of q193, as ONE stateful aggregate. q193's
-    * SQL-mirrorable register relation is two chained aggregations
-    * (registers, then the harmonic sum), which append-mode streaming
-    * cannot express; [[graft.functions.HllRegistersAgg]] collapses
-    * the sketch to a single `groupBy(window).agg` with a fixed
-    * 64-byte state per window, and [[hllEstimateExact]] (q193's
-    * integer read-out) converts registers to the count estimate in the
-    * stateless projection after the agg.
-    * The input hash is the same md5-derived 60-bit value as
-    * q187/q193 — computed IN-ROW, so any engine that can md5 can
-    * feed or merge these sketches; bit-equality of the streaming
-    * estimate with q193's batch estimate is spec-asserted. */
+    * streaming form of q193, as ONE stateful aggregate. The relational
+    * register form is two chained aggregations (registers, then the
+    * harmonic sum), which append-mode streaming cannot express;
+    * [[graft.functions.Hll.registers]] is a single `groupBy(window).agg`
+    * with a fixed 64-byte state per window, and
+    * [[graft.functions.Hll.estimate]] reads it out in the stateless
+    * projection after the agg. The aggregate and estimator are q193's
+    * own, so the streaming estimate is bit-equal to q193's batch
+    * estimate per window (spec-asserted); the input hash is computed
+    * IN-ROW, so any engine that can md5 can feed or merge these
+    * sketches. */
   def hllWindowedUsers(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "2 hours")
-      .withColumn("h60",
-        expr("cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)"))
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(graft.functions.HllRegistersAgg.registers(col("h60")).as("regs"))
+      .agg(Hll.registers(Hll.hash60(col("user_id"))).as("regs"))
       .select(
         floor(unix_millis(col("window.start")) / lit(3600000.0)).cast("long")
           .as("bucket"),
-        round(hllEstimateExact("regs"), 4).as("hll_users"))
-
-  /** q193's EXACT-integer readout over a register array: the harmonic
-    * sum is a BIGINT Σ 2^(W+1−r) (registers span rho ≤ W+1 = 55, so
-    * the 2^-r terms exceed a double's 53-bit mantissa span — a float
-    * accumulation can land one ulp off q193's integer form and flip
-    * a .00005 rounding boundary in the spec-pinned streaming-vs-batch
-    * bit-equality), followed by the
-    * single HllNum / sumt division and the identical linear-counting
-    * branch. Interpreted HOFs, but evaluated once per WINDOW row. */
-  private def hllEstimateExact(regs: String): Column = {
-    import graft.text.SourceOps.{HllM, HllNum, HllWBits}
-    val sumt = expr(
-      s"""aggregate($regs, cast(0 as bigint),
-         |  (acc, r) -> acc + shiftleft(cast(1 as bigint), ${HllWBits + 1} - r))"""
-        .stripMargin)
-    val z = size(expr(s"filter($regs, r -> r = 0)"))
-    val raw = lit(HllNum).cast("double") / sumt
-    when(raw <= 2.5 * HllM && z > 0,
-      lit(HllM.toDouble) * log(lit(HllM.toDouble) / z)).otherwise(raw)
-  }
+        Hll.estimate(col("regs")).as("hll_users"))
 }

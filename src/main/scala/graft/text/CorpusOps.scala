@@ -553,19 +553,16 @@ object CorpusOps {
     * `order_idx` is the GLOBAL training-step index across the whole
     * schedule — what a data loader actually consumes.
     *
-    * Scale shape: the sort is a range-partitioned total order (what
-    * `orderBy` compiles to — sampled bounds, no single reducer); the
-    * global index is then a per-partition offset scan (zipWithIndex),
-    * NOT an unpartitioned row_number window, which would funnel the
-    * corpus through one task. Because the (epoch, key, doc_id) order
+    * Scale shape: the global index is [[graft.Ordinals.denseBy]] — a
+    * range-partitioned sort plus per-partition offsets — NOT an
+    * unpartitioned row_number window, which would funnel the corpus
+    * through one task. Because the (epoch, key, doc_id) order
     * is total and strict, the index each row receives is its exact
     * rank — independent of where the range bounds fall, so the output
     * is identical at any partition count. */
   val ShuffleEpochs = 3
 
   private[graft] def epochSchedule(d: DataFrame, epochs: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val keyed = d
       .select(col("doc_id"), col("n_chars"),
         explode(expr(s"sequence(1, $epochs)")).as("epoch"))
@@ -574,17 +571,10 @@ object CorpusOps {
           md5(concat(lit("1:"), col("doc_id").cast("string")))))
         .otherwise(md5(concat(col("epoch").cast("string"), lit(":"),
           col("doc_id").cast("string")))))
-    val sorted = keyed
       .select(col("epoch").cast("long").as("epoch"), col("doc_id"), col("k"))
-      .orderBy("epoch", "k", "doc_id")
-    val schema = StructType(Seq(
-      StructField("epoch", LongType, nullable = false),
-      StructField("order_idx", LongType, nullable = false),
-      StructField("doc_id", LongType, nullable = true)))
-    val rows = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      Row(r.getLong(0), i + 1L, r.getLong(1))
-    }
-    sorted.sparkSession.createDataFrame(rows, schema)
+    graft.Ordinals.denseBy(keyed, Seq(col("epoch"), col("k"), col("doc_id")),
+        "order_idx")
+      .select(col("epoch"), col("order_idx"), col("doc_id"))
       .orderBy("order_idx")
   }
 

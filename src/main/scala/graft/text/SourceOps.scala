@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
-import graft.functions.WordShingles
+import graft.functions.{Hll, WordShingles}
 
 /** Corpus-composition audits over the document corpus: cross-source
   * n-gram contamination (how much two ingest sources share — the
@@ -271,58 +271,28 @@ object SourceOps {
     * check.
     *
     * Scale shape: the sketch side never materializes the distinct set —
-    * registers come from ONE (source, bucket) max-aggregation with
-    * map-side combine (64 rows per source survive per partition), state
+    * registers come from ONE per-source [[graft.functions.Hll.registers]]
+    * aggregate, fused with the exact count in the same grouping over
+    * the distinct (source, gram) relation; sketch state is
     * O(sources × 64) regardless of corpus size. The exact side (a
     * distinct + count) is the expensive audit baseline by definition —
     * at 100 TB it runs on the sampled audit slice or is dropped once
-    * the sketch is trusted; the sketch side IS the scale path.
-    *
-    * Numeric discipline: all register arithmetic is INTEGER — the
-    * harmonic sum Σ 2^(−M_j) is carried as Σ 2^(55−M_j), a BIGINT ≤
-    * 2^61, exact and order-free in both engines; the α·m²·2^55
-    * numerator is one double literal inlined identically into both
-    * plans; ln appears only in the final scalar (rounded 4dp). */
-  val HllM = 64
-  /** The m = 64 bias constant from the HLL paper. */
-  val HllAlpha = 0.709
-  private[graft] val HllWBits = 54 // 60-bit md5 prefix = 6 bucket bits + 54
-  private[graft] val HllNum: String = // α·m²·2^55 as an exact double literal
-    new java.math.BigDecimal(HllAlpha * (HllM.toDouble * HllM) *
-      math.pow(2, HllWBits + 1)).toPlainString
-
-  def q187HllCardinality(spark: SparkSession, dir: String): DataFrame = {
-    val g = graft.Checkpoints.cut(
-      TextOps.docs(spark, dir)
-        .filter(length(col("s")) >= 5)
-        .select(col("source"),
-          explode(graft.functions.CharGrams(col("s"))).as("gram"))
-        .distinct())
-    val exact = g.groupBy("source").agg(count(lit(1)).as("n_exact"))
-    val mask = (1L << HllWBits) - 1
-    val regs = g
+    * the sketch is trusted; the sketch side IS the scale path. The
+    * oracle checks it against the relational register form. */
+  def q187HllCardinality(spark: SparkSession, dir: String): DataFrame =
+    TextOps.docs(spark, dir)
+      .filter(length(col("s")) >= 5)
       .select(col("source"),
-        expr("cast(conv(substring(md5(gram), 1, 15), 16, 10) as bigint)")
-          .as("v"))
-      .select(col("source"), shiftright(col("v"), HllWBits).as("bucket"),
-        expr(s"instr(lpad(bin(v % ${mask + 1}), $HllWBits, '0'), '1')")
-          .as("pos"))
-      .select(col("source"), col("bucket"),
-        when(col("pos") === 0, HllWBits + 1).otherwise(col("pos")).as("rho"))
-      .groupBy("source", "bucket").agg(max(col("rho")).as("mj"))
-    val sketch = regs.groupBy("source").agg(
-      (sum(expr(s"shiftleft(cast(1 as bigint), ${HllWBits + 1} - mj)")) +
-        (lit(HllM) - count(lit(1))) * lit(1L << (HllWBits + 1))).as("sumt"),
-      (lit(HllM) - count(lit(1))).as("z"))
-    val raw = lit(HllNum).cast("double") / col("sumt")
-    val est = when(raw <= 2.5 * HllM && col("z") > 0,
-      lit(HllM.toDouble) * log(lit(HllM.toDouble) / col("z"))).otherwise(raw)
-    sketch.join(exact, "source")
-      .select(col("source"), col("n_exact"), round(est, 4).as("hll_est"))
+        explode(graft.functions.CharGrams(col("s"))).as("gram"))
+      .distinct()
+      .groupBy("source")
+      .agg(count(lit(1)).as("n_exact"),
+        Hll.registers(Hll.hash60(col("gram"))).as("regs"))
+      .select(col("source"), col("n_exact"),
+        Hll.estimate(col("regs")).as("hll_est"))
       .withColumn("rel_err_pct",
         round(lit(100.0) * (col("hll_est") - col("n_exact")) / col("n_exact"), 4))
       .orderBy("source")
-  }
 
   // ---------------------------------------------------------------- q189
   /** Corpus snapshot diff — the release-to-release delta report a
@@ -483,7 +453,8 @@ object SourceOps {
     * inclusion–exclusion, sketched Jaccard beside q174's exact one.
     * The exact columns make this a q187-style error REPORT; a 100 TB
     * deployment keeps only the register path: ONE gram pass →
-    * sources×64 registers → C(s,2)×64 register-max rows — no
+    * one register array per source ([[graft.functions.Hll.registers]])
+    * → one [[graft.functions.Hll.merge]] per source pair — no
     * gram-keyed pair relation at all, which is what makes the
     * estimator usable where the exact matrix (whose cost is the
     * shared-gram volume) is not. Inclusion–exclusion can go slightly
@@ -496,52 +467,23 @@ object SourceOps {
 
   private[graft] def sketchOverlap(d: DataFrame, k: Int): DataFrame = {
     val sg = sourceGrams(d, k)
-    val exact = overlapFromGrams(sg)
-    val mask = (1L << HllWBits) - 1
-    val regs = graft.Checkpoints.cut(sg
-      .select(col("source"),
-        expr("cast(conv(substring(md5(gram), 1, 15), 16, 10) as bigint)")
-          .as("v"))
-      .select(col("source"), shiftright(col("v"), HllWBits).as("bucket"),
-        expr(s"instr(lpad(bin(v % ${mask + 1}), $HllWBits, '0'), '1')")
-          .as("pos"))
-      .select(col("source"), col("bucket"),
-        when(col("pos") === 0, HllWBits + 1).otherwise(col("pos")).as("rho"))
-      .groupBy("source", "bucket").agg(max(col("rho")).as("mj")))
-    def estOf(grouped: DataFrame, keys: Seq[String], out: String): DataFrame = {
-      val sketch = grouped.groupBy(keys.map(col): _*).agg(
-        (sum(expr(s"shiftleft(cast(1 as bigint), ${HllWBits + 1} - mj)")) +
-          (lit(HllM) - count(lit(1))) * lit(1L << (HllWBits + 1))).as("sumt"),
-        (lit(HllM) - count(lit(1))).as("z"))
-      val raw = lit(HllNum).cast("double") / col("sumt")
-      sketch.select(keys.map(col) :+
-        round(when(raw <= 2.5 * HllM && col("z") > 0,
-          lit(HllM.toDouble) * log(lit(HllM.toDouble) / col("z")))
-          .otherwise(raw), 4).as(out): _*)
-    }
-    val single = estOf(regs, Seq("source"), "est")
-    val pairs = regs.select(col("source")).distinct()
-      .select(col("source").as("src_a"))
-      .join(regs.select(col("source").as("src_b")).distinct(),
-        col("src_a") < col("src_b"))
-    // the pair relation is C(s,2) — broadcast it along both legs;
-    // union registers are register-wise max over the two sources'
-    // register sets (rows: C(s,2) × 64, bounded by the source count)
-    val unionRegs = regs.join(broadcast(pairs),
-        col("source") === col("src_a"))
-      .select(col("src_a"), col("src_b"), col("bucket"), col("mj"))
-      .union(regs.join(broadcast(pairs), col("source") === col("src_b"))
-        .select(col("src_a"), col("src_b"), col("bucket"), col("mj")))
-      .groupBy("src_a", "src_b", "bucket").agg(max(col("mj")).as("mj"))
-    val unionEst = estOf(unionRegs, Seq("src_a", "src_b"), "hll_union")
+    val regs = graft.Checkpoints.cut(sg.groupBy("source")
+      .agg(Hll.registers(Hll.hash60(col("gram"))).as("regs")))
+    val a = regs.select(col("source").as("src_a"), col("regs").as("ra"))
+    val b = regs.select(col("source").as("src_b"), col("regs").as("rb"))
+    // the pair relation is C(s,2) — broadcast it along both legs; the
+    // union sketch of a pair is the elementwise max of its two arrays
+    val pairs = a.select(col("src_a")).join(b.select(col("src_b")),
+      col("src_a") < col("src_b"))
+    val sketch = broadcast(pairs).join(a, "src_a").join(b, "src_b")
+      .select(col("src_a"), col("src_b"),
+        Hll.estimate(col("ra")).as("hll_a"),
+        Hll.estimate(col("rb")).as("hll_b"),
+        Hll.estimate(Hll.merge(col("ra"), col("rb"))).as("hll_union"))
     val interRaw = greatest(lit(0.0),
       col("hll_a") + col("hll_b") - col("hll_union"))
-    exact
-      .join(single.select(col("source").as("src_a"), col("est").as("hll_a")),
-        Seq("src_a"))
-      .join(single.select(col("source").as("src_b"), col("est").as("hll_b")),
-        Seq("src_b"))
-      .join(unionEst, Seq("src_a", "src_b"))
+    overlapFromGrams(sg)
+      .join(sketch, Seq("src_a", "src_b"))
       .withColumn("hll_common", round(interRaw, 4))
       .withColumn("hll_jaccard",
         round(col("hll_common") / col("hll_union"), 6))
@@ -832,54 +774,26 @@ object SourceOps {
          |pr AS (SELECT a.source AS src_a, b.source AS src_b,
          |         a.n AS n_a, b.n AS n_b
          |       FROM sz a JOIN sz b ON a.source < b.source),
-         |h AS (SELECT source, ${TextOps.hexToLongSql("md5(gram)", 1, 15)} AS v
-         |      FROM sg),
-         |r AS (SELECT source, v // ${1L << HllWBits} AS bucket,
-         |        CASE WHEN strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') = 0 THEN ${HllWBits + 1}
-         |             ELSE strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') END AS rho
-         |      FROM h),
-         |m AS (SELECT source, bucket, max(rho) AS mj FROM r GROUP BY 1, 2),
-         |sk AS (SELECT source,
-         |         sum(1::BIGINT << (${HllWBits + 1} - mj))
-         |           + ($HllM - count(*)) * (1::BIGINT << ${HllWBits + 1})
-         |           AS sumt,
-         |         $HllM - count(*) AS z
-         |       FROM m GROUP BY 1),
-         |es AS (SELECT source,
-         |         round(CASE WHEN $HllNum / sumt <= ${2.5 * HllM} AND z > 0
-         |               THEN $HllM.0 * ln($HllM.0 / z)
-         |               ELSE $HllNum / sumt END, 4) AS est
-         |       FROM sk),
-         |up AS (SELECT pr.src_a, pr.src_b, m.bucket, m.mj
+         |${Hll.registersSql("m", "sg", Seq("source"), "gram")},
+         |${Hll.estimateSql("es", "m", Seq("source"))},
+         |up AS (SELECT pr.src_a, pr.src_b, m.reg, m.mj
          |       FROM pr JOIN m ON m.source = pr.src_a
          |       UNION ALL
-         |       SELECT pr.src_a, pr.src_b, m.bucket, m.mj
+         |       SELECT pr.src_a, pr.src_b, m.reg, m.mj
          |       FROM pr JOIN m ON m.source = pr.src_b),
-         |um AS (SELECT src_a, src_b, bucket, max(mj) AS mj
+         |um AS (SELECT src_a, src_b, reg, max(mj) AS mj
          |       FROM up GROUP BY 1, 2, 3),
-         |usk AS (SELECT src_a, src_b,
-         |          sum(1::BIGINT << (${HllWBits + 1} - mj))
-         |            + ($HllM - count(*)) * (1::BIGINT << ${HllWBits + 1})
-         |            AS sumt,
-         |          $HllM - count(*) AS z
-         |        FROM um GROUP BY 1, 2),
-         |ue AS (SELECT src_a, src_b,
-         |         round(CASE WHEN $HllNum / sumt <= ${2.5 * HllM} AND z > 0
-         |               THEN $HllM.0 * ln($HllM.0 / z)
-         |               ELSE $HllNum / sumt END, 4) AS hll_union
-         |       FROM usk)
+         |${Hll.estimateSql("ue", "um", Seq("src_a", "src_b"))}
          |SELECT pr.src_a, pr.src_b, pr.n_a, pr.n_b,
          |       coalesce(ov.n_common, CAST(0 AS BIGINT)) AS n_common,
          |       round(CAST(coalesce(ov.n_common, 0) AS DOUBLE) /
          |             (pr.n_a + pr.n_b - coalesce(ov.n_common, 0)), 6)
          |         AS jaccard,
-         |       ea.est AS hll_a, eb.est AS hll_b, ue.hll_union,
-         |       round(greatest(0.0, ea.est + eb.est - ue.hll_union), 4)
+         |       ea.est AS hll_a, eb.est AS hll_b, ue.est AS hll_union,
+         |       round(greatest(0.0, ea.est + eb.est - ue.est), 4)
          |         AS hll_common,
-         |       round(round(greatest(0.0, ea.est + eb.est - ue.hll_union), 4)
-         |             / ue.hll_union, 6) AS hll_jaccard
+         |       round(round(greatest(0.0, ea.est + eb.est - ue.est), 4)
+         |             / ue.est, 6) AS hll_jaccard
          |FROM pr
          |LEFT JOIN ov ON ov.src_a = pr.src_a AND ov.src_b = pr.src_b
          |JOIN es ea ON ea.source = pr.src_a
@@ -897,30 +811,11 @@ object SourceOps {
          |      FROM p),
          |e AS (SELECT source, CAST(count(*) AS BIGINT) AS n_exact
          |      FROM g GROUP BY 1),
-         |h AS (SELECT source, ${TextOps.hexToLongSql("md5(gram)", 1, 15)} AS v
-         |      FROM g),
-         |r AS (SELECT source, v // ${1L << HllWBits} AS bucket,
-         |        CASE WHEN strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') = 0 THEN ${HllWBits + 1}
-         |             ELSE strpos(lpad(bin(v % ${1L << HllWBits}),
-         |                 $HllWBits, '0'), '1') END AS rho
-         |      FROM h),
-         |m AS (SELECT source, bucket, max(rho) AS mj FROM r GROUP BY 1, 2),
-         |sk AS (SELECT source,
-         |         sum(1::BIGINT << (${HllWBits + 1} - mj))
-         |           + ($HllM - count(*)) * (1::BIGINT << ${HllWBits + 1})
-         |           AS sumt,
-         |         $HllM - count(*) AS z
-         |       FROM m GROUP BY 1),
-         |est AS (SELECT sk.source, e.n_exact,
-         |          CASE WHEN $HllNum / sumt <= ${2.5 * HllM} AND z > 0
-         |               THEN $HllM.0 * ln($HllM.0 / z)
-         |               ELSE $HllNum / sumt END AS est
-         |        FROM sk JOIN e USING (source))
-         |SELECT source, n_exact, round(est, 4) AS hll_est,
-         |       round(100.0 * (round(est, 4) - n_exact) / n_exact, 4)
-         |         AS rel_err_pct
-         |FROM est ORDER BY source""".stripMargin,
+         |${Hll.registersSql("m", "g", Seq("source"), "gram")},
+         |${Hll.estimateSql("es", "m", Seq("source"))}
+         |SELECT source, n_exact, est AS hll_est,
+         |       round(100.0 * (est - n_exact) / n_exact, 4) AS rel_err_pct
+         |FROM es JOIN e USING (source) ORDER BY source""".stripMargin,
 
     "q174_source_overlap" ->
       s"""WITH ${TextOps.normCte},

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
 import graft.text.SourceOps
+import graft.functions.Hll
 import graft.operators.Olap
 
 /** Specs for the corpus-composition audits (q174–q176), the ANN
@@ -265,7 +266,7 @@ class SourceSimAuditSpec extends SparkSpec {
       }.toSet
     }.toMap
     val ref = bySource.map { case (src, grams) =>
-      val regs = new Array[Int](SourceOps.HllM)
+      val regs = new Array[Int](Hll.M)
       grams.foreach { g =>
         val v = hash60(g)
         val bucket = (v >>> 54).toInt
@@ -275,10 +276,10 @@ class SourceSimAuditSpec extends SparkSpec {
       }
       val sumT = regs.map(m => 1L << (55 - m)).sum
       val z = regs.count(_ == 0)
-      val raw = SourceOps.HllAlpha * SourceOps.HllM * SourceOps.HllM *
+      val raw = Hll.Alpha * Hll.M * Hll.M *
         math.pow(2, 55) / sumT
-      val est = if (raw <= 2.5 * SourceOps.HllM && z > 0)
-        SourceOps.HllM * math.log(SourceOps.HllM.toDouble / z) else raw
+      val est = if (raw <= 2.5 * Hll.M && z > 0)
+        Hll.M * math.log(Hll.M.toDouble / z) else raw
       src -> (grams.size.toLong,
         BigDecimal(est).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }

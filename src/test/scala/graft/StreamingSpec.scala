@@ -89,8 +89,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("S8 hll sketch: streaming estimate equals q193's batch estimate per window") {
-    // batch equivalence on the real table: the single-agg register
-    // sketch must reproduce the two-agg SQL-mirrorable form exactly
+    // batch equivalence on the real table: the windowed streaming
+    // sketch must reproduce q193's hourly batch sketch exactly
     val ev = Tables(spark, sfDir()).events
     // the table's ts is NTZ; under the UTC session the cast preserves
     // the epoch Tables derives for ts_us, so the buckets line up
@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got216 == want216)
     // q217: the streaming single-agg HLL readout must be BIT-equal to
-    // q193's two-agg SQL-mirrorable estimate per window
+    // q193's batch estimate per window
     val got217 = StreamOps.q217HllStream(spark, sfDir())
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want217 = graft.operators.EventOps.q193WindowedHllUsers(spark, sfDir())
