@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: per-query wall seconds at SPARK_GRAFT_SF_DIR. A
   * full warmup pass at sf0.001 first loads classes/codegen so the
   * timed pass measures the plans, not JVM startup (the
@@ -90,15 +88,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession(defaultCpus = 32)
     // optional comma-separated subset for local iteration, e.g.
     // SPARK_GRAFT_BENCH_FILTER=q38_louvain,q58_louvain_multilevel
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")

@@ -88,6 +88,16 @@ object Tables {
     }
   }
 
+  /** Resolve a committed fixture to an absolute path that is the SAME
+    * for the Spark read and the interpolated DuckDB oracle: an
+    * explicit `-Dgraft.fixtures.dir` wins; otherwise relative to the
+    * process cwd (sbt runs from the repo root), so checkouts at any
+    * location work. */
+  def fixture(name: String): String = {
+    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
+    new java.io.File(dir, name).getAbsolutePath
+  }
+
   /** Apply session-level settings every entry point (Verify, Bench,
     * test sessions) must set before reading the event table. UTC
     * session timezone makes the TIMESTAMP_NTZ → epoch-µs conversion
@@ -95,4 +105,19 @@ object Tables {
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config(NanosConf, "true")
       .config("spark.sql.session.timeZone", "UTC")
+
+  /** The session of the command-line entry points (Verify, Bench,
+    * tools/ScalingSweep): `local[cpus]` with `cpus` from
+    * `SPARK_GRAFT_CPUS`, else `defaultCpus`; one shuffle partition per
+    * core; no UI; [[configure]]'s settings; WARN logging. */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -112,12 +112,11 @@ object Hll {
 
   /** The 60-bit input hash: the first 15 hex digits of md5 over `x`'s
     * string form, as a LONG. */
-  def hash60(x: Column): Column =
-    conv(substring(md5(x.cast("string")), 1, 15), 16, 10).cast("long")
+  def hash60(x: Column): Column = Md5Prefix(x.cast("string"), 1, 15).cast("long")
 
   /** [[hash60]] in DuckDB SQL. */
   private[graft] def hash60Sql(x: String): String =
-    graft.text.TextOps.hexToLongSql(s"md5(CAST($x AS VARCHAR))", 1, 15)
+    Md5Prefix.hexToLongSql(s"md5(CAST($x AS VARCHAR))", 1, 15)
 
   /** `df.groupBy(g).agg(Hll.registers(Hll.hash60(x)))`: the register
     * array (m INTs) of the group's hashes. */

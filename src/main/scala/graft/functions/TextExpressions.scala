@@ -197,8 +197,7 @@ object DistinctGrams {
   * 2003, basic rule) of one document as a single row-local loop:
   * per-position composite v(pos) = h40(gram) · 2²⁰ + (2²⁰ − 1 − pos)
   * with h40 = the first 10 hex nibbles of md5(gram) (identical to
-  * `conv(substring(md5(gram), 1, 10), 16, 10)` — the first 5 digest
-  * bytes big-endian), sliding min over each w-window of full windows
+  * `Md5Prefix(gram, 1, 10)` — the first 5 digest bytes big-endian), sliding min over each w-window of full windows
   * only (pos ≥ w), distinct picks in first-occurrence order.
   *
   * Replaces the exploded formulation — positioned-gram explode →

@@ -1010,54 +1010,40 @@ object Algorithms {
        |SELECT node, cost FROM d$steps ORDER BY node""".stripMargin
   }
 
-  /** Unrolled PageRank SQL: r0..rN as chained CTEs (exact mirror of
-    * [[pagerank]]'s join-agg iteration). */
-  private def pagerankSql(iters: Int): String = {
+  /** The DuckDB mirror of [[damped]] over the trade graph, unrolled
+    * into chained CTEs r0..rN, with [[damped]]'s parameters as SQL:
+    * `r0` seeds each node's rank and `reset` is its teleport mass (both
+    * over the node `n.node`), `share` is the summed per-in-edge term
+    * (over the source rank `p.r`, the edge `t` and its source's
+    * out-mass `o.od`), and `outMass` aggregates `od` over a source's
+    * `trade` rows. Each variant's `share` keeps its Spark float-op
+    * order, so the mirror is engine-exact. `out` names the 6dp rank
+    * column. */
+  private[graph] def dampedSql(outMass: String, share: String, r0: String,
+      reset: String, iters: Int, out: String): String = {
     val steps = (1 to iters).map { i =>
       s"""r$i AS (
          |  SELECT n.node,
-         |         0.15 + 0.85 * COALESCE(SUM(p.r / o.od), 0.0) AS r
+         |         $reset + 0.85 * COALESCE(SUM($share), 0.0) AS r
          |  FROM nodes n
          |  LEFT JOIN trade t ON t.dst = n.node
          |  LEFT JOIN r${i - 1} p ON p.node = t.src
-         |  LEFT JOIN outdeg o ON o.node = t.src
+         |  LEFT JOIN outm o ON o.node = t.src
          |  GROUP BY n.node
          |)""".stripMargin
     }.mkString(",\n")
     s"""WITH $T,
        |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS node FROM nation),
-       |outdeg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS od
-       |           FROM trade GROUP BY 1),
-       |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS r FROM nodes),
+       |outm AS (SELECT src AS node, CAST($outMass AS BIGINT) AS od
+       |         FROM trade GROUP BY 1),
+       |r0 AS (SELECT n.node, $r0 AS r FROM nodes n),
        |$steps
-       |SELECT node, round(r, 6) AS pagerank FROM r$iters ORDER BY node""".stripMargin
+       |SELECT node, round(r, 6) AS $out FROM r$iters ORDER BY node""".stripMargin
   }
 
-  /** [[pagerankSql]] with the teleport restricted to the q13 source
-    * set — the q109 mirror (same float-op order, engine-exact). */
-  private def pprSql(iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""r$i AS (
-         |  SELECT n.node,
-         |         CASE WHEN n.node % 5 = 0 THEN 0.15 ELSE 0.0 END
-         |           + 0.85 * COALESCE(SUM(p.r / o.od), 0.0) AS r
-         |  FROM nodes n
-         |  LEFT JOIN trade t ON t.dst = n.node
-         |  LEFT JOIN r${i - 1} p ON p.node = t.src
-         |  LEFT JOIN outdeg o ON o.node = t.src
-         |  GROUP BY n.node
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $T,
-       |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS node FROM nation),
-       |outdeg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS od
-       |           FROM trade GROUP BY 1),
-       |r0 AS (SELECT node,
-       |         CASE WHEN node % 5 = 0 THEN CAST(1.0 AS DOUBLE)
-       |              ELSE CAST(0.0 AS DOUBLE) END AS r FROM nodes),
-       |$steps
-       |SELECT node, round(r, 6) AS ppr FROM r$iters ORDER BY node""".stripMargin
-  }
+  /** [[dampedSql]] for [[uniform]]: rank split over the out-degree. */
+  private def uniformSql(r0: String, reset: String, iters: Int, out: String): String =
+    dampedSql("count(*)", "p.r / o.od", r0, reset, iters, out)
 
   /** Unrolled HITS mirror: per half-step a raw-sum CTE + a
     * max-normalized CTE (scalar subquery — DuckDB evaluates it once
@@ -1212,8 +1198,11 @@ object Algorithms {
          |SELECT src, dst, min(hops) AS hops
          |FROM sp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
-    "q14_pagerank" -> pagerankSql(5),
-    "q109_personalized_pagerank" -> pprSql(5),
+    "q14_pagerank" -> uniformSql("CAST(1.0 AS DOUBLE)", "0.15", 5, "pagerank"),
+    // the teleport restricted to the q13 source set
+    "q109_personalized_pagerank" -> uniformSql(
+      "CASE WHEN n.node % 5 = 0 THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END",
+      "CASE WHEN n.node % 5 = 0 THEN 0.15 ELSE 0.0 END", 5, "ppr"),
 
     "q67_weighted_shortest_paths" -> weightedSpSql(24),
 

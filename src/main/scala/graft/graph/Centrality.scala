@@ -182,31 +182,6 @@ object Centrality {
 
   private val T = TradeGraph.sqlCte
 
-  /** Unrolled weighted-PageRank SQL r0..rN — [[Algorithms]]'
-    * pagerankSql with out-weight in place of out-degree, identical
-    * association order (r · cnt / ow) so the float math mirrors the
-    * Spark plan exactly. */
-  private def weightedPagerankSql(iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""r$i AS (
-         |  SELECT n.node,
-         |         0.15 + 0.85 * COALESCE(SUM(p.r * t.cnt / o.ow), 0.0) AS r
-         |  FROM nodes n
-         |  LEFT JOIN trade t ON t.dst = n.node
-         |  LEFT JOIN r${i - 1} p ON p.node = t.src
-         |  LEFT JOIN outw o ON o.node = t.src
-         |  GROUP BY n.node
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $T,
-       |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS node FROM nation),
-       |outw AS (SELECT src AS node, CAST(sum(cnt) AS BIGINT) AS ow
-       |         FROM trade GROUP BY 1),
-       |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS r FROM nodes),
-       |$steps
-       |SELECT node, round(r, 6) AS pagerank FROM r$iters ORDER BY node""".stripMargin
-  }
-
   val oracleSql: Map[String, String] = Map(
     // all-pairs BFS distances (the q13 recursion, unfiltered seed),
     // then Σ 1/d per source; bound 25 = |V| caps any simple path
@@ -230,7 +205,10 @@ object Centrality {
          |LEFT JOIN h ON h.node = CAST(n.n_nationkey AS BIGINT)
          |ORDER BY node""".stripMargin,
 
-    "q72_weighted_pagerank" -> weightedPagerankSql(WprIters),
+    // out-weight in place of out-degree, in the Spark association
+    // order (r · cnt / od)
+    "q72_weighted_pagerank" -> Algorithms.dampedSql("sum(cnt)", "p.r * t.cnt / o.od",
+      "CAST(1.0 AS DOUBLE)", "0.15", WprIters, "pagerank"),
 
     // self-loops excluded from the walk exactly like the Spark side
     "q88_eccentricity" ->

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Checkpoints, Superstep, Tables}
+import graft.functions.Md5Prefix
 
 /** Structural graph operators from the Neo4j graph-algorithms library
   * surface the reference leans on for its analytics (reference:
@@ -178,8 +179,7 @@ object Cores {
   val WalkLen = 4
 
   private def stepHash(leaf: org.apache.spark.sql.Column, t: Int) =
-    conv(substring(md5(concat(leaf.cast("string"), lit(s":$t"))), 1, 8), 16, 10)
-      .cast("long")
+    Md5Prefix(concat(leaf.cast("string"), lit(s":$t")), 1, 8).cast("long")
 
   /** The walk loop itself: one (start, leaf, path) row per walk,
     * shared by q78's listing and q150's co-occurrence statistics. */
@@ -734,14 +734,13 @@ object Cores {
        |SELECT node, label FROM l$iters ORDER BY node""".stripMargin
   }
 
-  /** Unrolled walk steps w0..wN — same md5 step function
-    * ([[graft.text.TextOps.hexToLongSql]] mirrors Spark's conv),
-    * dead-end carry-forward as a LEFT JOIN per step. */
   /** Shared walk-construction CTE chain (mirror of [[walkPaths]]):
-    * everything up to w$len with its path list column. */
+    * unrolled walk steps w0..w$len with their path list column — the
+    * same md5 step function ([[Md5Prefix.hexToLongSql]] mirrors the
+    * Spark form), dead-end carry-forward as a LEFT JOIN per step. */
   private def walkCtes(len: Int): String = {
     val ctes = (1 to len).map { t =>
-      val h = graft.text.TextOps.hexToLongSql(
+      val h = Md5Prefix.hexToLongSql(
         s"md5(CAST(w.leaf AS VARCHAR) || ':$t')", 1, 8)
       s"""w$t AS MATERIALIZED (
          |  SELECT w.start, COALESCE(n.dst, w.leaf) AS leaf,

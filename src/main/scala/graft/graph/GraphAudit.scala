@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Md5Prefix
 
 /** G1 — property-graph CONSTRUCTION, audited directly. Every other
   * graph query consumes [[TradeGraph]] / the manifest module graph
@@ -37,10 +38,10 @@ object GraphAudit {
     * guarantee, hence the modulus). */
   val FpMod = 1000000007L
 
-  /** md5-60bit of `s`, mod [[FpMod]] — the per-row fingerprint term
-    * (same md5-as-integer idiom as the walk family's pick hash). */
+  /** The 60-bit [[Md5Prefix]] integer of `s`, mod [[FpMod]] — the
+    * per-row fingerprint term. */
   private def fpTerm(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long") % FpMod
+    Md5Prefix(s, 1, 15).cast("long") % FpMod
 
   /** One audit row: (relation, n_rows, n_keys, fp). */
   private def auditRow(name: String, df: DataFrame, keys: Seq[Column],
@@ -102,7 +103,7 @@ object GraphAudit {
   /** The fingerprint term over a SQL string expression — DuckDB side
     * of [[fpTerm]]. */
   private def fpSql(s: String): String =
-    s"(${graft.text.TextOps.hexToLongSql(s"md5($s)", 1, 15)} % $FpMod)"
+    s"(${Md5Prefix.hexToLongSql(s"md5($s)", 1, 15)} % $FpMod)"
 
   val oracleSql: Map[String, String] = Map(
     "q230_graph_construction_audit" -> {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Superstep, Tables}
+import graft.functions.Md5Prefix
 
 /** node2vec SECOND-ORDER biased walks (Grover & Leskovec 2016, KDD
   * §3.2) — the sampling strategy DeepWalk's uniform walk (q222)
@@ -100,9 +101,8 @@ object Node2Vec {
     * tot); `s` is the step being left. */
   private[graft] def stepJoin(cur: DataFrame, a2: DataFrame,
       s: Int): DataFrame = {
-    val pk = expr(
-      s"""cast(conv(substring(md5(concat(cast(walk_id as string),
-         |  ':', '$s')), 1, 15), 16, 10) as bigint)""".stripMargin) %
+    val pk = expr(s"cast(${Md5Prefix.sql(
+      s"concat(cast(walk_id as string), ':', '$s')", 1, 15)} as bigint)") %
       col("tot")
     cur.join(a2,
         col("prev") === col("p2") && col("node") === col("c2"))
@@ -117,9 +117,8 @@ object Node2Vec {
     * is one [[Superstep]] round, as in [[RandomWalks.walkRows]]. */
   private[graft] def walkRows(seeds: DataFrame, adj: DataFrame,
       adj2: DataFrame, len: Int): DataFrame = {
-    def pick(s: Int) = expr(
-      s"""cast(conv(substring(md5(concat(cast(walk_id as string),
-         |  ':', '$s')), 1, 15), 16, 10) as bigint)""".stripMargin)
+    def pick(s: Int) = expr(s"cast(${Md5Prefix.sql(
+      s"concat(cast(walk_id as string), ':', '$s')", 1, 15)} as bigint)")
     // both lookup relations CACHED pre-partitioned + sorted on their
     // join keys (the walkRows discipline — persist keeps the
     // partitioning a localCheckpoint would lose under AQE): every
@@ -247,7 +246,7 @@ object Node2Vec {
        |  SELECT s.walk_id, CAST(1 AS BIGINT) AS step,
        |         s.node AS prev, a.dst AS node
        |  FROM seeds s JOIN adj a ON a.src = s.node
-       |  WHERE a.rk = ${graft.text.TextOps.hexToLongSql(
+       |  WHERE a.rk = ${Md5Prefix.hexToLongSql(
            "md5(CAST(s.walk_id AS VARCHAR) || ':0')", 1, 15)}
        |          % a.od + 1
        |  UNION ALL

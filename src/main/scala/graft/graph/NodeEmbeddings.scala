@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Md5Prefix
 
 /** Node-embedding TRAINING from the walk corpus — the step DeepWalk
   * (Perozzi et al. 2014) runs after q222's sampling: skip-gram
@@ -113,10 +114,8 @@ object NodeEmbeddings {
   /** ±1 from the md5 parity of (v ':' dim) — the projection matrix as
     * a hash, never materialized. */
   private def signCol: Column = {
-    val bit = expr(
-      """cast(conv(substring(md5(concat(cast(v as string), ':',
-        |  cast(dim as string))), 1, 15), 16, 10) as bigint) % 2"""
-        .stripMargin)
+    val bit = expr(s"cast(${Md5Prefix.sql(
+      "concat(cast(v as string), ':', cast(dim as string))", 1, 15)} as bigint) % 2")
     (lit(1) - lit(2) * bit).cast("int")
   }
 
@@ -226,10 +225,10 @@ object NodeEmbeddings {
         "transform(array_sort(collect_list(struct(dim, li))), x -> x.li)")
         .as("liv"))
       .withColumn("sgn", expr(
-        """transform(sequence(0, size(liv) - 1), d ->
-          |  cast(1 - 2 * (cast(conv(substring(md5(concat(
-          |    cast(node as string), ':', cast(d as string))),
-          |    1, 15), 16, 10) as bigint) % 2) as double))""".stripMargin))
+        s"""transform(sequence(0, size(liv) - 1), d ->
+           |  cast(1 - 2 * (cast(${Md5Prefix.sql(
+             "concat(cast(node as string), ':', cast(d as string))", 1, 15)}
+           |    as bigint) % 2) as double))""".stripMargin))
   }
 
   /** (u, v, ww, wc, pos): both link scores for every ordered pair of
@@ -303,10 +302,9 @@ object NodeEmbeddings {
       .join(ranked.select(col("node").as("v")), Seq("v"))
       .filter(col("u") =!= col("v"))
       .select(col("u"), col("v"), lit(0L).as("j"), lit(true).as("pos"))
-    val draw = expr(
-      """cast(conv(substring(md5(concat(cast(u as string), ':',
-        |  cast(v as string), ':', cast(j as string))), 1, 15), 16, 10)
-        |  as bigint)""".stripMargin)
+    val draw = expr(s"cast(${Md5Prefix.sql(
+      "concat(cast(u as string), ':', cast(v as string), ':', cast(j as string))",
+      1, 15)} as bigint)")
     val neg = pos.select(col("u"), col("v"))
       .withColumn("j", explode(expr(
         s"sequence(cast(1 as bigint), cast($negK as bigint))")))
@@ -403,7 +401,7 @@ object NodeEmbeddings {
     // the md5 into each digit term evaluates it 15× per row, which
     // at q228's 24M-row projection grain made the DuckDB oracle
     // minutes-slow.
-    val bitV = graft.text.TextOps.hexToLongSql("h", 1, 15)
+    val bitV = Md5Prefix.hexToLongSql("h", 1, 15)
     val ppmiArg = """greatest(0.0,
        |              ln(CAST(p.n_uv AS DOUBLE) * t.d_tot /
        |                 (CAST(mu.n_u AS DOUBLE) * mv.n_u)))""".stripMargin
@@ -457,7 +455,7 @@ object NodeEmbeddings {
     * edge CTE) to the one-row (n_pos, n_neg, auc_wc, auc_ww) audit —
     * shared by q225 and the node2vec-corpus audit q227. */
   private[graft] def linkAucTailSql: String = {
-    val sgnBit = graft.text.TextOps.hexToLongSql(
+    val sgnBit = Md5Prefix.hexToLongSql(
       "md5(CAST(p.v AS VARCHAR) || ':' || CAST(eu.dim AS VARCHAR))",
       1, 15)
     s"""en AS MATERIALIZED (SELECT DISTINCT node FROM emb),

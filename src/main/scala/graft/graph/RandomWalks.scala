@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Superstep, Tables}
+import graft.functions.Md5Prefix
 
 /** MULTI-walk corpus generation over the trade graph — DeepWalk's
   * γ-walks-per-node sampling (Perozzi et al. 2014, KDD §4.1), the
@@ -68,9 +69,8 @@ object RandomWalks {
     * Sink rows drop (the walk terminates). */
   private[graft] def stepJoin(cur: DataFrame, adj: DataFrame,
       s: Int): DataFrame = {
-    val pick = expr(
-      s"""cast(conv(substring(md5(concat(cast(walk_id as string),
-         |  ':', '${s - 1}')), 1, 15), 16, 10) as bigint)""".stripMargin)
+    val pick = expr(s"cast(${Md5Prefix.sql(
+      s"concat(cast(walk_id as string), ':', '${s - 1}')", 1, 15)} as bigint)")
     cur.join(adj, col("node") === col("src"))
       .filter(col("rk") === pick % col("od") + 1)
       .select(col("walk_id"), col("dst").as("node"))
@@ -146,7 +146,7 @@ object RandomWalks {
   /** The step-transition pick, as SQL over a `walk`-aliased row `w`:
     * md5(walk_id ':' step) as a 60-bit integer (the same hash the
     * Spark loop computes). */
-  private[graft] def pickSql: String = graft.text.TextOps.hexToLongSql(
+  private[graft] def pickSql: String = Md5Prefix.hexToLongSql(
     "md5(CAST(w.walk_id AS VARCHAR) || ':' || CAST(w.step AS VARCHAR))",
     1, 15)
 

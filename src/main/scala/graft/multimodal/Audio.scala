@@ -153,13 +153,8 @@ object Audio {
     * in chunk walking, sample decoding, stereo mixdown, or the
     * quarantine contract (three corrupt payloads must yield NO rows)
     * hash-mismatches. All features are integers: no float contract. */
-  val WavFixturePath: String = fixturePath("audio_fixture.parquet")
-  val WavExpectedPath: String = fixturePath("audio_features_expected.parquet")
-
-  private def fixturePath(name: String): String = {
-    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
-    new java.io.File(dir, name).getAbsolutePath
-  }
+  val WavFixturePath: String = graft.Tables.fixture("audio_fixture.parquet")
+  val WavExpectedPath: String = graft.Tables.fixture("audio_features_expected.parquet")
 
   def q167WavDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

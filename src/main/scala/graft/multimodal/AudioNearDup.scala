@@ -74,13 +74,8 @@ object AudioNearDup {
     * and the analytically computed expected pairs (designed
     * waveforms → independent energy/delta math — the q167/q162
     * convention). */
-  val FixturePath: String = fixturePath("audio_neardup_fixture.parquet")
-  val ExpectedPath: String = fixturePath("audio_neardup_expected.parquet")
-
-  private def fixturePath(name: String): String = {
-    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
-    new java.io.File(dir, name).getAbsolutePath
-  }
+  val FixturePath: String = graft.Tables.fixture("audio_neardup_fixture.parquet")
+  val ExpectedPath: String = graft.Tables.fixture("audio_neardup_expected.parquet")
 
   /** q248: WAV decode → energy-delta fingerprint → banded candidates
     * → exact verify, end to end against the analytic expectation. */

@@ -104,13 +104,8 @@ object ImageNearDup {
     * computed expected pair table (designed pixel layouts → the same
     * grid/luminance/dHash math — independent of the decode path, the
     * q162 oracle convention). */
-  val NearDupFixturePath: String = fixturePath("media_neardup_fixture.parquet")
-  val NearDupExpectedPath: String = fixturePath("media_neardup_expected.parquet")
-
-  private def fixturePath(name: String): String = {
-    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
-    new java.io.File(dir, name).getAbsolutePath
-  }
+  val NearDupFixturePath: String = graft.Tables.fixture("media_neardup_fixture.parquet")
+  val NearDupExpectedPath: String = graft.Tables.fixture("media_neardup_expected.parquet")
 
   /** q245: dHash near-dup pairs over the committed real-image fixture
     * through the REAL codec — decode, hash, band, verify, end to end.

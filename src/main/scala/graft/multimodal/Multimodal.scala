@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Prefix
 
 /** Multimodal column plumbing: opaque binary payloads with typed
   * metadata, decoded/resized/frame-sampled through a partition-batched
@@ -163,13 +164,8 @@ object Multimodal {
     * hash-mismatches. The fixture also carries two undecodable
     * payloads (truncated header, garbage bytes) with NO expected rows:
     * quarantine-by-omission is part of the hash. */
-  val MediaFixturePath: String = fixturePath("media_fixture.parquet")
-  val MediaExpectedPath: String = fixturePath("media_features_expected.parquet")
-
-  private def fixturePath(name: String): String = {
-    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
-    new java.io.File(dir, name).getAbsolutePath
-  }
+  val MediaFixturePath: String = graft.Tables.fixture("media_fixture.parquet")
+  val MediaExpectedPath: String = graft.Tables.fixture("media_features_expected.parquet")
 
   def q162ImageDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -198,8 +194,8 @@ object Multimodal {
     * truncated JPEG must yield NO row) — while MultimodalSpec asserts
     * the pixel-level sanity (solid-color luminance within JPEG
     * quantization tolerance) that a hash cannot. */
-  val JpegFixturePath: String = fixturePath("media_jpeg_fixture.parquet")
-  val JpegExpectedPath: String = fixturePath("media_jpeg_expected.parquet")
+  val JpegFixturePath: String = graft.Tables.fixture("media_jpeg_fixture.parquet")
+  val JpegExpectedPath: String = graft.Tables.fixture("media_jpeg_expected.parquet")
 
   def q204JpegDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -236,12 +232,11 @@ object Multimodal {
          |FROM read_parquet('$JpegExpectedPath')
          |ORDER BY doc_id, frame_idx""".stripMargin,
     "q90_multimodal_features" -> {
-      val hexToLong = graft.text.TextOps.hexToLongSql _
       s"""WITH m AS (
          |  SELECT doc_id, md5(text) AS h,
-         |         ${hexToLong("md5(text)", 1, 4)} % 512 + 1 AS width,
-         |         ${hexToLong("md5(text)", 5, 4)} % 512 + 1 AS height,
-         |         ${hexToLong("md5(text)", 9, 2)} % 16 + 1 AS n_frames
+         |         ${Md5Prefix.hexToLongSql("md5(text)", 1, 4)} % 512 + 1 AS width,
+         |         ${Md5Prefix.hexToLongSql("md5(text)", 5, 4)} % 512 + 1 AS height,
+         |         ${Md5Prefix.hexToLongSql("md5(text)", 9, 2)} % 16 + 1 AS n_frames
          |  FROM documents),
          |bytes AS (
          |  SELECT m.doc_id, tj.j,

@@ -111,13 +111,8 @@ object Video {
     * containers AND a corrupt frame inside a valid container pin both
     * quarantine granularities. */
   val FrameSampleEvery = 2
-  val AviFixturePath: String = fixturePath("video_fixture.parquet")
-  val AviExpectedPath: String = fixturePath("video_features_expected.parquet")
-
-  private def fixturePath(name: String): String = {
-    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
-    new java.io.File(dir, name).getAbsolutePath
-  }
+  val AviFixturePath: String = graft.Tables.fixture("video_fixture.parquet")
+  val AviExpectedPath: String = graft.Tables.fixture("video_features_expected.parquet")
 
   def q171VideoDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -92,13 +92,8 @@ object VideoNearDup {
   /** Committed fixture (tools/MakeVideoNearDupFixture) + analytic
     * expected pairs — the q162/q245 oracle convention, over real AVI
     * containers with lossless frame payloads. */
-  val FixturePath: String = fixturePath("video_neardup_fixture.parquet")
-  val ExpectedPath: String = fixturePath("video_neardup_expected.parquet")
-
-  private def fixturePath(name: String): String = {
-    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
-    new java.io.File(dir, name).getAbsolutePath
-  }
+  val FixturePath: String = graft.Tables.fixture("video_neardup_fixture.parquet")
+  val ExpectedPath: String = graft.Tables.fixture("video_neardup_expected.parquet")
 
   /** q247: AVI containers → frame extraction → per-frame dHash →
     * banded candidates → aligned verify, end to end against the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Md5Prefix
 
 /** Bloom-filter join pruning — the runtime-filter pattern Spark's own
   * optimizer injects (`InjectRuntimeFilter`) and every warehouse uses
@@ -30,8 +31,8 @@ object BloomJoin {
   val BalMin = 9000.0
 
   private def bit(i: Int, key: Column): Column =
-    pmod(conv(substring(md5(concat(lit(s"$i:"), key.cast("string"))), 1, 8),
-      16, 10).cast("long"), lit(BloomM))
+    pmod(Md5Prefix(concat(lit(s"$i:"), key.cast("string")), 1, 8).cast("long"),
+      lit(BloomM))
 
   def q133BloomPrune(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
@@ -80,7 +81,7 @@ object BloomJoin {
   )
 
   private def bitSql(i: Int, keyExpr: String): String =
-    s"""(${graft.text.TextOps.hexToLongSql(
+    s"""(${Md5Prefix.hexToLongSql(
       s"md5('$i:' || CAST($keyExpr AS VARCHAR))", 1, 8)} % $BloomM)"""
 
   val oracleSql: Map[String, String] = Map(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Superstep, Tables}
+import graft.functions.Md5Prefix
 
 /** Entity resolution / record linkage over the part catalog — the
   * dedup family's STRUCTURED-record member (Fellegi & Sunter 1969;
@@ -215,11 +216,10 @@ object EntityResolution {
     * Output shape matches [[matchComponents]]: (node, component),
     * component = the canonical (center) member id. */
   /** md5-derived node priority for [[refineByCenter]]'s hash order —
-    * the repo's cross-engine integer-hash idiom (same form as
-    * GraphAudit.fpTerm / the walk family), so a DuckDB mirror of the
+    * the 60-bit [[Md5Prefix]] integer, so a DuckDB mirror of the
     * hash-priority recursion stays expressible. */
   private def hashPrio(n: Column): Column =
-    conv(substring(md5(n.cast("string")), 1, 15), 16, 10).cast("long")
+    Md5Prefix(n.cast("string"), 1, 15).cast("long")
 
   private[graft] def refineByCenter(pairs: DataFrame,
       hashPriority: Boolean = false): Superstep.Run[DataFrame] = {
@@ -581,7 +581,7 @@ object EntityResolution {
     * and an oracle pass over its time budget yields no correctness
     * result at all. */
   private def guardedOracle(hashOrder: Boolean): String = {
-    val mdPrio = graft.text.TextOps.hexToLongSql(
+    val mdPrio = Md5Prefix.hexToLongSql(
       "md5(CAST(n AS VARCHAR))", 1, 15)
     val orderBy = if (hashOrder) s"$mdPrio, n" else "n"
     s"""WITH RECURSIVE pt AS MATERIALIZED (

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Hll
+import graft.functions.{Hll, Md5Prefix}
 
 /** Batch event analytics over the events stream — the product-facing
   * query family (funnels, retention cohorts, hopping windows) that
@@ -652,8 +652,7 @@ object EventOps {
   def q195DeltaAggMaintenance(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
       .select(col("event_type"), col("value"), col("user_id"),
-        expr("cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint)")
-          .as("h"))
+        Md5Prefix(col("event_id").cast("string"), 1, 8).cast("bigint").as("h"))
     val base = ev.filter(col("h") % 5 =!= 0)
     val delta = ev.filter(col("h") % 5 === 0)
 
@@ -714,7 +713,7 @@ object EventOps {
            |  min("value") AS mn, max("value") AS mx
            |FROM $src GROUP BY 1)""".stripMargin
       s"""WITH ev AS (SELECT event_type, "value", user_id,
-         |  ${graft.text.TextOps.hexToLongSql(
+         |  ${Md5Prefix.hexToLongSql(
               "md5(CAST(event_id AS VARCHAR))", 1, 8)} AS h
          |FROM events),
          |b AS (SELECT * FROM ev WHERE h % 5 <> 0),

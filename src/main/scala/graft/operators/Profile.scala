@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Md5Prefix
 
 /** Table profiling — the "describe this dataset" utility every
   * pipeline runs before trusting an input: per-column null counts
@@ -163,8 +164,8 @@ object Profile {
   val CmsProbeK = 10
 
   private def cmsBucket(r: Int, word: Column): Column =
-    pmod(conv(substring(md5(concat(lit(s"$r:"), word)), 1, 8), 16, 10)
-      .cast("long"), lit(CmsW.toLong))
+    pmod(Md5Prefix(concat(lit(s"$r:"), word), 1, 8).cast("long"),
+      lit(CmsW.toLong))
 
   def q132CountMinSketch(spark: SparkSession, dir: String): DataFrame =
     countMinSketch(graft.text.TextOps.docs(spark, dir)
@@ -227,8 +228,8 @@ object Profile {
   }
 
   private def jsBucket(r: Int, word: Column): Column =
-    pmod(conv(substring(md5(concat(lit(s"$r:"), word)), 1, 8), 16, 10)
-      .cast("long"), lit(JsW.toLong))
+    pmod(Md5Prefix(concat(lit(s"$r:"), word), 1, 8).cast("long"),
+      lit(JsW.toLong))
 
   /** One row per hash row r: the sketch estimate of |a ⋈_word b|,
     * the exact size, and the overcount. */
@@ -449,7 +450,7 @@ object Profile {
     val exact = side(ev, "exact_v", "n_exact")
     val sampled = side(
       ev.filter(
-        expr("cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint)")
+        Md5Prefix(col("event_id").cast("string"), 1, 8).cast("bigint")
           % QAuditMod === 0),
       "sample_v", "n_sample")
     exact.join(sampled, Seq("event_type", "q"))
@@ -553,10 +554,9 @@ object Profile {
         floor(col("c_acctbal") / KAnonBand).cast("long").as("acctbal_band"))
       .groupBy("c_nationkey", "c_mktsegment", "acctbal_band")
       .agg(count(lit(1)).as("k"))
-    val u = (expr(
-      "cast(conv(substring(md5(concat(cast(c_nationkey as string), ':', " +
-        "c_mktsegment, ':', cast(acctbal_band as string))), 1, 15), 16, 10) " +
-        "as double)") + 0.5) / lit(math.pow(2, 60))
+    val u = (expr(s"cast(${Md5Prefix.sql("concat(cast(c_nationkey as string), ':', " +
+        "c_mktsegment, ':', cast(acctbal_band as string))", 1, 15)} as double)") + 0.5) /
+      lit(math.pow(2, 60))
     val noise = when(u < 0.5, log(u * 2.0) / DpEpsilon)
       .otherwise(-log((lit(1.0) - u) * 2.0) / DpEpsilon)
     grouped
@@ -584,7 +584,7 @@ object Profile {
 
   val oracleSql: Map[String, String] = Map(
     "q200_dp_noised_release" -> {
-      val uSql = "((" + graft.text.TextOps.hexToLongSql(
+      val uSql = "((" + Md5Prefix.hexToLongSql(
         "md5(CAST(c_nationkey AS VARCHAR) || ':' || c_mktsegment || ':' || " +
           "CAST(acctbal_band AS VARCHAR))", 1, 15) +
         s") + 0.5) / ${new java.math.BigDecimal(math.pow(2, 60)).toPlainString}"
@@ -657,7 +657,7 @@ object Profile {
         |FROM c ORDER BY tbl, contract""".stripMargin,
 
     "q194_sample_quantile_audit" -> {
-      val hexId = graft.text.TextOps.hexToLongSql(
+      val hexId = Md5Prefix.hexToLongSql(
         "md5(CAST(event_id AS VARCHAR))", 1, 8)
       val probes = QAuditProbes.mkString("[", ", ", "]")
       s"""WITH ev AS (SELECT event_type, "value", event_id FROM events),
@@ -829,7 +829,7 @@ object Profile {
          |               md5(CAST(r AS VARCHAR) || ':' || word) AS hx
          |        FROM wu CROSS JOIN rr),
          |sk AS (SELECT r,
-         |              CAST(${graft.text.TextOps.hexToLongSql("hx", 1, 8)}
+         |              CAST(${Md5Prefix.hexToLongSql("hx", 1, 8)}
          |                   % $CmsW AS BIGINT) AS b,
          |              CAST(count(*) AS BIGINT) AS c
          |       FROM occ GROUP BY 1, 2),
@@ -842,7 +842,7 @@ object Profile {
          |est AS (SELECT p.word, p.true_cnt, min(s.c) AS est_cnt
          |        FROM pb p JOIN sk s
          |          ON s.r = p.r
-         |         AND s.b = CAST(${graft.text.TextOps.hexToLongSql("p.hx", 1, 8)}
+         |         AND s.b = CAST(${Md5Prefix.hexToLongSql("p.hx", 1, 8)}
          |                        % $CmsW AS BIGINT)
          |        GROUP BY 1, 2)
          |SELECT word, true_cnt, est_cnt, est_cnt - true_cnt AS overcount
@@ -855,13 +855,13 @@ object Profile {
          |sb0 AS (SELECT CAST(l_partkey AS VARCHAR) AS word FROM lineitem
          |        WHERE l_quantity >= 40.0),
          |sa AS (SELECT CAST(r AS BIGINT) AS r,
-         |              CAST(${graft.text.TextOps.hexToLongSql(
+         |              CAST(${Md5Prefix.hexToLongSql(
                           "md5(CAST(r AS VARCHAR) || ':' || word)", 1, 8)}
          |                   % $JsW AS BIGINT) AS b,
          |              CAST(count(*) AS BIGINT) AS ca
          |       FROM sa0 CROSS JOIN rr GROUP BY 1, 2),
          |sb AS (SELECT CAST(r AS BIGINT) AS r,
-         |              CAST(${graft.text.TextOps.hexToLongSql(
+         |              CAST(${Md5Prefix.hexToLongSql(
                           "md5(CAST(r AS VARCHAR) || ':' || word)", 1, 8)}
          |                   % $JsW AS BIGINT) AS b,
          |              CAST(count(*) AS BIGINT) AS cb

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.graph.{CoPurchase, NodeEmbeddings}
+import graft.functions.Md5Prefix
 
 /** prod2vec — item embeddings from order baskets (Barkan &
   * Koenigstein 2016): the A39 trainer (exact PPMI + signed-hash JL
@@ -142,8 +143,8 @@ object Prod2Vec {
       // into the join key made DuckDB nested-loop the draw join with
       // 15 md5 evaluations per COMPARISON (it spilled the disk dry
       // at sf0.1 before this restructure)
-      val drawBit = graft.text.TextOps.hexToLongSql("h", 1, 15)
-      val sgnBit = graft.text.TextOps.hexToLongSql("h", 1, 15)
+      val drawBit = Md5Prefix.hexToLongSql("h", 1, 15)
+      val sgnBit = Md5Prefix.hexToLongSql("h", 1, 15)
       s"""WITH $basketCteSql,
          |${NodeEmbeddings.embFromPrCteSql},
          |sym AS (

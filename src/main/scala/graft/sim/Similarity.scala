@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.GraftFunctions.dot
+import graft.functions.Md5Prefix
 
 /** Embedding similarity search over the `embeddings` table
   * (`array<float>` column): brute-force cosine top-k as the exactness
@@ -529,12 +530,6 @@ object Similarity {
 
   // ------------------------------------------------------------ oracles
 
-  private def hexToLongSql(hexExpr: String, start: Int, len: Int): String =
-    (0 until len).map { p =>
-      val mult = math.pow(16, len - 1 - p).toLong
-      s"(strpos('0123456789abcdef', substr($hexExpr, ${start + p}, 1)) - 1) * CAST($mult AS BIGINT)"
-    }.mkString("(", " + ", ")")
-
   /** Shared DuckDB CTEs: norms and (vec, dim, value-double) terms. */
   private val vecCtes =
     """v AS (SELECT vec_id, embedding FROM embeddings),
@@ -548,7 +543,7 @@ object Similarity {
   private def bandedCte(r: Int, bands: Int): String = {
     val nPlanes = r * bands
     s"""wt AS (SELECT h.h, d.d,
-       |    (${hexToLongSql("md5(CAST(h.h AS VARCHAR) || '_' || CAST(d.d AS VARCHAR))", 1, 4)}
+       |    (${Md5Prefix.hexToLongSql("md5(CAST(h.h AS VARCHAR) || '_' || CAST(d.d AS VARCHAR))", 1, 4)}
        |     / 65535.0) * 2.0 - 1.0 AS w
        |  FROM (SELECT unnest(generate_series(0, ${nPlanes - 1})) AS h) h,
        |       (SELECT unnest(generate_series(0, $Dims - 1)) AS d) d),
@@ -805,7 +800,7 @@ object Similarity {
     * [[IvfProbes]] cells per query vector (`vec_id < qBound`). */
   private def ivfCtes(qBound: Int): String =
     s"""cwt AS (SELECT c.c, d.d,
-       |    (${hexToLongSql("md5(CAST(c.c + 100 AS VARCHAR) || '_' || CAST(d.d AS VARCHAR))", 1, 4)}
+       |    (${Md5Prefix.hexToLongSql("md5(CAST(c.c + 100 AS VARCHAR) || '_' || CAST(d.d AS VARCHAR))", 1, 4)}
        |     / 65535.0) * 2.0 - 1.0 AS w
        |  FROM (SELECT unnest(generate_series(0, ${IvfCells - 1})) AS c) c,
        |       (SELECT unnest(generate_series(0, $Dims - 1)) AS d) d),

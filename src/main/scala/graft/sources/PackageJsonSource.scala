@@ -127,17 +127,7 @@ object PackageJsonSource {
     * query's input is the FORMAT, not a scale factor, so the query
     * (like its DuckDB oracle) reads this fixed path and ignores the
     * sf dir the driver passes. */
-  val FixturePath: String = fixture("manifests.jsonl")
-
-  /** Resolve a committed fixture to an absolute path that is the SAME
-    * for the Spark read and the interpolated DuckDB oracle: an
-    * explicit `-Dgraft.fixtures.dir` wins; otherwise relative to the
-    * process cwd (sbt runs from the repo root), so checkouts at any
-    * location work. */
-  private def fixture(name: String): String = {
-    val dir = sys.props.getOrElse("graft.fixtures.dir", "src/test/resources")
-    new java.io.File(dir, name).getAbsolutePath
-  }
+  val FixturePath: String = graft.Tables.fixture("manifests.jsonl")
 
   /** q154: the reference's defining capability end-to-end — manifest
     * JSON → typed dependency edges → per-module typed in-degree
@@ -179,7 +169,7 @@ object PackageJsonSource {
     * detectable on both engines (Spark: `_corrupt_record IS NULL`;
     * DuckDB: `ignore_errors=true` nulls every column of a malformed
     * line, so `name IS NOT NULL`). */
-  val CorruptFixturePath: String = fixture("corrupt_manifests.jsonl")
+  val CorruptFixturePath: String = graft.Tables.fixture("corrupt_manifests.jsonl")
 
   /** q159: malformed-manifest quarantine oracle-checked — the
     * PERMISSIVE read splits the corrupt fixture into good/quarantined

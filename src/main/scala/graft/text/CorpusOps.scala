@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
-import graft.functions.{RepetitionStats, WordShingles}
+import graft.functions.{Md5Prefix, RepetitionStats, WordShingles}
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between ingest and dedup: repetition-based quality filtering
@@ -520,7 +520,7 @@ object CorpusOps {
     val toks = d
       .select(col("doc_id"), explode(split(col("s"), " ")).as("word"))
       .select(col("doc_id"),
-        conv(substring(md5(col("word")), 1, 2), 16, 10).cast("long").as("b"))
+        Md5Prefix(col("word"), 1, 2).cast("long").as("b"))
     val tgt = toks.filter(col("doc_id") < cutoff)
       .groupBy("b").agg(count(lit(1)).as("ct"))
     val raw = toks.filter(col("doc_id") >= cutoff)
@@ -857,7 +857,7 @@ object CorpusOps {
          |          + 0.3 * (1.0 - f.pr)
          |          + 0.4 * (CAST(f.m AS DOUBLE) / f.nw), 6) AS quality,
          |    r.flagged, COALESCE(h.n_hits, 0) AS n_hits,
-         |    CAST(${TextOps.hexToLongSql(
+         |    CAST(${Md5Prefix.hexToLongSql(
                   "md5(CAST(n.doc_id AS VARCHAR))", 1, 8)} AS DOUBLE)
          |      / 4294967296.0 AS u
          |  FROM n JOIN documents d USING (doc_id)
@@ -890,7 +890,7 @@ object CorpusOps {
          |  FROM documents),
          |u AS (
          |  SELECT doc_id, lang, source,
-         |         CAST(${TextOps.hexToLongSql("hx", 1, 8)} AS DOUBLE)
+         |         CAST(${Md5Prefix.hexToLongSql("hx", 1, 8)} AS DOUBLE)
          |           / 4294967296.0 AS u
          |  FROM h)
          |SELECT doc_id, lang, source, round(u, 6) AS u FROM u
@@ -916,7 +916,7 @@ object CorpusOps {
       s"""WITH ${TextOps.normCte},
          |wu AS (SELECT doc_id, unnest(string_split(s, ' ')) AS word FROM n),
          |tb AS (SELECT doc_id,
-         |              CAST(${TextOps.hexToLongSql("md5(word)", 1, 2)}
+         |              CAST(${Md5Prefix.hexToLongSql("md5(word)", 1, 2)}
          |                   AS BIGINT) AS b
          |       FROM wu),
          |tgt AS (SELECT b, CAST(count(*) AS BIGINT) AS ct FROM tb
@@ -956,7 +956,7 @@ object CorpusOps {
          |  FROM documents),
          |k AS (
          |  SELECT doc_id, lang, w,
-         |    ln(CAST(${TextOps.hexToLongSql("hx", 1, 8)} AS DOUBLE)
+         |    ln(CAST(${Md5Prefix.hexToLongSql("hx", 1, 8)} AS DOUBLE)
          |         / 4294967296.0) / CAST(w AS DOUBLE) AS key
          |  FROM d)
          |SELECT doc_id, lang, w, round(key, 6) AS key, rank FROM (

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
-import graft.functions.{Hll, WordShingles}
+import graft.functions.{Hll, Md5Prefix, WordShingles}
 
 /** Corpus-composition audits over the document corpus: cross-source
   * n-gram contamination (how much two ingest sources share — the
@@ -178,7 +178,7 @@ object SourceOps {
       .select(col("source"), col("lang"),
         length(col("text")).cast("long").as("nc"),
         size(split(col("s"), " ")).cast("long").as("nt"),
-        conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long").as("fp"))
+        Md5Prefix(col("text"), 1, 15).cast("long").as("fp"))
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("nc")).as("n_chars"),
         sum(col("nt")).as("n_tokens"),
@@ -321,8 +321,7 @@ object SourceOps {
   def q189SnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables(spark, dir).documents
       .select(col("doc_id"), col("source"), col("text"),
-        expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)")
-          .as("h"))
+        Md5Prefix(col("doc_id").cast("string"), 1, 8).cast("bigint").as("h"))
     val v1 = base.select(col("doc_id"), col("source"),
       md5(col("text")).as("fp"), length(col("text")).cast("long").as("nc"))
     // v2: ~9% removed (h%11=0), ~13% of the survivors edited (h%7=0),
@@ -719,7 +718,7 @@ object SourceOps {
     "q189_snapshot_diff" ->
       s"""WITH base AS (
          |  SELECT doc_id, source, text,
-         |         ${TextOps.hexToLongSql("md5(CAST(doc_id AS VARCHAR))", 1, 8)}
+         |         ${Md5Prefix.hexToLongSql("md5(CAST(doc_id AS VARCHAR))", 1, 8)}
          |           AS h
          |  FROM documents),
          |v1 AS (
@@ -900,7 +899,7 @@ object SourceOps {
          |f AS (SELECT d.source, d.lang,
          |        CAST(length(d.text) AS BIGINT) AS nc,
          |        CAST(len(string_split(n.s, ' ')) AS BIGINT) AS nt,
-         |        ${TextOps.hexToLongSql("md5(d.text)", 1, 15)} AS fp
+         |        ${Md5Prefix.hexToLongSql("md5(d.text)", 1, 15)} AS fp
          |      FROM n JOIN documents d USING (doc_id))
          |SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
          |       CAST(sum(nc) AS BIGINT) AS n_chars,

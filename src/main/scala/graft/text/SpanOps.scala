@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import scala.util.chaining._
+import graft.functions.Md5Prefix
 
 /** Character-SPAN operators over the document corpus: exact duplicate
   * SPAN detection (the substring-level complement of the document-level
@@ -625,7 +626,7 @@ object SpanOps {
        |                AS i
        |            FROM n WHERE length(s) >= ${k + w - 1})),
        |v AS (SELECT doc_id, pos,
-       |             ${TextOps.hexToLongSql("md5(gram)", 1, 10)}
+       |             ${Md5Prefix.hexToLongSql("md5(gram)", 1, 10)}
        |               * 1048576 + (1048575 - pos) AS v
        |      FROM g),
        |m AS (SELECT doc_id, pos,
@@ -738,7 +739,7 @@ object SpanOps {
          |                AS i
          |            FROM n WHERE length(s) >= ${WinnowK + WinnowW - 1})),
          |v AS (SELECT doc_id, pos,
-         |             ${TextOps.hexToLongSql("md5(gram)", 1, 10)}
+         |             ${Md5Prefix.hexToLongSql("md5(gram)", 1, 10)}
          |               * 1048576 + (1048575 - pos) AS v
          |      FROM g),
          |m AS (SELECT doc_id, pos,

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Checkpoints, Tables}
+import graft.functions.Md5Prefix
 
 /** LLM-training-pipeline text operators over the `documents` table:
   * exact + near dedup (n-gram Jaccard, MinHash+LSH, SimHash),
@@ -472,8 +473,8 @@ object TextOps {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     d.select(col("doc_id"), posexplode(split(col("s"), " ")).as(Seq("pos", "word")))
       .withColumn("b",
-        (conv(substring(md5(col("word")), 1, 4), 16, 10).cast("long")
-          % CdcDivisor === 0).cast("long"))
+        (Md5Prefix(col("word"), 1, 4).cast("long") % CdcDivisor === 0)
+          .cast("long"))
       .withColumn("chunk", coalesce(sum(col("b")).over(w), lit(0L)))
       .groupBy("doc_id", "chunk")
       .agg(array_sort(collect_list(struct(col("pos"), col("word")))).as("ws"))
@@ -515,22 +516,13 @@ object TextOps {
 
   // ------------------------------------------------------------ oracles
 
-  /** DuckDB hex→BIGINT: positional nibble sum over `len` hex chars of
-    * `hexExpr` starting at 1-based `start` (mirror of Spark's conv). */
   /** md5-derived uniform in [0,1) from any key column — the library's
     * ONE deterministic sampler (q47 stratified rates, q57's fate, q98's
     * cluster-atomic split). Every consumer and every SQL mirror must
     * track this exact shape (first 8 hex chars / 2^32); centralizing
     * the Scala side keeps the copies from drifting. */
   private[graft] def md5Uniform(key: Column): Column =
-    conv(substring(md5(key.cast("string")), 1, 8), 16, 10)
-      .cast("double") / 4294967296.0
-
-  private[graft] def hexToLongSql(hexExpr: String, start: Int, len: Int): String =
-    (0 until len).map { p =>
-      val mult = math.pow(16, len - 1 - p).toLong
-      s"(strpos('0123456789abcdef', substr($hexExpr, ${start + p}, 1)) - 1) * CAST($mult AS BIGINT)"
-    }.mkString("(", " + ", ")")
+    Md5Prefix(key.cast("string"), 1, 8).cast("double") / 4294967296.0
 
   private[graft] val normCte =
     """n AS (SELECT doc_id, text,
@@ -571,7 +563,7 @@ object TextOps {
        |  GROUP BY ALL)""".stripMargin
 
   private val simhashSqlCtes: String = {
-    val h = hexToLongSql("md5(w)", 1, 15)
+    val h = Md5Prefix.hexToLongSql("md5(w)", 1, 15)
     s"""$normCte,
        |w AS (SELECT doc_id, unnest(string_split(s, ' ')) AS w FROM n),
        |hh AS (SELECT doc_id, $h AS h FROM w),
@@ -741,7 +733,7 @@ object TextOps {
          |hx AS (SELECT doc_id, cluster,
          |              md5(CAST(cluster AS VARCHAR)) AS h FROM cl)
          |SELECT doc_id, cluster,
-         |  CASE WHEN CAST(${hexToLongSql("h", 1, 8)} AS DOUBLE)
+         |  CASE WHEN CAST(${Md5Prefix.hexToLongSql("h", 1, 8)} AS DOUBLE)
          |            / 4294967296.0 < $SplitEvalRate
          |       THEN 'eval' ELSE 'train' END AS split
          |FROM hx ORDER BY doc_id""".stripMargin,
@@ -812,9 +804,9 @@ object TextOps {
       s"""WITH h AS (SELECT doc_id, text, md5(text) AS h FROM documents)
          |SELECT doc_id,
          |       CAST(strlen(text) AS BIGINT) AS n_bytes,
-         |       ${hexToLongSql("h", 1, 4)} % 512 + 1 AS width,
-         |       ${hexToLongSql("h", 5, 4)} % 512 + 1 AS height,
-         |       ${hexToLongSql("h", 9, 2)} % 16 + 1 AS n_frames
+         |       ${Md5Prefix.hexToLongSql("h", 1, 4)} % 512 + 1 AS width,
+         |       ${Md5Prefix.hexToLongSql("h", 5, 4)} % 512 + 1 AS height,
+         |       ${Md5Prefix.hexToLongSql("h", 9, 2)} % 16 + 1 AS n_frames
          |FROM h ORDER BY doc_id""".stripMargin,
 
     "q124_cdc_chunk_dedup" ->
@@ -824,7 +816,7 @@ object TextOps {
          |      FROM w, unnest(generate_series(1, len(ws))) AS u(i)),
          |h AS (SELECT doc_id, i, word, md5(word) AS hx FROM t),
          |bd AS (SELECT doc_id, i, word,
-         |         CASE WHEN ${hexToLongSql("hx", 1, 4)} % $CdcDivisor = 0
+         |         CASE WHEN ${Md5Prefix.hexToLongSql("hx", 1, 4)} % $CdcDivisor = 0
          |              THEN 1 ELSE 0 END AS b
          |       FROM h),
          |c AS (SELECT doc_id, i, word,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Candidate-count diagnostic for the sf0.1 → sf1 scaling sweep
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object ScalingSweep {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder()
-        .appName("scaling-sweep").master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.localSession(defaultCpus = 32)
     val t = graft.Tables(spark, dir)
 
     // optional metric filter: args(1) = comma-separated substrings

@@ -274,10 +274,6 @@ class EventOpsSpec extends SparkSpec {
 
   test("q193: sketch matches scalar registers from DISTINCT users (dup idempotence)") {
     import org.apache.spark.sql.functions._
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def hash60(s: String): Long =
-      java.lang.Long.parseLong(md.digest(s.getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString.take(15), 16)
     // reference built from the DEDUPED (bucket, user) pairs — the
     // operator reads RAW events; equality proves register max is
     // idempotent under duplicate arrivals, the scale claim
@@ -288,7 +284,7 @@ class EventOpsSpec extends SparkSpec {
     val ref = pairs.groupBy(_._1).map { case (b, us) =>
       val regs = new Array[Int](64)
       us.map(_._2).distinct.foreach { u =>
-        val v = hash60(u.toString)
+        val v = HllSpec.md5Prefix(u.toString, 1, 15)
         val bucket = (v >>> 54).toInt
         val w = v & ((1L << 54) - 1)
         val rho = if (w == 0) 55

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Hll
+import graft.functions.{Hll, Md5Prefix}
 
 /** The one HLL sketch ([[graft.functions.Hll]]) on crafted 60-bit
   * hashes: register placement at the edges of the hash (w = 0, the top
@@ -96,12 +96,33 @@ class HllSpec extends SparkSpec {
   }
 
   test("hash60 is the first 15 hex digits of md5 over the string form") {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def ref(s: String): Long = java.lang.Long.parseLong(
-      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15), 16)
     val got = Seq(("abcde", 42L)).toDF("s", "n")
       .select(Hll.hash60(col("s")), Hll.hash60(col("n"))).collect().head
-    assert(got.getLong(0) == ref("abcde"))
-    assert(got.getLong(1) == ref("42"))
+    assert(got.getLong(0) == HllSpec.md5Prefix("abcde", 1, 15))
+    assert(got.getLong(1) == HllSpec.md5Prefix("42", 1, 15))
+    // both Spark forms of the md5-prefix integer, at every (start,
+    // digits) the library reads
+    val words = Seq("abcde", "42", "", "größe 7:3")
+    val pairs = Seq((1, 2), (1, 4), (1, 8), (1, 10), (1, 15), (5, 4), (9, 2))
+    val cols = pairs.flatMap { case (st, n) =>
+      Seq(Md5Prefix(col("s"), st, n).cast("long"),
+        expr(Md5Prefix.sql("s", st, n)).cast("long"))
+    }
+    val rows = words.toDF("s").select(col("s") +: cols: _*).collect()
+    for (r <- rows; ((st, n), i) <- pairs.zipWithIndex) {
+      val want = HllSpec.md5Prefix(r.getString(0), st, n)
+      assert(r.getLong(1 + 2 * i) == want, s"Column form at ($st, $n)")
+      assert(r.getLong(2 + 2 * i) == want, s"SQL form at ($st, $n)")
+    }
+  }
+}
+
+object HllSpec {
+  /** JVM reference for [[graft.functions.Md5Prefix]]: `digits` hex
+    * digits of the md5 of `s`'s UTF-8 bytes, from 1-based `start`. */
+  def md5Prefix(s: String, start: Int, digits: Int): Long = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    java.lang.Long.parseLong(hex.substring(start - 1, start - 1 + digits), 16)
   }
 }

@@ -254,10 +254,6 @@ class SourceSimAuditSpec extends SparkSpec {
         lower(trim(regexp_replace(col("text"), "\\s+", " "))).as("s"))
       .collect()
     // scalar register construction mirroring the operator exactly
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def hash60(g: String): Long =
-      java.lang.Long.parseLong(md.digest(g.getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString.take(15), 16)
     val bySource = docs.groupBy(_.getString(0)).view.mapValues { rows =>
       rows.flatMap { r =>
         val s = r.getString(1)
@@ -268,7 +264,7 @@ class SourceSimAuditSpec extends SparkSpec {
     val ref = bySource.map { case (src, grams) =>
       val regs = new Array[Int](Hll.M)
       grams.foreach { g =>
-        val v = hash60(g)
+        val v = HllSpec.md5Prefix(g, 1, 15)
         val bucket = (v >>> 54).toInt
         val w = v & ((1L << 54) - 1)
         val rho = if (w == 0) 55 else 54 - (63 - java.lang.Long.numberOfLeadingZeros(w))
